@@ -18,7 +18,6 @@ object Registry {
     ops.Relational.queries,
     ops.Dedup.queries,
     ops.Similarity.queries,
-    ops.AnnIndex.queries,
     ops.IvfPq.queries,
     ops.TextOps.queries,
     ops.StatOps.queries,

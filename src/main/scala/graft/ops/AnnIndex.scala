@@ -1,64 +1,35 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.Tables
 import graft.functions.GraftFunctions
 import graft.io.Afs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Materialized ANN index — format f3 (build-once / probe-many, r8
-  * verdict item 3).
+/** The shared core of the ANN index. The index itself — one on-disk
+  * format, the composed IVF+PQ lists — lives in [[IvfPq]]; this module
+  * holds what its build, serve, lifecycle and stream paths share:
   *
-  * '''QUARANTINE NOTICE (r14, r13 verdict item 2):''' the registry
-  * converged on the composed f4 format ([[IvfPq]]). From this module
-  * only q110 (the f3 BUILD — the artifact [[IvfPq.migrateFromF3]]
-  * consumes) stays registered; the f3 serve and lifecycle paths below
-  * are retained as the spec-pinned REFERENCE implementations
-  * (AnnIndexSpec / AnnLifecycleSoakSpec / AnnRetrainSpec pin recall
-  * floors, plan shapes, LSM semantics and publication races on them)
-  * and as migration support. They are not bench-priced and must not
-  * grow features — new serve/lifecycle work lands on [[IvfPq]]. The
-  * format-agnostic cores (publication protocol, trainers, assignment,
-  * routing, fold, ingest loop, serving state) remain shared and live.
-  *
-  * q23e/q23f demonstrate the IVF and PQ *algorithms* but re-pay the full
-  * index build (Lloyd passes, codebook training, corpus encoding) on
-  * every probe batch. At 100 TB an index is an ARTIFACT: built once,
-  * persisted, probed many times — the same amortization lesson as the
-  * reference's KEK cache (write_encrypted_parquet.py:74, its only
-  * performance optimization). This module persists:
-  *
-  *   - `ivf_centroids`  (cid, ce)            — O(k·dim), the routing table
-  *   - `ivf_assignments`(vec_id, e) BY cid   — the inverted lists, laid
-  *     out so PARTITION PRUNING *is* list selection: a probe of nprobe
-  *     lists physically reads nprobe/k of the corpus files, exactly how
-  *     a disk-resident IVF serves (and how Hive-partitioned parquet
-  *     prunes on a cluster).
-  *   - `pq_codebook`    (m, code, ce)        — O(M·K·sub) doubles
-  *   - `pq_codes`       (vec_id, codes, qnorm, label) — M small codes
-  *     per vector plus the inline filterable attribute, the
-  *     32x-compressed corpus representation that is the only thing the
-  *     PQ serve path scans (label rides along for the same reason it
-  *     rides in the lists: a filtered probe pre-filters INSIDE the
-  *     codes scan, never via a corpus join).
-  *
-  * Serve paths (probe-only — NO training, NO corpus-wide kmeans):
-  *   - IVF: probe routing against the collected O(k·dim) centroid table
-  *     happens driver-side; the candidate scan is a static
-  *     partition-pruned read of the probed lists.
-  *   - PQ: asymmetric-distance (ADC) scoring — each probe precomputes an
-  *     M×K lookup table of subvector dot products (driver-side,
-  *     O(M·K·sub) per probe); candidate score is then M array lookups
-  *     per corpus row via one scan of the codes table, broadcast-joined
-  *     against the probes. Nothing corpus-sized ever shuffles or lands
-  *     on the driver; the exact-refine pool (256/probe) re-ranks against
-  *     true embeddings as in q23f.
+  *   - '''sizing''' — list count, nprobe, Lloyd steps, PQ subspaces,
+  *     codes and refine pool (q23e/q23f's measured rationale);
+  *   - '''trainers''' — the seeded k-means routing table
+  *     ([[trainIvf]]), the per-subspace PQ codebook
+  *     ([[trainPqCodebook]]), k-thresholded list assignment
+  *     ([[assignCids]]), PQ code assignment ([[pqAssign]], shared with
+  *     q23f) and the residual IVFADC encoding ([[pqEncodeResidual]]);
+  *   - '''versioned publication''' — immutable version dirs behind a
+  *     CURRENT pointer, claim-by-exclusive-create, retirement grace
+  *     ([[publishVersion]], [[resolveVersion]]);
+  *   - '''serve plumbing''' — probe collection, driver-side and
+  *     distributed routing, the masked segment union, the cached
+  *     trained tables;
+  *   - '''lifecycle plumbing''' — the LSM fold core, tombstones, the
+  *     checkpointed ingest loop and the drift-triggered retrain monitor.
   *
   * Staleness: artifacts are keyed by `Tables.datasetTag` (file
   * size/mtime hash), the Layout/Sources fixture rule — a regenerated
-  * corpus invalidates the index. q110 *forces* a rebuild so the bench
-  * line prices the build honestly; the probe queries adopt a fresh
-  * index if present and build one only when missing.
+  * corpus invalidates the index — and by [[FormatLevel]], which keys
+  * them on the code.
   */
 object AnnIndex {
 
@@ -284,17 +255,20 @@ object AnnIndex {
 
   /** Index FORMAT level: part of the on-disk root, so a code change to
     * the artifact schema (f2: inverted lists carry the inline `label`
-    * attribute; f3: pq_codes carry it too; f5: composed `ivfpq_lists`
+    * attribute; f3: the PQ codes carry it too; f5: composed `ivfpq_lists`
     * encode RESIDUALS — [[pqEncodeResidual]] — so pre-residual fixtures,
     * whose codes/codebook/qnorm live in the raw-vector space, must never
-    * be adopted; "f4" is skipped as a level name because it already
-    * names the composed ARTIFACT format throughout the docs) can never
-    * adopt a fixture written by the previous format —
+    * be adopted; f6: the composed residual lists are the ONLY format —
+    * the separate f3 artifacts, the raw-space encoding and its marker
+    * file are gone, so no pre-f6 root, marked or not, may be adopted
+    * and scored as residual; "f4" is skipped as a level name because
+    * it already names the composed ARTIFACT format throughout the docs)
+    * can never adopt a fixture written by the previous format —
     * `Tables.datasetTag` keys on the DATA, not the code.
     * Bumping the level orphans the old root; [[shmDir]] sweeps stale
     * format dirs so /dev/shm never accumulates across bumps.
     */
-  val FormatLevel = "f5"
+  val FormatLevel = "f6"
 
   /** Root for persisted index artifacts. Overridable for cluster
     * deployments (`-Dgraft.ann.root=hdfs://…/ann` or an `s3a://` URI —
@@ -329,13 +303,11 @@ object AnnIndex {
 
   private[ops] def shmDir(suffix: String): String = s"$sweptStaleFormats/$suffix"
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   // ---- versioned publication (r9 ADVICE, medium) ----------------------
   //
   // A rebuild used to overwrite the live serving directory in place:
-  // q110's forced rebuild deleted the _SUCCESS marker and rewrote
-  // ivf_assignments/pq_codes under the SAME path a concurrent probe
+  // a forced rebuild deleted the _SUCCESS marker and rewrote the
+  // corpus-sized artifacts under the SAME path a concurrent probe
   // (another thread, or another JVM sharing the dataset-tagged dir)
   // might be mid-scan on — the marker only guarded adoption decisions,
   // not in-flight readers. Indexes are now immutable VERSION dirs under
@@ -513,74 +485,6 @@ object AnnIndex {
     vdir
   }
 
-  /** Train + write all four artifacts for `embFrame` under `dir` (an
-    * unpublished version dir — [[publishVersion]] owns marker and
-    * pointer, so a killed build can never become adoptable).
-    */
-  private def writeIndex(s: SparkSession, embFrame: DataFrame, dir: String): Unit = {
-    val emb = embFrame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // IVF: routing table + inverted lists. The lists carry the
-      // vectors (the inverted-FILE structure): a probe reads only
-      // its pruned cid partitions and scores in place — no
-      // corpus-sized join at serve time.
-      val centroids = trainIvf(emb, K, LloydSteps)
-      val centDf = {
-        import s.implicits._
-        centroids.toDF("cid", "ce")
-      }
-      centDf.coalesce(1).write.mode("overwrite").parquet(s"$dir/ivf_centroids")
-      // Cluster by the partition column BEFORE the partitioned
-      // write: without it every write task emits a file into every
-      // cid dir (tasks × k small files — the classic partitioned-
-      // sink small-files defect; measured 78.8 s task-time vs
-      // 16.1 s CPU on the r9 seal's q110 line). One exchange on
-      // cid, one file per list — the layout a 100 TB inverted file
-      // wants, since a probe reads whole lists.
-      assignCids(emb, centroids)
-        .select(col("cid"), col("vec_id"), col("label"), col("e"))
-        .repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid")
-        .parquet(s"$dir/ivf_assignments")
-      // PQ: codebook + codes. Codes are stored m-ordered in one
-      // array (pos = m), plus the reconstructed-vector norm the ADC
-      // cosine needs — O(M) ints + 1 double per vector, the
-      // compressed corpus.
-      val sliced = pqSliced(emb)
-      val cb = trainPqCodebook(s, emb, sliced)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cb.coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_codebook")
-      encodePq(emb, cb).write.mode("overwrite").parquet(s"$dir/pq_codes")
-      cb.unpersist(): Unit
-    } finally emb.unpersist(): Unit
-  }
-
-  /** (vec_id, codes, qnorm, label) for a source (vec_id, e, label)
-    * frame against a codebook. The label join runs on the groupBy's own
-    * vec_id hash partitioning (only the narrow id→label side moves), so
-    * denormalizing the attribute into the codes costs one small-side
-    * shuffle at WRITE time and buys filtered PQ probes a pure pushed
-    * predicate at serve time (the f4 filtered serve).
-    */
-  private def encodePq(src: DataFrame, cb: DataFrame): DataFrame =
-    pqEncode(src, cb)
-      .join(src.select(col("vec_id"), col("label")), Seq("vec_id"))
-
-  /** The shared ADC encoding — (vec_id, codes, qnorm) for a (vec_id, e,
-    * …) frame against a codebook frame. [[encodePq]] (f3) adds the label
-    * join; [[IvfPq.writeLists]] (f4) joins it with the assignment side,
-    * which already carries label. ONE implementation so the two formats'
-    * codes can never silently diverge (review r13).
-    */
-  private[ops] def pqEncode(src: DataFrame, cb: DataFrame): DataFrame =
-    pqAssign(pqSliced(src), cb)
-      .join(broadcast(cb.select(col("m"), col("code"), col("ce"))), Seq("m", "code"))
-      .groupBy("vec_id")
-      .agg(
-        transform(array_sort(collect_list(struct(col("m"), col("code")))),
-          x => x.getField("code")).as("codes"),
-        sqrt(sum(GraftFunctions.dotProduct(col("ce"), col("ce")))).as("qnorm"))
-
   /** The per-row residual frame an IVFADC build trains on: (vec_id,
     * e := e − centroid(cid)) for an assigned (vec_id, e, cid, …) frame.
     * The broadcast side is the O(k·dim) routing table — the same table
@@ -604,8 +508,7 @@ object AnnIndex {
     * `cb` must have been trained on [[residualFrame]] output. Returns
     * (vec_id, codes, qnorm) where `qnorm` is the norm of the FULL
     * reconstruction `centroid(cid) + decode(codes)` — the value the ADC
-    * cosine divides by, exactly as the raw encoding stores the norm of
-    * its own reconstruction. Serve-side, the quantized dot product
+    * cosine divides by. Serve-side, the quantized dot product
     * decomposes as dot(p, centroid(cid)) + Σ_m lut[m][code_m]: the first
     * term is the per-(probe, routed-list) bias [[IvfPq]]'s serve paths
     * add, the second is the unchanged LUT scan over the residual
@@ -645,41 +548,6 @@ object AnnIndex {
             struct(col("m"), col("best.code").as("code")))),
           x => x.getField("code")).as("codes"),
         sqrt(sum(GraftFunctions.dotProduct(col("rv"), col("rv")))).as("qnorm"))
-  }
-
-  /** Build (or adopt) the index for this dataset, returning the CURRENT
-    * complete version dir. Synchronized via computeIfAbsent per JVM (the
-    * Layout/Multimodal fixture rule); `force` drops the cache entry and
-    * publishes a fresh version so q110 re-prices the build — concurrent
-    * probes keep serving the prior version until the pointer flips.
-    */
-  def build(s: SparkSession, d: String, force: Boolean = false): String = {
-    GraftFunctions.register(s)
-    val tag = Tables.datasetTag(d)
-    if (force) built.remove(tag): Unit
-    built.computeIfAbsent(tag, tag => {
-      val root = shmDir(tag)
-      val existing = if (force) None else currentVersion(root)
-      existing.getOrElse(
-        publishVersion(root)(vdir => writeIndex(s, corpus(s, d), vdir)))
-    })
-  }
-
-  // ---- explicit-frame entry points (lifecycle soak / spec surface) ----
-  //
-  // The registered queries run against the dataset-keyed fixtures above;
-  // the lifecycle soak (AnnLifecycleSoakSpec) instead drives RANDOM
-  // op sequences over explicit frames and roots, so each published
-  // artifact kind gets an explicit-frame constructor. All of them go
-  // through publishVersion — the soak exercises the exact pointer-flip
-  // publication the production paths use.
-
-  /** Build a full index for an explicit embeddings frame (vec_id, e,
-    * label) under `root`, returning the published version dir.
-    */
-  private[ops] def buildFrom(s: SparkSession, emb: DataFrame, root: String): String = {
-    GraftFunctions.register(s)
-    publishVersion(root)(vdir => writeIndex(s, emb, vdir))
   }
 
   /** Per-JVM cache of collected TRAINED-TABLE artifacts, keyed by
@@ -726,8 +594,8 @@ object AnnIndex {
   val MaxProbes = 1024
 
   /** The registered queries' probe set — the q23e/q23f convention
-    * (vec_id < 10, from the corpus itself). q111/q112 instantiate the
-    * parameterized serve paths with this frame.
+    * (vec_id < 10, from the corpus itself). The serve queries
+    * instantiate the parameterized serve paths with this frame.
     */
   def defaultProbes(s: SparkSession, d: String): DataFrame =
     corpus(s, d).filter(col("vec_id") < 10).select("vec_id", "e")
@@ -823,7 +691,7 @@ object AnnIndex {
     * (the r10 composition bug). `prep` runs per segment BEFORE the mask
     * and the select, so cid pruning / attribute pre-filters reach each
     * segment's parquet scan. The single owner of the read-side masking
-    * idiom behind the f4 serve paths ([[foldPartitionedArtifact]]'s
+    * idiom behind the serve paths ([[foldPartitionedArtifact]]'s
     * write-side fold keeps its own `anti` because its mask set also
     * feeds touched-list resolution).
     */
@@ -850,10 +718,10 @@ object AnnIndex {
     normalizeProbes(probeDf)
       .withColumn("__pord", monotonically_increasing_id())
 
-  /** Distributed routing, shared by the f3 and f4 end-to-end-DataFrame
-    * serve paths: `probes` (pid, pe, __pord — [[probesWithOrdinal]]'s
-    * shape) becomes one routed row per (probe row × probed list),
-    * k-thresholded like every other assignment site.
+  /** Distributed routing for the end-to-end-DataFrame serve path:
+    * `probes` (pid, pe, __pord — [[probesWithOrdinal]]'s shape) becomes
+    * one routed row per (probe row × probed list), k-thresholded like
+    * every other assignment site.
     */
   private[ops] def routeDistributed(s: SparkSession, probes: DataFrame,
       cents: Seq[(Int, Seq[Double])], nprobe: Int): DataFrame =
@@ -937,7 +805,7 @@ object AnnIndex {
     readCodebookRows(s, cbDir, readOpts).toDF("m", "code", "ce", "c2")
   }
 
-  // ---- lifecycle slices (shared by the f4 lifecycle queries) ----------
+  // ---- lifecycle slices (shared by the lifecycle queries) -------------
 
   /** The 90/10 ingest split the append lifecycle exercises: the base
     * index is trained on vec_id % 10 != 0; the "newly arrived" batch is
@@ -946,13 +814,13 @@ object AnnIndex {
   private[ops] def baseSlice(df: DataFrame): DataFrame = df.filter(pmod(col("vec_id"), lit(10)) =!= 0)
   private[ops] def batchSlice(df: DataFrame): DataFrame = df.filter(pmod(col("vec_id"), lit(10)) === 0)
 
-  // ---- LSM fold core (shared with the f4 lifecycle) -------------------
+  // ---- LSM fold core ---------------------------------------------------
 
   /** Masks applying to a segment's recency position, anti-joined out
     * with the canonical column order RE-SELECTED after the using-column
     * join (it reorders the key first, and segment frames union
-    * positionally — the r10 composition bug). Shared by both formats'
-    * folds and the read-side [[maskedUnion]]'s write-side twin.
+    * positionally — the r10 composition bug). The fold's write-side
+    * twin of the read-side [[maskedUnion]].
     */
   private[ops] def lsmAnti(tss: Seq[(DataFrame, Int)])(
       df: DataFrame, segIdx: Int, sel: Seq[Column]): DataFrame =
@@ -962,7 +830,7 @@ object AnnIndex {
 
   /** Fold ONE cid-partitioned artifact across base + segments under the
     * LSM recency-boundary rule — the shared core behind
-    * [[IvfPq.compactSegments]] and every f4 fold, so a fix to the fold
+    * [[IvfPq.compactSegments]] and every fold, so a fix to the fold
     * discipline lands once (review
     * r13): touched lists = segments' cids ∪ tombstones' recorded cids
     * (bounded ≤K collects); touched merge base+segments with masks
@@ -1005,7 +873,7 @@ object AnnIndex {
     touched
   }
 
-  // ---- tombstone segments (the f4 delete queries' write side) ----------
+  // ---- tombstone segments (the delete queries' write side) -------------
 
   /** The deterministic delete set the lifecycle queries exercise: 10%
     * of the corpus, split across BOTH segments — vec_id % 20 == 3 lives
@@ -1061,8 +929,8 @@ object AnnIndex {
     * one assignment pass over the live frame + an O(k·dim) aggregate;
     * corpus bytes cross no exchange (q84's plan). Run it between index
     * versions (e.g. after each compaction); when it fires, rebuild via
-    * [[build]]`(force = true)` / [[buildFrom]] — AnnRetrainSpec pins
-    * degraded-recall-then-recovery around this trigger, and BASELINE.md
+    * [[IvfPq.build]]`(force = true)` / [[IvfPq.buildFrom]] —
+    * AnnRetrainSpec pins degraded-recall-then-recovery around this trigger, and BASELINE.md
     * §C12 prices rebuild vs degraded serving.
     */
   def retrainCheck(s: SparkSession, indexDir: String, live: DataFrame): RetrainReport =
@@ -1129,9 +997,9 @@ object AnnIndex {
     * streaming discipline (checkpoint-replay
     * idempotence, `_COMPLETE` markers, no-data-batch suppression,
     * serial-thread auto-maintain, manifest-composed reader views) lands
-    * once and cannot drift between the formats (review r13).
+    * once (review r13).
     * `writeSegment(session, batch, artifactBase, segDir)` writes one
-    * format-specific delta segment encoded against `artifactBase`'s
+    * delta segment encoded against `artifactBase`'s
     * trained tables; `maintainStep(session, servingBase, unfoldedSegs,
     * maintRoot, alreadyFoldedNames)` folds when the threshold fires.
     * `afterBatch(session, batchId)` runs LAST for each committed
@@ -1261,13 +1129,6 @@ object AnnIndex {
     }
   }
 
-  /** The CURRENT complete version for this dataset, resolved from disk
-    * exactly as a foreign JVM would (no builder cache) — the spec's
-    * concurrent-reader hook.
-    */
-  private[ops] def currentServing(d: String): Option[String] =
-    currentVersion(shmDir(Tables.datasetTag(d)))
-
   /** CURRENT resolution for an EXPLICIT root, from disk exactly as a
     * foreign JVM would — the race specs' hook (maintain/publish vs a
     * live reader loop).
@@ -1275,13 +1136,6 @@ object AnnIndex {
   private[ops] def resolveVersion(root: String): Option[String] =
     currentVersion(root)
 
-  /** Q110 — index build, FORCED (the bench line prices the build every
-    * run; probe queries adopt the result). Returns per-artifact row
-    * counts read back from the written parquet — a conservation check
-    * the DuckDB oracle can express: every corpus vector must appear in
-    * the assignments and the codes, and the routing/codebook tables are
-    * exactly their configured sizes.
-    */
   /** Evaluate several independent census counts as CONCURRENT jobs
     * (r16, guide §2.6 — actions are only sequential because the driver
     * calls them sequentially): each artifact count is a one-file scan
@@ -1295,34 +1149,4 @@ object AnnIndex {
     import scala.concurrent.ExecutionContext.Implicits.global
     Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
   }
-
-  val q110: Q = Q(
-    "q110_ann_index_build",
-    (s, d) => {
-      val dir = build(s, d, force = true)
-      import s.implicits._
-      val arts = Seq("ivf_assignments", "ivf_centroids", "pq_codebook", "pq_codes")
-      arts.zip(parCounts(arts)(a => s.read.parquet(s"$dir/$a").count()))
-        .toDF("artifact", "n_rows")
-        .orderBy("artifact")
-    },
-    Some(s"""SELECT 'ivf_assignments' AS artifact, count(*) AS n_rows FROM embeddings
-            |UNION ALL SELECT 'ivf_centroids', CAST($K AS BIGINT)
-            |UNION ALL SELECT 'pq_codebook', CAST(${Mpq * Kpq} AS BIGINT)
-            |UNION ALL SELECT 'pq_codes', count(*) FROM embeddings
-            |ORDER BY artifact""".stripMargin))
-
-  /** Registered: ONLY the f3 build (q110) — it is the migration source
-    * [[IvfPq.migrateFromF3]] converts (and q111 prices serving the
-    * conversion's output). Every other ANN registry line converged on
-    * the composed f4 format in r14 (r13 verdict item 2) and the f3
-    * serve/LSM quarantine was DELETED in r15 (r14 verdict item 5):
-    * this file now carries only what q110, the migration path, and the
-    * f4 lifecycle share — trainers, encoders, version publication, the
-    * fold core, probe routing/collection, the ingest loop, and the
-    * retrain monitor. Their spec pins moved to the f4 twins
-    * (IvfPqSpec/IvfPqStreamSpec/AnnRetrainSpec/AnnLifecycleSoakSpec).
-    * New work lands on IvfPq.
-    */
-  val queries: Seq[Q] = Seq(q110)
 }

@@ -6,55 +6,45 @@ import graft.io.Afs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** COMPOSED IVF+PQ index — format f4 (r12 verdict item 1): PQ codes
+/** The ANN index: composed IVF+PQ, the one on-disk format — PQ codes
   * stored INSIDE the inverted lists, the shape every production ANN
   * system ships (FAISS `IndexIVFPQ` + refine). One corpus-sized
   * artifact, `ivfpq_lists`, partitioned by `cid`, carrying per vector:
   *
   *   - `codes`/`qnorm` — the 32x-compressed PQ representation the ADC
-  *     scoring stage scans;
+  *     scoring stage scans, encoding the RESIDUAL `e − centroid(cid)`
+  *     (IVFADC — [[AnnIndex.pqEncodeResidual]]);
   *   - `label` — the inline filterable attribute (predicates evaluate
   *     inside the pruned scan — pre-filter, never a post-top-k cut);
   *   - `e` — the stored true vector the exact-refine stage reads.
   *
   * plus the two O(k)/O(M·K) trained tables (`ivf_centroids`,
-  * `pq_codebook`) unchanged from f3.
+  * `pq_codebook`).
   *
-  * Why this supersedes the f3 pair (`ivf_assignments` + `pq_codes`):
-  *
-  *   - '''f3 IVF serve''' scanned the probed lists' RAW VECTORS and paid
-  *     a full-dimension cosine per candidate; '''f3 PQ serve''' scanned
-  *     codes 32x cheaper but over the WHOLE corpus (flat, O(probes·n)).
-  *     The composed serve routes nprobe lists and ADC-scores only within
-  *     them: candidate bytes = nprobe/k of the CODES (parquet column
-  *     pruning keeps `e`'s pages off the scan — the pinned ReadSchema
-  *     excludes it), candidate flops = M array lookups instead of a
-  *     dim-length dot product. The exact-refine stage then touches true
-  *     vectors only for the [[AnnIndex.Pool]]-bounded pool, read from
-  *     the SAME pruned partitions.
-  *   - '''storage''': one corpus-sized table instead of two (f3
-  *     duplicated vec_id/label per vector across both, and its PQ serve
-  *     path could never prune). The raw-vector copy itself remains BY
-  *     DESIGN — the refine pool must read the segments' own stored
-  *     vectors so upserted ids refine against their replacement
-  *     embeddings, never a stale corpus row (the r12 lifecycle-serve
-  *     rule).
+  * The serve routes nprobe lists and ADC-scores only within them:
+  * candidate bytes = nprobe/k of the CODES (parquet column pruning keeps
+  * `e`'s pages off the scan — the pinned ReadSchema excludes it),
+  * candidate flops = M array lookups plus the per-(probe, list)
+  * centroid bias instead of a dim-length dot product. The exact-refine
+  * stage then touches true vectors only for the [[AnnIndex.Pool]]-bounded
+  * pool, read from the SAME pruned partitions. The raw-vector copy stays
+  * BY DESIGN — the refine pool must read the segments' own stored
+  * vectors so upserted ids refine against their replacement embeddings,
+  * never a stale corpus row (the r12 lifecycle-serve rule).
   *
   * Lifecycle: the full LSM composition is supported — delta segments
   * ([[appendSegment]]) assign+encode against the frozen base artifacts,
-  * serve unions masked segments under the same recency-boundary rule as
-  * f3 ([[AnnIndex.maskedUnion]]), [[compactSegments]] folds with
+  * serve unions masked segments under the recency-boundary rule
+  * ([[AnnIndex.maskedUnion]]), [[compactSegments]] folds with
   * delta-bounded work and file-level carry-over of untouched lists, and
   * [[maintain]] runs the drift-triggered fold-then-maybe-retrain pass.
   * Artifacts publish through [[AnnIndex.publishVersion]] — version
-  * claims, `_SUCCESS` markers, CURRENT pointer flips, retirement grace —
-  * so every pointer/claim/race spec pinned on f3 covers these roots too.
+  * claims, `_SUCCESS` markers, CURRENT pointer flips, retirement grace.
   *
-  * All sizing constants are f3's ([[AnnIndex.K]]/[[AnnIndex.Nprobe]]/
-  * [[AnnIndex.Mpq]]/[[AnnIndex.Kpq]]/[[AnnIndex.Pool]]): recall floors
-  * compose (the IVF routing bounds candidate recall; ADC+refine within
-  * the routed lists matches exact-within-lists at q23f's measured
-  * fidelity), pinned >= 0.68 by IvfPqSpec at sf0.1.
+  * Sizing constants are [[AnnIndex.K]]/[[AnnIndex.Nprobe]]/
+  * [[AnnIndex.Mpq]]/[[AnnIndex.Kpq]]/[[AnnIndex.Pool]]: the IVF routing
+  * bounds candidate recall and residual ADC+refine within the routed
+  * lists sits on that ceiling, pinned >= 0.80 by IvfPqSpec at sf0.1.
   */
 object IvfPq {
 
@@ -65,57 +55,24 @@ object IvfPq {
   private val ListCols: Seq[String] =
     Seq("cid", "vec_id", "label", "codes", "qnorm", "e")
 
-  // ---- PQ encoding mode (r14 verdict item 1: IVFADC) ---------------------
-
-  /** Marker file naming the artifact's PQ encoding space, written next
-    * to `ivfpq_lists`. Present with value `residual` → codes/codebook/
-    * qnorm live in the residual space (`e − centroid(cid)`,
-    * [[AnnIndex.pqEncodeResidual]]) and the serve paths add the
-    * per-(probe, routed-list) `dot(probe, centroid)` bias. ABSENT →
-    * raw-vector encoding, bias zero — which is exactly what
-    * [[migrateFromF3]]'s output is (f3 codes are raw by construction, and
-    * a one-pass migration must not re-encode), so a migrated index
-    * serves bit-correctly with no format flag day. Segments inherit the
-    * base's mode at encode time ([[segmentWriter]]/[[appendSegment]]);
-    * folds and rotations carry the marker verbatim like the trained
-    * tables.
-    */
-  private val PqModeFile = "_PQ_MODE"
-
-  private[ops] def residualMode(dir: String): Boolean =
-    Afs.exists(s"$dir/$PqModeFile") &&
-      Afs.readString(s"$dir/$PqModeFile").trim == "residual"
-
-  private def markResidual(dir: String): Unit =
-    Afs.writeString(s"$dir/$PqModeFile", "residual")
-
-  private def copyMode(from: String, to: String): Unit =
-    if (Afs.exists(s"$from/$PqModeFile"))
-      Afs.copyFile(s"$from/$PqModeFile", s"$to/$PqModeFile")
-
   // ---- build -----------------------------------------------------------
 
   /** Train + write the composed index for `embFrame` under `dir` (an
     * unpublished version dir — [[AnnIndex.publishVersion]] owns marker
-    * and pointer). Trainers are f3's ([[AnnIndex.trainIvf]],
-    * [[AnnIndex.trainPqCodebook]]) with one IVFADC difference (r14
-    * verdict item 1): by default the PQ codebook is trained on — and the
-    * codes encode — the per-row RESIDUAL `e − centroid(cid)`
-    * ([[AnnIndex.pqEncodeResidual]]), which concentrates the quantizer's
-    * whole budget on within-list variance at identical code bytes; the
-    * [[PqModeFile]] marker records the space so every serve path scores
-    * it correctly. `residual = false` reproduces the raw-vector encoding
-    * (the f3-compatible space a migration lands in — IvfPqMigrateSpec's
-    * cross-check hook). The one corpus-sized write joins the cid
-    * assignment with the code encoding on vec_id and clusters by cid
+    * and pointer). The routing table comes from [[AnnIndex.trainIvf]];
+    * the PQ codebook ([[AnnIndex.trainPqCodebook]]) is trained on — and
+    * the codes encode — the per-row RESIDUAL `e − centroid(cid)`
+    * ([[AnnIndex.pqEncodeResidual]], IVFADC), which concentrates the
+    * quantizer's whole budget on within-list variance at identical code
+    * bytes. The one corpus-sized write joins the cid assignment with the
+    * code encoding on vec_id and clusters by cid
     * before the partitioned write (one exchange, one file per list —
     * the q110 small-files rule). Lists sort by vec_id within each
     * partition so row-group stats support id-ranged reads.
     */
   private[ops] def writeComposed(s: SparkSession, embFrame: DataFrame,
       dir: String,
-      writeOptsFor: String => Map[String, String] = _ => Map.empty,
-      residual: Boolean = true): Unit = {
+      writeOptsFor: String => Map[String, String] = _ => Map.empty): Unit = {
     val emb = embFrame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val centroids = AnnIndex.trainIvf(emb, K, LloydSteps)
@@ -127,10 +84,8 @@ object IvfPq {
         .options(writeOptsFor("ivf_centroids"))
         .parquet(s"$dir/ivf_centroids")
       val assigned = AnnIndex.assignCids(emb, centroids)
-      val trainFrame =
-        if (!residual) emb
-        else AnnIndex.residualFrame(assigned, centroids)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val trainFrame = AnnIndex.residualFrame(assigned, centroids)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val cb = AnnIndex.trainPqCodebook(s, trainFrame, AnnIndex.pqSliced(trainFrame))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -138,11 +93,10 @@ object IvfPq {
           cb.coalesce(1).write.mode("overwrite")
             .options(writeOptsFor("pq_codebook"))
             .parquet(s"$dir/pq_codebook")
-          writeLists(assigned, cb, if (residual) Some(centroids) else None,
+          writeLists(assigned, cb, centroids,
             s"$dir/ivfpq_lists", writeOptsFor("ivfpq_lists"))
-          if (residual) markResidual(dir)
         } finally cb.unpersist(): Unit
-      } finally if (residual) trainFrame.unpersist(): Unit
+      } finally trainFrame.unpersist(): Unit
     } finally emb.unpersist(): Unit
   }
 
@@ -150,9 +104,9 @@ object IvfPq {
     * on cid, one file per list, rows sorted by vec_id within each
     * partition (the q110 small-files rule + id-ranged row-group stats).
     * Every site that lands `ivfpq_lists` rows — build/append
-    * ([[writeLists]]), migration ([[migrateFromF3]]) and the rewrite
-    * rotation ([[rotateIndexKeys]]) — goes through here, so the layout
-    * invariants cannot drift between them (review r13).
+    * ([[writeLists]]) and the rewrite rotation ([[rotateIndexKeys]]) —
+    * goes through here, so the layout invariants cannot drift between
+    * them (review r13).
     */
   private def writeListRows(rows: DataFrame, out: String,
       writeOpts: Map[String, String]): Unit =
@@ -164,26 +118,25 @@ object IvfPq {
       .parquet(out)
 
   /** One composed-list write for a frame already carrying `cid` —
-    * shared by full builds and delta segments. `residCents` defined →
-    * residual (IVFADC) encoding against those centroids; None → raw.
+    * shared by full builds and delta segments: residual (IVFADC)
+    * encoding against `cents`, the centroids `cb` was trained under.
     */
   private def writeLists(assigned: DataFrame, cb: DataFrame,
-      residCents: Option[Seq[(Int, Seq[Double])]], out: String,
+      cents: Seq[(Int, Seq[Double])], out: String,
       writeOpts: Map[String, String] = Map.empty): Unit = {
-    val enc = residCents match {
-      case Some(cents) => AnnIndex.pqEncodeResidual(
-        assigned.select(col("vec_id"), col("e"), col("cid")), cents, cb)
-      case None => AnnIndex.pqEncode(assigned.select(col("vec_id"), col("e")), cb)
-    }
+    val enc = AnnIndex.pqEncodeResidual(
+      assigned.select(col("vec_id"), col("e"), col("cid")), cents, cb)
     writeListRows(assigned.join(enc, Seq("vec_id")), out, writeOpts)
   }
 
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Build (or adopt) the composed index for this dataset, returning the
-    * CURRENT complete version dir — the [[AnnIndex.build]] discipline
-    * under its own dataset-keyed subroot (`…/ivfpq`; f3 fixtures stay
-    * untouched, the two formats coexist per dataset).
+    * CURRENT complete version dir under its dataset-keyed subroot
+    * (`…/ivfpq`). Synchronized via computeIfAbsent per JVM (the
+    * Layout/Multimodal fixture rule); `force` drops the cache entry and
+    * publishes a fresh version so q133 re-prices the build — concurrent
+    * probes keep serving the prior version until the pointer flips.
     */
   def build(s: SparkSession, d: String, force: Boolean = false): String = {
     GraftFunctions.register(s)
@@ -199,14 +152,11 @@ object IvfPq {
   }
 
   /** Build the composed index for an explicit (vec_id, e, label) frame
-    * under `root` — the lifecycle/spec entry point. `residual = false`
-    * builds in the raw-vector space (what [[migrateFromF3]] output is —
-    * the migrate spec's cross-check hook).
+    * under `root` — the lifecycle/spec entry point.
     */
-  private[graft] def buildFrom(s: SparkSession, emb: DataFrame, root: String,
-      residual: Boolean = true): String = {
+  private[graft] def buildFrom(s: SparkSession, emb: DataFrame, root: String): String = {
     GraftFunctions.register(s)
-    AnnIndex.publishVersion(root)(writeComposed(s, emb, _, residual = residual))
+    AnnIndex.publishVersion(root)(writeComposed(s, emb, _))
   }
 
   // ---- encrypted artifacts (r12 verdict item 3) -------------------------
@@ -295,9 +245,9 @@ object IvfPq {
     *      parquet column pruning keeps the raw-vector pages off the
     *      scan — both pinned by IvfPqSpec), broadcast-joined to the
     *      per-probe M×K lookup tables; a candidate's quantized cosine is
-    *      M array lookups. This is what closes f3-PQ's flat
-    *      O(probes·corpus) scan: candidate bytes are nprobe/k of the
-    *      codes.
+    *      M array lookups plus the probe's bias against the list's
+    *      centroid (the residual encoding's reconstruction term).
+    *      Candidate bytes are nprobe/k of the codes.
     *   3. '''exact refine''' — the top-[[AnnIndex.Pool]] pool per probe
     *      row (bounded: ≤ MaxProbes·Pool ids, explicitly broadcast) joins
     *      back to the SAME pruned partitions' `(vec_id, e)` columns and
@@ -305,7 +255,7 @@ object IvfPq {
     *      the segment copy that produced their codes, never a stale
     *      corpus row.
     *
-    * Filtered probes widen nprobe exactly as f3 IVF does
+    * Filtered probes widen nprobe
     * ([[AnnIndex.FilteredNprobe]] — the predicate thins every probed
     * list, so the candidate pool is compensated at the routing stage;
     * within the routed lists ADC pre-filtering stays lossless).
@@ -325,7 +275,6 @@ object IvfPq {
       if (attrFilter.isDefined) FilteredNprobe else Nprobe)
     val cents = AnnIndex.readCentroids(s, roots.head, readOpts)
     val cb = AnnIndex.readCodebook(s, roots.head, readOpts)
-    val residual = residualMode(roots.head)
     val probes = AnnIndex.collectProbes(probeDf)
     val routed = AnnIndex.routeProbes(s, probes, cents, nprobe)
     val neededCids = routed.map(_._4).distinct.sorted
@@ -346,20 +295,18 @@ object IvfPq {
     // (one row per (ord, cid)) and the fat per-probe LUTs (one row per
     // probe) — duplicating each probe's Mpq·Kpq-double LUT once per
     // routed cid would make the broadcast nprobe-fold larger for
-    // nothing. Residual mode rides the pair with its `cbias` =
-    // dot(probe, centroid(cid)): the reconstruction is centroid +
+    // nothing. The pair carries its `cbias` = dot(probe, centroid(cid)):
+    // the reconstruction is centroid +
     // decoded residual, so the quantized dot decomposes as this bias
     // plus the unchanged LUT sum (ascending-index loop, matching the
     // distributed path's dot_product kernel bit-for-bit).
     val centMap = cents.toMap
-    def biasOf(pe: Seq[Double], cid: Int): Double =
-      if (!residual) 0.0
-      else {
-        val cv = centMap(cid)
-        var acc = 0.0; var i = 0
-        while (i < cv.length) { acc += pe(i) * cv(i); i += 1 }
-        acc
-      }
+    def biasOf(pe: Seq[Double], cid: Int): Double = {
+      val cv = centMap(cid)
+      var acc = 0.0; var i = 0
+      while (i < cv.length) { acc += pe(i) * cv(i); i += 1 }
+      acc
+    }
     val routedPairs = {
       import s.implicits._
       routed.map { case (ord, pid, pe, cid) => (ord, pid, cid, biasOf(pe, cid)) }
@@ -423,9 +370,9 @@ object IvfPq {
   def probe(s: SparkSession, d: String): DataFrame =
     probe(s, d, AnnIndex.defaultProbes(s, d))
 
-  /** Metadata-filtered composed serve — the q130/q131 pre-filter shape
-    * on the f4 artifact: the predicate evaluates inside the pruned
-    * codes scan, nprobe widens per the IVF compensation rule.
+  /** Metadata-filtered composed serve — the q130/q131 pre-filter shape:
+    * the predicate evaluates inside the pruned codes scan, nprobe widens
+    * per the IVF compensation rule.
     */
   def probeFiltered(s: SparkSession, d: String, attrFilter: Column,
       probeDf: DataFrame): DataFrame =
@@ -438,7 +385,7 @@ object IvfPq {
 
   /** FULLY-DISTRIBUTED composed serve — the reindex-scale probe path for
     * the at-scale index format: the probe frame stays a DataFrame
-    * end-to-end (q132's discipline on the f4 artifact — no
+    * end-to-end (q132's discipline — no
     * [[AnnIndex.collectProbes]], no MaxProbes cap, no per-batch driver
     * round-trips).
     *
@@ -446,9 +393,9 @@ object IvfPq {
     *
     *   - '''ordinal stability''' — the per-row serve ordinal appears on
     *     BOTH sides of the refine join (the pool rows and the probe
-    *     vectors), so unlike the f3 distributed path's single linear
-    *     pipeline the probe frame is localCheckpoint'ed (eager) first:
-    *     the nondeterministic ordinal is dealt ONCE and every consumer
+    *     vectors), so unlike [[AnnIndex.routeDistributed]]'s single
+    *     linear pipeline the probe frame is localCheckpoint'ed (eager)
+    *     first: the nondeterministic ordinal is dealt ONCE and every consumer
     *     reads the same materialized values (the
     *     [[AnnIndex.joinAssignCids]] caveat handled by construction, not
     *     by caller discipline). Cost: one probe-sized materialization —
@@ -464,11 +411,11 @@ object IvfPq {
     *     nprobe× per probe — 4096 flops, noise next to the
     *     per-candidate work it buys). Candidates are one CODES-column
     *     scan of the lists joined to the routed probes on cid. There is
-    *     no STATIC cid pruning (the probed set is unknown at plan time —
-    *     the same honest trade-off as the f3 distributed path: a probe
-    *     frame big enough to need this path touches every list anyway),
-    *     but the scan reads codes, not raw vectors — the full-scan bytes
-    *     stay 32×-compressed, which is what f4 buys at this scale.
+    *     no STATIC cid pruning (the probed set is unknown at plan time; a
+    *     probe frame big enough to need this path touches every list
+    *     anyway), but the scan reads codes, not raw vectors — the full-scan bytes
+    *     stay 32×-compressed, which is what the composed lists buy at
+    *     this scale.
     *     Scored rows project to (ordinal, ids, qcos) BEFORE the pool
     *     window's exchange, so neither the LUT nor the probe vector ever
     *     crosses a candidate-sized shuffle.
@@ -584,7 +531,7 @@ object IvfPq {
     // reindex scale the exchange is free: it is exactly the
     // hashpartitioning a shuffle join on cid requires, so the join
     // reuses it instead of adding its own.
-    // Residual mode: the per-(probe row, routed list) bias is
+    // The per-(probe row, routed list) residual bias is
     // dot(pe, centroid(cid)), computed with the same ascending-index
     // kernel as the collected path's driver loop so qcos stays
     // bit-identical between the paths. k-thresholded like every other
@@ -592,12 +539,9 @@ object IvfPq {
     // baked into the expression (no join, no LocalTableScan — the
     // probes-stay-distributed plan pin); past [[AnnIndex
     // .LiteralAssignMaxK]] it becomes the broadcast routing table every
-    // high-k assignment already ships once per job. Raw mode adds a 0.0
-    // literal, exactly as the collected path does.
-    val residual = residualMode(roots.head)
+    // high-k assignment already ships once per job.
     val routedBias =
-      if (!residual) routed.withColumn("cbias", lit(0.0))
-      else if (cents.size <= AnnIndex.LiteralAssignMaxK)
+      if (cents.size <= AnnIndex.LiteralAssignMaxK)
         routed.withColumn("cbias", GraftFunctions.dotProduct(col("pe"),
           element_at(typedLit(cents.toMap), col("cid"))))
       else {
@@ -691,10 +635,8 @@ object IvfPq {
     * index at `baseDir`: cid assignment against the base centroids and
     * code encoding against the base codebook are pure scan-stage argmins
     * over the batch — no Lloyd, no training (q113's append discipline).
-    * The segment inherits the base's PQ encoding space (residual bases
-    * encode the batch's residuals against the SAME frozen centroids the
-    * base codebook was trained on) and carries the mode marker so the
-    * composed artifact set never mixes spaces.
+    * The batch's residuals encode against the SAME frozen centroids the
+    * base codebook was trained under.
     */
   private[ops] def appendSegment(s: SparkSession, baseDir: String,
       batch: DataFrame, root: String,
@@ -705,11 +647,8 @@ object IvfPq {
       // LocalRelation codebook off the immutable-artifact cache (r16):
       // the broadcast side builds driver-side, no per-append scan job.
       val cb = AnnIndex.codebookFrame(s, baseDir, rOpts(crypto))
-      val residual = residualMode(baseDir)
-      writeLists(AnnIndex.assignCids(batch, cents), cb,
-        if (residual) Some(cents) else None,
+      writeLists(AnnIndex.assignCids(batch, cents), cb, cents,
         s"$vdir/ivfpq_lists", wOpts(crypto, "ivfpq_lists"))
-      if (residual) markResidual(vdir)
     }
   }
 
@@ -732,7 +671,6 @@ object IvfPq {
         rOpts(crypto), wOpts(crypto, "ivfpq_lists")): Unit
       Afs.copyTree(s"$baseDir/ivf_centroids", s"$vdir/ivf_centroids")
       Afs.copyTree(s"$baseDir/pq_codebook", s"$vdir/pq_codebook")
-      copyMode(baseDir, vdir)
     }
   }
 
@@ -762,8 +700,8 @@ object IvfPq {
 
   /** [[maintain]] plus a `_SEGMENTS` manifest stamped into every version
     * it publishes (fold and conditional retrain alike), landing BEFORE
-    * the version's `_SUCCESS` — the f4 twin of the f3 auto-maintain
-    * bookkeeping, over the same [[AnnIndex.servingStateOf]] reader view.
+    * the version's `_SUCCESS` — the auto-maintain bookkeeping behind
+    * the [[AnnIndex.servingStateOf]] reader view.
     *
     * `tsPending` (r13 verdict item 4) folds enqueued tombstone segments
     * ([[enqueueTombstones]]) physically: each pending tombstone's
@@ -797,7 +735,6 @@ object IvfPq {
         rOpts(crypto), wOpts(crypto, "ivfpq_lists")): Unit
       Afs.copyTree(s"$baseDir/ivf_centroids", s"$v/ivf_centroids")
       Afs.copyTree(s"$baseDir/pq_codebook", s"$v/pq_codebook")
-      copyMode(baseDir, v)
       stamp(v)
     }
     val lists = s.read.options(rOpts(crypto)).parquet(s"$folded/ivfpq_lists")
@@ -845,11 +782,8 @@ object IvfPq {
       // each micro-batch's broadcast side builds driver-side instead of
       // paying a parquet-scan job per batch.
       val cb = AnnIndex.codebookFrame(ss, artifactBase, rOpts(crypto))
-      val residual = residualMode(artifactBase)
-      writeLists(AnnIndex.assignCids(df, cents), cb,
-        if (residual) Some(cents) else None,
+      writeLists(AnnIndex.assignCids(df, cents), cb, cents,
         s"$seg/ivfpq_lists", wOpts(crypto, "ivfpq_lists"))
-      if (residual) markResidual(seg)
     }
 
   /** Land ONE complete delta segment under an ingest root's
@@ -1190,69 +1124,6 @@ object IvfPq {
     probeSegments(s, b +: unfolded, probeDf, tss, readOpts = rOpts(crypto))
   }
 
-  // ---- format migration ------------------------------------------------
-
-  /** Migrate an existing f3 index (`ivf_assignments` + `pq_codes`) to
-    * the composed f4 format IN ONE PASS, with no retraining and no
-    * re-encoding: the f4 list row is exactly the join of an f3
-    * assignment row (cid, label, stored vector) with its f3 code row
-    * (codes, qnorm) on vec_id — both were derived from the same corpus
-    * frame by the same trained tables, which copy over file-level
-    * (f3 and f4 share the trained-table schema unchanged). An operator
-    * upgrading a fleet of f3 indexes therefore pays one corpus-sized
-    * join + one partitioned write per index — never a Lloyd pass — and
-    * the migrated index is a first-class f4 citizen: every serve path,
-    * the LSM lifecycle and [[rotateIndexKeys]] compose with it
-    * (IvfPqMigrateSpec pins artifact-exact equality with a fresh f4
-    * build plus append/tombstone/compact on a migrated base).
-    *
-    * Publishes through [[AnnIndex.publishVersion]] under `outRoot` —
-    * claim, `_SUCCESS`, CURRENT flip — so a reader of the new root never
-    * observes a partial migration; the f3 root is read-only throughout
-    * and stays serveable until its operator retires it.
-    *
-    * Fails loud (BEFORE the version flips) if the two f3 artifacts
-    * violate the exactly-one-row-per-vec_id invariant — a missing id on
-    * either side would be silently DROPPED by the inner join, and a
-    * duplicated id would fan out (count-based checks cancel those two
-    * defects against each other — review r13); a migration must never
-    * be the step that makes an existing corruption permanent.
-    */
-  def migrateFromF3(s: SparkSession, f3Dir: String, outRoot: String): String = {
-    GraftFunctions.register(s)
-    AnnIndex.publishVersion(outRoot) { vdir =>
-      val assigns = s.read.parquet(s"$f3Dir/ivf_assignments")
-        .select(col("cid"), col("vec_id"), col("label"), col("e"))
-      val codes = s.read.parquet(s"$f3Dir/pq_codes")
-        .select(col("vec_id"), col("codes"), col("qnorm"))
-      // The true invariant, checked directly: every vec_id appears
-      // EXACTLY ONCE in each artifact. One agg pass per side; catches
-      // missing ids, duplicates, and combinations a row-count
-      // comparison cannot see.
-      val bad = assigns.groupBy("vec_id").agg(count(lit(1)).as("na"))
-        .join(codes.groupBy("vec_id").agg(count(lit(1)).as("nc")),
-          Seq("vec_id"), "full_outer")
-        .filter(col("na").isNull || col("nc").isNull ||
-          col("na") =!= 1L || col("nc") =!= 1L)
-      val offenders = bad.select("vec_id").limit(5)
-        .collect().map(_.get(0)).toSeq
-      require(offenders.isEmpty,
-        s"f3 index at $f3Dir is inconsistent: vec_ids ${offenders.mkString(", ")}" +
-          " (first 5) are missing or duplicated across ivf_assignments/" +
-          "pq_codes — refusing to migrate")
-      writeListRows(assigns.join(codes, Seq("vec_id")),
-        s"$vdir/ivfpq_lists", Map.empty)
-      // Belt-and-braces conservation after the verified-bijective join.
-      val nAssign = assigns.count()
-      val nOut = s.read.parquet(s"$vdir/ivfpq_lists").count()
-      require(nOut == nAssign,
-        s"migration wrote $nOut list rows from $nAssign assignment rows " +
-          s"at $f3Dir — refusing to publish")
-      Afs.copyTree(s"$f3Dir/ivf_centroids", s"$vdir/ivf_centroids")
-      Afs.copyTree(s"$f3Dir/pq_codebook", s"$vdir/pq_codebook")
-    }
-  }
-
   // ---- key rotation ----------------------------------------------------
 
   /** Zero-downtime key rotation for a composed index: republish every
@@ -1275,8 +1146,7 @@ object IvfPq {
     *
     * With `plaintextSource = true` the source artifacts are read
     * without the crypto factory — the same entry point upgrades a
-    * plaintext index (an f3 migration output, a pre-crypto fixture) to
-    * encrypted-at-rest in place.
+    * plaintext index to encrypted-at-rest in place.
     *
     * The KEK write cache is cleared first, so the rotated files
     * reference only KEK ids minted by this call (the
@@ -1350,10 +1220,6 @@ object IvfPq {
       // their roots separately if the interval matters.
       if (Afs.exists(s"$cur/_SEGMENTS"))
         Afs.copyFile(s"$cur/_SEGMENTS", s"$vdir/_SEGMENTS")
-      // The PQ-mode marker is part of the artifact's meaning (which
-      // space the codes/qnorm live in) — a rotation that dropped it
-      // would silently flip a residual index to raw scoring.
-      copyMode(cur, vdir)
       // Verify ALL THREE artifacts before the flip, through FRESH
       // unwraps (the read-side KEK cache would otherwise satisfy this
       // from pre-rotation entries): every rewrite must decrypt and hold
@@ -1454,11 +1320,7 @@ object IvfPq {
 
   // ---- dataset-keyed lifecycle fixtures (the registered queries) --------
   //
-  // r13 verdict item 2: the registry's ANN serve AND lifecycle lines all
-  // price the composed f4 format now — f3 survives only as q110 (the
-  // build that is the migration source) and the quarantined spec-pinned
-  // reference implementations in AnnIndex. Fixture discipline is f3's
-  // verbatim: one-time bases adopt, the priced operation republishes per
+  // One-time bases adopt; the priced operation republishes per
   // invocation.
 
   private def fixture(s: SparkSession, d: String, suffix: String)(
@@ -1506,17 +1368,6 @@ object IvfPq {
     (baseDir, AnnIndex.resolveVersion(deltaRoot).getOrElse(appendDelta(s, d)._2))
   }
 
-  /** The f3→f4 migration output for this dataset's f3 index (q110's
-    * artifact) — a one-time dataset-keyed fixture (the trainers are
-    * deterministic, so a q110 forced rebuild reproduces the same f3
-    * artifacts and the adopted migration stays exact).
-    */
-  private def ensureMigrated(s: SparkSession, d: String): String = {
-    GraftFunctions.register(s)
-    fixture(s, d, "ivfpq_migrated")(root =>
-      migrateFromF3(s, AnnIndex.build(s, d), root))
-  }
-
   /** Fold base + the (fresh) delta into one physical composed index —
     * q127's priced operation.
     */
@@ -1557,8 +1408,7 @@ object IvfPq {
 
   /** Stream the 10% slice into composed delta segments against the
     * frozen f4 base (no auto-maintain — q128 prices the INGEST, the
-    * fold has its own line) — f3's `streamIngestInto` on the f4
-    * artifact, through the same shared core.
+    * fold has its own line), through the shared ingest core.
     */
   private[ops] def streamIngestInto(s: SparkSession, d: String,
       root: String): (String, Seq[String]) = {
@@ -1624,18 +1474,48 @@ object IvfPq {
        |UNION ALL SELECT 'pq_codebook', CAST(${Mpq * Kpq} AS BIGINT)
        |ORDER BY artifact""".stripMargin
 
-  /** Q111 — serve from the MIGRATED index: q110's f3 artifact converted
-    * one-pass by [[migrateFromF3]] (a one-time fixture), then the
-    * composed route→ADC→refine serve. The line proves the migration
-    * path's output is a first-class serving citizen — an operator
-    * upgrading an f3 fleet pays this serve plan afterwards.
-    * Approximate → rows-only driver check; IvfPqMigrateSpec pins the
-    * migrated artifact exactly equal to a fresh f4 build, IvfPqSpec
-    * pins the serve's recall floor and plan shape.
+  /** The dataset's encrypted-at-rest composed index root. */
+  private def encryptedRoot(d: String): String =
+    AnnIndex.shmDir(Tables.datasetTag(d) + "/ivfpq_enc")
+
+  /** Q110 — the composed index encrypted at rest, built FORCED: q133's
+    * build with every artifact written through the PME crypto factory
+    * under [[indexPolicies]] ([[buildFromEncrypted]] — fresh DEKs, KEKs
+    * wrapped by the KMS, a fresh version published on every call).
+    * Beside q133 the line prices what encryption adds to an ANN build.
+    * The census reads back with an INTERNAL token, the privilege every
+    * index column needs; conservation-oracled like q133.
+    */
+  val q110: Q = Q(
+    "q110_ann_index_build",
+    (s, d) => {
+      val kmsUrl = graft.kms.TestKmsServer.shared.url
+      val dir = buildFromEncrypted(s, AnnIndex.corpus(s, d), encryptedRoot(d), kmsUrl)
+      val readOpts = graft.crypto.EncryptionPolicy.readConfMap(kmsUrl, Some("INTERNAL"))
+      val arts = Seq("ivf_centroids", "ivfpq_lists", "pq_codebook")
+      census(s, arts.zip(AnnIndex.parCounts(arts)(a =>
+        s.read.options(readOpts).parquet(s"$dir/$a").count())))
+    },
+    Some(ConservationSql))
+
+  /** Q111 — the composed serve over q110's encrypted index with an
+    * INTERNAL token ([[probeEncrypted]]): q134's route→ADC→refine plan
+    * with every artifact read decrypting at the scan, so beside q134
+    * the line prices what encryption adds to an ANN serve. CURRENT
+    * resolves from disk on every call — q110 republishes, and retired
+    * versions must never be served — and the index is built only when
+    * none is there. Approximate → rows-only oracle check; IvfPqSpec
+    * pins its rows equal to q134's and its recall floor.
     */
   val q111: Q = Q("q111_ann_ivf_probe",
-    (s, d) => probeSegments(s, Seq(ensureMigrated(s, d)),
-      AnnIndex.defaultProbes(s, d)),
+    (s, d) => {
+      val kmsUrl = graft.kms.TestKmsServer.shared.url
+      val root = encryptedRoot(d)
+      val dir = AnnIndex.resolveVersion(root).getOrElse(
+        buildFromEncrypted(s, AnnIndex.corpus(s, d), root, kmsUrl))
+      probeEncrypted(s, Seq(dir), AnnIndex.defaultProbes(s, d), kmsUrl,
+        Some("INTERNAL"))
+    },
     None)
 
   /** Q112 — composed serve over the LIVE LSM state (base ∪ appended
@@ -1810,6 +1690,6 @@ object IvfPq {
     */
   val q134: Q = Q("q134_ann_ivfpq_probe", (s, d) => probe(s, d), None)
 
-  val queries: Seq[Q] = Seq(q111, q112, q113, q127, q128, q129, q130,
+  val queries: Seq[Q] = Seq(q110, q111, q112, q113, q127, q128, q129, q130,
     q131, q132, q133, q134)
 }

@@ -381,7 +381,7 @@ object Similarity {
       // hash-seeded, `lloydSteps` element-wise-mean refinements, each
       // one corpus pass + an O(k·dim) driver collect, the MLlib k-means
       // iteration shape). This query keeps the INLINE build-and-probe
-      // composition; q110/q111 are the build-once/probe-many split of
+      // composition; q133/q134 are the build-once/probe-many split of
       // the same trainer.
       def entries(vec: Column, cents: Seq[(Int, Seq[Double])]): Seq[Column] =
         AnnIndex.centroidEntries(vec, cents)
@@ -454,7 +454,7 @@ object Similarity {
       // (AnnIndex.trainPqCodebook / pqAssign — hash-seeded per-subspace
       // codebooks, one Lloyd step across all subspaces in one pass,
       // O(K·dim) driver collects only). This query keeps the INLINE
-      // build-encode-probe composition; q110/q112 are the
+      // build-encode-probe composition; q133/q134 are the
       // build-once/serve-many split of the same trainer.
       val sliced = AnnIndex.pqSliced(emb)
       def assign(cb: DataFrame): DataFrame = AnnIndex.pqAssign(sliced, cb)

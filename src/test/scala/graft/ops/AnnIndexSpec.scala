@@ -2,31 +2,30 @@ package graft.ops
 
 import graft.SparkTestBase
 
-/** What remains on the f3 side after the r15 quarantine deletion (r14
-  * verdict item 5): the q110 build (the migration source) and the
-  * format-agnostic version-publication machinery — marker-idempotent
-  * builds, claim-by-exclusive-create allocation, retire-after-two with
-  * grace, pointer-fallback resolution, Hadoop-FS scheme transparency,
-  * and the live concurrent-reader closure. Serve/LSM pins live on the
-  * f4 twins (IvfPqSpec / IvfPqStreamSpec / AnnLifecycleSoakSpec).
+/** The format-agnostic version-publication machinery of the shared
+  * index core, driven through the composed index's builds
+  * ([[IvfPq.build]] / [[IvfPq.buildFrom]]) — marker-idempotent builds,
+  * claim-by-exclusive-create allocation, retire-after-two with grace,
+  * pointer-fallback resolution, Hadoop-FS scheme transparency, and the
+  * live concurrent-reader closure. Serve/LSM pins live in IvfPqSpec /
+  * IvfPqStreamSpec / AnnLifecycleSoakSpec.
   */
 class AnnIndexSpec extends SparkTestBase {
 
-  test("q110 build is idempotent-by-marker; a forced rebuild republishes adoptable artifacts") {
-    val dir = AnnIndex.build(spark, sfDir, force = true)
+  test("q133 build is idempotent-by-marker; a forced rebuild republishes adoptable artifacts") {
+    val dir = IvfPq.build(spark, sfDir, force = true)
     val marker = new java.io.File(dir, "_SUCCESS")
     assert(marker.exists(), "build must leave a _SUCCESS marker")
     val stamp = marker.lastModified()
     // Unforced build must adopt the existing artifacts, not rebuild.
-    assert(AnnIndex.build(spark, sfDir) === dir)
+    assert(IvfPq.build(spark, sfDir) === dir)
     assert(marker.lastModified() === stamp,
       "unforced build re-ran the trainer instead of adopting the marker")
     // The published artifact set is complete and conserved — the same
-    // law q110's oracle checks (every corpus vector exactly once in
-    // assignments and codes, trained tables at configured sizes).
+    // law q133's oracle checks (every corpus vector exactly once in the
+    // composed lists, trained tables at configured sizes).
     val n = graft.Tables.embeddings(spark, sfDir).count()
-    assert(spark.read.parquet(s"$dir/ivf_assignments").count() === n)
-    assert(spark.read.parquet(s"$dir/pq_codes").count() === n)
+    assert(spark.read.parquet(s"$dir/ivfpq_lists").count() === n)
     assert(spark.read.parquet(s"$dir/ivf_centroids").count() === AnnIndex.K.toLong)
     assert(spark.read.parquet(s"$dir/pq_codebook").count() ===
       (AnnIndex.Mpq * AnnIndex.Kpq).toLong)
@@ -40,20 +39,20 @@ class AnnIndexSpec extends SparkTestBase {
     val g = AnnIndex.RetireGraceMs
     AnnIndex.RetireGraceMs = 0L
     try {
-      val v1 = AnnIndex.build(spark, sfDir, force = true)
-      val v2 = AnnIndex.build(spark, sfDir, force = true)
+      val v1 = IvfPq.build(spark, sfDir, force = true)
+      val v2 = IvfPq.build(spark, sfDir, force = true)
       assert(v1 !== v2, "forced rebuild must publish a fresh immutable version dir")
       // An in-flight reader that resolved v1 just before the flip still
       // scans intact files: the predecessor is retired only by the NEXT
       // publish.
       assert(new java.io.File(v1, "_SUCCESS").exists(),
         "previous version must stay complete through one publish")
-      assert(spark.read.parquet(s"$v1/ivf_assignments").count() > 0)
-      val v3 = AnnIndex.build(spark, sfDir, force = true)
+      assert(spark.read.parquet(s"$v1/ivfpq_lists").count() > 0)
+      val v3 = IvfPq.build(spark, sfDir, force = true)
       assert(!new java.io.File(v1).exists(),
         s"version $v1 should be retired once two newer versions exist (now $v3)")
       // CURRENT resolves to the newest complete version for adopters.
-      assert(AnnIndex.build(spark, sfDir) === v3)
+      assert(IvfPq.build(spark, sfDir) === v3)
     } finally AnnIndex.RetireGraceMs = g
   }
 
@@ -74,7 +73,7 @@ class AnnIndexSpec extends SparkTestBase {
       val emb = (0L until 80L)
         .map(id => (id, (0 until 64).map(j => math.sin(id * 31 + j * 17)), (id % 10).toInt))
         .toDF("vec_id", "e", "label")
-      val v1 = AnnIndex.buildFrom(spark, emb, root.toString)
+      val v1 = IvfPq.buildFrom(spark, emb, root.toString)
       assert(new java.io.File(v1).getName === "v000001")
       // Writer A has CLAIMED v000002 (claim marker landed, build in
       // flight — here: a partial dir with A's data) — publishes racing
@@ -87,7 +86,7 @@ class AnnIndexSpec extends SparkTestBase {
       val claim = new java.io.File(root, "v000002")
       assert(claim.mkdir())
       assert(new java.io.File(claim, "a-partial-artifact").createNewFile())
-      val v2 = AnnIndex.buildFrom(spark, emb, root.toString)
+      val v2 = IvfPq.buildFrom(spark, emb, root.toString)
       assert(new java.io.File(v2).getName === "v000003",
         s"publish must claim the next free version, got $v2")
       assert(Option(claim.listFiles()).getOrElse(Array.empty).map(_.getName).toSeq
@@ -103,7 +102,7 @@ class AnnIndexSpec extends SparkTestBase {
       // predecessor v000003) retires; A's in-flight v000002 still must
       // not — retirement keys on _SUCCESS, and claim GC has a
       // generous age floor.
-      val v4 = AnnIndex.buildFrom(spark, emb, root.toString)
+      val v4 = IvfPq.buildFrom(spark, emb, root.toString)
       assert(new java.io.File(v4).getName === "v000004")
       assert(!new java.io.File(v1).exists(),
         "complete version below the predecessor should retire at grace 0")
@@ -182,8 +181,8 @@ class AnnIndexSpec extends SparkTestBase {
       val emb = (0L until 80L)
         .map(id => (id, (0 until 64).map(j => math.sin(id * 31 + j * 17)), (id % 10).toInt))
         .toDF("vec_id", "e", "label")
-      val v1 = AnnIndex.buildFrom(spark, emb, root)
-      val v2 = AnnIndex.buildFrom(spark, emb, root)
+      val v1 = IvfPq.buildFrom(spark, emb, root)
+      val v2 = IvfPq.buildFrom(spark, emb, root)
       // Mid-flip: CURRENT deleted between a writer's delete and rename.
       assert(new java.io.File(root, "CURRENT").delete())
       assert(AnnIndex.resolveVersion(root) === Some(v2),
@@ -213,14 +212,15 @@ class AnnIndexSpec extends SparkTestBase {
     // forced rebuilds publish fresh versions must only ever see
     // complete, readable artifacts. The deterministic retire-after-two
     // pin above proves the file lifecycle; this pins the read path.
-    AnnIndex.build(spark, sfDir, force = true)
+    IvfPq.build(spark, sfDir, force = true)
+    val root = AnnIndex.shmDir(graft.Tables.datasetTag(sfDir) + "/ivfpq")
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val resolutions = new java.util.concurrent.atomic.AtomicInteger(0)
     val reader = new Thread(() => {
       while (!stop.get()) {
         try {
-          AnnIndex.currentServing(sfDir) match {
+          AnnIndex.resolveVersion(root) match {
             case Some(dir) =>
               assert(spark.read.parquet(s"$dir/ivf_centroids").count() === AnnIndex.K.toLong)
               assert(spark.read.parquet(s"$dir/pq_codebook").count() ===
@@ -233,7 +233,7 @@ class AnnIndexSpec extends SparkTestBase {
       }
     })
     reader.start()
-    try (1 to 2).foreach(_ => AnnIndex.build(spark, sfDir, force = true))
+    try (1 to 2).foreach(_ => IvfPq.build(spark, sfDir, force = true))
     finally { stop.set(true); reader.join(30000) }
     assert(failures.isEmpty, s"reader failed during rebuild: ${failures.peek()}")
     assert(resolutions.get() > 0, "reader never resolved a version while rebuilds ran")

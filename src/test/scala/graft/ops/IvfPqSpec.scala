@@ -33,20 +33,20 @@ class IvfPqSpec extends SparkTestBase {
     assert(r >= 0.80, f"composed IVF+PQ recall regressed to $r%.3f (floor 0.80)")
   }
 
-  test("q111 migrated (raw-space) serve holds its recall floor at sf0.1") {
-    // The migrated index carries no _PQ_MODE marker, so the serve MUST
-    // score it raw (bias 0, raw-trained codebook). This floor is the
-    // one check the migrate spec's collected≡distributed equality can't
-    // provide: a mode mix-up (residual bias applied to raw codes, or a
-    // residual artifact scored raw) breaks both paths TOGETHER and
-    // still passes equality — but collapses recall here. Raw codes at
-    // nprobe=8 measured 0.800 (the quantization loss vs the 0.840
-    // routing ceiling the residual encoding closes).
+  test("q111 encrypted serve returns q134's neighbours and holds q134's recall floor at sf0.1") {
+    // q111 serves the PME-encrypted build of the same corpus. The
+    // trainers are deterministic and encryption changes no stored
+    // value, so not a single (probe, neighbour) pair may differ from the
+    // plaintext q134 serve; the floor is q134's.
     val exact = topkSet(Similarity.q23.fn(spark, benchSf))
+    val plain = topkSet(IvfPq.q134.fn(spark, benchSf))
     val approx = topkSet(IvfPq.q111.fn(spark, benchSf))
+    assert(approx == plain,
+      s"encrypted serve diverged from q134: ${(approx diff plain).toSeq.sorted.take(5)} " +
+        s"vs ${(plain diff approx).toSeq.sorted.take(5)}")
     val r = (exact & approx).size.toDouble / exact.size
-    info(f"q111 migrated raw-serve recall $r%.3f")
-    assert(r >= 0.75, f"migrated raw-space serve recall $r%.3f (floor 0.75)")
+    info(f"q111 encrypted-serve recall $r%.3f")
+    assert(r >= 0.80, f"encrypted composed serve recall $r%.3f (floor 0.80)")
   }
 
   /** Per-FileScan (partition-pruned?, ReadSchema) facts for the composed
@@ -266,8 +266,8 @@ class IvfPqSpec extends SparkTestBase {
   test("distributed composed serve at k=1024 ≡ collected (aggregate routing + broadcast residual-bias branches)") {
     // Past LiteralAssignMaxK both paths switch branch: routing joins
     // the broadcast centroid table instead of baking a literal map, and
-    // residual mode computes the per-(probe,cid) ADC bias through a
-    // broadcast join instead of a literal element_at. This is the
+    // the per-(probe,cid) residual ADC bias comes through a broadcast
+    // join instead of a literal element_at. This is the
     // k=sqrt(n) posture's serve shape, end-to-end over real written
     // artifacts; the probe frame carries a shuffle in its lineage (the
     // recomputed-ordinal misjoin shape r12 caught). Pin = EQUALITY.
@@ -293,7 +293,6 @@ class IvfPqSpec extends SparkTestBase {
           .write.partitionBy("cid").parquet(s"$root/ivfpq_lists")
         cs.toDF("cid", "ce").coalesce(1).write.parquet(s"$root/ivf_centroids")
         cb.coalesce(1).write.parquet(s"$root/pq_codebook")
-        graft.io.Afs.writeString(s"$root/_PQ_MODE", "residual")
       } finally cb.unpersist(): Unit
     } finally assigned.unpersist(): Unit
     val probes = vecsDf(0L until 40L).repartition(3)

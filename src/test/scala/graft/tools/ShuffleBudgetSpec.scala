@@ -59,10 +59,10 @@ class ShuffleBudgetSpec extends SparkTestBase {
     // would otherwise ride into the append's measured bytes (~10x the
     // steady-state ceiling).
     "q113_ann_index_append",
-    // q111's f3->f4 migration output is a one-time dataset-keyed
-    // fixture (and builds the f3 source index when missing): ensure it
-    // so the sweep prices the steady-state SERVE, not the migration's
-    // corpus join + partitioned write.
+    // q111 builds the encrypted composed index when none is published
+    // yet: ensure it so the sweep prices the steady-state encrypted
+    // SERVE, not that build's Lloyd/codebook training and partitioned
+    // write.
     "q111_ann_ivf_probe",
     // q130 is the FIRST query in sorted sweep order whose serve adopts
     // the full-corpus composed build (q133's forced build sorts after
