@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.QueryMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Bench harness (BASELINE.md §B): runs every registered query against
@@ -31,42 +32,32 @@ object Bench {
       */
     def load1: String = slurp("/proc/loadavg").split(" ").headOption.getOrElse("?")
 
-    /** CPU pressure-stall avg10 (`/proc/pressure/cpu`, "some" line): the
-      * share of the last 10 s in which at least one runnable task was
-      * stalled waiting for CPU. THE contention signal the r13 retry gate
-      * was missing — 1-min loadavg is a lagging average that reported
-      * 1.86 while a 0.3 s-class query's retry stalled for 19.2 s under
-      * bursty co-tenant CPU; PSI avg10 reacts within seconds and
-      * measures the stall itself, not the queue length. −1 when the
-      * kernel exposes no PSI.
+    /** The "some" line of a pressure-stall file (`/proc/pressure/<r>`). */
+    private def psiLine(r: String): String =
+      slurp(s"/proc/pressure/$r").linesIterator.find(_.startsWith("some")).getOrElse("?")
+
+    /** avg10 of a pressure-stall "some" line: the share of the last 10 s
+      * in which at least one task was stalled on the resource. −1 when
+      * the kernel exposes no PSI.
       */
-    def psiCpu: Double =
-      try {
-        val txt = slurp("/proc/pressure/cpu")
-        "some .*?avg10=([0-9.]+)".r.findFirstMatchIn(txt)
-          .map(_.group(1).toDouble).getOrElse(-1.0)
-      } catch { case _: Throwable => -1.0 }
+    private def psiAvg10(r: String): Double =
+      "avg10=([0-9.]+)".r.findFirstMatchIn(psiLine(r))
+        .flatMap(_.group(1).toDoubleOption).getOrElse(-1.0)
 
-    def psiRaw: String =
-      slurp("/proc/pressure/cpu").linesIterator
-        .find(_.startsWith("some")).getOrElse("?")
-
-    /** IO pressure-stall avg10 (`/proc/pressure/io`, "some" line). The
-      * r15 seal night's lesson: a co-tenant hammering the DISK inflates
-      * task deserialization (classpath reads) 2-5x while CPU PSI stays
-      * ≈0 — the cpu gate alone settles straight into an IO storm. −1
-      * when the kernel exposes no PSI.
+    /** CPU PSI avg10: THE contention signal the r13 retry gate was
+      * missing — 1-min loadavg is a lagging average that reported 1.86
+      * while a 0.3 s-class query's retry stalled for 19.2 s under bursty
+      * co-tenant CPU; PSI avg10 reacts within seconds and measures the
+      * stall itself, not the queue length.
       */
-    def psiIo: Double =
-      try {
-        val txt = slurp("/proc/pressure/io")
-        "some .*?avg10=([0-9.]+)".r.findFirstMatchIn(txt)
-          .map(_.group(1).toDouble).getOrElse(-1.0)
-      } catch { case _: Throwable => -1.0 }
+    def psiCpu: Double = psiAvg10("cpu")
 
-    def psiIoRaw: String =
-      slurp("/proc/pressure/io").linesIterator
-        .find(_.startsWith("some")).getOrElse("?")
+    /** IO PSI avg10. The r15 seal night's lesson: a co-tenant hammering
+      * the DISK inflates task deserialization (classpath reads) 2-5x
+      * while CPU PSI stays ≈0 — the cpu gate alone settles straight into
+      * an IO storm.
+      */
+    def psiIo: Double = psiAvg10("io")
 
     /** Host conditions the bench cannot control but the numbers depend
       * on: printed once per run so a slow BENCH_r{N} is attributable.
@@ -80,48 +71,9 @@ object Bench {
         val f = new java.io.File("/dev/shm")
         s"${f.getUsableSpace / (1L << 30)}G"
       } catch { case _: Throwable => "?" }
-      s"loadavg=${slurp("/proc/loadavg")} psi.cpu=[$psiRaw] " +
-        s"psi.io=[$psiIoRaw] $memAvail " +
+      s"loadavg=${slurp("/proc/loadavg")} psi.cpu=[${psiLine("cpu")}] " +
+        s"psi.io=[${psiLine("io")}] $memAvail " +
         s"cgroup.cpu.max=[$cpuMax] shmFree=$shmFree"
-    }
-  }
-
-  /** Per-query task-level accumulators: where wall-clock actually went.
-    * wall >> taskSum/32 with low cpu ⇒ tasks were stalled (IO / memory /
-    * host contention); taskSum ≈ cpu ⇒ genuine compute; wall >> taskSum
-    * ⇒ the gap is driver-side (job scheduling, broadcast build, codegen).
-    */
-  private final class QueryMetrics extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.LongAdder
-    val tasks, jobs = new LongAdder
-    val taskMs, cpuMs, gcMs, fetchWaitMs, shufWriteMs, deserMs, shufBytes = new LongAdder
-
-    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs.increment()
-
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      tasks.increment()
-      if (t.taskInfo != null) taskMs.add(t.taskInfo.duration)
-      val m = t.taskMetrics
-      if (m != null) {
-        cpuMs.add(m.executorCpuTime / 1000000L)
-        gcMs.add(m.jvmGCTime)
-        fetchWaitMs.add(m.shuffleReadMetrics.fetchWaitTime)
-        shufWriteMs.add(m.shuffleWriteMetrics.writeTime / 1000000L)
-        deserMs.add(m.executorDeserializeTime)
-        shufBytes.add(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-
-    def reset(): Unit =
-      Seq(tasks, jobs, taskMs, cpuMs, gcMs, fetchWaitMs, shufWriteMs, deserMs, shufBytes)
-        .foreach(_.reset())
-
-    def line: String = {
-      def s(a: LongAdder) = f"${a.sum / 1000.0}%.1fs"
-      s"jobs=${jobs.sum} tasks=${tasks.sum} taskSum=${s(taskMs)} cpu=${s(cpuMs)} " +
-        s"taskGc=${s(gcMs)} fetchWait=${s(fetchWaitMs)} shufWrite=${s(shufWriteMs)} " +
-        s"deser=${s(deserMs)}"
     }
   }
 
@@ -147,39 +99,6 @@ object Bench {
       "q57_leakage_safe_split", "q58_semantic_dedup", "q62_stream_static_join",
       "q64_token_packing", "q69_sessionize", "q72_bm25", "q77_train_shards",
       "q97_star_join", "q108_survivorship")
-  }
-
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Parallelism floor under AQE: coalescing is byte-based and the
-      // dedup/similarity joins EXPAND rows 10-1000x after the exchange, so
-      // coalescing their tiny inputs to 1-2 partitions serializes the
-      // heavy join on one thread (measured: identical plans swinging
-      // 5s..110s run-to-run). On a real cluster the same floor is
-      // spark.default.parallelism-sized; data volume alone cannot reveal
-      // generator/join fanout. Both knobs: minPartitionNum is deprecated
-      // (and no longer honored for some plans in 4.x); the SIZE floor is
-      // what actually stops the 1 MB default from folding a 2 MB
-      // CPU-heavy shuffle onto 1-2 threads.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      // Sort-based shuffle writer even for small partition counts: the
-      // bypass-merge writer creates mappers×reducers (=1024) tiny files
-      // per exchange, and task-level metrics show shuffle-write TIME
-      // exceeding CPU time on the multi-exchange dedup queries (6.9s of
-      // 20.2s task time on q22b). The sort path writes one data+index
-      // file per mapper. Same reasoning a real cluster applies — bypass
-      // is only a win when per-file cost is negligible.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.tune(spark)
-    spark
   }
 
   /** Pull the Spark jars (and the compiled classes) into the OS page
@@ -291,55 +210,54 @@ object Bench {
   private final case class RunSample(wall: Double, diag: String,
       taskS: Double, cpuS: Double, psiEnd: Double, loadEnd: Double)
 
-  /** One untimed pass over the selected queries in a single fresh
-    * context, recording per-query (jobs fired, shuffle bytes written).
-    * Runs at the sf0.01 sibling of the bench dir when present: shape
-    * metrics are plan facts, not timings — small-SF is cheap and the
-    * signal only grows with SF (iterative pipelines add rounds, never
-    * lose them), so a small-SF threshold crossing is conservative.
-    * Table-load and fixture costs land before any query is measured,
-    * mirroring the timed groups' warmup discipline.
+  /** The sf0.01 sibling of the bench dir when present, else the bench
+    * dir itself: where the shape pass runs.
     */
-  private def profileShapes(cpus: String, sfDir: String,
-      names: Seq[(String, QFn)]): Map[String, (Long, Long)] = {
-    val t0 = System.nanoTime()
+  private def shapeDir(sfDir: String): String = {
     val small = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01")
-    val dir = if (small.isDirectory) small.getPath else sfDir
-    SparkSession.getActiveSession.foreach(_.stop())
-    val spark = newSession(cpus)
-    val qm = new QueryMetrics
-    spark.sparkContext.addSparkListener(qm)
+    if (small.isDirectory) small.getPath else sfDir
+  }
+
+  /** Scan every corpus table once (table-load, file-listing and scan
+    * codegen costs land here, before any query is measured).
+    */
+  private def scanTables(spark: SparkSession, dir: String): Unit =
     Tables.all.foreach { t =>
       try {
-        val df = if (t == "events") Tables.events(spark, dir)
-                 else Tables.load(spark, dir, t)
+        val df = if (t == "events") Tables.events(spark, dir) else Tables.load(spark, dir, t)
         df.count(): Unit
       } catch { case _: Throwable => () }
     }
+
+  /** One untimed pass over the selected queries in a single fresh
+    * context, recording each query's [[QueryMetrics.Shape]] (jobs fired,
+    * shuffle bytes written) — None for a query whose run threw.
+    * Runs at [[shapeDir]]: shape metrics are plan facts, not timings —
+    * small-SF is cheap and the signal only grows with SF (iterative
+    * pipelines add rounds, never lose them), so a small-SF threshold
+    * crossing is conservative. The same map is the bench's
+    * `shuffle_bytes` line. Table-load and fixture costs land before
+    * any query is measured, mirroring the timed groups' warmup
+    * discipline.
+    */
+  private def profileShapes(cpus: String, dir: String,
+      names: Seq[(String, QFn)]): Map[String, Option[QueryMetrics.Shape]] = {
+    val t0 = System.nanoTime()
+    SparkSession.getActiveSession.foreach(_.stop())
+    val spark = Graft.localSession(cpus)
+    val qm = QueryMetrics.install(spark)
+    scanTables(spark, dir)
     val out = names.map { case (name, fn) =>
-      org.apache.spark.graft.ListenerFlush.flush(spark.sparkContext)
-      qm.reset()
-      val ok =
-        try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench-shape] $name profile failed: ${e.getMessage}")
-          false
-        }
-      org.apache.spark.graft.ListenerFlush.flush(spark.sparkContext)
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      // A failed profile run must NOT record its partial counts: a heavy
-      // query dying early would measure artificially light, land in a
-      // shared timed group, and reintroduce the very contamination the
-      // shape rule exists to prevent. MaxValue sentinels make the
-      // documented unprofiled=>solo default actually reachable.
-      name -> (if (ok) (qm.jobs.sum, qm.shufBytes.sum)
-               else (Long.MaxValue, Long.MaxValue))
+      name -> qm.measure(spark, name) {
+        fn(spark, dir).write.format("noop").mode("overwrite").save()
+      }
     }.toMap
     spark.stop()
     System.err.println(f"[bench-shape] profiled ${names.size} queries at $dir " +
       f"in ${(System.nanoTime() - t0) / 1e9}%.1fs")
     System.err.println("[bench-shape] map: " + out.toSeq.sortBy(_._1)
-      .map { case (n, (j, b)) => s"$n:$j:$b" }.mkString(" "))
+      .map { case (n, s) => s"$n:${s.fold("failed")(s => s"${s.jobs}:${s.shuffleBytes}")}" }
+      .mkString(" "))
     out
   }
 
@@ -458,18 +376,19 @@ object Bench {
     // small SF and monotone in SF (iterative pipelines only gain jobs
     // at larger scale), unlike timings, which is why the profile can be
     // small-SF while the timed groups run at the bench SF.
-    val shapes = profileShapes(cpus, sfDir, names)
+    val shapesDir = shapeDir(sfDir)
+    val shapes = profileShapes(cpus, shapesDir, names)
+    def shape(n: String) = shapes.get(n).flatten
     val soloNames: Set[String] = names.map(_._1).filter { n =>
       // Unprofiled (profile-pass failure) => solo: the safe default.
-      val (jobs, bytes) = shapes.getOrElse(n, (Long.MaxValue, Long.MaxValue))
-      jobs >= SoloJobs || bytes >= SoloShuffleBytes
+      shape(n).forall(s => s.jobs >= SoloJobs || s.shuffleBytes >= SoloShuffleBytes)
     }.toSet
     System.err.println(s"[bench-shape] solo (jobs>=$SoloJobs or shufBytes>=$SoloShuffleBytes): " +
-      soloNames.toSeq.sorted.map(n => s"$n(j=${shapes.get(n).map(_._1).getOrElse(-1L)}," +
-        s"b=${shapes.get(n).map(_._2).getOrElse(-1L)})").mkString(", "))
-    val groups: Seq[Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]] = {
-      val out = Seq.newBuilder[Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]]
-      var cur = Vector.empty[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]
+      soloNames.toSeq.sorted.map(n => s"$n(j=${shape(n).fold(-1L)(_.jobs)}," +
+        s"b=${shape(n).fold(-1L)(_.shuffleBytes)})").mkString(", "))
+    val groups: Seq[Seq[(String, QFn)]] = {
+      val out = Seq.newBuilder[Seq[(String, QFn)]]
+      var cur = Vector.empty[(String, QFn)]
       names.foreach { nf =>
         if (soloNames(nf._1)) {
           if (cur.nonEmpty) { out += cur; cur = Vector.empty }
@@ -482,18 +401,11 @@ object Bench {
       if (cur.nonEmpty) out += cur
       out.result()
     }
-    val qm = new QueryMetrics
     val results = groups.iterator.flatMap { group =>
       SparkSession.getActiveSession.foreach(_.stop())
-      val spark = newSession(cpus)
-      spark.sparkContext.addSparkListener(qm)
-      Tables.all.foreach { t =>
-        try {
-          val df = if (t == "events") Tables.events(spark, sfDir)
-                   else Tables.load(spark, sfDir, t)
-          df.count()
-        } catch { case _: Throwable => () }
-      }
+      val spark = Graft.localSession(cpus)
+      val qm = QueryMetrics.install(spark)
+      scanTables(spark, sfDir)
       // Per-group warmup: the exact queries at the exact scale factor,
       // once, untimed (JMH-style steady-state methodology). Round 2 warmed
       // at sf0.001 instead — too few loop iterations to cross the
@@ -520,23 +432,17 @@ object Bench {
         try spark.catalog.clearCache() catch { case _: Throwable => () }
       }
       def timedRun(name: String, fn: QFn): RunSample = {
-        org.apache.spark.graft.ListenerFlush.flush(spark.sparkContext)
-        qm.reset()
-        val t0 = System.nanoTime()
-        val comp0 = Diag.compileMs
-        val gc0 = Diag.gcMs
-        val ok =
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
+        var comp0, gc0 = 0L
+        var dt = 0.0
+        val ok = qm.measure(spark, name) {
+          val t0 = System.nanoTime()
+          comp0 = Diag.compileMs
+          gc0 = Diag.gcMs
+          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          finally dt = (System.nanoTime() - t0) / 1e9
+        }.isDefined
         // Where did the wall time go? JVM-level JIT/GC deltas plus
         // task-level sums expose the stalls plan inspection can't.
-        org.apache.spark.graft.ListenerFlush.flush(spark.sparkContext)
         System.err.println(f"[bench-diag] $name wall=$dt%.1fs " +
           f"jit=${(Diag.compileMs - comp0) / 1000.0}%.1fs " +
           f"gc=${(Diag.gcMs - gc0) / 1000.0}%.1fs ${qm.line} load=${Diag.load1} " +
@@ -554,9 +460,6 @@ object Bench {
         val diag = f""""$name":{"task":$taskS%.1f,""" +
           f""""cpu":$cpuS%.1f,"tgc":${qm.gcMs.sum / 1000.0}%.1f,""" +
           f""""load":$ld%.2f,"psi":$psi%.1f,"psio":${Diag.psiIo}%.1f}"""
-        // Drop persisted tables between queries — a leftover cache from a
-        // dedup query measurably contaminates its successors.
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
         RunSample(if (ok) dt else -1.0, diag, taskS, cpuS, psi, ld)
       }
       // SHARED groups are timed TWICE — forward order, then reverse —
@@ -713,7 +616,7 @@ object Bench {
     // factors and the BASELINE §B crypto cells. Guarded — a diag failure
     // must never cost the run its timing artifact.
     if (only.isEmpty) {
-      val spark = SparkSession.getActiveSession.getOrElse(newSession(cpus))
+      val spark = SparkSession.getActiveSession.getOrElse(Graft.localSession(cpus))
       try println(tools.ScaleDiag.run(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"[bench] scale diag failed: $e") }
       try println(tools.ScaleDiag.annRecall(spark, sfDir))
@@ -724,18 +627,15 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] ann dist-ivfpq diag failed: $e") }
       try println(tools.CryptoMeasure.run(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"[bench] crypto diag failed: $e") }
-      // Exchange-byte sweep (r8 verdict item 4), recorded per round next
-      // to the timings. Runs at the sf0.01 sibling: a refactor that lets
-      // a wide payload ride through a shuffle multiplies the bytes at
-      // every scale factor identically, and the small-SF sweep keeps the
-      // one-context pass cheap (the sf0.1 anchors for the heavy family
-      // are spec-enforced in ShuffleBudgetSpec).
-      try {
-        val small = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01")
-        val dir = if (small.isDirectory) small.getPath else sfDir
-        println(tools.ScaleDiag.shuffleBudget(spark, dir))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] shuffle budget diag failed: $e") }
+      // Exchange bytes per query (r8 verdict item 4), recorded per round
+      // next to the timings, read off the shape pass: a refactor that
+      // lets a wide payload ride through a shuffle multiplies the bytes
+      // at every scale factor identically, so the small-SF record is
+      // enough (the sf0.1 anchors for the heavy family are spec-enforced
+      // in ShuffleBudgetSpec). -1 marks a query whose shape run failed.
+      val cells = names.map { case (n, _) => s""""$n":${shape(n).fold(-1L)(_.shuffleBytes)}""" }
+      println(s"""{"metric":"shuffle_bytes","sf":"${new java.io.File(shapesDir).getName}",""" +
+        cells.mkString("\"queries\":{", ",", "}}"))
     }
     // The driver keeps only the tail of stdout; with 61 queries the full
     // line above outgrew that window in round 3 and the headline total was

@@ -17,7 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Graft {
 
   /** The engine's session-level conf, applied ONCE at session setup (all
-    * entry points — Bench, Verify, Graft.init, the test base — call this)
+    * entry points — [[localSession]], Verify, Graft.init, the test base —
+    * call this)
     * so no individual query needs to mutate session state:
     *
     *  - `icu.caseMappings.enabled=false`: JVM case mappings instead of
@@ -47,6 +48,44 @@ object Graft {
     spark.conf.set("spark.sql.icu.caseMappings.enabled", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+  }
+
+  /** The local session every bench and tool main runs on (`local[cpus]`,
+    * tuned). `Verify` and the spec base keep their own builders: the
+    * oracle hashes and the exchange-byte ceilings were recorded under
+    * those confs.
+    */
+  private[graft] def localSession(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // Parallelism floor under AQE: coalescing is byte-based and the
+      // dedup/similarity joins EXPAND rows 10-1000x after the exchange, so
+      // coalescing their tiny inputs to 1-2 partitions serializes the
+      // heavy join on one thread (measured: identical plans swinging
+      // 5s..110s run-to-run). On a real cluster the same floor is
+      // spark.default.parallelism-sized; data volume alone cannot reveal
+      // generator/join fanout. Both knobs: minPartitionNum is deprecated
+      // (and no longer honored for some plans in 4.x); the SIZE floor is
+      // what actually stops the 1 MB default from folding a 2 MB
+      // CPU-heavy shuffle onto 1-2 threads.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cpus)
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
+      // Sort-based shuffle writer even for small partition counts: the
+      // bypass-merge writer creates mappers×reducers (=1024) tiny files
+      // per exchange, and task-level metrics show shuffle-write TIME
+      // exceeding CPU time on the multi-exchange dedup queries (6.9s of
+      // 20.2s task time on q22b). The sort path writes one data+index
+      // file per mapper. Same reasoning a real cluster applies — bypass
+      // is only a win when per-file cost is negligible.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      .config("spark.sql.icu.caseMappings.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    tune(spark)
+    spark
   }
 
   /** Register every corpus table as a temp view plus graft's custom

@@ -10,16 +10,7 @@ import org.apache.spark.sql.SparkSession
   * running; default URL matches the reference's port 8001.
   */
 object Demo {
-  private[crypto] def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private[crypto] def session(): SparkSession = graft.Graft.localSession("4")
 }
 
 object WriteEncrypted {

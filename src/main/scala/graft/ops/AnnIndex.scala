@@ -36,7 +36,7 @@ object AnnIndex {
   // IVF sizing: q23e's measured rationale (16 lists, 4 Lloyd steps —
   // BASELINE §C7). At 100 TB, k grows ∝ sqrt(n), nprobe stays the
   // recall/cost knob. Nprobe moved 6 → 8 in r15 WITH the IVFADC
-  // residual encoding (tools.RecallMeasure, sf0.1): residual codes
+  // residual encoding (BASELINE.md §C16, sf0.1): residual codes
   // saturate the routing ceiling exactly (serve 0.740 = ceiling(6)
   // 0.740, where raw codes lost ~0.02 to quantization), so past r15 the
   // recall knob is routing, not encoding — ceiling(8) measured 0.840,

@@ -383,6 +383,13 @@ object IvfPq {
 
   // ---- distributed serve -------------------------------------------------
 
+  /** Wall seconds of the LAST distributed serve's eager probe
+    * checkpoint (the extra probe-sized job the r14 deadlock fix costs)
+    * — read by the bench diag right after a timed serve to attribute
+    * the serve wall. Measurement plumbing, not serving state.
+    */
+  @volatile private[graft] var lastCheckpointSec: Double = 0.0
+
   /** FULLY-DISTRIBUTED composed serve — the reindex-scale probe path for
     * the at-scale index format: the probe frame stays a DataFrame
     * end-to-end (q132's discipline — no
@@ -431,40 +438,11 @@ object IvfPq {
     * IvfPqSpec on plain, filtered, masked-multi-segment and
     * duplicate-pid frames, plus a no-LocalTableScan plan pin).
     */
-  /** `staticCidPrune` (r13 verdict item 6, OPT-IN — measured rejection
-    * as a default): collect the routed cid set (bounded by construction
-    * — at most K distinct values, the same bounded-collect discipline
-    * as every trainer) and statically prune BOTH list scans to it, like
-    * the collected path does. The price is one extra job materializing
-    * the routing stage before the serve plan re-derives it. Measured at
-    * sf0.1 (`tools.PruneMeasure`, quiet host, BASELINE §C15): on the
-    * one regime where pruning could pay — 10k probes over 2 distinct
-    * targets, routing to 12/16 lists — pruned 8.67 s vs unpruned
-    * 8.48 s (noise: the scoring JOIN on cid already drops every
-    * unrouted list's rows after the scan, so compute is identical and
-    * only scan bytes differ, which tmpfs serves for free); on the q132
-    * broad frame it costs its extra routing job outright (4.13 vs
-    * 3.69 s). Hence DEFAULT OFF. The flag earns its keep only where
-    * candidate-scan BYTES are the bottleneck — an IO-bound object-store
-    * deployment at corpus ≫ probes, where unpruned reads every list's
-    * codes pages and pruned reads nprobe-routed partitions only — which
-    * is why it ships as an option instead of being deleted. Equality
-    * with the unpruned plan and the partition-filter plan shape are
-    * spec-pinned (IvfPqSpec).
-    */
-  /** Wall seconds of the LAST distributed serve's eager probe
-    * checkpoint (the extra probe-sized job the r14 deadlock fix costs)
-    * — read by the bench diag right after a timed serve to attribute
-    * the serve wall. Measurement plumbing, not serving state.
-    */
-  @volatile private[graft] var lastCheckpointSec: Double = 0.0
-
   private[graft] def probeDistributedSegments(s: SparkSession,
       roots: Seq[String], probeDf: DataFrame,
       tss: Seq[(DataFrame, Int)] = Nil,
       attrFilter: Option[Column] = None,
-      readOpts: Map[String, String] = Map.empty,
-      staticCidPrune: Boolean = false): DataFrame = {
+      readOpts: Map[String, String] = Map.empty): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     GraftFunctions.register(s)
     val nprobe = if (attrFilter.isDefined) FilteredNprobe else Nprobe
@@ -500,16 +478,6 @@ object IvfPq {
     val probes = AnnIndex.probesWithOrdinal(probeDf).localCheckpoint(true)
     lastCheckpointSec = (System.nanoTime() - ckptT0) / 1e9
     val routed = AnnIndex.routeDistributed(s, probes, cents, nprobe)
-    // The opt-in static prune runs the routing stage once eagerly (the
-    // localCheckpoint'd probes make the re-derivation in the serve plan
-    // deterministic) and filters both scans below to the ≤K routed cids.
-    val cidPrune: Column =
-      if (!staticCidPrune) lit(true)
-      else {
-        val cids = routed.select("cid").distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        col("cid").isin(cids: _*)
-      }
     // lut[m*Kpq + code] = dot(pe_m, cb(m, code)) — the collected path's
     // driver loop as ONE codegen'd kernel ([[graft.functions.PqLutExpr]],
     // same j-ascending summation order so qcos is bit-identical between
@@ -559,7 +527,7 @@ object IvfPq {
       .repartition(col("cid"))
     val codes = AnnIndex.maskedUnion(s, roots, "ivfpq_lists",
       Seq(col("cid"), col("vec_id"), col("codes"), col("qnorm")), tss,
-      prep = df => df.filter(cidPrune).filter(attrFilter.getOrElse(lit(true))),
+      prep = df => df.filter(attrFilter.getOrElse(lit(true))),
       readOpts = readOpts)
     // The scored projection drops `pid` AFTER the self-exclusion filter
     // (r16): per serve ordinal there is exactly one probe row, so `pid`
@@ -579,8 +547,7 @@ object IvfPq {
       .filter(col("prank") <= Pool)
       .select(col("__pord"), col("vec_id"))
     val vecs = AnnIndex.maskedUnion(s, roots, "ivfpq_lists",
-      Seq(col("vec_id"), col("e")), tss,
-      prep = df => df.filter(cidPrune), readOpts = readOpts)
+      Seq(col("vec_id"), col("e")), tss, readOpts = readOpts)
     val wT = Window.partitionBy("__pord").orderBy(col("cos").desc, col("vec_id").asc)
     pool
       .join(probes.select(col("__pord"), col("pid"), col("pe")), Seq("__pord"))
@@ -597,10 +564,8 @@ object IvfPq {
     * every filtered serve).
     */
   def probeDistributed(s: SparkSession, d: String, probeDf: DataFrame,
-      attrFilter: Option[Column] = None,
-      staticCidPrune: Boolean = false): DataFrame =
-    probeDistributedSegments(s, Seq(build(s, d)), probeDf,
-      attrFilter = attrFilter, staticCidPrune = staticCidPrune)
+      attrFilter: Option[Column] = None): DataFrame =
+    probeDistributedSegments(s, Seq(build(s, d)), probeDf, attrFilter = attrFilter)
 
   // ---- lifecycle -------------------------------------------------------
   //

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.Tables
 import graft.crypto.{EncryptionPolicy, PrivilegeLevel}
 import graft.io.EncryptedParquet
+import graft.obs.QueryMetrics.{seconds, warmSeconds}
 import graft.kms.TestKmsServer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -34,15 +35,7 @@ object CryptoMeasure {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Graft.tune(spark)
+    val spark = graft.Graft.localSession(cpus)
     println(run(spark, sfDir))
     spark.stop()
   }
@@ -97,16 +90,9 @@ object CryptoMeasure {
     */
   private def cipherReadSeconds(spark: SparkSession, sfDir: String,
       policy: EncryptionPolicy, kmsUrl: String): (Double, Double) = {
-    def timeRead(dir: String): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        EncryptedParquet.read(spark, dir, kmsUrl, Some("RESTRICTED"))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warmup
-      once()
-    }
+    def timeRead(dir: String): Double = warmSeconds(
+      EncryptedParquet.read(spark, dir, kmsUrl, Some("RESTRICTED"))
+        .write.format("noop").mode("overwrite").save())
     val gcmDir = tmpDir("graft-cipher-gcm-")
     val ctrDir = tmpDir("graft-cipher-ctr-")
     try {
@@ -137,15 +123,9 @@ object CryptoMeasure {
       val plainDir = IvfPq.buildFrom(spark, emb, s"$root/plain")
       val encDir = IvfPq.buildFromEncrypted(spark, emb, s"$root/enc", kmsUrl)
       val probes = AnnIndex.defaultProbes(spark, sfDir)
-      def time(run: () => Unit): Double = {
-        run() // warmup
-        val t0 = System.nanoTime()
-        run()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val plainSec = time(() => IvfPq.probeSegments(spark, Seq(plainDir), probes)
+      val plainSec = warmSeconds(IvfPq.probeSegments(spark, Seq(plainDir), probes)
         .write.format("noop").mode("overwrite").save())
-      val gcmSec = time(() => IvfPq.probeEncrypted(spark, Seq(encDir), probes,
+      val gcmSec = warmSeconds(IvfPq.probeEncrypted(spark, Seq(encDir), probes,
         kmsUrl, Some("INTERNAL"))
         .write.format("noop").mode("overwrite").save())
       (plainSec, gcmSec)
@@ -178,17 +158,14 @@ object CryptoMeasure {
       val emb = AnnIndex.corpus(spark, sfDir)
       IvfPq.buildFromEncrypted(spark, emb, s"$root/idx", kmsUrl,
         externalMaterial = true): Unit
-      def time(run: () => Unit): Double = {
-        val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-      }
       var srcDir = ""
-      val inPlace = time(() => srcDir = IvfPq.rotateIndexKeysInPlace(
-        spark, s"$root/idx", kmsUrl, Some("INTERNAL")))
+      val inPlace = seconds { srcDir = IvfPq.rotateIndexKeysInPlace(
+        spark, s"$root/idx", kmsUrl, Some("INTERNAL")) }
       var newDir = ""
-      val rewrite = time(() => newDir = IvfPq.rotateIndexKeys(
-        spark, s"$root/idx", kmsUrl, Some("INTERNAL")))
+      val rewrite = seconds { newDir = IvfPq.rotateIndexKeys(
+        spark, s"$root/idx", kmsUrl, Some("INTERNAL")) }
       val readOpts = EncryptionPolicy.readConfMap(kmsUrl, Some("INTERNAL"))
-      val verify = time(() =>
+      val verify = seconds(
         Seq("ivf_centroids", "pq_codebook", "ivfpq_lists").foreach { a =>
           IvfPq.contentFingerprint(spark, s"$newDir/$a", readOpts): Unit
           IvfPq.contentFingerprint(spark, s"$srcDir/$a", readOpts): Unit

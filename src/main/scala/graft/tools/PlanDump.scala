@@ -1,13 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Batch plan dumper for the optimization-round evidence files:
-  * `runMain graft.tools.PlanDump <outDir> <sfDir> <query> [query ...]`
-  * writes `<outDir>/<query>.txt` with each query's
-  * `.explain("formatted")` output — one JVM/session for the whole list
-  * (graft.Explain spins a JVM per query, which at 20 dumps is minutes
-  * of pure startup).
+/** Plan dumper: `runMain graft.tools.PlanDump <outDir> <sfDir> <query>
+  * [query ...]` writes `<outDir>/<query>.txt` with each query's
+  * `.explain("formatted")` output, one JVM/session for the whole list,
+  * on the bench's local session (so the dumped plans carry the bench's
+  * shuffle-partition count and AQE floors).
   *
   * NOTE: queries with imperative bodies (index builds, the CC fixpoint
   * loops) EXECUTE their driver loops while the plan is constructed —
@@ -19,14 +16,8 @@ object PlanDump {
     val outDir = args(0)
     val sfDir = args(1)
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.localSession("8")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.Graft.tune(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

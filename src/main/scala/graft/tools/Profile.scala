@@ -1,23 +1,17 @@
 package graft.tools
 
-import scala.collection.mutable
-
 import graft.SparkEntry
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.obs.QueryMetrics
 
 /** Local diagnosis main: run one registered query N times in a single
   * session and print per-run wall time plus a per-stage breakdown
-  * (stage wall, summed executor task time, max single task). Exposes
-  * where run-to-run degradation lands — scheduler vs one slow stage vs
-  * one straggler task — which the bench's single wall number can't.
+  * (stage wall, summed executor task time, task count). Exposes where
+  * run-to-run degradation lands — scheduler vs one slow stage vs one
+  * straggler stage — which the bench's single wall number can't.
   *
   * Usage: runMain graft.tools.Profile <queryName> [reps] [sfDir]
   */
 object Profile {
-
-  final case class StageRow(id: Int, name: String, wallMs: Long,
-      taskTimeMs: Long, maxTaskMs: Long, tasks: Int)
 
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q23_cosine_topk")
@@ -25,44 +19,20 @@ object Profile {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cpus)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Graft.tune(spark)
-
-    val stages = mutable.ArrayBuffer.empty[StageRow]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(-1L)
-        stages.synchronized {
-          stages += StageRow(si.stageId, si.name.takeWhile(_ != '\n').take(80),
-            wall, si.taskMetrics.executorRunTime,
-            -1L, si.numTasks)
-        }
-      }
-    })
-
+    val spark = graft.Graft.localSession(cpus)
+    val qm = QueryMetrics.install(spark)
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { r =>
-      stages.synchronized(stages.clear())
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // listener is async; give it a beat to drain
-      Thread.sleep(500)
-      println(f"[profile] $name rep=$r wall=$dt%.2fs stages=${stages.size}")
-      stages.synchronized(stages.sortBy(-_.wallMs).take(12)).foreach { s =>
+      var dt = 0.0
+      val ok = qm.measure(spark, name) {
+        dt = QueryMetrics.seconds(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      }.isDefined
+      val stages = qm.stages
+      println(f"[profile] $name rep=$r wall=$dt%.2fs ok=$ok stages=${stages.size} ${qm.line}")
+      stages.sortBy(-_.wallMs).take(12).foreach { s =>
         println(f"[profile]   stage=${s.id}%-4d wall=${s.wallMs / 1000.0}%7.2fs " +
           f"taskSum=${s.taskTimeMs / 1000.0}%8.2fs tasks=${s.tasks}%-4d ${s.name}")
       }
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.obs.QueryMetrics
 import graft.ops.Dedup
 import org.apache.spark.sql.SparkSession
 
@@ -20,16 +21,7 @@ object ScaleDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cpus)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Graft.tune(spark)
+    val spark = graft.Graft.localSession(cpus)
     println(annRecall(spark, sfDir))
     println(annDistLsm(spark, sfDir))
     println(annDistIvfPq(spark, sfDir))
@@ -64,13 +56,12 @@ object ScaleDiag {
         col("e").as("pe"))
   }
 
-  /** The distributed LSM serve shape PRICED (r12 verdict item 6;
-    * re-pointed to the composed format in r15 when the f3 serve
-    * quarantine was deleted): [[graft.ops.IvfPq.probeDistributedSegments]]
-    * over the dataset's real multi-segment MASKED state (f4 append base
-    * + fresh delta + delete tombstones — the q113/q129 fixtures) with
-    * q132's reindex-scale probe frame (5 re-keyed corpus copies, larger
-    * than MaxProbes, never materialized on the driver). q132 prices the
+  /** The distributed LSM serve shape priced:
+    * [[graft.ops.IvfPq.probeDistributedSegments]] over the dataset's
+    * real multi-segment MASKED state (composed append base + fresh
+    * delta + delete tombstones — the q113/q129 fixtures) with q132's
+    * reindex-scale probe frame (5 re-keyed corpus copies, larger than
+    * MaxProbes, never materialized on the driver). q132 prices the
     * single-root distributed serve; this cell adds the segment-union +
     * tombstone-mask dimension at the same probe scale. Warm run then
     * one timed steady-state run, the BASELINE §C cell for "every serve
@@ -81,39 +72,33 @@ object ScaleDiag {
     val (baseDir, deltaDir, ts) = IvfPq.distLsmFixture(spark, benchSfDir)
     val probes = reindexProbes(spark, benchSfDir, 5)
     val nProbes = probes.count()
-    def run(): Unit = IvfPq.probeDistributedSegments(spark,
+    val sec = QueryMetrics.warmSeconds(IvfPq.probeDistributedSegments(spark,
         Seq(baseDir, deltaDir), probes, Seq(ts -> Int.MaxValue))
-      .write.format("noop").mode("overwrite").save()
-    run() // warm: fixtures, codegen, page cache
-    val t0 = System.nanoTime()
-    run()
-    val sec = (System.nanoTime() - t0) / 1e9
+      .write.format("noop").mode("overwrite").save())
     val ckpt = IvfPq.lastCheckpointSec
     val sf = new java.io.File(benchSfDir).getName
     f"""{"metric":"ann_dist_lsm","probe_sec":$sec%.3f,"ckpt_sec":$ckpt%.3f,""" +
-      s""""n_probes":$nProbes,"segments":2,"masked":true,"format":"f4","sf":"$sf"}"""
+      s""""n_probes":$nProbes,"segments":2,"masked":true,""" +
+      s""""format":"${graft.ops.AnnIndex.FormatLevel}","sf":"$sf"}"""
   }
 
-  /** The distributed COMPOSED serve priced (r13): [[graft.ops.IvfPq
-    * .probeDistributedSegments]] — probes a DataFrame end-to-end against
-    * the f4 artifact (codes-only candidate scan, expression-computed ADC
-    * LUTs, bounded exact refine) — with the same reindex-scale probe
-    * frame as [[annDistLsm]], so the two distributed serve shapes are
-    * directly comparable in the artifact: f3 pays a raw-vector candidate
-    * scan and no refine; f4 pays a 32×-narrower candidate scan plus the
-    * pool refine.
+  /** The distributed composed serve priced on a single root:
+    * [[graft.ops.IvfPq.probeDistributedSegments]] — probes a DataFrame
+    * end-to-end against the composed index (codes-only candidate scan,
+    * expression-computed ADC LUTs, bounded exact refine) — with the
+    * same reindex-scale probe frame as [[annDistLsm]], so the
+    * single-root and masked multi-segment serves are directly
+    * comparable in the artifact: the difference between the two lines
+    * is the segment union and the tombstone mask.
     */
   def annDistIvfPq(spark: SparkSession, benchSfDir: String): String = {
     import graft.ops.IvfPq
     val dir = IvfPq.build(spark, benchSfDir)
     val probes = reindexProbes(spark, benchSfDir, 5)
     val nProbes = probes.count()
-    def run(): Unit = IvfPq.probeDistributedSegments(spark, Seq(dir), probes)
-      .write.format("noop").mode("overwrite").save()
-    run() // warm: fixtures, codegen, page cache
-    val t0 = System.nanoTime()
-    run()
-    val sec = (System.nanoTime() - t0) / 1e9
+    val sec = QueryMetrics.warmSeconds(
+      IvfPq.probeDistributedSegments(spark, Seq(dir), probes)
+        .write.format("noop").mode("overwrite").save())
     // The eager probe-checkpoint's share of the serve wall (r14 verdict
     // item 3): q132's wall moved when the r14 deadlock fix made the
     // checkpoint eager; this cell makes the attribution a measured fact.
@@ -181,43 +166,18 @@ object ScaleDiag {
     * number long before wall-clock shows it on a laptop-scale corpus.
     * Shuffle write is the right side to sum: it counts each exchange
     * once and excludes broadcasts (which the plan audit bounds
-    * separately). Queries run through the noop sink, caches cleared
-    * between, listener flushed around each measurement.
+    * separately). Each query runs through the noop sink under
+    * [[QueryMetrics.measure]]; -1 marks a query that threw.
     */
   def shuffleBytes(spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
       : Seq[(String, Long)] = {
-    val bytes = new java.util.concurrent.atomic.LongAdder
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) bytes.add(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val qm = QueryMetrics.install(spark)
     try queries.map { case (name, fn) =>
-      org.apache.spark.graft.ListenerFlush.flush(spark.sparkContext)
-      bytes.reset()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[shuffle-budget] $name failed: ${e.getMessage}"); false }
-      org.apache.spark.graft.ListenerFlush.flush(spark.sparkContext)
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      (name, if (ok) bytes.sum else -1L)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  /** The bench-artifact JSON line: per-query exchange bytes for every
-    * registered query at the bench SF — the round-over-round record the
-    * ShuffleBudgetSpec ceilings are re-derived from.
-    */
-  def shuffleBudget(spark: SparkSession, benchSfDir: String): String = {
-    val cells = shuffleBytes(spark, benchSfDir,
-        graft.SparkEntry.queries.toSeq.sortBy(_._1))
-      .map { case (n, b) => s""""$n":$b""" }
-    val sf = new java.io.File(benchSfDir).getName
-    s"""{"metric":"shuffle_bytes","sf":"$sf",${cells.mkString("\"queries\":{", ",", "}")}}"""
+      name -> qm.measure(spark, name) {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }.fold(-1L)(_.shuffleBytes)
+    } finally spark.sparkContext.removeSparkListener(qm)
   }
 
   /** One JSON metric line: per-sf doc counts and candidate counts. */

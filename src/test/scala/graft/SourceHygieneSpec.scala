@@ -1,0 +1,51 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source hygiene for the measurement harness: ONE local-session factory
+  * (`Graft.localSession`; `Verify` keeps its own builder because the
+  * oracle hashes were recorded under its confs) and ONE Spark listener
+  * (`graft.obs.QueryMetrics`). A second builder or collector regrowing
+  * in a tool main fails here.
+  */
+class SourceHygieneSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  /** (file under src/main/scala, line number, line) for each code line. */
+  private lazy val codeLines: Seq[(String, Int, String)] = {
+    assert(Files.isDirectory(root), s"spec must run from the repo root (no $root)")
+    Files.walk(root).iterator.asScala.toSeq.filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if !Seq("//", "*", "/*").exists(l.trim.startsWith) =>
+            (root.relativize(p).toString, i + 1, l.trim)
+        }
+      }
+  }
+
+  private def assertOnlyIn(pattern: Regex, allowed: Set[String]): Unit = {
+    val found = codeLines.filter(h => pattern.findFirstIn(h._3).isDefined)
+    // Not vacuous: the pattern still matches its allowed homes.
+    assert(allowed.subsetOf(found.map(_._1).toSet), s"$pattern no longer matches $allowed")
+    val strays = found.filterNot(h => allowed(h._1))
+    assert(strays.isEmpty, s"$pattern outside $allowed:\n  " +
+      strays.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n  "))
+  }
+
+  test("SparkSession.builder() appears only in Graft.localSession and Verify") {
+    assertOnlyIn("""SparkSession\s*\.\s*builder\b""".r,
+      Set("graft/Graft.scala", "graft/Verify.scala"))
+  }
+
+  test("the only SparkListener implementation is graft.obs.QueryMetrics") {
+    assertOnlyIn(
+      """\b(extends|with|new)\s+[\w.]*\b(SparkListener|SparkListenerInterface|SparkFirehoseListener)\b""".r,
+      Set("graft/obs/QueryMetrics.scala"))
+  }
+}

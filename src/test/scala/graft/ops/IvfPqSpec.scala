@@ -20,7 +20,7 @@ class IvfPqSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("q134 composed IVF+PQ recall >= 0.80 at sf0.1 (residual encoding saturates the nprobe=8 routing ceiling)") {
-    // r15 (tools.RecallMeasure): IVFADC residual codes are recall-
+    // r15 (BASELINE.md §C16): IVFADC residual codes are recall-
     // lossless vs exact-within-routed-lists at this scale — the serve
     // sits ON the routing ceiling (measured 0.840 at nprobe=8). The
     // floor leaves seed-luck margin but fails any de-tune: a dropped
@@ -142,33 +142,6 @@ class IvfPqSpec extends SparkTestBase {
       s"the LUT-materializing cid exchange vanished from the routed side:\n$plan")
     assert(dist.count() == n * AnnIndex.TopK,
       "distributed composed serve lost surface at 10k probes")
-  }
-
-  test("opt-in static cid pruning: identical results, pruned partitions in the codes scan") {
-    val dir = IvfPq.build(spark, sfDir)
-    // A SELECTIVE frame — many probe rows, few distinct targets — the
-    // one regime where the extra routing job can pay: the routed set is
-    // a strict subset of the lists.
-    val base = AnnIndex.corpus(spark, sfDir).select(col("vec_id"), col("e"))
-    val sel = base.filter(col("vec_id") < 2)
-      .crossJoin(broadcast(spark.range(200L).toDF("r")))
-      .select((col("r") * lit(1000L) + col("vec_id")).as("pid"), col("e").as("pe"))
-    val pruned = IvfPq.probeDistributedSegments(spark, Seq(dir), sel,
-      staticCidPrune = true)
-    val plain = IvfPq.probeDistributedSegments(spark, Seq(dir), sel)
-    assert(rowSeq(pruned) == rowSeq(plain),
-      "static cid pruning changed distributed serve results")
-    // The pruned plan's scans carry a cid partition filter; 2 distinct
-    // probe vectors route to at most 2·Nprobe < K lists.
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cid[^\\]]*(IN|INSET)".r
-      .findFirstIn(plan).isDefined,
-      s"no static cid partition filter in the pruned plan:\n${plan.take(4000)}")
-    val unprunedPlan = plain.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cid[^\\]]*(IN|INSET)".r
-      .findFirstIn(unprunedPlan).isEmpty,
-      "the default (unpruned) distributed plan grew a cid partition filter — " +
-        "update this pin and the Scaladoc trade-off note together")
   }
 
   test("distributed composed LSM serve ≡ collected: masks, boundaries and filters compose") {

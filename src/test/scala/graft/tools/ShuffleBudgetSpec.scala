@@ -154,29 +154,21 @@ class ShuffleBudgetSpec extends SparkTestBase {
 
 object ShuffleBudgetSpec {
   /** Measured at sf0.01 (local[4], shuffle.partitions=4), ceiling ≈ 2×
-    * measured with a 64 KiB floor for noise on near-zero queries.
+    * measured with a 64 KiB floor for noise on near-zero queries. The
+    * session is SparkTestBase's, not the bench's local session: the
+    * ceilings are recorded under the spec base's confs.
     *
-    * f3 (label-carrying pq_codes) pricing, called out explicitly (r11
-    * verdict item 5): a fresh post-f3 sweep confirms the attribute
-    * column moves exchange BYTES on the ANN write family by under 1%
-    * (q110 944k, q113 44k, q127 237k, q128 61k, q129 248k measured —
-    * all inside the pre-f3 ceilings), because the label is one small
-    * int on rows dominated by the vectors/codes. f3's real price is
-    * WRITE-side wall (stream-ingest 5.19→7.68 s, delete 3.38→4.69 s
-    * seal-to-seal at sf0.1 — BASELINE §C12), which the bench lines gate;
-    * these ceilings gate the exchange shape, where f3 is ~free. q131's
-    * entry was a copied q112 placeholder until this sweep; it now
-    * carries its own measurement (466 KiB — LOWER than unfiltered q112,
-    * the pushed pre-filter thins the scan side of the refine join).
-    *
-    * r14 (registry converged on f4): the re-pointed serve/lifecycle
-    * lines re-measured on the composed artifact — q112/q113/q127/q128/
-    * q129/q130 all land INSIDE their f3 ceilings (the composed fold
-    * moves one table instead of two; serves stay collected+pruned).
-    * The two distributed composed serves are the exception BY DESIGN:
-    * their deliberate repartition(cid) materializes each routed probe's
-    * M×K LUT exactly once (r13 — without it codegen recomputes the LUT
-    * per candidate, measured 3× the serve wall), so their exchange is
+    * The ANN family prices the one composed index format (residual PQ
+    * codes stored inside the inverted lists, `ivfpq_lists`). The build
+    * and lifecycle lines (q110 encrypted build, q113 append, q127
+    * compact, q128 stream ingest, q129 delete-compact, q133 build) move
+    * the list table through their fold/partition exchanges; the
+    * collected serves (q111, q112, q130, q134) route on the driver and
+    * prune the list scan to the probed lists. The two
+    * distributed composed serves are the exception BY DESIGN: their
+    * deliberate repartition(cid) materializes each routed probe's M×K
+    * LUT exactly once (r13 — without it codegen recomputes the LUT per
+    * candidate, measured 3× the serve wall), so their exchange is
     * PROBE-proportional (≈ nprobe × 4 KiB of LUT per probe row, lz4),
     * never corpus-proportional: q132 20.7 MB at 5×-corpus probes, q131
     * 11.0 MB at 1×-corpus filtered (FilteredNprobe doubles the routed
