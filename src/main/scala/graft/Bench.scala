@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.Scratch
 import graft.obs.QueryMetrics
 import org.apache.spark.sql.SparkSession
 
@@ -68,7 +69,7 @@ object Bench {
         .replaceAll("\\s+", " ")
       val cpuMax = slurp("/sys/fs/cgroup/cpu.max") // "max 100000" = no quota
       val shmFree = try {
-        val f = new java.io.File("/dev/shm")
+        val f = new java.io.File(Scratch.base)
         s"${f.getUsableSpace / (1L << 30)}G"
       } catch { case _: Throwable => "?" }
       s"loadavg=${slurp("/proc/loadavg")} psi.cpu=[${psiLine("cpu")}] " +
@@ -306,13 +307,11 @@ object Bench {
     * startup sweep cannot race a live JVM's files.
     */
   private[graft] def sweepLocalDirs(): Unit =
-    sys.props.get("spark.local.dir").filter(_.startsWith("/dev/shm/")).foreach { root =>
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
+    sys.props.get("spark.local.dir").filter(_.startsWith(Scratch.Tmpfs + "/"))
+      .foreach { root =>
+        Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
+          .foreach(f => Scratch.delete(f.toString))
       }
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty).foreach(rm)
-    }
 
   def main(args: Array[String]): Unit = {
     // All f"" interpolators below feed the machine-parsed JSON line; a

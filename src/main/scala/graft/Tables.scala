@@ -71,9 +71,9 @@ object Tables {
   /** Fixture-cache tag for a dataset dir: hashes the PATH plus the
     * (name, size, mtime) of every parquet file under it, so regenerated
     * source tables invalidate any cached fixture copies keyed on it
-    * (used by Layout's bucketed/partitioned/z-ordered fixtures and
-    * Sources' JSON/CSV/ORC copies — a bare _SUCCESS check kept serving
-    * stale copies when the source changed under the same path).
+    * (a bare _SUCCESS check kept serving stale copies when the source
+    * changed under the same path). Every untimed fixture is keyed on it
+    * through `graft.io.Scratch.path`; the ANN index roots use it too.
     */
   def datasetTag(d: String): String = {
     val files = Option(new java.io.File(d).listFiles())

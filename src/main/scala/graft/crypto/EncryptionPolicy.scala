@@ -76,15 +76,6 @@ object EncryptionPolicy {
       KeyToolkit.KEY_MATERIAL_INTERNAL_PROPERTY_NAME -> policy.internalKeyMaterial.toString,
       KeyToolkit.CACHE_LIFETIME_PROPERTY_NAME -> policy.cacheLifetimeSeconds.toString)
 
-  /** Writer+reader crypto conf applied to a Hadoop Configuration (for
-    * direct parquet-mr use, e.g. footer-inspection tests).
-    */
-  def applyWriteConf(conf: Configuration, policy: EncryptionPolicy,
-      kmsUrl: String, accessToken: Option[String]): Unit = {
-    applyReadConf(conf, kmsUrl, accessToken)
-    writeConfMap(policy, kmsUrl, accessToken).foreach { case (k, v) => conf.set(k, v) }
-  }
-
   /** Reader-side crypto conf applied to a Hadoop Configuration. */
   def applyReadConf(conf: Configuration, kmsUrl: String,
       accessToken: Option[String]): Unit = {

@@ -63,50 +63,43 @@ object EncryptedParquet {
     * supported channel is the session conf overlay: `newHadoopConf()`
     * copies every session SQLConf entry verbatim into the Hadoop conf it
     * hands each write job, so Hadoop-keyed properties set via
-    * `spark.conf.set` reach the sink per-session. This helper therefore
-    * binds the policy to `df`'s session: run the stream
-    * on a DEDICATED session (`spark.newSession()` shares the context but
-    * isolates the conf — a streaming job owns its session in production),
-    * and every file the sink commits is encrypted while batch relations
-    * on other sessions stay per-relation-scoped. Caller picks the trigger
-    * and calls `.start()`; `clearStreamCrypto` removes the binding.
-    */
-  def writeStream(df: DataFrame, path: String, checkpointDir: String,
-      policy: EncryptionPolicy, kmsUrl: String,
-      zstdLevel: Int = 19, pageV2: Boolean = true): DataStreamWriter[Row] = {
-    val session = df.sparkSession
-    (EncryptionPolicy.writeConfMap(policy, kmsUrl, accessToken = None) ++
-      Map("parquet.compression.codec.zstd.level" -> zstdLevel.toString) ++
-      (if (pageV2) Map("parquet.writer.version" -> "v2") else Map.empty))
-      .foreach { case (k, v) => session.conf.set(k, v) }
-    df.writeStream
-      .format("parquet")
-      .option("compression", "zstd")
-      .option("path", path)
-      .option("checkpointLocation", checkpointDir)
-  }
-
-  /** Loan-pattern wrapper around `writeStream`: binds the crypto policy,
-    * lets `run` configure/start/await the stream, and GUARANTEES the
-    * session binding is removed afterwards — while bound, EVERY parquet
-    * write on the session (batch included) is encrypted under `policy`,
-    * so on a shared session a stream failure that skipped cleanup would
-    * silently encrypt unrelated jobs' output. (Round-4 advisor finding:
-    * callers pairing writeStream with a bare clearStreamCrypto leak the
-    * binding on any exception between the two.)
+    * `spark.conf.set` reach the sink per-session. This loan therefore
+    * binds the policy to `df`'s session while `run` configures, starts
+    * and awaits the stream: run it on a DEDICATED session
+    * (`spark.newSession()` shares the context but isolates the conf — a
+    * streaming job owns its session in production), and every file the
+    * sink commits is encrypted while batch relations on other sessions
+    * stay per-relation-scoped.
+    *
+    * The binding is undone afterwards even when `run` throws — while
+    * bound, EVERY parquet write on the session (batch included) is
+    * encrypted under `policy`, so a stream failure that skipped cleanup
+    * would silently encrypt unrelated jobs' output (round-4 advisor
+    * finding). Undone means restored, not erased: each bound key gets
+    * back the session's own value, or is unset again if the session had
+    * none, so a session's own zstd level or writer version survives.
     */
   def withEncryptedStream[T](df: DataFrame, path: String, checkpointDir: String,
       policy: EncryptionPolicy, kmsUrl: String,
       zstdLevel: Int = 19, pageV2: Boolean = true)
-      (run: DataStreamWriter[Row] => T): T =
-    try run(writeStream(df, path, checkpointDir, policy, kmsUrl, zstdLevel, pageV2))
-    finally clearStreamCrypto(df.sparkSession)
-
-  /** Remove a `writeStream` session binding (after the stream stops). */
-  def clearStreamCrypto(session: SparkSession): Unit =
-    (EncryptionPolicy.allProperties ++
-      Seq("parquet.compression.codec.zstd.level", "parquet.writer.version"))
-      .foreach(session.conf.unset)
+      (run: DataStreamWriter[Row] => T): T = {
+    val conf = df.sparkSession.conf
+    val binding = EncryptionPolicy.writeConfMap(policy, kmsUrl, accessToken = None) ++
+      Map("parquet.compression.codec.zstd.level" -> zstdLevel.toString) ++
+      (if (pageV2) Map("parquet.writer.version" -> "v2") else Map.empty)
+    // getAll (explicitly-set entries only), not getOption (which falls
+    // back to defaults): a key the session never set is unset again, not
+    // left pinned to its default (the Dedup.withLoopConfs rule).
+    val before = conf.getAll
+    binding.foreach { case (k, v) => conf.set(k, v) }
+    try run(df.writeStream
+      .format("parquet")
+      .option("compression", "zstd")
+      .option("path", path)
+      .option("checkpointLocation", checkpointDir))
+    finally binding.keys.foreach(k =>
+      before.get(k) match { case Some(v) => conf.set(k, v); case None => conf.unset(k) })
+  }
 
   /** Read an encrypted dataset with the given privilege token. Column
     * decryption (and therefore authorization) happens only for columns the
@@ -120,12 +113,6 @@ object EncryptedParquet {
     spark.read
       .options(EncryptionPolicy.readConfMap(kmsUrl, accessToken))
       .parquet(path)
-
-  /** No-op, retained for source compatibility: crypto conf is carried by
-    * each relation's options now, so there is nothing session-global to
-    * clear after a read.
-    */
-  def endRead(spark: SparkSession): Unit = ()
 
   /** Rewrite-based key rotation for INTERNAL key material (r9 verdict
     * item 5). parquet-mr's `KeyToolkit.rotateMasterKeys` rewrites only

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.functions.GraftFunctions
-import graft.io.Afs
+import graft.io.{Afs, Scratch}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -274,17 +274,10 @@ object AnnIndex {
     * deployments (`-Dgraft.ann.root=hdfs://…/ann` or an `s3a://` URI —
     * the whole artifact layer speaks [[graft.io.Afs]], the Hadoop
     * FileSystem seam); the default is the sandbox-local tmpfs root the
-    * bench uses.
+    * bench uses, the "annindex" area of [[graft.io.Scratch]].
     */
   private def annRootBase: String =
-    sys.props.get("graft.ann.root").getOrElse {
-      val shm = "/dev/shm/graft-annindex"
-      try { Afs.mkdirs(shm); if (Afs.exists(shm)) shm else fallbackRoot }
-      catch { case _: java.io.IOException => fallbackRoot }
-    }
-
-  private def fallbackRoot: String =
-    s"${sys.props("java.io.tmpdir")}/graft-annindex"
+    sys.props.get("graft.ann.root").getOrElse(Scratch.root("annindex"))
 
   /** Stale-format sweep: runs ONCE per JVM (a format can only change
     * with the code, so re-sweeping per call buys nothing), and only

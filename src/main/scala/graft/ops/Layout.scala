@@ -1,8 +1,7 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.{Canon, Q, Tables}
+import graft.io.Scratch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,26 +23,14 @@ import org.apache.spark.sql.functions._
   *
   * Both layouts are produced once per dataset (write-side cost amortized
   * over every subsequent query) and registered as ordinary queries: the
-  * writes land in RAM-backed scratch keyed by sf-dir, rebuilt at most
-  * once per JVM (and the catalog entries once per session).
+  * writes are fixtures in the "layout" scratch area ([[graft.io.Scratch]]),
+  * keyed by `Tables.datasetTag` — a regenerated source table gets fresh
+  * layouts (q43's box bounds are computed from the LIVE table and would
+  * silently diverge from a stale clustered copy) — built at most once
+  * per JVM and adopted across JVMs; the catalog entries are registered
+  * once per session.
   */
 object Layout {
-
-  private def shmDir(suffix: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite)
-      new java.io.File(shm, "graft-layout") else
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-layout")
-    new java.io.File(base, suffix).toString
-  }
-
-  /** Fixture-cache tag (shared `Tables.datasetTag`): keyed on source
-    * file size/mtime so a regenerated source table invalidates the
-    * cached layouts (_SUCCESS alone kept serving stale copies — advisor
-    * finding: q43's box bounds are computed from the LIVE table and would
-    * silently diverge from a stale clustered copy).
-    */
-  private def sfTag(d: String): String = Tables.datasetTag(d)
 
   /** Buckets for the fact-fact join. At 100 TB this would be O(1000);
     * sized here so every bucket holds real data at bench scale.
@@ -58,7 +45,7 @@ object Layout {
     * a sort back into the join).
     */
   private def bucketedTables(s: SparkSession, d: String): (String, String) = {
-    val tag = sfTag(d)
+    val tag = Tables.datasetTag(d)
     val (lName, oName) = (s"graft_bkt_lineitem_$tag", s"graft_bkt_orders_$tag")
     // HARD invariant of every graft bucketed table: exactly ONE file per
     // bucket. `Graft.tune` turns on legacy.bucketedTableScan.outputOrdering
@@ -96,23 +83,21 @@ object Layout {
     }
     def ensure(name: String, df: DataFrame, key: String): Unit =
       if (!s.catalog.tableExists(name)) {
-        val dir = shmDir(s"$tag/$name")
-        if (new java.io.File(dir, "_SUCCESS").exists()) {
-          // Files survive session restarts; only the catalog entry is
-          // session-scoped. Re-registering is metadata-only — the write
-          // happens once per dataset, as it would in a real warehouse.
-          assertOneFilePerBucket(name, dir)
-          s.sql(s"CREATE TABLE $name (${df.schema.toDDL}) USING PARQUET " +
-            s"CLUSTERED BY ($key) SORTED BY ($key) INTO $NumBuckets BUCKETS " +
-            s"LOCATION '$dir'"): Unit
-        } else {
+        val dir = Scratch.fixture("layout", d, name) { dir =>
           df.repartition(NumBuckets, col(key))
             .write.mode("overwrite")
             .option("path", dir)
             .bucketBy(NumBuckets, key).sortBy(key)
             .saveAsTable(name)
-          assertOneFilePerBucket(name, dir)
         }
+        assertOneFilePerBucket(name, dir)
+        // Files survive session restarts; only the catalog entry is
+        // session-scoped. Re-registering is metadata-only — the write
+        // happens once per dataset, as it would in a real warehouse.
+        if (!s.catalog.tableExists(name))
+          s.sql(s"CREATE TABLE $name (${df.schema.toDDL}) USING PARQUET " +
+            s"CLUSTERED BY ($key) SORTED BY ($key) INTO $NumBuckets BUCKETS " +
+            s"LOCATION '$dir'"): Unit
       }
     ensure(lName, Tables.lineitem(s, d), "l_orderkey")
     ensure(oName, Tables.orders(s, d), "o_orderkey")
@@ -157,22 +142,15 @@ object Layout {
             |GROUP BY o_orderpriority
             |ORDER BY o_orderpriority""".stripMargin))
 
-  /** Partitioned event-log directories per sf dir, written once per JVM
-    * (directory layout survives session restarts; rewrite is skipped via
-    * a sentinel check on the _SUCCESS marker).
+  /** The event log partitioned by day (directory layout survives
+    * session restarts).
     */
-  private val partitionedDirs = new ConcurrentHashMap[String, String]()
-
   private def partitionedEvents(s: SparkSession, d: String): String =
-    partitionedDirs.computeIfAbsent(d, _ => {
-      val dir = shmDir(s"${sfTag(d)}/events_by_date")
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
-        Tables.events(s, d)
-          .withColumn("event_date", to_date(col("ts")))
-          .write.mode("overwrite").partitionBy("event_date").parquet(dir)
-      }
-      dir
-    })
+    Scratch.fixture("layout", d, "events_by_date") { dir =>
+      Tables.events(s, d)
+        .withColumn("event_date", to_date(col("ts")))
+        .write.mode("overwrite").partitionBy("event_date").parquet(dir)
+    }
 
   /** Q36 — partition-pruned dated scan: 5 days out of the 30-day event
     * log. The scan's PartitionFilters prune 25 of 30 directories at
@@ -224,42 +202,36 @@ object Layout {
     */
   private val ZRowGroupBytes = 64 * 1024
 
-  private val zorderDirs = new ConcurrentHashMap[String, (String, String)]()
-
-  /** lineitem written twice (once per JVM): Z-ordered on
+  /** lineitem written twice, as two fixtures: Z-ordered on
     * (l_partkey, l_suppkey), and linearly sorted on l_orderkey as the
     * clustering-free baseline the spec compares skipping against. The
     * range-partition + local sort (`orderBy`) is the distributed
     * clustering write: each task writes one contiguous z-range.
     */
-  private[ops] def zorderedLineitem(s: SparkSession, d: String): (String, String) =
-    zorderDirs.computeIfAbsent(d, _ => {
-      val zDir = shmDir(s"${sfTag(d)}/lineitem_zorder")
-      val linDir = shmDir(s"${sfTag(d)}/lineitem_linear")
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
-        "l_extendedprice", "l_discount")
-      val l = Tables.lineitem(s, d).select(cols.map(col): _*)
-      if (!new java.io.File(zDir, "_SUCCESS").exists()) {
-        val Row2 = l.agg(min("l_partkey"), max("l_partkey"),
-          min("l_suppkey"), max("l_suppkey")).collect()(0)
-        val z = zvalue(
-          rank(col("l_partkey"), Row2.getLong(0), Row2.getLong(1), 16),
-          rank(col("l_suppkey"), Row2.getLong(0 + 2), Row2.getLong(1 + 2), 16))
-        l.withColumn("zv", z)
-          .orderBy("zv")
-          .drop("zv")
-          .write.mode("overwrite")
-          .option("parquet.block.size", ZRowGroupBytes.toString)
-          .parquet(zDir)
-      }
-      if (!new java.io.File(linDir, "_SUCCESS").exists()) {
-        l.orderBy("l_orderkey")
-          .write.mode("overwrite")
-          .option("parquet.block.size", ZRowGroupBytes.toString)
-          .parquet(linDir)
-      }
-      (zDir, linDir)
-    })
+  private[ops] def zorderedLineitem(s: SparkSession, d: String): (String, String) = {
+    lazy val l = Tables.lineitem(s, d).select(Seq("l_orderkey", "l_partkey", "l_suppkey",
+      "l_quantity", "l_extendedprice", "l_discount").map(col): _*)
+    val zDir = Scratch.fixture("layout", d, "lineitem_zorder") { zDir =>
+      val Row2 = l.agg(min("l_partkey"), max("l_partkey"),
+        min("l_suppkey"), max("l_suppkey")).collect()(0)
+      val z = zvalue(
+        rank(col("l_partkey"), Row2.getLong(0), Row2.getLong(1), 16),
+        rank(col("l_suppkey"), Row2.getLong(0 + 2), Row2.getLong(1 + 2), 16))
+      l.withColumn("zv", z)
+        .orderBy("zv")
+        .drop("zv")
+        .write.mode("overwrite")
+        .option("parquet.block.size", ZRowGroupBytes.toString)
+        .parquet(zDir)
+    }
+    val linDir = Scratch.fixture("layout", d, "lineitem_linear") { linDir =>
+      l.orderBy("l_orderkey")
+        .write.mode("overwrite")
+        .option("parquet.block.size", ZRowGroupBytes.toString)
+        .parquet(linDir)
+    }
+    (zDir, linDir)
+  }
 
   /** The 2-D box q43 (and its spec) queries: ~14% of each key span,
     * derived from the data so the query is meaningful at every scale

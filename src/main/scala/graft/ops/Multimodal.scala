@@ -6,6 +6,7 @@ import javax.imageio.ImageIO
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
 import graft.{Q, Tables}
+import graft.io.Scratch
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -247,42 +248,26 @@ object Multimodal {
     },
     None)
 
-  private val assetDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def shmDir(suffix: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite)
-      new java.io.File(shm, "graft-assets") else
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-assets")
-    new java.io.File(base, suffix).toString
-  }
-
   /** Asset-store export fixture: the first 240 media assets written as
     * individual REAL .png/.jpeg/.wav files by the EXECUTORS
     * (foreachPartition — one object per asset to the shared store;
     * /dev/shm locally, a DFS/object-store prefix on a cluster — the
     * driver never holds the corpus). Built once per dataset generation
-    * (keyed by `Tables.datasetTag`, the Sources/Layout staleness rule).
+    * in the "assets" scratch area ([[graft.io.Scratch]]); the marker
+    * lands after the last partition's files.
     */
   private[ops] def assetDir(s: SparkSession, d: String): String =
-    assetDirs.computeIfAbsent(Tables.datasetTag(d), tag => {
-      val dir = shmDir(s"$tag/assets")
-      val marker = new java.io.File(dir, "_SUCCESS")
-      if (!marker.exists()) {
-        new java.io.File(dir).mkdirs()
-        val out = dir
-        mediaTable(s, d).filter(_.doc_id < 240).foreachPartition {
-          (it: Iterator[MediaRecord]) =>
-            it.foreach { r =>
-              val f = new java.io.File(out, s"${r.doc_id}.${r.format}")
-              val os = new java.io.FileOutputStream(f)
-              try os.write(r.media) finally os.close()
-            }
-        }
-        marker.createNewFile(): Unit
+    Scratch.fixture("assets", d, "assets") { dir =>
+      new java.io.File(dir).mkdirs()
+      mediaTable(s, d).filter(_.doc_id < 240).foreachPartition {
+        (it: Iterator[MediaRecord]) =>
+          it.foreach { r =>
+            val f = new java.io.File(dir, s"${r.doc_id}.${r.format}")
+            val os = new java.io.FileOutputStream(f)
+            try os.write(r.media) finally os.close()
+          }
       }
-      dir
-    })
+    }
 
   /** Q88 — `binaryFile` source ingestion: the multimodal pipeline's real
     * entry point. Assets land in an object store as loose media files,

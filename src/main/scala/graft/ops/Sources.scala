@@ -1,8 +1,7 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.{Canon, Q, Tables}
+import graft.io.Scratch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -16,48 +15,37 @@ import org.apache.spark.sql.types.StructType
   *
   * Both readers take an EXPLICIT schema: schema inference reads the data
   * twice and guesses types per-file — at scale the schema is a contract,
-  * not a discovery. Fixtures are written once per dataset into RAM-backed
-  * scratch (same pattern as Layout).
+  * not a discovery. Fixtures are written once per dataset into the
+  * "sources" scratch area through [[graft.io.Scratch]], which keys them
+  * by `Tables.datasetTag` and adopts them across JVMs.
   */
 object Sources {
 
-  private def shmDir(suffix: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite)
-      new java.io.File(shm, "graft-sources") else
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-sources")
-    new java.io.File(base, suffix).toString
+  /** `df` written by `write` as fixture `name`, once per dataset: the
+    * fixture dir and `df`'s schema, memoized per JVM so every read passes
+    * the schema explicitly and pays no inference.
+    */
+  private def copyOf(d: String, name: String, df: => DataFrame)(
+      write: (DataFrame, String) => Unit): (String, StructType) = {
+    lazy val frame = df
+    Scratch.fixtureWith("sources", d, name)(write(frame, _))(dir => (dir, frame.schema))
   }
 
-  private val jsonDirs = new ConcurrentHashMap[String, (String, StructType)]()
-  private val csvDirs = new ConcurrentHashMap[String, (String, StructType)]()
-
   /** events (µs timestamps dropped — the JSON copy carries the analytic
-    * columns) re-emitted as JSON lines, once per JVM per dataset.
-    * Fixture dirs (and the in-JVM memo) are keyed by `Tables.datasetTag`
-    * — source size/mtime, not just path — so regenerated testdata can
-    * never be served a stale copy (the same staleness fix Layout got).
+    * columns) re-emitted as JSON lines.
     */
   private[ops] def jsonEvents(s: SparkSession, d: String): (String, StructType) =
-    jsonDirs.computeIfAbsent(Tables.datasetTag(d), tag => {
-      val df = Tables.events(s, d)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val dir = shmDir(s"$tag/events_json")
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        df.write.mode("overwrite").json(dir)
-      (dir, df.schema)
-    })
+    copyOf(d, "events_json", Tables.events(s, d)
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))) {
+      (df, dir) => df.write.mode("overwrite").json(dir)
+    }
 
-  /** lineitem measures re-emitted as a headered CSV, once per JVM. */
+  /** lineitem measures re-emitted as a headered CSV. */
   private[ops] def csvLineitem(s: SparkSession, d: String): (String, StructType) =
-    csvDirs.computeIfAbsent(Tables.datasetTag(d), tag => {
-      val df = Tables.lineitem(s, d)
-        .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
-      val dir = shmDir(s"$tag/lineitem_csv")
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        df.write.mode("overwrite").option("header", "true").csv(dir)
-      (dir, df.schema)
-    })
+    copyOf(d, "lineitem_csv", Tables.lineitem(s, d)
+        .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))) {
+      (df, dir) => df.write.mode("overwrite").option("header", "true").csv(dir)
+    }
 
   /** Q46 — JSON-lines source: aggregate over the JSONL copy of events;
     * oracle runs the same SQL on the parquet table, so a hash match
@@ -99,20 +87,12 @@ object Sources {
             |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / count(l_extendedprice), 4) AS avg_price
             |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin))
 
-  private val orcDirs = new ConcurrentHashMap[String, (String, StructType)]()
-
-  /** orders re-emitted as ORC (Spark's second built-in columnar format),
-    * once per JVM.
-    */
+  /** orders re-emitted as ORC (Spark's second built-in columnar format). */
   private[ops] def orcOrders(s: SparkSession, d: String): (String, StructType) =
-    orcDirs.computeIfAbsent(Tables.datasetTag(d), tag => {
-      val df = Tables.orders(s, d)
-        .select(col("o_orderpriority"), col("o_orderstatus"), col("o_totalprice"))
-      val dir = shmDir(s"$tag/orders_orc")
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        df.write.mode("overwrite").orc(dir)
-      (dir, df.schema)
-    })
+    copyOf(d, "orders_orc", Tables.orders(s, d)
+        .select(col("o_orderpriority"), col("o_orderstatus"), col("o_totalprice"))) {
+      (df, dir) => df.write.mode("overwrite").orc(dir)
+    }
 
   /** Q51 — ORC source: the same aggregate over the ORC copy of orders and
     * the parquet oracle. ORC is columnar like parquet, so this also
@@ -133,28 +113,20 @@ object Sources {
             |FROM orders GROUP BY o_orderpriority, o_orderstatus
             |ORDER BY o_orderpriority, o_orderstatus""".stripMargin))
 
-  private val evoDirs = new ConcurrentHashMap[String, (String, String)]()
-
-  /** Two generations of the documents table, written once per JVM: the
+  /** Two generations of the documents table, each its own fixture: the
     * v1 writer emitted (doc_id, lang); the v2 writer added `n_chars`.
     * Even-keyed docs land in v1, odd-keyed in v2 — so a merged read sees
     * both schemas interleaved, the real shape of a long-lived dataset.
     */
-  private[ops] def evolvedDocs(s: SparkSession, d: String): (String, String) =
-    evoDirs.computeIfAbsent(Tables.datasetTag(d), tag => {
-      val base = Tables.documents(s, d)
-      val dir = shmDir(s"$tag/docs_evolved")
-      val (v1, v2) = (s"$dir/v1", s"$dir/v2")
-      if (!new java.io.File(v1, "_SUCCESS").exists())
-        base.filter(pmod(col("doc_id"), lit(2)) === 0)
-          .select(col("doc_id"), col("lang"))
-          .write.mode("overwrite").parquet(v1)
-      if (!new java.io.File(v2, "_SUCCESS").exists())
-        base.filter(pmod(col("doc_id"), lit(2)) === 1)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-          .write.mode("overwrite").parquet(v2)
-      (v1, v2)
-    })
+  private[ops] def evolvedDocs(s: SparkSession, d: String): (String, String) = {
+    def generation(name: String, parity: Int, cols: String*): String =
+      Scratch.fixture("sources", d, s"docs_evolved/$name") { dir =>
+        Tables.documents(s, d).filter(pmod(col("doc_id"), lit(2)) === parity)
+          .select(cols.map(col): _*)
+          .write.mode("overwrite").parquet(dir)
+      }
+    (generation("v1", 0, "doc_id", "lang"), generation("v2", 1, "doc_id", "lang", "n_chars"))
+  }
 
   /** Q74 — schema-evolution read: `mergeSchema` over the v1+v2 parquet
     * generations yields the union schema with v1 rows null in the added

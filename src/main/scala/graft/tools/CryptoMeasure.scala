@@ -1,10 +1,8 @@
 package graft.tools
 
-import java.nio.file.Files
-
 import graft.Tables
 import graft.crypto.{EncryptionPolicy, PrivilegeLevel}
-import graft.io.EncryptedParquet
+import graft.io.{EncryptedParquet, Scratch}
 import graft.obs.QueryMetrics.{seconds, warmSeconds}
 import graft.kms.TestKmsServer
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -48,20 +46,6 @@ object CryptoMeasure {
     walk(new java.io.File(p))
   }
 
-  private def tmpDir(prefix: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    (if (shm.isDirectory && shm.canWrite) Files.createTempDirectory(shm.toPath, prefix)
-     else Files.createTempDirectory(prefix)).toString
-  }
-
-  private def rm(p: String): Unit = {
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(del)
-      f.delete(): Unit
-    }
-    del(new java.io.File(p))
-  }
-
   /** Plaintext write at the exact layout the encrypted write uses. */
   private def writePlain(df: DataFrame, path: String, zstdLevel: Int): Unit =
     df.write.mode("overwrite")
@@ -72,14 +56,14 @@ object CryptoMeasure {
 
   private def sizeRatio(df: DataFrame, policy: EncryptionPolicy,
       kmsUrl: String, zstdLevel: Int): Double = {
-    val plainDir = tmpDir("graft-size-plain-")
-    val encDir = tmpDir("graft-size-enc-")
+    val plainDir = Scratch.tempDir("graft-size-plain-")
+    val encDir = Scratch.tempDir("graft-size-enc-")
     try {
       writePlain(df, plainDir, zstdLevel)
       EncryptedParquet.write(df, encDir, policy, kmsUrl,
         mode = "overwrite", zstdLevel = zstdLevel)
       dirBytes(encDir).toDouble / dirBytes(plainDir).toDouble
-    } finally { rm(plainDir); rm(encDir) }
+    } finally { Scratch.delete(plainDir); Scratch.delete(encDir) }
   }
 
   /** GCM-vs-CTR read overhead (BASELINE §B, the tradeoff the reference
@@ -93,8 +77,8 @@ object CryptoMeasure {
     def timeRead(dir: String): Double = warmSeconds(
       EncryptedParquet.read(spark, dir, kmsUrl, Some("RESTRICTED"))
         .write.format("noop").mode("overwrite").save())
-    val gcmDir = tmpDir("graft-cipher-gcm-")
-    val ctrDir = tmpDir("graft-cipher-ctr-")
+    val gcmDir = Scratch.tempDir("graft-cipher-gcm-")
+    val ctrDir = Scratch.tempDir("graft-cipher-ctr-")
     try {
       val df = Tables.lineitem(spark, sfDir)
       EncryptedParquet.write(df, gcmDir, policy, kmsUrl,
@@ -103,7 +87,7 @@ object CryptoMeasure {
         policy.copy(algorithm = "AES_GCM_CTR_V1"), kmsUrl,
         mode = "overwrite", zstdLevel = 3)
       (timeRead(gcmDir), timeRead(ctrDir))
-    } finally { rm(gcmDir); rm(ctrDir) }
+    } finally { Scratch.delete(gcmDir); Scratch.delete(ctrDir) }
   }
 
   /** GCM on the composed ANN serve path (r12 verdict item 3): the same
@@ -117,7 +101,7 @@ object CryptoMeasure {
   private def annServeSeconds(spark: SparkSession, sfDir: String,
       kmsUrl: String): (Double, Double) = {
     import graft.ops.{AnnIndex, IvfPq}
-    val root = tmpDir("graft-ann-crypto-")
+    val root = Scratch.tempDir("graft-ann-crypto-")
     try {
       val emb = AnnIndex.corpus(spark, sfDir)
       val plainDir = IvfPq.buildFrom(spark, emb, s"$root/plain")
@@ -129,7 +113,7 @@ object CryptoMeasure {
         kmsUrl, Some("INTERNAL"))
         .write.format("noop").mode("overwrite").save())
       (plainSec, gcmSec)
-    } finally rm(root)
+    } finally Scratch.delete(root)
   }
 
   /** Rotation asymmetry on the composed index (r13): the SAME
@@ -153,7 +137,7 @@ object CryptoMeasure {
   private def rotationSeconds(spark: SparkSession, sfDir: String,
       kmsUrl: String): (Double, Double, Double) = {
     import graft.ops.{AnnIndex, IvfPq}
-    val root = tmpDir("graft-ann-rotate-")
+    val root = Scratch.tempDir("graft-ann-rotate-")
     try {
       val emb = AnnIndex.corpus(spark, sfDir)
       IvfPq.buildFromEncrypted(spark, emb, s"$root/idx", kmsUrl,
@@ -171,7 +155,7 @@ object CryptoMeasure {
           IvfPq.contentFingerprint(spark, s"$srcDir/$a", readOpts): Unit
         })
       (inPlace, rewrite, verify)
-    } finally rm(root)
+    } finally Scratch.delete(root)
   }
 
   def run(spark: SparkSession, sfDir: String): String = {
@@ -200,7 +184,7 @@ object CryptoMeasure {
       // warm KEK means zero KMS traffic, which is the production point of
       // double wrapping). Flush them so this measures the cold-JVM cost.
       import org.apache.parquet.crypto.keytools.KeyToolkit
-      val encDir = tmpDir("graft-kmscount-")
+      val encDir = Scratch.tempDir("graft-kmscount-")
       try {
         KeyToolkit.removeCacheEntriesForAllTokens()
         // Write: 2 column KEKs + PUBLIC footer KEK => expect 3 wraps.
@@ -236,7 +220,7 @@ object CryptoMeasure {
           s""""read_unwrap_calls_restricted":${u1 - u0},""" +
           s""""read_unwrap_calls_tokenless_plaintext_col":${u2 - u1},""" +
           s""""kek_levels_in_policy":3,"sf":"$sfDir"}"""
-      } finally rm(encDir)
+      } finally Scratch.delete(encDir)
     } finally kms.stop()
   }
 

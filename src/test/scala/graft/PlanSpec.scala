@@ -765,14 +765,12 @@ class PlanSpec extends SparkTestBase {
         mode = "overwrite")
       val df = EncryptedParquet.read(spark, dir, kms.url, Some("RESTRICTED"))
         .select("n_nationkey")
-      try {
-        val p = df.queryExecution.executedPlan.toString
-        val read = "ReadSchema: struct<([^>]*)>".r.findFirstMatchIn(p)
-          .map(_.group(1)).getOrElse("")
-        assert(read == "n_nationkey:int", s"encrypted scan not pruned: $read")
-        // and the projection actually executes without touching n_name's KEK
-        assert(df.count() == 25)
-      } finally EncryptedParquet.endRead(spark)
+      val p = df.queryExecution.executedPlan.toString
+      val read = "ReadSchema: struct<([^>]*)>".r.findFirstMatchIn(p)
+        .map(_.group(1)).getOrElse("")
+      assert(read == "n_nationkey:int", s"encrypted scan not pruned: $read")
+      // and the projection actually executes without touching n_name's KEK
+      assert(df.count() == 25)
     } finally kms.stop()
   }
 }

@@ -7,11 +7,11 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source hygiene for the measurement harness: ONE local-session factory
-  * (`Graft.localSession`; `Verify` keeps its own builder because the
-  * oracle hashes were recorded under its confs) and ONE Spark listener
-  * (`graft.obs.QueryMetrics`). A second builder or collector regrowing
-  * in a tool main fails here.
+/** Source hygiene: ONE local-session factory (`Graft.localSession`;
+  * `Verify` keeps its own builder because the oracle hashes were recorded
+  * under its confs), ONE Spark listener (`graft.obs.QueryMetrics`) and
+  * ONE scratch-placement rule (`graft.io.Scratch`). A second builder,
+  * collector or private scratch root regrowing in a module fails here.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -47,5 +47,10 @@ class SourceHygieneSpec extends AnyFunSuite {
     assertOnlyIn(
       """\b(extends|with|new)\s+[\w.]*\b(SparkListener|SparkListenerInterface|SparkFirehoseListener)\b""".r,
       Set("graft/obs/QueryMetrics.scala"))
+  }
+
+  test("the /dev/shm literal and Files.createTempDirectory appear only in graft.io.Scratch") {
+    assertOnlyIn("\"/dev/shm".r, Set("graft/io/Scratch.scala"))
+    assertOnlyIn("""\bcreateTempDirectory\b""".r, Set("graft/io/Scratch.scala"))
   }
 }

@@ -16,14 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class AfsAtomicitySpec extends AnyFunSuite {
 
   test("createExclusive admits exactly one winner per path under a 2-thread barrier hammer") {
-    val root = {
-      val shm = new java.io.File("/dev/shm")
-      val base = if (shm.isDirectory && shm.canWrite) shm
-                 else new java.io.File(sys.props("java.io.tmpdir"))
-      val f = new java.io.File(base, s"graft-afs-hammer-${System.nanoTime()}")
-      f.mkdirs()
-      f
-    }
+    val root = Scratch.tempDir("graft-afs-hammer-")
     try {
       val fsClass = org.apache.hadoop.fs.FileSystem
         .get(new java.net.URI("file:///"), Afs.conf).getClass.getName
@@ -44,12 +37,6 @@ class AfsAtomicitySpec extends AnyFunSuite {
       assert(anomalies == 0,
         s"$anomalies/500 rounds had != 1 claim winner — the exclusive-create " +
           s"primitive is not atomic on $fsClass")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(root)
-    }
+    } finally Scratch.delete(root)
   }
 }

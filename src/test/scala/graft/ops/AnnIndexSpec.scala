@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
+import graft.io.Scratch
 
 /** The format-agnostic version-publication machinery of the shared
   * index core, driven through the composed index's builds
@@ -58,15 +59,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("version allocation is claim-by-exclusive-create: a concurrent claim is never built into or retired") {
     import spark.implicits._
-    val root = new java.io.File(
-      new java.io.File(if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-                       else sys.props("java.io.tmpdir")),
-      "graft-ann-claimspec")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(root)
+    val root = new java.io.File(Scratch.fresh("ann-claimspec"))
     val g = AnnIndex.RetireGraceMs
     AnnIndex.RetireGraceMs = 0L
     try {
@@ -109,7 +102,7 @@ class AnnIndexSpec extends SparkTestBase {
       assert(new java.io.File(claim, "a-partial-artifact").exists(),
         "retirement deleted another writer's claimed, in-flight build")
       assert(new java.io.File(root, "v000002._CLAIM").exists())
-    } finally { AnnIndex.RetireGraceMs = g; rm(root) }
+    } finally { AnnIndex.RetireGraceMs = g; Scratch.delete(root.toString) }
   }
 
   test("the artifact layer speaks the Hadoop FileSystem API: a scheme-qualified " +
@@ -123,14 +116,7 @@ class AnnIndexSpec extends SparkTestBase {
     // paths were deleted — the protocol under test is unchanged.
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val local = new java.io.File(
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-      else sys.props("java.io.tmpdir"), "graft-ann-fsspec")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(local)
+    val local = new java.io.File(Scratch.fresh("ann-fsspec"))
     val root = "file:" + local.getAbsolutePath
     try {
       val emb = (0L until 120L)
@@ -158,7 +144,7 @@ class AnnIndexSpec extends SparkTestBase {
         "URI-rooted serve lost surface")
       assert(served.filter(col("nbr_id") === 5L).count() === 0L,
         "URI-rooted tombstone mask did not apply")
-    } finally rm(local)
+    } finally Scratch.delete(local.toString)
   }
 
   test("CURRENT resolution survives a missing, mid-flip or stale pointer via the listing fallback") {
@@ -168,14 +154,7 @@ class AnnIndexSpec extends SparkTestBase {
     // must degrade to the newest _SUCCESS-complete version — never to
     // None while a complete version exists, never to an incomplete dir.
     import spark.implicits._
-    val local = new java.io.File(
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-      else sys.props("java.io.tmpdir"), "graft-ann-fallbackspec")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(local)
+    val local = new java.io.File(Scratch.fresh("ann-fallbackspec"))
     val root = local.getAbsolutePath
     try {
       val emb = (0L until 80L)
@@ -203,7 +182,7 @@ class AnnIndexSpec extends SparkTestBase {
       assert(AnnIndex.resolveVersion(root) === Some(v2),
         "fallback resolved an incomplete claim")
       assert(v1 != v2)
-    } finally rm(local)
+    } finally Scratch.delete(local.toString)
   }
 
   test("a concurrent reader always resolves a complete index across forced rebuilds") {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
+import graft.io.Scratch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -34,16 +35,9 @@ class AnnLifecycleSoakSpec extends SparkTestBase {
 
   private val Dim = 64
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(): Unit
-  }
-
   private val soakRoot: java.io.File = {
-    val shm = new java.io.File("/dev/shm")
-    val f = if (shm.isDirectory && shm.canWrite) new java.io.File(shm, "graft-ann-soak")
-            else new java.io.File(sys.props("java.io.tmpdir"), "graft-ann-soak")
-    rmTree(f); f.mkdirs(): Unit
+    val f = new java.io.File(Scratch.fresh("ann-soak"))
+    f.mkdirs(): Unit
     f
   }
 
@@ -277,7 +271,7 @@ class AnnLifecycleSoakSpec extends SparkTestBase {
       serveCheckF4(st, "pre-fold serve")
       st = stepF4(st, Fold, root.toString, ops.size)
       serveCheckF4(st, "post-fold serve")
-    } finally rmTree(root)
+    } finally Scratch.delete(root.toString)
   }
 
   test("f4 lifecycle: random {append,delete,upsert,stream+in-stream-delete,compact,maintain} sequences hold every invariant, distributed ≡ collected") {

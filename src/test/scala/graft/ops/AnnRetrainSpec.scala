@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
+import graft.io.Scratch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,17 +30,10 @@ class AnnRetrainSpec extends SparkTestBase {
   private val Dim = 64
   private val N = 200L
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(): Unit
-  }
-
   private val root: String = {
-    val shm = new java.io.File("/dev/shm")
-    val f = if (shm.isDirectory && shm.canWrite) new java.io.File(shm, "graft-ann-retrain")
-            else new java.io.File(sys.props("java.io.tmpdir"), "graft-ann-retrain")
-    rmTree(f); f.mkdirs(): Unit
-    f.toString
+    val f = Scratch.fresh("ann-retrain")
+    new java.io.File(f).mkdirs(): Unit
+    f
   }
 
   private def unit(v: Array[Double]): Seq[Double] = {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
+import graft.io.Scratch
 import graft.kms.TestKmsServer
 import org.apache.parquet.crypto.KeyAccessDeniedException
 import org.apache.spark.sql.DataFrame
@@ -13,18 +14,6 @@ import org.apache.spark.sql.functions._
   * privilege per scan.
   */
 class EncryptedAnnSpec extends SparkTestBase {
-
-  private def freshRoot(name: String): String = {
-    val base = new java.io.File(
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-      else sys.props("java.io.tmpdir"), name)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(base)
-    base.toString
-  }
 
   private def causedByAccessDenied(e: Throwable): Boolean = {
     var t: Throwable = e
@@ -43,7 +32,7 @@ class EncryptedAnnSpec extends SparkTestBase {
 
   test("encrypted composed index: INTERNAL serves with plaintext parity, lower privilege is denied") {
     val kms = TestKmsServer.shared
-    val root = freshRoot("graft-ann-encrypted")
+    val root = Scratch.fresh("ann-encrypted")
     // The deterministic trainers (vec_id-hash seeds) make two builds of
     // the same frame produce identical artifacts, so the encrypted and
     // plaintext indexes are comparable row-for-row.
@@ -96,7 +85,7 @@ class EncryptedAnnSpec extends SparkTestBase {
 
   test("encrypted lifecycle: append, masked serve, delete-compact and maintain run under the token") {
     val kms = TestKmsServer.shared
-    val root = freshRoot("graft-ann-encrypted-lifecycle")
+    val root = Scratch.fresh("ann-encrypted-lifecycle")
     val crypto = Some(IvfPq.IndexCrypto(kms.url, Some("INTERNAL")))
     import spark.implicits._
     def frame(ids: Seq[Long]) = ids
@@ -135,7 +124,7 @@ class EncryptedAnnSpec extends SparkTestBase {
 
   test("key rotation republishes under fresh KEKs behind the pointer flip: serve parity, gating intact, old version drains") {
     val kms = TestKmsServer.shared
-    val root = freshRoot("graft-ann-rotate")
+    val root = Scratch.fresh("ann-rotate")
     val emb = AnnIndex.corpus(spark, sfDir)
     val encRoot = s"$root/enc"
     val v1 = IvfPq.buildFromEncrypted(spark, emb, encRoot, kms.url)
@@ -169,7 +158,7 @@ class EncryptedAnnSpec extends SparkTestBase {
 
   test("external-material index rotates in place: sidecars rewritten, data files byte-identical, parity and gating hold") {
     val kms = TestKmsServer.shared
-    val root = freshRoot("graft-ann-rotate-inplace")
+    val root = Scratch.fresh("ann-rotate-inplace")
     import spark.implicits._
     val emb = (0L until 200L)
       .map(i => (i, (0 until 64).map(j => math.cos(i * 19 + j * 3)), (i % 10).toInt))
@@ -240,7 +229,7 @@ class EncryptedAnnSpec extends SparkTestBase {
 
   test("in-place rotation distributes over executors at wide k (1024+ partition dirs)") {
     val kms = TestKmsServer.shared
-    val root = freshRoot("graft-ann-rotate-wide")
+    val root = Scratch.fresh("ann-rotate-wide")
     import graft.io.Afs
     import spark.implicits._
     // A synthetic composed artifact with 1024 inverted lists — the
@@ -305,7 +294,7 @@ class EncryptedAnnSpec extends SparkTestBase {
 
   test("rewrite rotation carries the _SEGMENTS manifest so stream-ingested readers survive") {
     val kms = TestKmsServer.shared
-    val root = freshRoot("graft-ann-rotate-manifest")
+    val root = Scratch.fresh("ann-rotate-manifest")
     val crypto = Some(IvfPq.IndexCrypto(kms.url, Some("INTERNAL")))
     import spark.implicits._
     def frame(ids: Seq[Long]) = ids
@@ -346,7 +335,7 @@ class EncryptedAnnSpec extends SparkTestBase {
   }
 
   test("the rotation verify fingerprint materializes every column, not just row counts") {
-    val root = freshRoot("graft-ann-fingerprint")
+    val root = Scratch.fresh("ann-fingerprint")
     import spark.implicits._
     // Same row count, one value changed inside a nested array column:
     // count() cannot tell them apart (it is served from metadata and
@@ -370,7 +359,7 @@ class EncryptedAnnSpec extends SparkTestBase {
 
   test("a plaintext index upgrades to encrypted-at-rest through the same rotation path") {
     val kms = TestKmsServer.shared
-    val root = freshRoot("graft-ann-encrypt-upgrade")
+    val root = Scratch.fresh("ann-encrypt-upgrade")
     import spark.implicits._
     val emb = (0L until 200L)
       .map(i => (i, (0 until 64).map(j => math.sin(i * 17 + j * 7)), (i % 10).toInt))
@@ -398,7 +387,7 @@ class EncryptedAnnSpec extends SparkTestBase {
 
   test("encrypted filtered serve keeps predicate purity under the token channel") {
     val kms = TestKmsServer.shared
-    val root = freshRoot("graft-ann-encrypted-filtered")
+    val root = Scratch.fresh("ann-encrypted-filtered")
     val emb = AnnIndex.corpus(spark, sfDir)
     val encDir = IvfPq.buildFromEncrypted(spark, emb, s"$root/enc", kms.url)
     val out = IvfPq.probeEncrypted(spark, Seq(encDir),

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
-import graft.io.{Afs, EncryptedParquet, FaultyFileSystem}
+import graft.io.{Afs, EncryptedParquet, FaultyFileSystem, Scratch}
 import graft.crypto.{EncryptionPolicy, Fixtures, PrivilegeLevel}
 import graft.kms.TestKmsServer
 
@@ -17,14 +17,7 @@ class FaultInjectionSpec extends SparkTestBase {
   private lazy val froot: String = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
-    val local = new java.io.File(
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-      else sys.props("java.io.tmpdir"), "graft-faulty-spec")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(local)
+    val local = new java.io.File(Scratch.fresh("faulty-spec"))
     local.mkdirs()
     "faulty://" + local.getAbsolutePath
   }

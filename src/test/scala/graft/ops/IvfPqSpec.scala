@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
+import graft.io.Scratch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -145,7 +146,7 @@ class IvfPqSpec extends SparkTestBase {
   }
 
   test("distributed composed LSM serve ≡ collected: masks, boundaries and filters compose") {
-    val root = freshRoot("graft-ivfpq-distlsm")
+    val root = Scratch.fresh("ivfpq-distlsm")
     val base = IvfPq.buildFrom(spark, vecsDf(0L until 200L), s"$root/idx")
     val seg = IvfPq.appendSegment(spark, base, vecsDf(200L until 260L), s"$root/seg")
     // Tombstone masking only the base (boundary 1 — the upsert shape).
@@ -173,20 +174,8 @@ class IvfPqSpec extends SparkTestBase {
       .toDF("vec_id", "e", "label")
   }
 
-  private def freshRoot(name: String): String = {
-    val base = new java.io.File(
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-      else sys.props("java.io.tmpdir"), name)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(base)
-    base.toString
-  }
-
   test("lifecycle: append -> masked serve -> delete-aware compact conserve the corpus") {
-    val root = freshRoot("graft-ivfpq-lifecycle")
+    val root = Scratch.fresh("ivfpq-lifecycle")
     val prevGrace = AnnIndex.RetireGraceMs
     AnnIndex.RetireGraceMs = 0L
     try {
@@ -245,7 +234,7 @@ class IvfPqSpec extends SparkTestBase {
     // artifacts; the probe frame carries a shuffle in its lineage (the
     // recomputed-ordinal misjoin shape r12 caught). Pin = EQUALITY.
     import spark.implicits._
-    val root = freshRoot("graft-ivfpq-distk1024")
+    val root = Scratch.fresh("ivfpq-distk1024")
     val k = 1024
     val cs: Seq[(Int, Seq[Double])] =
       (1 to k).map(c => c -> (0 until 64).map(j => math.sin(c * 31 + j * 7)))
@@ -282,7 +271,7 @@ class IvfPqSpec extends SparkTestBase {
   }
 
   test("maintain on an undrifted composed state folds without retraining") {
-    val root = freshRoot("graft-ivfpq-maintain")
+    val root = Scratch.fresh("ivfpq-maintain")
     val prevGrace = AnnIndex.RetireGraceMs
     AnnIndex.RetireGraceMs = 0L
     try {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
+import graft.io.Scratch
 import graft.kms.TestKmsServer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -25,21 +26,9 @@ class IvfPqStreamSpec extends SparkTestBase {
     ids.map(id => (id, vec(id), (id % 10).toInt)).toDF("vec_id", "e", "label")
   }
 
-  private def freshRoot(name: String): String = {
-    val f = new java.io.File(
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-      else sys.props("java.io.tmpdir"), name)
-    def rm(g: java.io.File): Unit = {
-      if (g.isDirectory) Option(g.listFiles()).getOrElse(Array.empty).foreach(rm)
-      g.delete(): Unit
-    }
-    rm(f)
-    f.toString
-  }
-
   test("f4 stream-ingest: serve continuity across auto-fired folds, conservation and manifest at the end") {
     import spark.implicits._
-    val root = freshRoot("graft-ivfpq-stream")
+    val root = Scratch.fresh("ivfpq-stream")
     val baseIds = 0L until 64L
     val ingestIds = 1000L until 1024L
     val universe = (baseIds ++ ingestIds).toSet
@@ -95,7 +84,7 @@ class IvfPqStreamSpec extends SparkTestBase {
 
   test("deletes compose into the streaming ingest loop: masked before the fold, physical after, newer copies survive") {
     import spark.implicits._
-    val root = freshRoot("graft-ivfpq-stream-del")
+    val root = Scratch.fresh("ivfpq-stream-del")
     val ingestRoot = s"$root/ingest"
     val baseIds = 0L until 64L
     val ingestIds = 1000L until 1024L
@@ -208,7 +197,7 @@ class IvfPqStreamSpec extends SparkTestBase {
     // moved base (b0's content is inside it), sparing b1 — in the
     // reader view while pending AND in the consuming fold.
     import spark.implicits._
-    val root = freshRoot("graft-ivfpq-ts-race")
+    val root = Scratch.fresh("ivfpq-ts-race")
     val ingest = s"$root/ingest"
     val maintRoot = s"$ingest/maint"
     val baseIds = 0L until 64L
@@ -286,7 +275,7 @@ class IvfPqStreamSpec extends SparkTestBase {
 
   test("fold-point GC keeps a long-running ingest root bounded: folded segments and consumed tombstones are swept past grace") {
     import spark.implicits._
-    val root = freshRoot("graft-ivfpq-stream-gc")
+    val root = Scratch.fresh("ivfpq-stream-gc")
     val ingestRoot = s"$root/ingest"
     val baseIds = 0L until 64L
     val ingestIds = 1000L until 1024L
@@ -328,7 +317,7 @@ class IvfPqStreamSpec extends SparkTestBase {
   test("encrypted f4 stream-ingest: segments and folds land encrypted, serve under the token, denial gates") {
     import spark.implicits._
     val kms = TestKmsServer.shared
-    val root = freshRoot("graft-ivfpq-stream-enc")
+    val root = Scratch.fresh("ivfpq-stream-enc")
     val crypto = Some(IvfPq.IndexCrypto(kms.url, Some("INTERNAL")))
     val baseIds = 0L until 64L
     val ingestIds = 1000L until 1024L

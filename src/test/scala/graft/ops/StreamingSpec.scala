@@ -159,16 +159,23 @@ class StreamingSpec extends SparkTestBase {
       // so the crypto binding lives on an isolated session clone — the
       // shared test session's conf stays untouched.
       val s2 = spark.newSession()
+      s2.conf.set("parquet.compression.codec.zstd.level", "7")
+      assert(!s2.conf.getAll.contains("parquet.writer.version"))
       val stream = s2.readStream
         .schema(Tables.events(spark, sfDir).schema)
         .parquet(eventsDir)
         .select(col("event_id"), col("user_id"), col("event_type"))
-      val q = EncryptedParquet.writeStream(stream, sinkDir, ckptDir,
-          policy, kms.url, zstdLevel = 3)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      EncryptedParquet.clearStreamCrypto(s2)
+      EncryptedParquet.withEncryptedStream(stream, sinkDir, ckptDir,
+          policy, kms.url, zstdLevel = 3) { w =>
+        assert(s2.conf.get("parquet.compression.codec.zstd.level") == "3")
+        w.trigger(Trigger.AvailableNow()).start().awaitTermination()
+      }
+      // The binding is restored, not erased: the session's own zstd level
+      // survives the stream, and keys it never set are unset again.
+      val after = s2.conf.getAll
+      assert(after.get("parquet.compression.codec.zstd.level") == Some("7"))
+      assert(!after.contains("parquet.writer.version"))
+      assert(EncryptionPolicy.allProperties.forall(k => !after.contains(k)))
       // Privileged read returns exactly the batch content (exactly-once
       // through the checkpointed sink, decrypted through the KMS).
       val got = EncryptedParquet.read(spark, sinkDir, kms.url, Some("CONFIDENTIAL"))
