@@ -262,16 +262,6 @@ object Bench {
     out
   }
 
-  /** The committed previous-seal per-query wall map ("BENCH_SEAL.json",
-    * refreshed at each round's reseal; path override for local runs).
-    * Embedded verbatim into the total_summary line so a >2x query in a
-    * one-shot driver run is adjudicable as host-vs-plan from the
-    * artifact alone (r10 verdict item 6): the reader compares each
-    * query's wall against its seal wall alongside the run's own
-    * per-query loadavg and task/cpu/gc evidence — no local rerun of the
-    * same commit needed. Extraction is a brace-matched substring, not a
-    * JSON parse: the seal file is this program's own single-line output.
-    */
   /** The seal's per-query walls as numbers — the rerun-once rule's
     * reference points ([[sealWalls]] drives it; [[sealQueries]] embeds
     * the raw map into the artifact).
@@ -282,6 +272,16 @@ object Bench {
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     }.getOrElse(Map.empty)
 
+  /** The committed previous-seal per-query wall map ("BENCH_SEAL.json",
+    * refreshed at each round's reseal; path override for local runs).
+    * Embedded verbatim into the total_summary line so a >2x query in a
+    * one-shot driver run is adjudicable as host-vs-plan from the
+    * artifact alone (r10 verdict item 6): the reader compares each
+    * query's wall against its seal wall alongside the run's own
+    * per-query loadavg and task/cpu/gc evidence — no local rerun of the
+    * same commit needed. Extraction is a brace-matched substring, not a
+    * JSON parse: the seal file is this program's own single-line output.
+    */
   private def sealQueries: Option[String] = {
     val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_SEAL", "BENCH_SEAL.json")
     try {

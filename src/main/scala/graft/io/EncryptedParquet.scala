@@ -2,6 +2,7 @@ package graft.io
 
 import graft.crypto.EncryptionPolicy
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Encrypted parquet write/read over Spark's native parquet source —
@@ -114,6 +115,31 @@ object EncryptedParquet {
       .options(EncryptionPolicy.readConfMap(kmsUrl, accessToken))
       .parquet(path)
 
+  /** Order-independent content fingerprint of a dataset: row count plus
+    * the sum of per-row xxhash64 over EVERY column (sorted by name). The
+    * verify step of both rotations — [[rotateByRewrite]] and the index's
+    * [[graft.ops.IvfPq.rotateIndexKeys]] — compares these, never bare
+    * counts: count() is served from footer/row-group metadata — per
+    * BASELINE.md's own KMS-call measurement, a read touching no
+    * encrypted column unwraps only the footer KEK — so a count-based
+    * verify never exercises freshly-minted column KEKs/DEKs, and two
+    * copies with equal row counts but different values look identical
+    * to it (ADVICE r13). The hash forces every column, encrypted ones
+    * included, through the decrypt path; summing makes it insensitive to
+    * row order, which a rewrite's repartition does not preserve. The sum
+    * runs in decimal(38,0) — a long sum of 2⁶³-range hashes overflows
+    * (and under ANSI mode, Spark 4's default, that ABORTS the verify
+    * rather than wrapping). `df` is the dataset as read — through
+    * [[read]] for an encrypted one.
+    */
+  def fingerprint(df: DataFrame): (Long, String) = {
+    val r = df.agg(
+      count(lit(1)).as("n"),
+      sum(xxhash64(df.columns.sorted.map(col): _*)
+        .cast("decimal(38,0)")).as("h")).head()
+    (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toPlainString)
+  }
+
   /** Rewrite-based key rotation for INTERNAL key material (r9 verdict
     * item 5). parquet-mr's `KeyToolkit.rotateMasterKeys` rewrites only
     * EXTERNAL `_KEY_MATERIAL_FOR_*` sidecars; with internal material —
@@ -160,36 +186,38 @@ object EncryptedParquet {
     require(Afs.exists(path), s"no dataset at $path to rotate")
     // BOTH siblings present means a prior rotation stopped between its
     // swap and its cleanup. Two states share that fingerprint: a benign
-    // crash after verification (both copies hold the same rows — the
+    // crash after verification (both copies hold the same content — the
     // .rotate-old sweep below is then safe), and a FAILED post-swap
     // verification, where the live path holds the bad rotated copy and
     // .rotate-old is the only good one — a blind sweep would make that
-    // loss permanent on retry (r11 ADVICE). Disambiguate by row count;
+    // loss permanent on retry (r11 ADVICE). Disambiguate by content
+    // ([[fingerprint]] — equal row counts prove nothing, see there);
     // anything but a readable exact match refuses and leaves both
     // copies for the operator.
-    // When the recovery branch already counted the live copy, reuse it
-    // as rowsBefore — nothing modifies the dataset in between, and the
-    // count is a full decrypted scan worth not paying twice.
-    var verifiedLive: Option[Long] = None
+    // When the recovery branch already fingerprinted the live copy,
+    // reuse it as the pre-rotation fingerprint — nothing modifies the
+    // dataset in between, and it is a full decrypted scan worth not
+    // paying twice.
+    var verifiedLive: Option[(Long, String)] = None
     if (Afs.exists(old)) {
-      val liveRows = try read(spark, path, kmsUrl, accessToken).count()
-                     catch { case e: Throwable =>
-                       throw new IllegalStateException(
-                         s"$path and $old both exist and the live copy is unreadable — " +
-                           s"a prior rotation likely failed verification; the good copy " +
-                           s"is at $old. Refusing to rotate; resolve manually.", e)
-                     }
-      val oldRows = read(spark, old, kmsUrl, accessToken).count()
-      require(liveRows == oldRows,
-        s"$path ($liveRows rows) and $old ($oldRows rows) both exist and disagree — " +
+      val live = try fingerprint(read(spark, path, kmsUrl, accessToken))
+                 catch { case e: Throwable =>
+                   throw new IllegalStateException(
+                     s"$path and $old both exist and the live copy is unreadable — " +
+                       s"a prior rotation likely failed verification; the good copy " +
+                       s"is at $old. Refusing to rotate; resolve manually.", e)
+                 }
+      val prior = fingerprint(read(spark, old, kmsUrl, accessToken))
+      require(live == prior,
+        s"$path ${show(live)} and $old ${show(prior)} both exist and disagree — " +
           s"a prior rotation failed verification; refusing to rotate or delete " +
           s"either copy. Resolve manually (the pre-rotation data is at $old).")
-      verifiedLive = Some(liveRows)
+      verifiedLive = Some(live)
     }
     Afs.delete(tmp); Afs.delete(old)
     KeyToolkit.removeCacheEntriesForAllTokens()
-    val rowsBefore = verifiedLive.getOrElse(
-      read(spark, path, kmsUrl, accessToken).count())
+    val before = verifiedLive.getOrElse(
+      fingerprint(read(spark, path, kmsUrl, accessToken)))
     write(read(spark, path, kmsUrl, accessToken), tmp, policy, kmsUrl,
       mode = "overwrite", zstdLevel = zstdLevel, pageV2 = pageV2)
     require(Afs.rename(path, old),
@@ -208,15 +236,17 @@ object EncryptedParquet {
     // token.
     KeyToolkit.removeCacheEntriesForAllTokens()
     // Drop the pre-rotation copy only after the swapped-in dataset proves
-    // complete and readable (parquet count() decrypts and reads every
-    // file's footer — cheap, metadata-only, but a truncated or
-    // key-broken file fails it).
-    val rowsAfter = read(spark, path, kmsUrl, accessToken).count()
-    require(rowsAfter == rowsBefore,
-      s"rotated dataset at $path has $rowsAfter rows, expected $rowsBefore — " +
+    // complete and readable: its fingerprint decrypts every column of
+    // every file under the fresh keys, so a truncated, key-broken or
+    // altered file fails it.
+    val after = fingerprint(read(spark, path, kmsUrl, accessToken))
+    require(after == before,
+      s"rotated dataset at $path holds ${show(after)}, expected ${show(before)} — " +
         s"pre-rotation copy preserved at $old")
     Afs.delete(old)
   }
+
+  private def show(fp: (Long, String)): String = s"(${fp._1} rows, hash ${fp._2})"
 
   /** Eager read: project, collect, return a local DataFrame. For
     * tests/demos — not for 100 TB scans (use `read` and keep the plan

@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.Tables
+import graft.crypto.{EncryptionPolicy, PrivilegeLevel}
 import graft.functions.GraftFunctions
 import graft.io.{Afs, Scratch}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The shared core of the ANN index. The index itself — one on-disk
@@ -20,6 +21,8 @@ import org.apache.spark.sql.functions._
   *   - '''versioned publication''' — immutable version dirs behind a
   *     CURRENT pointer, claim-by-exclusive-create, retirement grace
   *     ([[publishVersion]], [[resolveVersion]]);
+  *   - '''crypto''' — [[IndexCrypto]], the one carrier of crypto state,
+  *     and the artifact reader/writer it configures;
   *   - '''serve plumbing''' — probe collection, driver-side and
   *     distributed routing, the masked segment union, the cached
   *     trained tables;
@@ -543,30 +546,93 @@ object AnnIndex {
         sqrt(sum(GraftFunctions.dotProduct(col("rv"), col("rv")))).as("qnorm"))
   }
 
-  /** Per-JVM cache of collected TRAINED-TABLE artifacts, keyed by
-    * (artifact dir, reader options) — r16, q113/q128 per-batch overhead
-    * and one fewer collect job on every serve path. Safe because a
-    * published version dir is IMMUTABLE by the publishVersion
-    * discipline (a rebuild/fold/retrain always lands a NEW vN dir, and
-    * the in-place key rotation re-encrypts the same values), and keying
-    * on readOpts keeps crypto denial intact: a caller without the token
-    * never hits an entry a privileged caller populated — its own read
-    * fails exactly as before. O(k·dim + M·K·sub) doubles per entry;
-    * NOT result caching — these are the bounded routing/codebook tables
-    * every serve loads, not query outputs.
+  // ---- crypto context and artifact IO ---------------------------------
+
+  /** The one carrier of crypto state through the index: every build,
+    * serve, lifecycle, census and rotation entry point takes `crypto:
+    * Option[IndexCrypto]` (`None` = plaintext), and only the context
+    * turns itself into reader/writer options. Reads need a token
+    * privileged for every column they decrypt; writes carry none.
     */
-  private val trainedTableCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Map[String, String]), AnyRef]()
+  final case class IndexCrypto(kmsUrl: String, token: Option[String],
+      externalMaterial: Boolean = false) {
+
+    /** The corpus column policy PER ARTIFACT (the PME factory requires
+      * each file's column list to name only columns that file holds, by
+      * parquet leaf path): embeddings and labels — and everything the
+      * index derives from them (routing centroids, codebook entries and
+      * their norms, codes, reconstructed norms) — at INTERNAL. A vector
+      * is exactly as sensitive as the text it embeds; an index that
+      * stored its derived forms in plaintext would leak what the
+      * encrypted corpus protects. Ids (vec_id, cid, m/code ordinals)
+      * stay plaintext, like the reference's `id` column. Key material is
+      * internal (the reference's default) or, with `externalMaterial`,
+      * sidecars — what [[IvfPq.rotateIndexKeysInPlace]] rotates.
+      */
+    def policies: Map[String, EncryptionPolicy] = {
+      def internal(cols: String*): EncryptionPolicy = EncryptionPolicy(
+        columnKeys = Map(PrivilegeLevel.Internal -> cols),
+        internalKeyMaterial = !externalMaterial)
+      Map(
+        "ivf_centroids" -> internal("ce.list.element"),
+        "pq_codebook" -> internal("ce.list.element", "c2"),
+        "ivfpq_lists" ->
+          internal("label", "codes.list.element", "qnorm", "e.list.element"),
+        // Tombstone segments carry each victim's stored embedding (for
+        // cid re-resolution after a retrain — see
+        // [[IvfPq.enqueueTombstones]]), which is exactly as sensitive as
+        // the lists' `e`; ids/cids stay plaintext like everywhere else.
+        "ivfpq_tombstones" -> internal("e.list.element"))
+    }
+
+    private[ops] def readerOptions: Map[String, String] =
+      EncryptionPolicy.readConfMap(kmsUrl, token)
+
+    private[ops] def writerOptions(artifact: String): Map[String, String] =
+      EncryptionPolicy.writeConfMap(policies(artifact), kmsUrl, accessToken = None)
+  }
+
+  /** Read one index artifact; under a context, authorization is enforced
+    * per column AT THE SCAN (denial fails the job at action time).
+    */
+  private[graft] def readArtifact(s: SparkSession, path: String,
+      crypto: Option[IndexCrypto]): DataFrame =
+    s.read.options(crypto.fold(Map.empty[String, String])(_.readerOptions)).parquet(path)
+
+  /** Write (overwrite) one index artifact, under a context encrypted by
+    * its `artifact` policy. Version markers/pointers stay plaintext.
+    */
+  private[ops] def writeArtifact(w: DataFrameWriter[Row], path: String,
+      artifact: String, crypto: Option[IndexCrypto]): Unit =
+    w.mode("overwrite")
+      .options(crypto.fold(Map.empty[String, String])(_.writerOptions(artifact)))
+      .parquet(path)
+
+  /** Per-JVM cache of collected TRAINED-TABLE artifacts, keyed by
+    * (artifact kind, dir, KMS endpoint and token) — r16, q113/q128
+    * per-batch overhead and one fewer collect job on every serve path.
+    * Safe because a published version dir is IMMUTABLE by the
+    * publishVersion discipline (a rebuild/fold/retrain always lands a NEW
+    * vN dir, and the in-place key rotation re-encrypts the same values),
+    * and keying on the token keeps crypto denial intact: a caller without
+    * the token never hits an entry a privileged caller populated — its
+    * own read fails exactly as before. O(k·dim + M·K·sub) doubles per
+    * entry; NOT result caching — these are the bounded routing/codebook
+    * tables every serve loads, not query outputs.
+    */
+  private val trainedTableCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Option[(String, Option[String])]), AnyRef]()
 
   private def cachedCollect[T <: AnyRef](kind: String, dir: String,
-      readOpts: Map[String, String])(read: => T): T =
-    trainedTableCache.computeIfAbsent((kind, dir, readOpts), _ => read)
+      crypto: Option[IndexCrypto])(read: => T): T =
+    trainedTableCache.computeIfAbsent(
+      (kind, dir, crypto.map(c => (c.kmsUrl, c.token))), _ => read)
       .asInstanceOf[T]
 
   private[ops] def readCentroids(s: SparkSession, dir: String,
-      readOpts: Map[String, String] = Map.empty): Seq[(Int, Seq[Double])] =
-    cachedCollect("cents", dir, readOpts) {
-      s.read.options(readOpts).parquet(s"$dir/ivf_centroids")
+      crypto: Option[IndexCrypto] = None): Seq[(Int, Seq[Double])] =
+    cachedCollect("cents", dir, crypto) {
+      readArtifact(s, s"$dir/ivf_centroids", crypto)
         .collect().toIndexedSeq
         .map(r => (r.getInt(r.fieldIndex("cid")),
           r.getSeq[Double](r.fieldIndex("ce"))))
@@ -593,13 +659,6 @@ object AnnIndex {
   def defaultProbes(s: SparkSession, d: String): DataFrame =
     corpus(s, d).filter(col("vec_id") < 10).select("vec_id", "e")
 
-  /** Collect an external (id, vector) probe frame driver-side: the
-    * first column must cast to long, the second to array<double> —
-    * any (id, embedding) frame serves, not just corpus slices (r9
-    * verdict item 2). Collects at most MaxProbes + 1 rows (the limit
-    * rides into the plan — an oversized probe frame can never flood
-    * the driver) and fails fast when the cap is exceeded.
-    */
   /** Normalize any (id, vector, …) frame to (pid: long, pe:
     * array<double>) — the single owner of the probe-frame contract,
     * shared by the single-batch collect and the batched driver.
@@ -611,6 +670,13 @@ object AnnIndex {
     probes.select(col(cols(0)).cast("long").as("pid"), dbl(col(cols(1))).as("pe"))
   }
 
+  /** Collect an external (id, vector) probe frame driver-side: the
+    * first column must cast to long, the second to array<double> —
+    * any (id, embedding) frame serves, not just corpus slices (r9
+    * verdict item 2). Collects at most MaxProbes + 1 rows (the limit
+    * rides into the plan — an oversized probe frame can never flood
+    * the driver) and fails fast when the cap is exceeded.
+    */
   private[ops] def collectProbes(probes: DataFrame): Seq[(Long, Seq[Double])] = {
     val rows = normalizeProbes(probes)
       .limit(MaxProbes + 1)
@@ -624,24 +690,23 @@ object AnnIndex {
     * at ≤ [[LiteralAssignMaxK]] the (−cos, cid) top-nprobe runs
     * driver-side — O(probes·k·dim) over inputs both bounded by
     * construction, no Spark job, the cheapest path at the bench's K=16.
-    * Beyond it the SAME ordering evaluates distributed (probes ×
-    * broadcast routing table, per-probe rank ≤ nprobe): the flop-heavy
-    * O(probes·k·dim) scan scales out with k — at §9's k=√n≈32k a
-    * driver-side route would be minutes of single-threaded cosine per
-    * batch — while the driver keeps only the routing RESULT, ≤
-    * MaxProbes·nprobe (pid, cid) rows. Both paths use the same
-    * tie-break (highest cos, then smallest cid); [[AnnAssignSpec]] pins
-    * them identical. Entries lead with the probe's ORDINAL in the
-    * collected batch: downstream ranking partitions on it, so duplicate
-    * probe ids route AND rank per-row on every serve path, collected and
-    * distributed alike (r12 ADVICE — the collected windows used to key
-    * on probe_id and merge duplicates where the distributed path did
-    * not).
+    * Beyond it the batch routes through [[routeDistributed]]
+    * ([[routeCollected]]): the flop-heavy O(probes·k·dim) scan scales
+    * out with k — at §9's k=√n≈32k a driver-side route would be minutes
+    * of single-threaded cosine per batch — while the driver keeps only
+    * the routing RESULT, ≤ MaxProbes·nprobe (pid, cid) rows. Both paths
+    * use the same tie-break (highest cos, then smallest cid);
+    * [[AnnAssignSpec]] pins them identical. Entries lead with the
+    * probe's ORDINAL in the collected batch: downstream ranking
+    * partitions on it, so duplicate probe ids route AND rank per-row on
+    * every serve path, collected and distributed alike (r12 ADVICE — the
+    * collected windows used to key on probe_id and merge duplicates
+    * where the distributed path did not).
     */
   private[ops] def routeProbes(s: SparkSession, probes: Seq[(Long, Seq[Double])],
       cents: Seq[(Int, Seq[Double])], nprobe: Int): Seq[(Int, Long, Seq[Double], Int)] =
     if (cents.size <= LiteralAssignMaxK) routeDriver(probes, cents, nprobe)
-    else routeJoin(s, probes, cents, nprobe)
+    else routeCollected(s, probes, cents, nprobe)
 
   private[ops] def routeDriver(probes: Seq[(Long, Seq[Double])],
       cents: Seq[(Int, Seq[Double])], nprobe: Int): Seq[(Int, Long, Seq[Double], Int)] =
@@ -651,27 +716,22 @@ object AnnIndex {
         .map { case (_, cid) => (ord, pid, pe, cid) }
     }
 
-  private[ops] def routeJoin(s: SparkSession, probes: Seq[(Long, Seq[Double])],
+  /** [[routeDistributed]] over a collected batch, keyed by the batch
+    * ordinal so duplicate pids route per-row as in [[routeDriver]].
+    */
+  private[ops] def routeCollected(s: SparkSession, probes: Seq[(Long, Seq[Double])],
       cents: Seq[(Int, Seq[Double])], nprobe: Int): Seq[(Int, Long, Seq[Double], Int)] = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     GraftFunctions.register(s)
-    // Route by probe ORDINAL, not id: a frame with duplicate pids must
-    // route per-row exactly as routeDriver does (a pid-keyed window
-    // would merge the duplicates' centroid rankings and return
-    // nprobe rows for the pair instead of nprobe each).
-    val w = Window.partitionBy("idx")
-      .orderBy((-GraftFunctions.cosineSim(col("pe"), col("ce"))).asc, col("cid").asc)
-    probes.zipWithIndex.map { case ((_, pe), i) => (i, pe) }.toDF("idx", "pe")
-      .crossJoin(broadcast(cents.toDF("cid", "ce")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= nprobe)
-      .select("idx", "cid")
+    val batch = probes.zipWithIndex
+      .map { case ((pid, pe), ord) => (pid, pe, ord.toLong) }
+      .toDF("pid", "pe", "__pord")
+    routeDistributed(s, batch, cents, nprobe)
+      .select(col("__pord"), col("cid"))
       .collect().toIndexedSeq
-      .sortBy(r => (r.getInt(0), r.getInt(1)))
-      .map { r =>
-        val ord = r.getInt(0)
-        val (pid, pe) = probes(ord); (ord, pid, pe, r.getInt(1))
+      .map(r => (r.getLong(0).toInt, r.getInt(1))).sorted
+      .map { case (ord, cid) =>
+        val (pid, pe) = probes(ord); (ord, pid, pe, cid)
       }
   }
 
@@ -683,20 +743,16 @@ object AnnIndex {
     * masked and unmasked segments would swap columns against each other
     * (the r10 composition bug). `prep` runs per segment BEFORE the mask
     * and the select, so cid pruning / attribute pre-filters reach each
-    * segment's parquet scan. The single owner of the read-side masking
-    * idiom behind the serve paths ([[foldPartitionedArtifact]]'s
-    * write-side fold keeps its own `anti` because its mask set also
-    * feeds touched-list resolution).
+    * segment's parquet scan. The read side of the serve paths; the mask
+    * itself is [[lsmAnti]], the one the write-side fold
+    * ([[foldPartitionedArtifact]]) applies too.
     */
   private[ops] def maskedUnion(s: SparkSession, roots: Seq[String], sub: String,
       sel: Seq[Column], tss: Seq[(DataFrame, Int)],
       prep: DataFrame => DataFrame = identity,
-      readOpts: Map[String, String] = Map.empty): DataFrame =
+      crypto: Option[IndexCrypto] = None): DataFrame =
     roots.zipWithIndex.map { case (p, i) =>
-      val seg = prep(s.read.options(readOpts).parquet(s"$p/$sub")).select(sel: _*)
-      val m = tss.filter(_._2 > i).map(_._1.select(col("vec_id")))
-        .reduceOption(_ unionAll _)
-      m.fold(seg)(mm => seg.join(mm, Seq("vec_id"), "left_anti").select(sel: _*))
+      lsmAnti(tss)(prep(readArtifact(s, s"$p/$sub", crypto)).select(sel: _*), i, sel)
     }.reduce(_ unionAll _)
 
 
@@ -762,40 +818,38 @@ object AnnIndex {
     */
   val FilteredNprobe: Int = math.min(K, Nprobe * 2)
 
-  /** The collected O(M·K·sub) ADC codebook — bounded by construction,
-    * loaded ONCE per serve call site (the batched driver reuses it
-    * across every batch instead of re-collecting per batch).
-    */
-  private[ops] def readCodebook(s: SparkSession, cbDir: String,
-      readOpts: Map[String, String] = Map.empty): Map[(Int, Int), Seq[Double]] =
-    cachedCollect("cbmap", cbDir, readOpts) {
-      s.read.options(readOpts).parquet(s"$cbDir/pq_codebook")
-        .select(col("m"), col("code"), col("ce"))
-        .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
-    }
-
   /** The full collected codebook as (m, code, ce, c2) rows in stored
-    * order — the join-shaped consumers' input ([[IvfPq]]'s per-batch
-    * encoders), served from the same immutable-artifact cache so a
-    * micro-batch's broadcast build is a driver-local LocalRelation
-    * instead of a parquet-scan job per batch (r15 verdict items 2/5).
+    * order — its one cached read: the serve paths' map ([[readCodebook]])
+    * and the per-batch encoders' frame ([[codebookFrame]]) derive from
+    * it, so a micro-batch's broadcast build is a driver-local
+    * LocalRelation, not a parquet-scan job (r15 verdict items 2/5).
     */
   private[ops] def readCodebookRows(s: SparkSession, cbDir: String,
-      readOpts: Map[String, String] = Map.empty): Seq[(Int, Int, Seq[Double], Double)] =
-    cachedCollect("cbrows", cbDir, readOpts) {
-      s.read.options(readOpts).parquet(s"$cbDir/pq_codebook")
+      crypto: Option[IndexCrypto] = None): Seq[(Int, Int, Seq[Double], Double)] =
+    cachedCollect("cbrows", cbDir, crypto) {
+      readArtifact(s, s"$cbDir/pq_codebook", crypto)
         .select(col("m"), col("code"), col("ce"), col("c2"))
         .collect().toIndexedSeq
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2), r.getDouble(3)))
     }
 
+  /** The collected O(M·K·sub) ADC codebook keyed by (m, code) — bounded
+    * by construction, loaded ONCE per serve call site (the batched
+    * driver reuses it across every batch instead of re-collecting per
+    * batch).
+    */
+  private[ops] def readCodebook(s: SparkSession, cbDir: String,
+      crypto: Option[IndexCrypto] = None): Map[(Int, Int), Seq[Double]] =
+    readCodebookRows(s, cbDir, crypto)
+      .map { case (m, code, ce, _) => (m, code) -> ce }.toMap
+
   /** [[readCodebookRows]] re-framed for a session (a LocalRelation —
     * broadcasts build driver-side with no scan job).
     */
   private[ops] def codebookFrame(s: SparkSession, cbDir: String,
-      readOpts: Map[String, String] = Map.empty): DataFrame = {
+      crypto: Option[IndexCrypto] = None): DataFrame = {
     import s.implicits._
-    readCodebookRows(s, cbDir, readOpts).toDF("m", "code", "ce", "c2")
+    readCodebookRows(s, cbDir, crypto).toDF("m", "code", "ce", "c2")
   }
 
   // ---- lifecycle slices (shared by the lifecycle queries) -------------
@@ -812,8 +866,8 @@ object AnnIndex {
   /** Masks applying to a segment's recency position, anti-joined out
     * with the canonical column order RE-SELECTED after the using-column
     * join (it reorders the key first, and segment frames union
-    * positionally — the r10 composition bug). The fold's write-side
-    * twin of the read-side [[maskedUnion]].
+    * positionally — the r10 composition bug). Shared by the read-side
+    * [[maskedUnion]] and the write-side fold.
     */
   private[ops] def lsmAnti(tss: Seq[(DataFrame, Int)])(
       df: DataFrame, segIdx: Int, sel: Seq[Column]): DataFrame =
@@ -835,27 +889,27 @@ object AnnIndex {
   private[ops] def foldPartitionedArtifact(s: SparkSession, baseDir: String,
       segDirs: Seq[String], tss: Seq[(DataFrame, Int)], sub: String,
       colNames: Seq[String], sortInPartitions: Boolean, vdir: String,
-      readOpts: Map[String, String] = Map.empty,
-      writeOpts: Map[String, String] = Map.empty): Set[Int] = {
+      crypto: Option[IndexCrypto] = None): Set[Int] = {
     val cols = colNames.map(col)
     val anti = lsmAnti(tss) _
     val segLists = segDirs.zipWithIndex
       .map { case (p, i) =>
-        anti(s.read.options(readOpts).parquet(s"$p/$sub").select(cols: _*), i + 1, cols)
+        anti(readArtifact(s, s"$p/$sub", crypto).select(cols: _*), i + 1, cols)
       }
       .reduceOption(_ unionAll _)
     val touched: Set[Int] =
       (segLists.toSeq.flatMap(_.select("cid").distinct().collect().map(_.getInt(0))) ++
         tss.flatMap(_._1.select("cid").distinct().collect().map(_.getInt(0)))).toSet
     val baseLists = anti(
-      s.read.options(readOpts).parquet(s"$baseDir/$sub")
+      readArtifact(s, s"$baseDir/$sub", crypto)
         .filter(col("cid").isin(touched.toSeq.sorted: _*))
         .select(cols: _*), 0, cols)
     val merged = segLists.fold(baseLists)(baseLists.unionAll)
       .repartition(col("cid"))
-    (if (sortInPartitions) merged.sortWithinPartitions("vec_id") else merged)
-      .write.mode("overwrite").partitionBy("cid").options(writeOpts)
-      .parquet(s"$vdir/$sub")
+    writeArtifact(
+      (if (sortInPartitions) merged.sortWithinPartitions("vec_id") else merged)
+        .write.partitionBy("cid"),
+      s"$vdir/$sub", sub, crypto)
     // Untouched lists: file-level carry-over into the merged layout (on
     // an object store a server-side copy; never a scan).
     Afs.listStatus(s"$baseDir/$sub")
@@ -938,9 +992,9 @@ object AnnIndex {
     */
   private[ops] def retrainCheckAssigned(s: SparkSession, indexDir: String,
       preAssigned: DataFrame,
-      readOpts: Map[String, String] = Map.empty): RetrainReport = {
+      crypto: Option[IndexCrypto] = None): RetrainReport = {
     GraftFunctions.register(s)
-    val cents = readCentroids(s, indexDir, readOpts)
+    val cents = readCentroids(s, indexDir, crypto)
     val norms = cents.map { case (cid, ce) =>
       cid -> math.sqrt(ce.map(x => x * x).sum)
     }.toMap

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{Q, Tables}
 import graft.functions.GraftFunctions
-import graft.io.Afs
+import graft.io.{Afs, EncryptedParquet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
 object IvfPq {
 
   import AnnIndex.{K, Nprobe, LloydSteps, TopK, Mpq, Kpq, Sub, Pool,
-    FilteredNprobe, MaxProbes}
+    FilteredNprobe, MaxProbes, IndexCrypto}
 
   /** The composed artifact's list columns, in canonical order. */
   private val ListCols: Seq[String] =
@@ -68,11 +68,11 @@ object IvfPq {
     * code encoding on vec_id and clusters by cid
     * before the partitioned write (one exchange, one file per list —
     * the q110 small-files rule). Lists sort by vec_id within each
-    * partition so row-group stats support id-ranged reads.
+    * partition so row-group stats support id-ranged reads. Under
+    * `crypto` each artifact is written by its policy.
     */
   private[ops] def writeComposed(s: SparkSession, embFrame: DataFrame,
-      dir: String,
-      writeOptsFor: String => Map[String, String] = _ => Map.empty): Unit = {
+      dir: String, crypto: Option[IndexCrypto] = None): Unit = {
     val emb = embFrame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val centroids = AnnIndex.trainIvf(emb, K, LloydSteps)
@@ -80,9 +80,8 @@ object IvfPq {
         import s.implicits._
         centroids.toDF("cid", "ce")
       }
-      centDf.coalesce(1).write.mode("overwrite")
-        .options(writeOptsFor("ivf_centroids"))
-        .parquet(s"$dir/ivf_centroids")
+      AnnIndex.writeArtifact(centDf.coalesce(1).write,
+        s"$dir/ivf_centroids", "ivf_centroids", crypto)
       val assigned = AnnIndex.assignCids(emb, centroids)
       val trainFrame = AnnIndex.residualFrame(assigned, centroids)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -90,11 +89,9 @@ object IvfPq {
         val cb = AnnIndex.trainPqCodebook(s, trainFrame, AnnIndex.pqSliced(trainFrame))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          cb.coalesce(1).write.mode("overwrite")
-            .options(writeOptsFor("pq_codebook"))
-            .parquet(s"$dir/pq_codebook")
-          writeLists(assigned, cb, centroids,
-            s"$dir/ivfpq_lists", writeOptsFor("ivfpq_lists"))
+          AnnIndex.writeArtifact(cb.coalesce(1).write,
+            s"$dir/pq_codebook", "pq_codebook", crypto)
+          writeLists(assigned, cb, centroids, s"$dir/ivfpq_lists", crypto)
         } finally cb.unpersist(): Unit
       } finally trainFrame.unpersist(): Unit
     } finally emb.unpersist(): Unit
@@ -109,13 +106,14 @@ object IvfPq {
     * them (review r13).
     */
   private def writeListRows(rows: DataFrame, out: String,
-      writeOpts: Map[String, String]): Unit =
-    rows
-      .select(ListCols.map(col): _*)
-      .repartition(col("cid"))
-      .sortWithinPartitions("vec_id")
-      .write.mode("overwrite").partitionBy("cid").options(writeOpts)
-      .parquet(out)
+      crypto: Option[IndexCrypto]): Unit =
+    AnnIndex.writeArtifact(
+      rows
+        .select(ListCols.map(col): _*)
+        .repartition(col("cid"))
+        .sortWithinPartitions("vec_id")
+        .write.partitionBy("cid"),
+      out, "ivfpq_lists", crypto)
 
   /** One composed-list write for a frame already carrying `cid` —
     * shared by full builds and delta segments: residual (IVFADC)
@@ -123,10 +121,10 @@ object IvfPq {
     */
   private def writeLists(assigned: DataFrame, cb: DataFrame,
       cents: Seq[(Int, Seq[Double])], out: String,
-      writeOpts: Map[String, String] = Map.empty): Unit = {
+      crypto: Option[IndexCrypto]): Unit = {
     val enc = AnnIndex.pqEncodeResidual(
       assigned.select(col("vec_id"), col("e"), col("cid")), cents, cb)
-    writeListRows(assigned.join(enc, Seq("vec_id")), out, writeOpts)
+    writeListRows(assigned.join(enc, Seq("vec_id")), out, crypto)
   }
 
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -152,82 +150,14 @@ object IvfPq {
   }
 
   /** Build the composed index for an explicit (vec_id, e, label) frame
-    * under `root` — the lifecycle/spec entry point.
+    * under `root` — the lifecycle/spec entry point; under `crypto`
+    * every artifact is written encrypted.
     */
-  private[graft] def buildFrom(s: SparkSession, emb: DataFrame, root: String): String = {
+  private[graft] def buildFrom(s: SparkSession, emb: DataFrame, root: String,
+      crypto: Option[IndexCrypto] = None): String = {
     GraftFunctions.register(s)
-    AnnIndex.publishVersion(root)(writeComposed(s, emb, _))
+    AnnIndex.publishVersion(root)(writeComposed(s, emb, _, crypto))
   }
-
-  // ---- encrypted artifacts (r12 verdict item 3) -------------------------
-
-  /** The corpus column policy for encrypted index artifacts, PER
-    * ARTIFACT (the PME factory requires each file's column list to name
-    * only columns that file holds, by parquet leaf path): embeddings and
-    * labels — and everything the index derives from them (routing
-    * centroids, codebook entries and their norms, codes, reconstructed
-    * norms) — at INTERNAL. A vector is exactly as sensitive as the text
-    * it embeds; an index that stored its derived forms in plaintext
-    * would leak what the encrypted corpus protects. Ids (vec_id, cid,
-    * m/code ordinals) stay plaintext, like the reference's `id` column.
-    */
-  def indexPolicies: Map[String, graft.crypto.EncryptionPolicy] = {
-    import graft.crypto.{EncryptionPolicy, PrivilegeLevel}
-    Map(
-      "ivf_centroids" -> EncryptionPolicy(columnKeys = Map(
-        PrivilegeLevel.Internal -> Seq("ce.list.element"))),
-      "pq_codebook" -> EncryptionPolicy(columnKeys = Map(
-        PrivilegeLevel.Internal -> Seq("ce.list.element", "c2"))),
-      "ivfpq_lists" -> EncryptionPolicy(columnKeys = Map(
-        PrivilegeLevel.Internal ->
-          Seq("label", "codes.list.element", "qnorm", "e.list.element"))),
-      // Tombstone segments carry each victim's stored embedding (for
-      // cid re-resolution after a retrain — see [[enqueueTombstones]]),
-      // which is exactly as sensitive as the lists' `e`; ids/cids stay
-      // plaintext like everywhere else.
-      "ivfpq_tombstones" -> EncryptionPolicy(columnKeys = Map(
-        PrivilegeLevel.Internal -> Seq("e.list.element"))))
-  }
-
-  /** [[indexPolicies]] with the key-material mode applied: internal
-    * material (the reference's default — wrapped KEKs ride inside each
-    * immutable footer) or EXTERNAL material (`_KEY_MATERIAL_FOR_*`
-    * sidecars), which is what makes [[rotateIndexKeysInPlace]]'s
-    * metadata-only rotation possible.
-    */
-  def indexPoliciesFor(externalMaterial: Boolean): Map[String, graft.crypto.EncryptionPolicy] =
-    if (!externalMaterial) indexPolicies
-    else indexPolicies.view.mapValues(_.copy(internalKeyMaterial = false)).toMap
-
-  /** Build the composed index with every artifact written through the
-    * PME crypto factory under [[indexPolicies]] — the same per-relation
-    * options channel as [[graft.io.EncryptedParquet.write]] (wrapping
-    * needs no token). Version markers/pointers stay plaintext: they
-    * carry no data, only names.
-    */
-  private[graft] def buildFromEncrypted(s: SparkSession, emb: DataFrame,
-      root: String, kmsUrl: String, externalMaterial: Boolean = false): String = {
-    GraftFunctions.register(s)
-    val policies = indexPoliciesFor(externalMaterial)
-    AnnIndex.publishVersion(root)(writeComposed(s, emb, _,
-      artifact => graft.crypto.EncryptionPolicy.writeConfMap(
-        policies(artifact), kmsUrl, accessToken = None)))
-  }
-
-  /** Serve an encrypted composed index: every artifact read (routing
-    * table, codebook, both list scans) carries the reader conf with
-    * `token`, so authorization is enforced per column AT THE SCAN — an
-    * under-privileged probe fails with a KeyAccessDeniedException-caused
-    * job failure at action time instead of serving, exactly like a
-    * direct under-privileged read of the corpus (EncryptedAnnSpec pins
-    * both the denial and result parity with a plaintext index).
-    */
-  private[graft] def probeEncrypted(s: SparkSession, roots: Seq[String],
-      probeDf: DataFrame, kmsUrl: String, token: Option[String],
-      tss: Seq[(DataFrame, Int)] = Nil,
-      attrFilter: Option[Column] = None): DataFrame =
-    probeSegments(s, roots, probeDf, tss, attrFilter,
-      readOpts = graft.crypto.EncryptionPolicy.readConfMap(kmsUrl, token))
 
   // ---- serve -----------------------------------------------------------
 
@@ -260,11 +190,14 @@ object IvfPq {
     * list, so the candidate pool is compensated at the routing stage;
     * within the routed lists ADC pre-filtering stays lossless).
     * Duplicate probe ids serve per-row (the r12 ordinal rule).
+    * Under `crypto` every artifact read carries the token, so an
+    * under-privileged probe fails at action time instead of serving
+    * (EncryptedAnnSpec pins the denial and plaintext-index parity).
     */
   private[graft] def probeSegments(s: SparkSession, roots: Seq[String],
       probeDf: DataFrame, tss: Seq[(DataFrame, Int)] = Nil,
       attrFilter: Option[Column] = None,
-      readOpts: Map[String, String] = Map.empty,
+      crypto: Option[IndexCrypto] = None,
       nprobeOverride: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     GraftFunctions.register(s)
@@ -273,8 +206,8 @@ object IvfPq {
     // callers take the default pair.
     val nprobe = nprobeOverride.getOrElse(
       if (attrFilter.isDefined) FilteredNprobe else Nprobe)
-    val cents = AnnIndex.readCentroids(s, roots.head, readOpts)
-    val cb = AnnIndex.readCodebook(s, roots.head, readOpts)
+    val cents = AnnIndex.readCentroids(s, roots.head, crypto)
+    val cb = AnnIndex.readCodebook(s, roots.head, crypto)
     val probes = AnnIndex.collectProbes(probeDf)
     val routed = AnnIndex.routeProbes(s, probes, cents, nprobe)
     val neededCids = routed.map(_._4).distinct.sorted
@@ -324,7 +257,7 @@ object IvfPq {
       Seq(col("cid"), col("vec_id"), col("codes"), col("qnorm")), tss,
       prep = df => df.filter(col("cid").isin(neededCids: _*))
         .filter(attrFilter.getOrElse(lit(true))),
-      readOpts = readOpts)
+      crypto = crypto)
     val scored = codes.join(broadcast(routedPairs), Seq("cid"))
       .filter(col("vec_id") =!= col("probe_id"))
       .join(broadcast(lutDf), Seq("__ord"))
@@ -345,7 +278,7 @@ object IvfPq {
     val vecs = AnnIndex.maskedUnion(s, roots, "ivfpq_lists",
       Seq(col("vec_id"), col("e")), tss,
       prep = df => df.filter(col("cid").isin(neededCids: _*)),
-      readOpts = readOpts)
+      crypto = crypto)
     val peDf = {
       import s.implicits._
       probes.zipWithIndex.map { case ((_, pe), ord) => (ord, pe) }.toDF("__ord", "pe")
@@ -442,12 +375,12 @@ object IvfPq {
       roots: Seq[String], probeDf: DataFrame,
       tss: Seq[(DataFrame, Int)] = Nil,
       attrFilter: Option[Column] = None,
-      readOpts: Map[String, String] = Map.empty): DataFrame = {
+      crypto: Option[IndexCrypto] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     GraftFunctions.register(s)
     val nprobe = if (attrFilter.isDefined) FilteredNprobe else Nprobe
-    val cents = AnnIndex.readCentroids(s, roots.head, readOpts)
-    val cb = AnnIndex.readCodebook(s, roots.head, readOpts)
+    val cents = AnnIndex.readCentroids(s, roots.head, crypto)
+    val cb = AnnIndex.readCodebook(s, roots.head, crypto)
     // cbFlat[(m*Kpq + code)*Sub + j] = cb(m, code)(j) — one literal
     // array (M·K·sub doubles, 32 KB) baked into the LUT expression.
     val cbFlat: Array[Double] = Array.tabulate(Mpq * Kpq * Sub) { i =>
@@ -528,7 +461,7 @@ object IvfPq {
     val codes = AnnIndex.maskedUnion(s, roots, "ivfpq_lists",
       Seq(col("cid"), col("vec_id"), col("codes"), col("qnorm")), tss,
       prep = df => df.filter(attrFilter.getOrElse(lit(true))),
-      readOpts = readOpts)
+      crypto = crypto)
     // The scored projection drops `pid` AFTER the self-exclusion filter
     // (r16): per serve ordinal there is exactly one probe row, so `pid`
     // is functionally dependent on `__pord` and re-attaches in the
@@ -547,7 +480,7 @@ object IvfPq {
       .filter(col("prank") <= Pool)
       .select(col("__pord"), col("vec_id"))
     val vecs = AnnIndex.maskedUnion(s, roots, "ivfpq_lists",
-      Seq(col("vec_id"), col("e")), tss, readOpts = readOpts)
+      Seq(col("vec_id"), col("e")), tss, crypto = crypto)
     val wT = Window.partitionBy("__pord").orderBy(col("cos").desc, col("vec_id").asc)
     pool
       .join(probes.select(col("__pord"), col("pid"), col("pe")), Seq("__pord"))
@@ -577,44 +510,21 @@ object IvfPq {
   // token-bearing reader conf, rewritten artifacts re-encrypt under the
   // per-artifact policies, and the file-level carry-over copies
   // encrypted bytes verbatim (no decrypt — keys ride in the footers).
-
-  /** Crypto context for an encrypted index: the KMS endpoint plus the
-    * caller's token. Lifecycle ops need a token with enough privilege to
-    * READ the artifacts they fold (writes wrap fresh DEKs, no token).
-    */
-  final case class IndexCrypto(kmsUrl: String, token: Option[String],
-      externalMaterial: Boolean = false) {
-    private[ops] def readOpts: Map[String, String] =
-      graft.crypto.EncryptionPolicy.readConfMap(kmsUrl, token)
-    private[ops] def writeOptsFor(artifact: String): Map[String, String] =
-      graft.crypto.EncryptionPolicy.writeConfMap(
-        indexPoliciesFor(externalMaterial)(artifact), kmsUrl, accessToken = None)
-  }
-
-  private def rOpts(crypto: Option[IndexCrypto]): Map[String, String] =
-    crypto.fold(Map.empty[String, String])(_.readOpts)
-  private def wOpts(crypto: Option[IndexCrypto], artifact: String): Map[String, String] =
-    crypto.fold(Map.empty[String, String])(_.writeOptsFor(artifact))
+  // Lifecycle ops need a token privileged to READ what they fold.
 
   /** Publish one composed delta segment for `batch` against the frozen
     * index at `baseDir`: cid assignment against the base centroids and
     * code encoding against the base codebook are pure scan-stage argmins
     * over the batch — no Lloyd, no training (q113's append discipline).
     * The batch's residuals encode against the SAME frozen centroids the
-    * base codebook was trained under.
+    * base codebook was trained under — the write every ingest
+    * micro-batch makes ([[segmentWriter]]), published as a version.
     */
   private[ops] def appendSegment(s: SparkSession, baseDir: String,
       batch: DataFrame, root: String,
       crypto: Option[IndexCrypto] = None): String = {
     GraftFunctions.register(s)
-    AnnIndex.publishVersion(root) { vdir =>
-      val cents = AnnIndex.readCentroids(s, baseDir, rOpts(crypto))
-      // LocalRelation codebook off the immutable-artifact cache (r16):
-      // the broadcast side builds driver-side, no per-append scan job.
-      val cb = AnnIndex.codebookFrame(s, baseDir, rOpts(crypto))
-      writeLists(AnnIndex.assignCids(batch, cents), cb, cents,
-        s"$vdir/ivfpq_lists", wOpts(crypto, "ivfpq_lists"))
-    }
+    AnnIndex.publishVersion(root)(segmentWriter(crypto)(s, batch, baseDir, _))
   }
 
   /** Fold base + delta segments + tombstones into one physical composed
@@ -628,14 +538,20 @@ object IvfPq {
     */
   private[ops] def compactSegments(s: SparkSession, baseDir: String,
       segDirs: Seq[String], tss: Seq[(DataFrame, Int)],
-      outRoot: String, crypto: Option[IndexCrypto] = None): String = {
+      outRoot: String, crypto: Option[IndexCrypto] = None): String =
+    foldVersion(s, baseDir, segDirs, tss, outRoot, crypto, stamp = _ => ())
+
+  /** [[compactSegments]] with `stamp` run on the version before `_SUCCESS`. */
+  private def foldVersion(s: SparkSession, baseDir: String,
+      segDirs: Seq[String], tss: Seq[(DataFrame, Int)], outRoot: String,
+      crypto: Option[IndexCrypto], stamp: String => Unit): String = {
     GraftFunctions.register(s)
     AnnIndex.publishVersion(outRoot) { vdir =>
       AnnIndex.foldPartitionedArtifact(s, baseDir, segDirs, tss,
-        "ivfpq_lists", ListCols, sortInPartitions = true, vdir,
-        rOpts(crypto), wOpts(crypto, "ivfpq_lists")): Unit
+        "ivfpq_lists", ListCols, sortInPartitions = true, vdir, crypto): Unit
       Afs.copyTree(s"$baseDir/ivf_centroids", s"$vdir/ivf_centroids")
       Afs.copyTree(s"$baseDir/pq_codebook", s"$vdir/pq_codebook")
+      stamp(vdir)
     }
   }
 
@@ -647,17 +563,24 @@ object IvfPq {
     */
   private[ops] def maintain(s: SparkSession, baseDir: String,
       segDirs: Seq[String], tss: Seq[(DataFrame, Int)],
-      outRoot: String, crypto: Option[IndexCrypto] = None): AnnIndex.MaintainResult = {
-    GraftFunctions.register(s)
-    val folded = compactSegments(s, baseDir, segDirs, tss, outRoot, crypto)
-    val lists = s.read.options(rOpts(crypto)).parquet(s"$folded/ivfpq_lists")
+      outRoot: String, crypto: Option[IndexCrypto] = None): AnnIndex.MaintainResult =
+    maintainStamped(s, baseDir, segDirs, tss, outRoot, crypto, stamp = _ => ())
+
+  /** [[maintain]] with `stamp` run on every version it publishes. */
+  private def maintainStamped(s: SparkSession, baseDir: String,
+      segDirs: Seq[String], tss: Seq[(DataFrame, Int)], outRoot: String,
+      crypto: Option[IndexCrypto], stamp: String => Unit): AnnIndex.MaintainResult = {
+    val folded = foldVersion(s, baseDir, segDirs, tss, outRoot, crypto, stamp)
+    val lists = AnnIndex.readArtifact(s, s"$folded/ivfpq_lists", crypto)
     val rep = AnnIndex.retrainCheckAssigned(s, folded,
-      lists.select(col("cid"), col("e")), rOpts(crypto))
+      lists.select(col("cid"), col("e")), crypto)
     if (!rep.recommend) AnnIndex.MaintainResult(folded, rep, retrained = false)
     else AnnIndex.MaintainResult(
-      AnnIndex.publishVersion(outRoot)(writeComposed(s,
-        lists.select(col("vec_id"), col("e"), col("label")), _,
-        artifact => wOpts(crypto, artifact))),
+      AnnIndex.publishVersion(outRoot) { v =>
+        writeComposed(s, lists.select(col("vec_id"), col("e"), col("label")), v,
+          crypto)
+        stamp(v)
+      },
       rep, retrained = true)
   }
 
@@ -690,29 +613,49 @@ object IvfPq {
     val name = (p: String) => new org.apache.hadoop.fs.Path(p).getName
     val manifest = (alreadyFolded ++ segDirs.map(name) ++
       tsPending.map("ts:" + _.name)).mkString("\n")
-    def stamp(vdir: String): Unit = Afs.writeString(s"$vdir/_SEGMENTS", manifest)
     val tss: Seq[(DataFrame, Int)] = tsPending.map(ts =>
       resolveTombstoneMask(s, baseDir, segDirs, segRoot, ts, crypto,
         needCids = true))
-    val folded = AnnIndex.publishVersion(outRoot) { v =>
-      AnnIndex.foldPartitionedArtifact(s, baseDir, segDirs, tss,
-        "ivfpq_lists", ListCols, sortInPartitions = true, v,
-        rOpts(crypto), wOpts(crypto, "ivfpq_lists")): Unit
-      Afs.copyTree(s"$baseDir/ivf_centroids", s"$v/ivf_centroids")
-      Afs.copyTree(s"$baseDir/pq_codebook", s"$v/pq_codebook")
-      stamp(v)
+    maintainStamped(s, baseDir, segDirs, tss, outRoot, crypto,
+      stamp = v => Afs.writeString(s"$v/_SEGMENTS", manifest))
+  }
+
+  /** One composed-segment writer against `artifactBase`'s trained tables
+    * (collected once per JVM by the immutable-artifact cache) — the
+    * shared `writeSegment` closure of every f4 ingest loop.
+    */
+  private def segmentWriter(crypto: Option[IndexCrypto])
+      : (SparkSession, DataFrame, String, String) => Unit =
+    (ss, df, artifactBase, seg) => {
+      val cents = AnnIndex.readCentroids(ss, artifactBase, crypto)
+      // LocalRelation codebook off the immutable-artifact cache (r16):
+      // each micro-batch's broadcast side builds driver-side instead of
+      // paying a parquet-scan job per batch.
+      val cb = AnnIndex.codebookFrame(ss, artifactBase, crypto)
+      writeLists(AnnIndex.assignCids(df, cents), cb, cents,
+        s"$seg/ivfpq_lists", crypto)
     }
-    val lists = s.read.options(rOpts(crypto)).parquet(s"$folded/ivfpq_lists")
-    val rep = AnnIndex.retrainCheckAssigned(s, folded,
-      lists.select(col("cid"), col("e")), rOpts(crypto))
-    if (!rep.recommend) AnnIndex.MaintainResult(folded, rep, retrained = false)
-    else AnnIndex.MaintainResult(
-      AnnIndex.publishVersion(outRoot) { v =>
-        writeComposed(s, lists.select(col("vec_id"), col("e"), col("label")), v,
-          artifact => wOpts(crypto, artifact))
-        stamp(v)
-      },
-      rep, retrained = true)
+
+  /** Land ONE complete delta segment under an ingest root's
+    * `segments/` dir without the streaming loop — the batch caller's
+    * spelling of what each micro-batch does: encode against the CURRENT
+    * serving base's trained tables, mark `_COMPLETE` last. `segName`
+    * must follow the `b<n>` batch-order convention (segment order is
+    * LSM recency order). This is also the race-spec's hook: it lets a
+    * test interleave out-of-loop enqueues, folds, and segment landings
+    * deterministically.
+    */
+  private[ops] def landSegment(s: SparkSession, baseDir: String,
+      root: String, segName: String, batch: DataFrame,
+      crypto: Option[IndexCrypto] = None): String = {
+    GraftFunctions.register(s)
+    val (artifactBase, _, _) =
+      AnnIndex.servingStateOf(baseDir, s"$root/segments", s"$root/maint")
+    val seg = s"$root/segments/$segName"
+    Afs.delete(s"$seg/_COMPLETE")
+    segmentWriter(crypto)(s, batch, artifactBase, seg)
+    Afs.touch(s"$seg/_COMPLETE")
+    seg
   }
 
   /** Continuous composed-segment ingest WITH the maintenance loop wired
@@ -734,56 +677,13 @@ object IvfPq {
     * fold, or `baseDir` if none fired — and the unfolded segments to
     * union with it).
     */
-  /** One composed-segment writer against a per-base cached routing
-    * table — the shared `writeSegment` closure of every f4 ingest loop.
-    */
-  private def segmentWriter(crypto: Option[IndexCrypto],
-      centsCache: java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Seq[Double])]])
-      : (SparkSession, DataFrame, String, String) => Unit =
-    (ss, df, artifactBase, seg) => {
-      val cents = centsCache.computeIfAbsent(artifactBase,
-        b => AnnIndex.readCentroids(ss, b, rOpts(crypto)))
-      // LocalRelation codebook off the immutable-artifact cache (r16):
-      // each micro-batch's broadcast side builds driver-side instead of
-      // paying a parquet-scan job per batch.
-      val cb = AnnIndex.codebookFrame(ss, artifactBase, rOpts(crypto))
-      writeLists(AnnIndex.assignCids(df, cents), cb, cents,
-        s"$seg/ivfpq_lists", wOpts(crypto, "ivfpq_lists"))
-    }
-
-  /** Land ONE complete delta segment under an ingest root's
-    * `segments/` dir without the streaming loop — the batch caller's
-    * spelling of what each micro-batch does: encode against the CURRENT
-    * serving base's trained tables, mark `_COMPLETE` last. `segName`
-    * must follow the `b<n>` batch-order convention (segment order is
-    * LSM recency order). This is also the race-spec's hook: it lets a
-    * test interleave out-of-loop enqueues, folds, and segment landings
-    * deterministically.
-    */
-  private[ops] def landSegment(s: SparkSession, baseDir: String,
-      root: String, segName: String, batch: DataFrame,
-      crypto: Option[IndexCrypto] = None): String = {
-    GraftFunctions.register(s)
-    val (artifactBase, _, _) =
-      AnnIndex.servingStateOf(baseDir, s"$root/segments", s"$root/maint")
-    val seg = s"$root/segments/$segName"
-    Afs.delete(s"$seg/_COMPLETE")
-    segmentWriter(crypto,
-      new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Seq[Double])]]())(
-      s, batch, artifactBase, seg)
-    Afs.touch(s"$seg/_COMPLETE")
-    seg
-  }
-
   private[ops] def streamIngestWithMaintain(s: SparkSession, baseDir: String,
       src: DataFrame, root: String, nFiles: Int, every: Int,
       crypto: Option[IndexCrypto] = None,
       afterBatch: (SparkSession, Long) => Unit = (_, _) => ()): (String, Seq[String]) = {
     GraftFunctions.register(s)
-    val centsCache =
-      new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Seq[Double])]]()
     AnnIndex.streamIngestCore(s, baseDir, src, root, nFiles, every,
-      writeSegment = segmentWriter(crypto, centsCache),
+      writeSegment = segmentWriter(crypto),
       // Every fold consumes ALL pending tombstones along with the
       // unfolded segments (r13 verdict item 4): a delete enqueued
       // mid-stream is masked by the serve path until the next
@@ -859,12 +759,12 @@ object IvfPq {
         s"tombstone claim loop lost $attempts consecutive claims under $tsRoot")
     }
     val dir = s"$tsRoot/t$n"
-    val cents = AnnIndex.readCentroids(s, curBase, rOpts(crypto))
-    AnnIndex.assignCids(victims.select(col("vec_id"), col("e")), cents)
-      .select(col("vec_id"), col("cid"), col("e"))
-      .coalesce(1).write.mode("overwrite")
-      .options(wOpts(crypto, "ivfpq_tombstones"))
-      .parquet(s"$dir/tombstones")
+    val cents = AnnIndex.readCentroids(s, curBase, crypto)
+    AnnIndex.writeArtifact(
+      AnnIndex.assignCids(victims.select(col("vec_id"), col("e")), cents)
+        .select(col("vec_id"), col("cid"), col("e"))
+        .coalesce(1).write,
+      s"$dir/tombstones", "ivfpq_tombstones", crypto)
     val name = (p: String) => new org.apache.hadoop.fs.Path(p).getName
     Afs.writeString(s"$dir/_SEGS", unfolded.map(name).mkString("\n"))
     Afs.writeString(s"$dir/_BASE", curBase)
@@ -895,7 +795,7 @@ object IvfPq {
       .map { p =>
         PendingTombstone(
           new org.apache.hadoop.fs.Path(p).getName,
-          s.read.options(rOpts(crypto)).parquet(s"$p/tombstones"),
+          AnnIndex.readArtifact(s, s"$p/tombstones", crypto),
           Afs.readString(s"$p/_SEGS").split("\n").filter(_.nonEmpty).toSet,
           Afs.readString(s"$p/_BASE").trim)
       }
@@ -982,7 +882,7 @@ object IvfPq {
         val resolved =
           if (!needCids) ts.frame
           else AnnIndex.assignCids(ts.frame.select(col("vec_id"), col("e")),
-            AnnIndex.readCentroids(s, baseDir, rOpts(crypto)))
+            AnnIndex.readCentroids(s, baseDir, crypto))
         val absorbedUncovered =
           (manifestSegs(baseDir) -- manifestSegs(ts.base) -- ts.segNames)
             .toSeq.sorted
@@ -998,7 +898,7 @@ object IvfPq {
               s"tombstone ${ts.name} predates a fold that absorbed segment " +
                 s"$n, already swept — RetireGraceMs must exceed the " +
                 "enqueue-to-fold window")
-            s.read.options(rOpts(crypto)).parquet(p).select(col("vec_id"))
+            AnnIndex.readArtifact(s, p, crypto).select(col("vec_id"))
           }.reduce(_ unionAll _)
           val merged = resolved.join(segIds, Seq("vec_id"), "left_semi")
             .select("vec_id").limit(5).collect().map(_.get(0))
@@ -1086,7 +986,7 @@ object IvfPq {
   def probeServing(s: SparkSession, baseDir: String, root: String,
       probeDf: DataFrame, crypto: Option[IndexCrypto] = None): DataFrame = {
     val (b, unfolded, tss) = servingView(s, baseDir, root, crypto)
-    probeSegments(s, b +: unfolded, probeDf, tss, readOpts = rOpts(crypto))
+    probeSegments(s, b +: unfolded, probeDf, tss, crypto = crypto)
   }
 
   // ---- key rotation ----------------------------------------------------
@@ -1102,76 +1002,47 @@ object IvfPq {
     * and in-flight readers of the old version drain under the
     * retirement grace exactly as after a compaction.
     *
-    * `token` must unwrap every artifact column level (INTERNAL here —
-    * the same privilege any index read needs); it also drives the
-    * post-write verification read, which runs BEFORE the version flips
-    * so a truncated or key-broken rewrite can never become CURRENT
-    * (the claimed-but-incomplete version is ignored by readers and
-    * swept by the claims GC).
-    *
-    * With `plaintextSource = true` the source artifacts are read
-    * without the crypto factory — the same entry point upgrades a
-    * plaintext index to encrypted-at-rest in place.
+    * `crypto` names the KMS the fresh keys wrap under, and its token
+    * must unwrap every artifact column level (INTERNAL here — the same
+    * privilege any index read needs); it drives the post-write
+    * verification read, which runs BEFORE the version flips so a
+    * truncated or key-broken rewrite can never become CURRENT (the
+    * claimed-but-incomplete version is ignored by readers and swept by
+    * the claims GC). `source` is the current version's own context:
+    * the artifacts are read through it, and `None` reads them without
+    * the crypto factory — the same entry point upgrades a plaintext
+    * index to encrypted-at-rest in place.
     *
     * The KEK write cache is cleared first, so the rotated files
     * reference only KEK ids minted by this call (the
     * [[graft.io.EncryptedParquet.rotateByRewrite]] discipline; the
     * EncryptedAnnSpec pins fresh KMS wrap traffic across a rotation).
     */
-  /** Order-independent content fingerprint of an artifact: row count
-    * plus the sum of per-row xxhash64 over EVERY column (sorted by
-    * name). count() alone is served from footer/row-group metadata —
-    * per BASELINE.md's own KMS-call measurement, a read touching no
-    * encrypted column unwraps only the footer KEK — so a count-based
-    * verify never exercises freshly-minted column KEKs/DEKs and a
-    * column-key-broken rewrite would pass it (ADVICE r13). The hash
-    * forces every column, encrypted ones included, through the decrypt
-    * path; summing makes it insensitive to row order, which the
-    * rewrite's repartition does not preserve. The sum runs in
-    * decimal(38,0) — a long sum of 2⁶³-range hashes overflows (and
-    * under ANSI mode, Spark 4's default, that ABORTS the verify rather
-    * than wrapping).
-    */
-  private[graft] def contentFingerprint(s: SparkSession, path: String,
-      readOpts: Map[String, String]): (Long, String) = {
-    val df = s.read.options(readOpts).parquet(path)
-    val r = df.agg(
-      count(lit(1)).as("n"),
-      sum(xxhash64(df.columns.sorted.map(col): _*)
-        .cast("decimal(38,0)")).as("h")).head()
-    (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toPlainString)
-  }
-
-  def rotateIndexKeys(s: SparkSession, root: String, kmsUrl: String,
-      token: Option[String], plaintextSource: Boolean = false): String = {
+  def rotateIndexKeys(s: SparkSession, root: String, crypto: IndexCrypto,
+      source: Option[IndexCrypto]): String = {
     import org.apache.parquet.crypto.keytools.KeyToolkit
     GraftFunctions.register(s)
     val cur = AnnIndex.resolveVersion(root).getOrElse(throw
       new IllegalArgumentException(s"no complete index version under $root to rotate"))
-    val srcOpts =
-      if (plaintextSource) Map.empty[String, String]
-      else graft.crypto.EncryptionPolicy.readConfMap(kmsUrl, token)
     // The rewrite PRESERVES the source's key-material mode (review r13:
     // writing internal material over an external-material index would
     // silently strip its sidecars and break every future
     // [[rotateIndexKeysInPlace]]): external iff the current version
-    // carries sidecars. A plaintext upgrade defaults to the reference's
-    // internal-material default.
-    val externalOut = !plaintextSource &&
+    // carries sidecars, whatever `crypto` says. A plaintext upgrade
+    // defaults to the reference's internal-material default.
+    val externalOut = source.isDefined &&
       Afs.listStatus(s"$cur/ivf_centroids")
         .exists(_.getPath.getName.startsWith("_KEY_MATERIAL_FOR_"))
-    val policies = indexPoliciesFor(externalOut)
+    val out = Some(crypto.copy(externalMaterial = externalOut))
     KeyToolkit.removeCacheEntriesForAllTokens()
     AnnIndex.publishVersion(root) { vdir =>
-      def wc(artifact: String): Map[String, String] =
-        graft.crypto.EncryptionPolicy.writeConfMap(
-          policies(artifact), kmsUrl, accessToken = None)
       Seq("ivf_centroids", "pq_codebook").foreach { a =>
-        s.read.options(srcOpts).parquet(s"$cur/$a").coalesce(1)
-          .write.mode("overwrite").options(wc(a)).parquet(s"$vdir/$a")
+        AnnIndex.writeArtifact(
+          AnnIndex.readArtifact(s, s"$cur/$a", source).coalesce(1).write,
+          s"$vdir/$a", a, out)
       }
-      writeListRows(s.read.options(srcOpts).parquet(s"$cur/ivfpq_lists"),
-        s"$vdir/ivfpq_lists", wc("ivfpq_lists"))
+      writeListRows(AnnIndex.readArtifact(s, s"$cur/ivfpq_lists", source),
+        s"$vdir/ivfpq_lists", out)
       // A stream-ingested index's fold versions carry a _SEGMENTS
       // manifest naming the segments they contain; servingStateOf reads
       // it FAIL-LOUD. A rotation that republished such a version without
@@ -1188,16 +1059,18 @@ object IvfPq {
       // Verify ALL THREE artifacts before the flip, through FRESH
       // unwraps (the read-side KEK cache would otherwise satisfy this
       // from pre-rotation entries): every rewrite must decrypt and hold
-      // every row AND every column — the content fingerprint forces the
+      // every row AND every column — the content fingerprint
+      // ([[graft.io.EncryptedParquet.fingerprint]]) forces the
       // freshly-minted column KEKs/DEKs through real unwraps, where a
       // bare count() is metadata-served and would flip CURRENT over a
       // column-key-broken rewrite (ADVICE r13), downing the index at
       // the first probe.
       KeyToolkit.removeCacheEntriesForAllTokens()
-      val vOpts = graft.crypto.EncryptionPolicy.readConfMap(kmsUrl, token)
       Seq("ivf_centroids", "pq_codebook", "ivfpq_lists").foreach { a =>
-        val (nNew, hNew) = contentFingerprint(s, s"$vdir/$a", vOpts)
-        val (nOld, hOld) = contentFingerprint(s, s"$cur/$a", srcOpts)
+        val (nNew, hNew) = EncryptedParquet.fingerprint(
+          AnnIndex.readArtifact(s, s"$vdir/$a", Some(crypto)))
+        val (nOld, hOld) = EncryptedParquet.fingerprint(
+          AnnIndex.readArtifact(s, s"$cur/$a", source))
         require(nNew == nOld && hNew == hOld,
           s"rotated $a at $vdir holds ($nNew rows, hash $hNew), source " +
             s"$cur holds ($nOld, $hOld) — refusing to flip CURRENT " +
@@ -1207,7 +1080,7 @@ object IvfPq {
   }
 
   /** METADATA-ONLY in-place key rotation for an index built with
-    * EXTERNAL key material ([[buildFromEncrypted]] with
+    * EXTERNAL key material ([[buildFrom]] under a context with
     * `externalMaterial = true`): parquet-mr's
     * `KeyToolkit.rotateMasterKeys` unwraps each sidecar's KEKs with the
     * KMS's current master keys, mints fresh KEKs, re-wraps and rewrites
@@ -1223,8 +1096,9 @@ object IvfPq {
     * fresh KEK ids that simply miss warm caches and unwrap on demand,
     * while old master keys remain valid at the KMS for any reader
     * mid-scan (the KeyRotationSpec concurrent-reader property, which
-    * holds per-file here too). `token` must unwrap every KEK level the
-    * artifacts carry (INTERNAL). Returns the (unchanged) CURRENT dir.
+    * holds per-file here too). The (required) context's token must unwrap
+    * every KEK level the artifacts carry (INTERNAL). Returns the
+    * (unchanged) CURRENT dir.
     *
     * The lists artifact is cid-partitioned, and `rotateMasterKeys`
     * works on one flat directory of sidecars — so each `cid=` partition
@@ -1247,14 +1121,14 @@ object IvfPq {
     * O(k / cores) — pinned at k ≥ 1024 by EncryptedAnnSpec's
     * wide-partition case.
     */
-  def rotateIndexKeysInPlace(s: SparkSession, root: String, kmsUrl: String,
-      token: Option[String]): String = {
+  def rotateIndexKeysInPlace(s: SparkSession, root: String,
+      crypto: IndexCrypto): String = {
     import org.apache.parquet.crypto.keytools.KeyToolkit
     val cur = AnnIndex.resolveVersion(root).getOrElse(throw
       new IllegalArgumentException(s"no complete index version under $root to rotate"))
     val conf = new org.apache.hadoop.conf.Configuration(
       s.sessionState.newHadoopConf())
-    graft.crypto.EncryptionPolicy.applyReadConf(conf, kmsUrl, token)
+    graft.crypto.EncryptionPolicy.applyReadConf(conf, crypto.kmsUrl, crypto.token)
     conf.set(KeyToolkit.KEY_MATERIAL_INTERNAL_PROPERTY_NAME, "false")
     KeyToolkit.removeCacheEntriesForAllTokens()
     val listDirs = Afs.listStatus(s"$cur/ivfpq_lists")
@@ -1379,8 +1253,6 @@ object IvfPq {
       root: String): (String, Seq[String]) = {
     GraftFunctions.register(s)
     val baseDir = ensureAppendBase(s, d)
-    val centsCache =
-      new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Seq[Double])]]()
     // The staged n-file source is a dataset-keyed one-time fixture
     // (r16): q128 prices the checkpointed INGEST of the 10% slice, not
     // re-writing the identical 3 source files into every fresh run
@@ -1393,7 +1265,7 @@ object IvfPq {
     val segs = AnnIndex.streamIngestCore(s, baseDir,
       AnnIndex.batchSlice(AnnIndex.corpus(s, d)), root,
       AnnIndex.StreamFiles, 0,
-      writeSegment = segmentWriter(None, centsCache),
+      writeSegment = segmentWriter(None),
       maintainStep = (_, _, _, _, _) => (),
       srcDirOverride = Some(srcFixture))
     (baseDir, segs)
@@ -1406,12 +1278,13 @@ object IvfPq {
     rows.toDF("artifact", "n_rows").orderBy("artifact")
   }
 
-  /** Absent artifact (empty segment) counts 0; any other failure
-    * propagates rather than surfacing as a count mismatch.
-    */
-  private def countOr0(s: SparkSession, p: String): Long =
-    try s.read.parquet(p).count()
-    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+  /** One version's three-artifact census, read under `crypto`. */
+  private def artifactCensus(s: SparkSession, dir: String,
+      crypto: Option[IndexCrypto] = None): DataFrame = {
+    val arts = Seq("ivf_centroids", "ivfpq_lists", "pq_codebook")
+    census(s, arts.zip(AnnIndex.parCounts(arts)(a =>
+      AnnIndex.readArtifact(s, s"$dir/$a", crypto).count())))
+  }
 
   /** Total rows across several same-schema artifact paths in ONE count
     * job (r16): the census lines used to fire one count action per
@@ -1419,7 +1292,8 @@ object IvfPq {
     * one pass. Each path is its own relation UNIONed into the one plan
     * (a single multi-path read trips partition discovery across
     * different version roots — CONFLICTING_DIRECTORY_STRUCTURES);
-    * unreadable/absent paths count 0, exactly countOr0's semantics.
+    * absent artifacts (an empty segment) count 0; any other failure
+    * propagates rather than surfacing as a count mismatch.
     */
   private def countAllOr0(s: SparkSession, paths: Seq[String]): Long = {
     val dfs = paths.filter(Afs.exists).flatMap { p =>
@@ -1427,6 +1301,21 @@ object IvfPq {
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     }
     if (dfs.isEmpty) 0L else dfs.reduce(_.unionAll(_)).count()
+  }
+
+  /** The census of a base plus delta segments: the lists across base and
+    * every segment in ONE multi-path count job, the three census lines
+    * as concurrent jobs (r16) — the census is scheduling latency, not
+    * data (see [[countAllOr0]], [[AnnIndex.parCounts]]).
+    */
+  private def segmentCensus(s: SparkSession, baseDir: String,
+      segDirs: Seq[String]): DataFrame = {
+    val paths = Seq(
+      ("ivf_centroids", Seq(s"$baseDir/ivf_centroids")),
+      ("ivfpq_lists", (baseDir +: segDirs).map(p => s"$p/ivfpq_lists")),
+      ("pq_codebook", Seq(s"$baseDir/pq_codebook")))
+    census(s, paths.map(_._1).zip(
+      AnnIndex.parCounts(paths)(p => countAllOr0(s, p._2))))
   }
 
   /** The composed conservation law, SQL-expressible: every corpus
@@ -1443,10 +1332,15 @@ object IvfPq {
   private def encryptedRoot(d: String): String =
     AnnIndex.shmDir(Tables.datasetTag(d) + "/ivfpq_enc")
 
+  /** That index's context: the shared KMS and an INTERNAL token. */
+  private def registryCrypto: Option[IndexCrypto] =
+    Some(IndexCrypto(graft.kms.TestKmsServer.shared.url, Some("INTERNAL")))
+
   /** Q110 — the composed index encrypted at rest, built FORCED: q133's
     * build with every artifact written through the PME crypto factory
-    * under [[indexPolicies]] ([[buildFromEncrypted]] — fresh DEKs, KEKs
-    * wrapped by the KMS, a fresh version published on every call).
+    * under [[AnnIndex.IndexCrypto.policies]] ([[buildFrom]] under the
+    * registry's context — fresh DEKs, KEKs wrapped by the KMS, a fresh
+    * version published on every call).
     * Beside q133 the line prices what encryption adds to an ANN build.
     * The census reads back with an INTERNAL token, the privilege every
     * index column needs; conservation-oracled like q133.
@@ -1454,19 +1348,17 @@ object IvfPq {
   val q110: Q = Q(
     "q110_ann_index_build",
     (s, d) => {
-      val kmsUrl = graft.kms.TestKmsServer.shared.url
-      val dir = buildFromEncrypted(s, AnnIndex.corpus(s, d), encryptedRoot(d), kmsUrl)
-      val readOpts = graft.crypto.EncryptionPolicy.readConfMap(kmsUrl, Some("INTERNAL"))
-      val arts = Seq("ivf_centroids", "ivfpq_lists", "pq_codebook")
-      census(s, arts.zip(AnnIndex.parCounts(arts)(a =>
-        s.read.options(readOpts).parquet(s"$dir/$a").count())))
+      val crypto = registryCrypto
+      artifactCensus(s,
+        buildFrom(s, AnnIndex.corpus(s, d), encryptedRoot(d), crypto), crypto)
     },
     Some(ConservationSql))
 
   /** Q111 — the composed serve over q110's encrypted index with an
-    * INTERNAL token ([[probeEncrypted]]): q134's route→ADC→refine plan
-    * with every artifact read decrypting at the scan, so beside q134
-    * the line prices what encryption adds to an ANN serve. CURRENT
+    * INTERNAL token ([[probeSegments]] under the registry's context):
+    * q134's route→ADC→refine plan with every artifact read decrypting
+    * at the scan, so beside q134 the line prices what encryption adds
+    * to an ANN serve. CURRENT
     * resolves from disk on every call — q110 republishes, and retired
     * versions must never be served — and the index is built only when
     * none is there. Approximate → rows-only oracle check; IvfPqSpec
@@ -1474,12 +1366,11 @@ object IvfPq {
     */
   val q111: Q = Q("q111_ann_ivf_probe",
     (s, d) => {
-      val kmsUrl = graft.kms.TestKmsServer.shared.url
+      val crypto = registryCrypto
       val root = encryptedRoot(d)
       val dir = AnnIndex.resolveVersion(root).getOrElse(
-        buildFromEncrypted(s, AnnIndex.corpus(s, d), root, kmsUrl))
-      probeEncrypted(s, Seq(dir), AnnIndex.defaultProbes(s, d), kmsUrl,
-        Some("INTERNAL"))
+        buildFrom(s, AnnIndex.corpus(s, d), root, crypto))
+      probeSegments(s, Seq(dir), AnnIndex.defaultProbes(s, d), crypto = crypto)
     },
     None)
 
@@ -1505,15 +1396,7 @@ object IvfPq {
     "q113_ann_index_append",
     (s, d) => {
       val (baseDir, deltaDir) = appendDelta(s, d)
-      // One multi-path count for the lists and concurrent jobs for the
-      // three census lines (r16): the census is scheduling-latency, not
-      // data — see countAllOr0/AnnIndex.parCounts.
-      val paths = Seq(
-        ("ivf_centroids", Seq(s"$baseDir/ivf_centroids")),
-        ("ivfpq_lists", Seq(s"$baseDir/ivfpq_lists", s"$deltaDir/ivfpq_lists")),
-        ("pq_codebook", Seq(s"$baseDir/pq_codebook")))
-      census(s, paths.map(_._1).zip(
-        AnnIndex.parCounts(paths)(p => countAllOr0(s, p._2))))
+      segmentCensus(s, baseDir, Seq(deltaDir))
     },
     Some(ConservationSql))
 
@@ -1523,12 +1406,7 @@ object IvfPq {
     */
   val q127: Q = Q(
     "q127_ann_index_compact",
-    (s, d) => {
-      val dir = compact(s, d)
-      val arts = Seq("ivf_centroids", "ivfpq_lists", "pq_codebook")
-      census(s, arts.zip(
-        AnnIndex.parCounts(arts)(a => s.read.parquet(s"$dir/$a").count())))
-    },
+    (s, d) => artifactCensus(s, compact(s, d)),
     Some(ConservationSql))
 
   /** Q128 — continuous composed ingest: the 10% slice streamed through
@@ -1550,18 +1428,10 @@ object IvfPq {
           s"stream-run claim loop lost $attempts consecutive claims under $base")
       }
       val root = s"$base/run-$n"
-      val rows = try {
+      try {
         val (baseDir, segs) = streamIngestInto(s, d, root)
-        // Lists across base + every streamed segment in ONE count job,
-        // the three census lines as concurrent jobs (r16).
-        val paths = Seq(
-          ("ivf_centroids", Seq(s"$baseDir/ivf_centroids")),
-          ("ivfpq_lists", s"$baseDir/ivfpq_lists" +: segs.map(g => s"$g/ivfpq_lists")),
-          ("pq_codebook", Seq(s"$baseDir/pq_codebook")))
-        paths.map(_._1).zip(
-          AnnIndex.parCounts(paths)(p => countAllOr0(s, p._2)))
+        segmentCensus(s, baseDir, segs)
       } finally { Afs.delete(root); Afs.delete(s"$root._CLAIM") }
-      census(s, rows)
     },
     Some(ConservationSql))
 
@@ -1574,12 +1444,7 @@ object IvfPq {
     */
   val q129: Q = Q(
     "q129_ann_index_delete",
-    (s, d) => {
-      val dir = compactWithDeletes(s, d)
-      val arts = Seq("ivf_centroids", "ivfpq_lists", "pq_codebook")
-      census(s, arts.zip(
-        AnnIndex.parCounts(arts)(a => s.read.parquet(s"$dir/$a").count())))
-    },
+    (s, d) => artifactCensus(s, compactWithDeletes(s, d)),
     Some(s"""SELECT 'ivf_centroids' AS artifact, CAST($K AS BIGINT) AS n_rows
             |UNION ALL SELECT 'ivfpq_lists', count(*)
             |  FROM embeddings WHERE vec_id % 20 NOT IN (3, 10)
@@ -1639,12 +1504,7 @@ object IvfPq {
     */
   val q133: Q = Q(
     "q133_ann_ivfpq_build",
-    (s, d) => {
-      val dir = build(s, d, force = true)
-      val arts = Seq("ivf_centroids", "ivfpq_lists", "pq_codebook")
-      census(s, arts.zip(
-        AnnIndex.parCounts(arts)(a => s.read.parquet(s"$dir/$a").count())))
-    },
+    (s, d) => artifactCensus(s, build(s, d, force = true)),
     Some(ConservationSql))
 
   /** Q134 — composed serve: route nprobe lists, ADC within them only,

@@ -92,25 +92,26 @@ object CryptoMeasure {
 
   /** GCM on the composed ANN serve path (r12 verdict item 3): the same
     * corpus indexed twice — plaintext and encrypted under
-    * [[graft.ops.IvfPq.indexPolicies]] — probed through the identical
-    * composed serve (route → ADC → refine). First probe warms (KEK
-    * unwraps, codegen, page cache); the second is the steady-state cell.
-    * Expected ≈ the 1.2x encrypted-read precedent: decryption rides the
-    * pruned scans, everything else is identical.
+    * [[graft.ops.AnnIndex.IndexCrypto.policies]] — probed through the
+    * identical composed serve (route → ADC → refine). First probe warms
+    * (KEK unwraps, codegen, page cache); the second is the steady-state
+    * cell. Expected ≈ the 1.2x encrypted-read precedent: decryption
+    * rides the pruned scans, everything else is identical.
     */
   private def annServeSeconds(spark: SparkSession, sfDir: String,
       kmsUrl: String): (Double, Double) = {
     import graft.ops.{AnnIndex, IvfPq}
     val root = Scratch.tempDir("graft-ann-crypto-")
     try {
+      val crypto = Some(AnnIndex.IndexCrypto(kmsUrl, Some("INTERNAL")))
       val emb = AnnIndex.corpus(spark, sfDir)
       val plainDir = IvfPq.buildFrom(spark, emb, s"$root/plain")
-      val encDir = IvfPq.buildFromEncrypted(spark, emb, s"$root/enc", kmsUrl)
+      val encDir = IvfPq.buildFrom(spark, emb, s"$root/enc", crypto)
       val probes = AnnIndex.defaultProbes(spark, sfDir)
       val plainSec = warmSeconds(IvfPq.probeSegments(spark, Seq(plainDir), probes)
         .write.format("noop").mode("overwrite").save())
-      val gcmSec = warmSeconds(IvfPq.probeEncrypted(spark, Seq(encDir), probes,
-        kmsUrl, Some("INTERNAL"))
+      val gcmSec = warmSeconds(IvfPq.probeSegments(spark, Seq(encDir), probes,
+        crypto = crypto)
         .write.format("noop").mode("overwrite").save())
       (plainSec, gcmSec)
     } finally Scratch.delete(root)
@@ -139,20 +140,20 @@ object CryptoMeasure {
     import graft.ops.{AnnIndex, IvfPq}
     val root = Scratch.tempDir("graft-ann-rotate-")
     try {
+      val crypto = AnnIndex.IndexCrypto(kmsUrl, Some("INTERNAL"),
+        externalMaterial = true)
       val emb = AnnIndex.corpus(spark, sfDir)
-      IvfPq.buildFromEncrypted(spark, emb, s"$root/idx", kmsUrl,
-        externalMaterial = true): Unit
+      IvfPq.buildFrom(spark, emb, s"$root/idx", Some(crypto)): Unit
       var srcDir = ""
       val inPlace = seconds { srcDir = IvfPq.rotateIndexKeysInPlace(
-        spark, s"$root/idx", kmsUrl, Some("INTERNAL")) }
+        spark, s"$root/idx", crypto) }
       var newDir = ""
       val rewrite = seconds { newDir = IvfPq.rotateIndexKeys(
-        spark, s"$root/idx", kmsUrl, Some("INTERNAL")) }
-      val readOpts = EncryptionPolicy.readConfMap(kmsUrl, Some("INTERNAL"))
+        spark, s"$root/idx", crypto, Some(crypto)) }
       val verify = seconds(
         Seq("ivf_centroids", "pq_codebook", "ivfpq_lists").foreach { a =>
-          IvfPq.contentFingerprint(spark, s"$newDir/$a", readOpts): Unit
-          IvfPq.contentFingerprint(spark, s"$srcDir/$a", readOpts): Unit
+          Seq(newDir, srcDir).foreach(dir => EncryptedParquet.fingerprint(
+            AnnIndex.readArtifact(spark, s"$dir/$a", Some(crypto))): Unit)
         })
       (inPlace, rewrite, verify)
     } finally Scratch.delete(root)

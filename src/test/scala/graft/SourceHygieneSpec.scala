@@ -9,9 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source hygiene: ONE local-session factory (`Graft.localSession`;
   * `Verify` keeps its own builder because the oracle hashes were recorded
-  * under its confs), ONE Spark listener (`graft.obs.QueryMetrics`) and
-  * ONE scratch-placement rule (`graft.io.Scratch`). A second builder,
-  * collector or private scratch root regrowing in a module fails here.
+  * under its confs), ONE Spark listener (`graft.obs.QueryMetrics`), ONE
+  * scratch-placement rule (`graft.io.Scratch`) and ONE crypto carrier in
+  * the ANN index (`AnnIndex.IndexCrypto`). A second builder, collector,
+  * private scratch root or raw crypto option map regrowing in a module
+  * fails here.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -29,8 +31,10 @@ class SourceHygieneSpec extends AnyFunSuite {
       }
   }
 
-  private def assertOnlyIn(pattern: Regex, allowed: Set[String]): Unit = {
-    val found = codeLines.filter(h => pattern.findFirstIn(h._3).isDefined)
+  private def assertOnlyIn(pattern: Regex, allowed: Set[String],
+      under: String = ""): Unit = {
+    val found = codeLines.filter(h =>
+      h._1.startsWith(under) && pattern.findFirstIn(h._3).isDefined)
     // Not vacuous: the pattern still matches its allowed homes.
     assert(allowed.subsetOf(found.map(_._1).toSet), s"$pattern no longer matches $allowed")
     val strays = found.filterNot(h => allowed(h._1))
@@ -52,5 +56,10 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("the /dev/shm literal and Files.createTempDirectory appear only in graft.io.Scratch") {
     assertOnlyIn("\"/dev/shm".r, Set("graft/io/Scratch.scala"))
     assertOnlyIn("""\bcreateTempDirectory\b""".r, Set("graft/io/Scratch.scala"))
+  }
+
+  test("under graft/ops the crypto conf maps are built only where IndexCrypto is defined") {
+    assertOnlyIn("""\b(readConfMap|writeConfMap)\b""".r,
+      Set("graft/ops/AnnIndex.scala"), under = "graft/ops/")
   }
 }

@@ -240,9 +240,11 @@ class KeyRotationSpec extends SparkTestBase {
     * holds the bad rotated copy and `.rotate-old` holds the only good
     * one. A blind retry used to sweep `.rotate-old` at entry and
     * silently make the loss permanent; the entry guard now disambiguates
-    * by row count — a benign crash-after-verify leftover (equal copies)
-    * is swept and the rotation proceeds, while disagreeing copies refuse
-    * the retry with both generations intact.
+    * by content fingerprint — a benign crash-after-verify leftover
+    * (equal copies) is swept and the rotation proceeds, while
+    * disagreeing copies refuse the retry with both generations intact,
+    * including copies with EQUAL row counts (a count is served from
+    * footers and cannot tell them apart).
     */
   test("a rotate retry never destroys the only good copy after a failed verification") {
     val kms = new TestKmsServer().start()
@@ -270,6 +272,25 @@ class KeyRotationSpec extends SparkTestBase {
         .collect().map(_.toSeq).toSet == want,
         "the only good copy must survive the refused retry")
       assert(new java.io.File(dir).exists(), "the live copy must also survive")
+
+      // Same row count, one value changed: a row-count guard would take
+      // this for the benign twin and sweep the only good copy.
+      val altered = df.withColumn("social_security_number",
+        org.apache.spark.sql.functions.when(df("id") === 2L, "999-99-9999")
+          .otherwise(df("social_security_number")))
+      val alteredRows = altered.collect().map(_.toSeq).toSet
+      EncryptedParquet.write(altered, dir, policy, kms.url, mode = "overwrite")
+      val e2 = intercept[IllegalArgumentException] {
+        EncryptedParquet.rotateByRewrite(spark, dir, policy, kms.url, Some("RESTRICTED"))
+      }
+      assert(e2.getMessage.contains("failed verification"),
+        s"equal-count retry must refuse, got: ${e2.getMessage}")
+      assert(EncryptedParquet.read(spark, old, kms.url, Some("RESTRICTED"))
+        .collect().map(_.toSeq).toSet == want,
+        "the only good copy must survive an equal-count refused retry")
+      assert(EncryptedParquet.read(spark, dir, kms.url, Some("RESTRICTED"))
+        .collect().map(_.toSeq).toSet == alteredRows,
+        "the refused retry must leave the live copy as it was")
 
       // The benign twin state — a crash after verification passed but
       // before cleanup leaves two EQUAL copies — must not block: the

@@ -59,7 +59,7 @@ class AnnAssignSpec extends SparkTestBase {
     // r11 ADVICE: the join path used to key its argmin on vec_id and
     // silently collapse duplicate ids above the k threshold, while the
     // literal path (a pure projection) preserved them. Both paths must
-    // behave identically on ANY input — per-row, like routeJoin.
+    // behave identically on ANY input — per-row, like routeCollected.
     import spark.implicits._
     val dup = (0 until 12)
       .map(i => (7L, (0 until 8).map(j => math.cos(i * 13 + j * 3)), i % 5))
@@ -80,7 +80,7 @@ class AnnAssignSpec extends SparkTestBase {
     for (k <- Seq(16, 1024); np <- Seq(1, 6)) {
       val cs = cents(k, 8)
       val drv = AnnIndex.routeDriver(probes, cs, np)
-      val jn = AnnIndex.routeJoin(spark, probes, cs, np)
+      val jn = AnnIndex.routeCollected(spark, probes, cs, np)
       assert(drv.size == probes.size * np && jn.size == probes.size * np,
         s"routing under-filled at k=$k nprobe=$np")
       assert(routedPairs(drv) == routedPairs(jn),
@@ -101,7 +101,7 @@ class AnnAssignSpec extends SparkTestBase {
     assert(AnnIndex.routeProbes(spark, probes, cents(16, 8), 6)
       == AnnIndex.routeDriver(probes, cents(16, 8), 6))
     assert(routedPairs(AnnIndex.routeProbes(spark, probes, cents(1024, 8), 6))
-      == routedPairs(AnnIndex.routeJoin(spark, probes, cents(1024, 8), 6)))
+      == routedPairs(AnnIndex.routeCollected(spark, probes, cents(1024, 8), 6)))
   }
 
   private def routedPairs(r: Seq[(Int, Long, Seq[Double], Int)]): Set[(Int, Long, Int)] =
@@ -115,7 +115,7 @@ class AnnAssignSpec extends SparkTestBase {
       .map(i => (7L, (0 until 8).map(j => math.cos(i * 13 + j * 3)): Seq[Double]))
     val cs = cents(300, 8)
     val drv = AnnIndex.routeDriver(dups, cs, 6)
-    val jn = AnnIndex.routeJoin(spark, dups, cs, 6)
+    val jn = AnnIndex.routeCollected(spark, dups, cs, 6)
     assert(jn.size == dups.size * 6, s"join routing emitted ${jn.size} rows")
     def perOrdinal(r: Seq[(Int, Long, Seq[Double], Int)]): Map[Int, Set[Int]] =
       r.groupBy(_._1).view.mapValues(_.map(_._4).toSet).toMap

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
-import graft.io.Scratch
+import graft.io.{EncryptedParquet, Scratch}
 import graft.kms.TestKmsServer
 import org.apache.parquet.crypto.KeyAccessDeniedException
 import org.apache.spark.sql.DataFrame
@@ -9,11 +9,18 @@ import org.apache.spark.sql.functions._
 
 /** Encrypted index artifacts (r12 verdict item 3): the composed index's
   * three artifacts written through the PME crypto factory under the
-  * corpus column policy ([[IvfPq.indexPolicies]] — embeddings, labels and
-  * every derived form at INTERNAL), with serving gated on token
-  * privilege per scan.
+  * corpus column policy ([[AnnIndex.IndexCrypto.policies]] — embeddings,
+  * labels and every derived form at INTERNAL), with serving gated on
+  * token privilege per scan. Every build, serve, lifecycle and rotation
+  * call here carries its crypto state one way: an
+  * [[AnnIndex.IndexCrypto]] context.
   */
 class EncryptedAnnSpec extends SparkTestBase {
+
+  private def ctx(token: Option[String], externalMaterial: Boolean = false) =
+    AnnIndex.IndexCrypto(TestKmsServer.shared.url, token, externalMaterial)
+
+  private lazy val internal = Some(ctx(Some("INTERNAL")))
 
   private def causedByAccessDenied(e: Throwable): Boolean = {
     var t: Throwable = e
@@ -31,14 +38,13 @@ class EncryptedAnnSpec extends SparkTestBase {
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq.sorted
 
   test("encrypted composed index: INTERNAL serves with plaintext parity, lower privilege is denied") {
-    val kms = TestKmsServer.shared
     val root = Scratch.fresh("ann-encrypted")
     // The deterministic trainers (vec_id-hash seeds) make two builds of
     // the same frame produce identical artifacts, so the encrypted and
     // plaintext indexes are comparable row-for-row.
     val emb = AnnIndex.corpus(spark, sfDir)
     val plainDir = IvfPq.buildFrom(spark, emb, s"$root/plain")
-    val encDir = IvfPq.buildFromEncrypted(spark, emb, s"$root/enc", kms.url)
+    val encDir = IvfPq.buildFrom(spark, emb, s"$root/enc", internal)
     val probes = AnnIndex.defaultProbes(spark, sfDir)
 
     // 1. The artifacts are GENUINELY encrypted: a plain reader without
@@ -50,25 +56,23 @@ class EncryptedAnnSpec extends SparkTestBase {
     // 2. Result parity: the INTERNAL-token serve returns exactly the
     //    plaintext index's results.
     val plain = rows(IvfPq.probeSegments(spark, Seq(plainDir), probes))
-    val enc = rows(IvfPq.probeEncrypted(spark, Seq(encDir), probes,
-      kms.url, Some("INTERNAL")))
+    val enc = rows(IvfPq.probeSegments(spark, Seq(encDir), probes,
+      crypto = internal))
     assert(enc == plain, "encrypted serve diverged from the plaintext index")
     // Higher privilege also serves (the lattice is monotone).
-    val encHigh = rows(IvfPq.probeEncrypted(spark, Seq(encDir), probes,
-      kms.url, Some("RESTRICTED")))
+    val encHigh = rows(IvfPq.probeSegments(spark, Seq(encDir), probes,
+      crypto = Some(ctx(Some("RESTRICTED")))))
     assert(encHigh == plain)
     // The DISTRIBUTED composed serve composes with encryption too: the
     // token-bearing reader conf threads through its scans (and denial
     // gates it like the collected path).
     val encDist = rows(IvfPq.probeDistributedSegments(spark, Seq(encDir),
-      probes, readOpts = graft.crypto.EncryptionPolicy.readConfMap(
-        kms.url, Some("INTERNAL"))))
+      probes, crypto = internal))
     assert(encDist == plain,
       "encrypted distributed serve diverged from the plaintext index")
     val eDist = intercept[Throwable] {
       IvfPq.probeDistributedSegments(spark, Seq(encDir), probes,
-        readOpts = graft.crypto.EncryptionPolicy.readConfMap(
-          kms.url, Some("PUBLIC"))).collect()
+        crypto = Some(ctx(Some("PUBLIC")))).collect()
     }
     assert(causedByAccessDenied(eDist),
       s"under-privileged distributed probe failed for the wrong reason: $eDist")
@@ -76,7 +80,8 @@ class EncryptedAnnSpec extends SparkTestBase {
     //    denial at action time — it must never serve.
     Seq(None, Some("PUBLIC")).foreach { token =>
       val e = intercept[Throwable] {
-        IvfPq.probeEncrypted(spark, Seq(encDir), probes, kms.url, token).collect()
+        IvfPq.probeSegments(spark, Seq(encDir), probes,
+          crypto = Some(ctx(token))).collect()
       }
       assert(causedByAccessDenied(e),
         s"under-privileged probe (token=$token) failed for the wrong reason: $e")
@@ -84,14 +89,13 @@ class EncryptedAnnSpec extends SparkTestBase {
   }
 
   test("encrypted lifecycle: append, masked serve, delete-compact and maintain run under the token") {
-    val kms = TestKmsServer.shared
     val root = Scratch.fresh("ann-encrypted-lifecycle")
-    val crypto = Some(IvfPq.IndexCrypto(kms.url, Some("INTERNAL")))
+    val crypto = internal
     import spark.implicits._
     def frame(ids: Seq[Long]) = ids
       .map(i => (i, (0 until 64).map(j => math.cos(i * 13 + j * 3)), (i % 10).toInt))
       .toDF("vec_id", "e", "label")
-    val base = IvfPq.buildFromEncrypted(spark, frame(0L until 200L), s"$root/base", kms.url)
+    val base = IvfPq.buildFrom(spark, frame(0L until 200L), s"$root/base", crypto)
     // Append encodes against the ENCRYPTED base artifacts and writes an
     // encrypted segment.
     val seg = IvfPq.appendSegment(spark, base, frame(200L until 220L), s"$root/seg", crypto)
@@ -100,18 +104,16 @@ class EncryptedAnnSpec extends SparkTestBase {
     }
     // Masked multi-segment serve under the token.
     val ts = frame(Seq(5L, 6L)).select(col("vec_id"), lit(1).as("cid"))
-    val served = IvfPq.probeEncrypted(spark, Seq(base, seg),
+    val served = IvfPq.probeSegments(spark, Seq(base, seg),
       frame(Seq(210L)).select((col("vec_id") + 1000000L).as("pid"), col("e").as("pe")),
-      kms.url, Some("INTERNAL"), tss = Seq(ts -> Int.MaxValue)).collect()
+      tss = Seq(ts -> Int.MaxValue), crypto = crypto).collect()
     assert(served.length == AnnIndex.TopK)
     assert(!served.exists(r => Set(5L, 6L).contains(r.getLong(1))),
       "tombstoned id served from the encrypted state")
     // Delete-aware compaction re-encrypts the fold; census under the token.
     val folded = IvfPq.compactSegments(spark, base, Seq(seg),
       Seq(ts -> Int.MaxValue), s"$root/fold", crypto)
-    val lists = spark.read
-      .options(graft.crypto.EncryptionPolicy.readConfMap(kms.url, Some("INTERNAL")))
-      .parquet(s"$folded/ivfpq_lists")
+    val lists = AnnIndex.readArtifact(spark, s"$folded/ivfpq_lists", crypto)
     assert(lists.count() == 200 + 20 - 2)
     intercept[Throwable] {
       spark.read.parquet(s"$folded/ivfpq_lists").select("codes").collect()
@@ -127,12 +129,12 @@ class EncryptedAnnSpec extends SparkTestBase {
     val root = Scratch.fresh("ann-rotate")
     val emb = AnnIndex.corpus(spark, sfDir)
     val encRoot = s"$root/enc"
-    val v1 = IvfPq.buildFromEncrypted(spark, emb, encRoot, kms.url)
+    val v1 = IvfPq.buildFrom(spark, emb, encRoot, internal)
     val probes = AnnIndex.defaultProbes(spark, sfDir)
-    val before = rows(IvfPq.probeEncrypted(spark, Seq(v1), probes,
-      kms.url, Some("INTERNAL")))
+    val before = rows(IvfPq.probeSegments(spark, Seq(v1), probes,
+      crypto = internal))
     val (w0, _) = kms.counts
-    val v2 = IvfPq.rotateIndexKeys(spark, encRoot, kms.url, Some("INTERNAL"))
+    val v2 = IvfPq.rotateIndexKeys(spark, encRoot, internal.get, internal)
     // A NEW version is CURRENT; the files reference only KEKs minted by
     // the rotation (the cleared write cache forces fresh KMS wrap
     // traffic — a silent cache reuse would show zero new wraps).
@@ -141,18 +143,19 @@ class EncryptedAnnSpec extends SparkTestBase {
     val (w1, _) = kms.counts
     assert(w1 > w0, "rotation minted no fresh KEKs — the wrap cache leaked through")
     // Serve parity on the rotated version, denial still enforced.
-    assert(rows(IvfPq.probeEncrypted(spark, Seq(v2), probes,
-      kms.url, Some("INTERNAL"))) == before,
+    assert(rows(IvfPq.probeSegments(spark, Seq(v2), probes,
+      crypto = internal)) == before,
       "rotation changed serve results")
     val e = intercept[Throwable] {
-      IvfPq.probeEncrypted(spark, Seq(v2), probes, kms.url, Some("PUBLIC")).collect()
+      IvfPq.probeSegments(spark, Seq(v2), probes,
+        crypto = Some(ctx(Some("PUBLIC")))).collect()
     }
     assert(causedByAccessDenied(e),
       s"post-rotation under-privileged probe failed for the wrong reason: $e")
     // The PREVIOUS version is untouched inside the retirement grace: an
     // in-flight reader that resolved before the flip drains normally.
-    assert(rows(IvfPq.probeEncrypted(spark, Seq(v1), probes,
-      kms.url, Some("INTERNAL"))) == before,
+    assert(rows(IvfPq.probeSegments(spark, Seq(v1), probes,
+      crypto = internal)) == before,
       "rotation disturbed the previous version inside the retirement grace")
   }
 
@@ -164,12 +167,12 @@ class EncryptedAnnSpec extends SparkTestBase {
       .map(i => (i, (0 until 64).map(j => math.cos(i * 19 + j * 3)), (i % 10).toInt))
       .toDF("vec_id", "e", "label")
     val encRoot = s"$root/enc"
-    val v1 = IvfPq.buildFromEncrypted(spark, emb, encRoot, kms.url,
-      externalMaterial = true)
+    val external = ctx(Some("INTERNAL"), externalMaterial = true)
+    val v1 = IvfPq.buildFrom(spark, emb, encRoot, Some(external))
     val probes = emb.filter(col("vec_id") === 11L)
       .select((col("vec_id") + 1000000L).as("pid"), col("e").as("pe"))
-    val before = rows(IvfPq.probeEncrypted(spark, Seq(v1), probes,
-      kms.url, Some("INTERNAL")))
+    val before = rows(IvfPq.probeSegments(spark, Seq(v1), probes,
+      crypto = internal))
 
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
@@ -189,7 +192,7 @@ class EncryptedAnnSpec extends SparkTestBase {
       "external-material build must write _KEY_MATERIAL_FOR_* sidecars")
     val (w0, _) = kms.counts
 
-    val v2 = IvfPq.rotateIndexKeysInPlace(spark, encRoot, kms.url, Some("INTERNAL"))
+    val v2 = IvfPq.rotateIndexKeysInPlace(spark, encRoot, external)
 
     // Metadata-only and in place: the version dir is unchanged, every
     // encrypted data file is byte-identical, every sidecar carries fresh
@@ -204,31 +207,31 @@ class EncryptedAnnSpec extends SparkTestBase {
       "rotation left a sidecar's key material unrotated")
     assert(kms.counts._1 > w0, "rotation minted no fresh KEKs at the KMS")
     // Serve parity on the SAME version, gating intact.
-    assert(rows(IvfPq.probeEncrypted(spark, Seq(v1), probes,
-      kms.url, Some("INTERNAL"))) == before,
+    assert(rows(IvfPq.probeSegments(spark, Seq(v1), probes,
+      crypto = internal)) == before,
       "in-place rotation changed serve results")
     val e = intercept[Throwable] {
-      IvfPq.probeEncrypted(spark, Seq(v1), probes, kms.url, Some("PUBLIC")).collect()
+      IvfPq.probeSegments(spark, Seq(v1), probes,
+        crypto = Some(ctx(Some("PUBLIC")))).collect()
     }
     assert(causedByAccessDenied(e),
       s"post-rotation under-privileged probe failed for the wrong reason: $e")
     // The REWRITE rotation preserves the external material mode (its
     // republished version still carries sidecars), so in-place rotation
     // keeps working after it — the two rotations compose indefinitely.
-    val v3 = IvfPq.rotateIndexKeys(spark, encRoot, kms.url, Some("INTERNAL"))
+    val v3 = IvfPq.rotateIndexKeys(spark, encRoot, internal.get, internal)
     assert(v3 != v1)
     assert(walk(new java.io.File(v3.stripPrefix("file:")))
       .exists(_.getName.startsWith("_KEY_MATERIAL_FOR_")),
       "rewrite rotation stripped the external key-material mode")
-    val v4 = IvfPq.rotateIndexKeysInPlace(spark, encRoot, kms.url, Some("INTERNAL"))
+    val v4 = IvfPq.rotateIndexKeysInPlace(spark, encRoot, external)
     assert(v4 == v3, "in-place rotation must work on the rewrite's output")
-    assert(rows(IvfPq.probeEncrypted(spark, Seq(v3), probes,
-      kms.url, Some("INTERNAL"))) == before,
+    assert(rows(IvfPq.probeSegments(spark, Seq(v3), probes,
+      crypto = internal)) == before,
       "rotation composition changed serve results")
   }
 
   test("in-place rotation distributes over executors at wide k (1024+ partition dirs)") {
-    val kms = TestKmsServer.shared
     val root = Scratch.fresh("ann-rotate-wide")
     import graft.io.Afs
     import spark.implicits._
@@ -238,9 +241,8 @@ class EncryptedAnnSpec extends SparkTestBase {
     // verdict item 3). Every artifact is written external-material so
     // each dir carries _KEY_MATERIAL_FOR_* sidecars.
     val k = 1024
-    val policies = IvfPq.indexPoliciesFor(externalMaterial = true)
-    def wOpts(a: String) = graft.crypto.EncryptionPolicy.writeConfMap(
-      policies(a), kms.url, accessToken = None)
+    val external = ctx(Some("INTERNAL"), externalMaterial = true)
+    def wOpts(a: String) = external.writerOptions(a)
     val vdir = s"$root/enc/v000001"
     Seq(1, 2).map(i => (i, Seq(0.1 * i, 0.2 * i))).toDF("cid", "ce")
       .coalesce(1).write.options(wOpts("ivf_centroids"))
@@ -273,8 +275,7 @@ class EncryptedAnnSpec extends SparkTestBase {
     assert(sidecarsBefore.size >= k,
       s"expected >= $k sidecars, found ${sidecarsBefore.size}")
 
-    val out = IvfPq.rotateIndexKeysInPlace(spark, s"$root/enc", kms.url,
-      Some("INTERNAL"))
+    val out = IvfPq.rotateIndexKeysInPlace(spark, s"$root/enc", external)
     assert(out == vdir)
     // Every sidecar rotated, every data file untouched, artifact still
     // readable under the token — i.e. the distributed tasks rotated
@@ -285,23 +286,20 @@ class EncryptedAnnSpec extends SparkTestBase {
       "a partition dir's key material was left unrotated")
     assert(snap(_.endsWith(".parquet")) == dataBefore,
       "distributed in-place rotation must be metadata-only")
-    val n = spark.read
-      .options(graft.crypto.EncryptionPolicy.readConfMap(kms.url, Some("INTERNAL")))
-      .parquet(s"$vdir/ivfpq_lists")
+    val n = AnnIndex.readArtifact(spark, s"$vdir/ivfpq_lists", Some(external))
       .select("vec_id", "codes", "e").count()
     assert(n == k)
   }
 
   test("rewrite rotation carries the _SEGMENTS manifest so stream-ingested readers survive") {
-    val kms = TestKmsServer.shared
     val root = Scratch.fresh("ann-rotate-manifest")
-    val crypto = Some(IvfPq.IndexCrypto(kms.url, Some("INTERNAL")))
+    val crypto = internal
     import spark.implicits._
     def frame(ids: Seq[Long]) = ids
       .map(i => (i, (0 until 64).map(j => math.sin(i * 11 + j * 5)), (i % 10).toInt))
       .toDF("vec_id", "e", "label")
-    val base = IvfPq.buildFromEncrypted(spark, frame(0L until 150L),
-      s"$root/base", kms.url)
+    val base = IvfPq.buildFrom(spark, frame(0L until 150L),
+      s"$root/base", crypto)
     // Segment laid out as the ingest loop writes them: a bN dir holding
     // the artifact directly, marked _COMPLETE (appendSegment publishes a
     // versioned root, so its output is renamed into the loop's shape).
@@ -319,8 +317,7 @@ class EncryptedAnnSpec extends SparkTestBase {
       s"$root/maint", alreadyFolded = Nil, crypto).dir
     val manifest = graft.io.Afs.readString(s"$folded/_SEGMENTS")
     assert(manifest.nonEmpty)
-    val rotated = IvfPq.rotateIndexKeys(spark, s"$root/maint", kms.url,
-      Some("INTERNAL"))
+    val rotated = IvfPq.rotateIndexKeys(spark, s"$root/maint", crypto.get, crypto)
     assert(rotated != folded)
     // The manifest rode into the rotated version verbatim, so
     // servingStateOf keeps resolving (fail-loud read) and still excludes
@@ -345,20 +342,20 @@ class EncryptedAnnSpec extends SparkTestBase {
       .coalesce(1).write.parquet(s"$root/a")
     Seq((1L, Seq(1.0, 2.0)), (2L, Seq(3.0, 4.5))).toDF("vec_id", "e")
       .coalesce(1).write.parquet(s"$root/b")
-    val (na, ha) = IvfPq.contentFingerprint(spark, s"$root/a", Map.empty)
-    val (nb, hb) = IvfPq.contentFingerprint(spark, s"$root/b", Map.empty)
+    def fp(p: String) = EncryptedParquet.fingerprint(spark.read.parquet(p))
+    val (na, ha) = fp(s"$root/a")
+    val (nb, hb) = fp(s"$root/b")
     assert(na == nb)
     assert(ha != hb, "fingerprint blind to a column-value change")
     // Column order must not matter (the rewrite re-selects canonically,
     // but the fingerprint sorts names so the check is layout-proof).
     Seq((Seq(1.0, 2.0), 1L), (Seq(3.0, 4.0), 2L)).toDF("e", "vec_id")
       .coalesce(1).write.parquet(s"$root/a2")
-    val (_, ha2) = IvfPq.contentFingerprint(spark, s"$root/a2", Map.empty)
+    val (_, ha2) = fp(s"$root/a2")
     assert(ha2 == ha, "fingerprint sensitive to column order")
   }
 
   test("a plaintext index upgrades to encrypted-at-rest through the same rotation path") {
-    val kms = TestKmsServer.shared
     val root = Scratch.fresh("ann-encrypt-upgrade")
     import spark.implicits._
     val emb = (0L until 200L)
@@ -369,30 +366,56 @@ class EncryptedAnnSpec extends SparkTestBase {
     val probes = emb.filter(col("vec_id") === 7L)
       .select((col("vec_id") + 1000000L).as("pid"), col("e").as("pe"))
     val before = rows(IvfPq.probeSegments(spark, Seq(v1), probes))
-    val v2 = IvfPq.rotateIndexKeys(spark, idxRoot, kms.url, Some("INTERNAL"),
-      plaintextSource = true)
+    val v2 = IvfPq.rotateIndexKeys(spark, idxRoot, internal.get, source = None)
     // The upgraded version is genuinely encrypted and serves with parity
     // under the token; lower privilege is denied.
     intercept[Throwable] {
       spark.read.parquet(s"$v2/ivfpq_lists").select("e").collect()
     }
-    assert(rows(IvfPq.probeEncrypted(spark, Seq(v2), probes,
-      kms.url, Some("INTERNAL"))) == before,
+    assert(rows(IvfPq.probeSegments(spark, Seq(v2), probes,
+      crypto = internal)) == before,
       "encrypt-in-place upgrade changed serve results")
     val e = intercept[Throwable] {
-      IvfPq.probeEncrypted(spark, Seq(v2), probes, kms.url, None).collect()
+      IvfPq.probeSegments(spark, Seq(v2), probes,
+        crypto = Some(ctx(None))).collect()
     }
     assert(causedByAccessDenied(e))
   }
 
+  test("the trained-table cache stays keyed on the token: an INTERNAL fill never serves a lesser context") {
+    val root = Scratch.fresh("ann-cache-key")
+    import spark.implicits._
+    val emb = (0L until 120L)
+      .map(i => (i, (0 until 64).map(j => math.cos(i * 23 + j * 5)), (i % 10).toInt))
+      .toDF("vec_id", "e", "label")
+    val dir = IvfPq.buildFrom(spark, emb, s"$root/idx", internal)
+    // The INTERNAL context reads ivf_centroids and fills the cache.
+    val cents = AnnIndex.readCentroids(spark, dir, internal)
+    assert(cents.size == AnnIndex.K)
+    // A tokenless and a PUBLIC context on the SAME dir must each do their
+    // own read — and be denied at the KMS — never hit the INTERNAL entry.
+    Seq(None, Some("PUBLIC")).foreach { token =>
+      val e = intercept[Throwable] {
+        AnnIndex.readCentroids(spark, dir, Some(ctx(token)))
+      }
+      assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[KeyAccessDeniedException]),
+        s"token=$token was not denied with a KeyAccessDeniedException cause: $e")
+    }
+    // No context at all reads without the crypto factory: it cannot
+    // decrypt `ce` and must fail too, not be served the cached table.
+    intercept[Throwable](AnnIndex.readCentroids(spark, dir, None))
+    // The privileged entry is still there, untouched by the denials.
+    assert(AnnIndex.readCentroids(spark, dir, internal) eq cents)
+  }
+
   test("encrypted filtered serve keeps predicate purity under the token channel") {
-    val kms = TestKmsServer.shared
     val root = Scratch.fresh("ann-encrypted-filtered")
     val emb = AnnIndex.corpus(spark, sfDir)
-    val encDir = IvfPq.buildFromEncrypted(spark, emb, s"$root/enc", kms.url)
-    val out = IvfPq.probeEncrypted(spark, Seq(encDir),
-      AnnIndex.defaultProbes(spark, sfDir), kms.url, Some("INTERNAL"),
-      attrFilter = Some(col("label") === 7)).collect()
+    val encDir = IvfPq.buildFrom(spark, emb, s"$root/enc", internal)
+    val out = IvfPq.probeSegments(spark, Seq(encDir),
+      AnnIndex.defaultProbes(spark, sfDir),
+      attrFilter = Some(col("label") === 7), crypto = internal).collect()
     assert(out.nonEmpty, "filtered encrypted serve returned nothing")
     val label7: Set[Long] = emb.filter(col("label") === 7)
       .select("vec_id").collect().map(_.getLong(0)).toSet

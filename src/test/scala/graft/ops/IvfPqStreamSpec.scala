@@ -318,12 +318,11 @@ class IvfPqStreamSpec extends SparkTestBase {
     import spark.implicits._
     val kms = TestKmsServer.shared
     val root = Scratch.fresh("ivfpq-stream-enc")
-    val crypto = Some(IvfPq.IndexCrypto(kms.url, Some("INTERNAL")))
+    val crypto = Some(AnnIndex.IndexCrypto(kms.url, Some("INTERNAL")))
     val baseIds = 0L until 64L
     val ingestIds = 1000L until 1024L
     val universe = (baseIds ++ ingestIds).toSet
-    val baseDir = IvfPq.buildFromEncrypted(spark, frame(baseIds),
-      s"$root/base", kms.url)
+    val baseDir = IvfPq.buildFrom(spark, frame(baseIds), s"$root/base", crypto)
     // A mid-stream DELETE rides the encrypted loop too: the tombstone's
     // stored victim embedding must land encrypted (the
     // `ivfpq_tombstones` policy) and the fold must consume it under the
@@ -354,8 +353,7 @@ class IvfPqStreamSpec extends SparkTestBase {
     // gone (the fold consumed its encrypted tombstone), everything else
     // exactly once.
     val expect = universe - victim
-    val readOpts = graft.crypto.EncryptionPolicy.readConfMap(kms.url, Some("INTERNAL"))
-    val got = spark.read.options(readOpts).parquet(s"$finalBase/ivfpq_lists")
+    val got = AnnIndex.readArtifact(spark, s"$finalBase/ivfpq_lists", crypto)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(got.size == got.distinct.size, "encrypted fold duplicated ids")
     assert(got.toSet == expect,
@@ -363,8 +361,8 @@ class IvfPqStreamSpec extends SparkTestBase {
         s"ghosts=${(got.toSet -- expect).take(5)}")
     // Serve under the token: a streamed id is findable and top-1-exact.
     val probes = Seq((1007L + 1000000L, vec(1007L))).toDF("pid", "pe")
-    val res = IvfPq.probeEncrypted(spark, Seq(finalBase), probes,
-      kms.url, Some("INTERNAL")).collect()
+    val res = IvfPq.probeSegments(spark, Seq(finalBase), probes,
+      crypto = crypto).collect()
     assert(res.length == AnnIndex.TopK)
     val top = res.find(_.getLong(2) == 1L).get
     assert(top.getLong(1) == 1007L && top.getDouble(3) == 1.0,
@@ -372,8 +370,8 @@ class IvfPqStreamSpec extends SparkTestBase {
         s"(${top.getLong(1)}, ${top.getDouble(3)})")
     // Denial still gates the streamed state.
     val e = intercept[Throwable] {
-      IvfPq.probeEncrypted(spark, Seq(finalBase), probes,
-        kms.url, Some("PUBLIC")).collect()
+      IvfPq.probeSegments(spark, Seq(finalBase), probes,
+        crypto = Some(AnnIndex.IndexCrypto(kms.url, Some("PUBLIC")))).collect()
     }
     assert(e != null)
   }
