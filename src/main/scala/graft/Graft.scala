@@ -17,8 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Graft {
 
   /** The engine's session-level conf, applied ONCE at session setup (all
-    * entry points — [[localSession]], Verify, Graft.init, the test base —
-    * call this)
+    * entry points — [[localSession]], which Verify and the test base
+    * build through, and Graft.init — call this)
     * so no individual query needs to mutate session state:
     *
     *  - `icu.caseMappings.enabled=false`: JVM case mappings instead of
@@ -50,39 +50,58 @@ object Graft {
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
   }
 
-  /** The local session every bench and tool main runs on (`local[cpus]`,
-    * tuned). `Verify` and the spec base keep their own builders: the
-    * oracle hashes and the exchange-byte ceilings were recorded under
-    * those confs.
+  /** The closed set of local-session shapes [[localSession]] builds,
+    * each keeping the confs its recorded numbers were taken under:
+    * `Bench` (bench and tool mains) sets both AQE coalescing floors and
+    * the sort-based shuffle writer; `Oracle` (`graft.Verify` — the oracle
+    * hashes) the partition-count floor only; `Spec` (the spec base,
+    * `local[4]` as app `graft-test` — the `ShuffleBudgetSpec`
+    * exchange-byte ceilings) neither.
     */
-  private[graft] def localSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
+  private[graft] sealed abstract class SessionShape
+  private[graft] object SessionShape {
+    case object Bench extends SessionShape
+    case object Oracle extends SessionShape
+    case object Spec extends SessionShape
+  }
+
+  /** The one local-session factory (`local[cpus]`, `cpus` shuffle
+    * partitions, tuned): every bench and tool main, `Verify` and the
+    * spec base build through here, each in its [[SessionShape]], so a
+    * session-wide conf lands in one place.
+    */
+  private[graft] def localSession(cpus: String,
+      shape: SessionShape = SessionShape.Bench): SparkSession = {
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // Parallelism floor under AQE: coalescing is byte-based and the
-      // dedup/similarity joins EXPAND rows 10-1000x after the exchange, so
-      // coalescing their tiny inputs to 1-2 partitions serializes the
-      // heavy join on one thread (measured: identical plans swinging
-      // 5s..110s run-to-run). On a real cluster the same floor is
-      // spark.default.parallelism-sized; data volume alone cannot reveal
-      // generator/join fanout. Both knobs: minPartitionNum is deprecated
-      // (and no longer honored for some plans in 4.x); the SIZE floor is
-      // what actually stops the 1 MB default from folding a 2 MB
-      // CPU-heavy shuffle onto 1-2 threads.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      // Sort-based shuffle writer even for small partition counts: the
-      // bypass-merge writer creates mappers×reducers (=1024) tiny files
-      // per exchange, and task-level metrics show shuffle-write TIME
-      // exceeding CPU time on the multi-exchange dedup queries (6.9s of
-      // 20.2s task time on q22b). The sort path writes one data+index
-      // file per mapper. Same reasoning a real cluster applies — bypass
-      // is only a win when per-file cost is negligible.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .config("spark.sql.icu.caseMappings.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    if (shape == SessionShape.Spec) builder.appName("graft-test")
+    // Parallelism floor under AQE: coalescing is byte-based and the
+    // dedup/similarity joins EXPAND rows 10-1000x after the exchange, so
+    // coalescing their tiny inputs to 1-2 partitions serializes the
+    // heavy join on one thread (measured: identical plans swinging
+    // 5s..110s run-to-run). On a real cluster the same floor is
+    // spark.default.parallelism-sized; data volume alone cannot reveal
+    // generator/join fanout. Both knobs: minPartitionNum is deprecated
+    // (and no longer honored for some plans in 4.x); the SIZE floor is
+    // what actually stops the 1 MB default from folding a 2 MB
+    // CPU-heavy shuffle onto 1-2 threads.
+    if (shape != SessionShape.Spec)
+      builder.config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cpus)
+    if (shape == SessionShape.Bench)
+      builder.config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
+        // Sort-based shuffle writer even for small partition counts: the
+        // bypass-merge writer creates mappers×reducers (=1024) tiny files
+        // per exchange, and task-level metrics show shuffle-write TIME
+        // exceeding CPU time on the multi-exchange dedup queries (6.9s of
+        // 20.2s task time on q22b). The sort path writes one data+index
+        // file per mapper. Same reasoning a real cluster applies — bypass
+        // is only a win when per-file cost is negligible.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)
     spark

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     val only: Set[String] = rest.toSet // optional query-name filter (local dev)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Parallelism floor: AQE's byte-based partition coalescing sees the
-      // tiny shuffle INPUTS of the dedup/similarity joins and collapses
-      // them to 1-2 partitions, then the join-side row explosion runs
-      // nearly single-threaded (measured 5s..110s run-to-run swings on
-      // identical plans). Data volume can't tell you the fanout.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cpus)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.tune(spark)
+    val spark = Graft.localSession(cpus, Graft.SessionShape.Oracle)
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries

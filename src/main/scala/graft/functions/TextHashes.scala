@@ -370,11 +370,14 @@ object HashKernels {
     new GenericArrayData(out)
   }
 
-  /** Σ|a_i − b_i| over two tinyint histograms (shorter length bounds the
-    * loop; [[charHist]] outputs are always 64 long).
+  /** Σ|a_i − b_i| over two equal-length tinyint histograms ([[charHist]]
+    * outputs are always 64 long). Unequal lengths throw, naming both:
+    * summing over the shorter would silently drop the longer's tail.
     */
   def l1Diff(a: ArrayData, b: ArrayData): Long = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
+    if (n != b.numElements()) throw new IllegalArgumentException(
+      s"l1_diff needs equal-length histograms, got lengths $n and ${b.numElements()}")
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -677,12 +680,11 @@ case class CharHistExpr(child: Expression) extends UnaryExpression {
 /** l1_diff(a, b) → long, Σ|a_i − b_i| over two array<tinyint>
   * histograms ([[CharHistExpr]] outputs).
   *
-  * LENGTH CONTRACT (r15 ADVICE): the sum runs over the SHORTER input's
-  * length — the longer array's tail is ignored, so mismatched lengths
-  * UNDER-COUNT the distance rather than erroring. That is deliberate
-  * for the only producer ([[CharHistExpr]], always 64 buckets) and safe
-  * for the q49 prefilter (an under-count can only keep a pair, never
-  * drop one), but callers registering their own histograms on this
+  * LENGTH CONTRACT (r15 ADVICE): both inputs must have one length —
+  * unequal lengths fail the query with an IllegalArgumentException
+  * naming both, in interpreted and generated code alike (both call
+  * [[HashKernels.l1Diff]]). The only producer ([[CharHistExpr]]) always
+  * emits 64 buckets; callers registering their own histograms on this
   * public SQL surface must pad both sides to one length.
   */
 case class L1Diff(left: Expression, right: Expression) extends BinaryExpression {

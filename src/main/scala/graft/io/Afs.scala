@@ -14,13 +14,14 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
   *
   * Atomicity contract by backend, and how each gap is covered:
   *
-  *   - '''exclusive create''' ([[createExclusive]]) — the claim
-  *     primitive. Atomic on HDFS (namenode-arbitrated) and on the local
-  *     FS; on object stores create-no-overwrite is best-effort
-  *     (S3 conditional PUTs close it where supported). Two writers
-  *     racing a claim on a non-atomic store can both "win", but each
-  *     then writes its OWN version dir contents idempotently and the
-  *     marker discipline below keeps readers off anything incomplete.
+  *   - '''exclusive create''' ([[createExclusive]]) — what the claim
+  *     primitive ([[claim]]) is built on. Atomic on HDFS
+  *     (namenode-arbitrated) and on the local FS; on object stores
+  *     create-no-overwrite is best-effort (S3 conditional PUTs close it
+  *     where supported). Two writers racing a claim on a non-atomic
+  *     store can both "win", but each then writes its OWN version dir
+  *     contents idempotently and the marker discipline below keeps
+  *     readers off anything incomplete.
   *   - '''rename''' ([[renameOver]]) — atomic replace on POSIX local
   *     rename(2); on HDFS an existing destination forces delete+rename
   *     (a hole readers can observe); on object stores rename is
@@ -59,8 +60,8 @@ object Afs {
     fsOf(pp).delete(pp, true): Unit
   }
 
-  /** Create-exclusive of an empty marker file — the atomic claim
-    * primitive (see the object Scaladoc for per-backend guarantees).
+  /** Create-exclusive of an empty marker file — the atomic step under
+    * [[claim]] (see the object Scaladoc for per-backend guarantees).
     * Returns false when the path already exists; any other IO failure
     * propagates (a claim loop must not spin past a dead filesystem).
     *
@@ -75,7 +76,7 @@ object Afs {
     * both writers produce the same content idempotently and `_SUCCESS`
     * lands last either way).
     */
-  def createExclusive(p: String): Boolean = {
+  private[graft] def createExclusive(p: String): Boolean = {
     val pp = new Path(p)
     val f = fsOf(pp)
     // Dispatch on the filesystem's SCHEME, not its class (r13, found by
@@ -104,6 +105,59 @@ object Afs {
           e.getMessage.contains("already exists") => false
       }
     }
+  }
+
+  /** Consecutive lost claims after which [[claim]] fails loudly. 1000
+    * consecutive losses cannot happen under real contention (each loser
+    * re-claims a HIGHER number than any winner took), only under a
+    * broken filesystem.
+    */
+  val ClaimAttemptCap = 1000
+
+  /** Every number claimed under `dir` for `prefix`: the `n` of each
+    * `<prefix><n>` entry and `<prefix><n>._CLAIM` marker — complete
+    * entries, in-flight entries and bare claims alike — and of each such
+    * name in `taken`. Total over arbitrary listings: a digit run longer
+    * than 9 (past Int range — junk no claim ever wrote) is ignored rather
+    * than thrown on, so numbering degrades, never crashes, on foreign
+    * debris.
+    */
+  def claimedNumbers(dir: String, prefix: String,
+      taken: Iterable[String] = Nil): Seq[Int] = {
+    val entry = (java.util.regex.Pattern.quote(prefix) + """(\d{1,9})(?:\._CLAIM)?""").r
+    (listNames(dir) ++ taken).collect { case entry(n) => n.toInt }.distinct
+  }
+
+  /** Claim the next free `<prefix><n>` under `dir` — THE claim primitive
+    * every writer sharing a root allocates through (index versions,
+    * tombstone segments, stream runs): create-exclusive of a
+    * `<prefix><n>._CLAIM` marker, so two writers racing one root, in one
+    * JVM or several, never own the same name. `n` numbers from what is
+    * on disk ([[claimedNumbers]]) and from `taken`: names the caller
+    * knows were claimed but whose entries and markers may be gone (a
+    * floor — e.g. consumed tombstones a fold manifest still records
+    * after their dirs were swept). `n` is zero-padded to `width` digits.
+    * Returns `dir/<prefix><n>`; the caller creates the entry itself.
+    *
+    * The loop is bounded (r12 ADVICE): [[createExclusive]]'s non-local
+    * arm classifies connector "already exists" errors as a lost claim,
+    * and a persistent unrelated error matching that sniff must fail
+    * loudly after [[ClaimAttemptCap]] consecutive losses, not spin
+    * forever incrementing numbers.
+    */
+  def claim(dir: String, prefix: String, width: Int = 1,
+      taken: Iterable[String] = Nil): String = {
+    mkdirs(dir)
+    def name(n: Int): String = prefix + s"%0${width}d".format(n)
+    var n = (claimedNumbers(dir, prefix, taken) :+ 0).max + 1
+    var attempts = 0
+    while (!createExclusive(s"$dir/${name(n)}._CLAIM")) {
+      n += 1; attempts += 1
+      if (attempts >= ClaimAttemptCap) throw new java.io.IOException(
+        s"claim loop lost $attempts consecutive $prefix<n> claims under $dir " +
+          "— filesystem reports every claim path as already existing")
+    }
+    s"$dir/${name(n)}"
   }
 
   /** Create (or truncate) an empty marker file — `_SUCCESS`/`_COMPLETE`
@@ -171,9 +225,9 @@ object Afs {
     if (f.exists(pp)) Some(f.getFileStatus(pp).getModificationTime) else None
   }
 
-  /** Recursive copy (no source delete, overwrite) — the compaction
-    * carry-over path; on an object store this is the server-side copy a
-    * 100 TB fold wants instead of a scan.
+  /** Recursive copy of a dir, or a copy of one file (no source delete,
+    * overwrite) — the compaction carry-over path; on an object store
+    * this is the server-side copy a 100 TB fold wants instead of a scan.
     */
   def copyTree(src: String, dst: String): Unit = {
     val sp = new Path(src); val dp = new Path(dst)
@@ -181,7 +235,4 @@ object Afs {
     if (sf.exists(sp))
       FileUtil.copy(sf, sp, fsOf(dp), dp, false, true, conf): Unit
   }
-
-  /** Copy one file (overwrite). */
-  def copyFile(src: String, dst: String): Unit = copyTree(src, dst)
 }

@@ -45,17 +45,17 @@ object AnnIndex {
   // recall knob is routing, not encoding — ceiling(8) measured 0.840,
   // and the composed serve lands on it. The price is the knob's honest
   // one: candidate volume 8/16 of the routed codes instead of 6/16.
-  val K = 16
-  val Nprobe = 8
-  val LloydSteps = 4
-  val TopK = 5
+  private[ops] val K = 16
+  private[ops] val Nprobe = 8
+  private[ops] val LloydSteps = 4
+  private[ops] val TopK = 5
 
   // PQ sizing: q23f's measured rationale (M=8 subspaces × 8 dims, K=64
   // codes, refine pool 256).
-  val Mpq = 8
-  val Kpq = 64
-  val Sub = 8
-  val Pool = 256
+  private[ops] val Mpq = 8
+  private[ops] val Kpq = 64
+  private[ops] val Sub = 8
+  private[ops] val Pool = 256
 
   private def dbl(c: Column): Column = c.cast("array<double>")
 
@@ -97,7 +97,7 @@ object AnnIndex {
     * makes SURVEY §9's k=sqrt(n)≈32k "routing table broadcast, loaded
     * once per serve job" posture true in code.
     */
-  val LiteralAssignMaxK = 128
+  private[ops] val LiteralAssignMaxK = 128
 
   /** Append a `cid` column — each row's nearest centroid by cosine, ties
     * to the smallest cid — preserving every existing column, choosing the
@@ -319,6 +319,11 @@ object AnnIndex {
 
   private def vname(n: Int): String = f"v$n%06d"
 
+  /** The last component of an artifact path (a version, segment or
+    * tombstone name).
+    */
+  private[ops] def nameOf(p: String): String = new org.apache.hadoop.fs.Path(p).getName
+
   private def isComplete(root: String, v: Int): Boolean =
     Afs.exists(s"$root/${vname(v)}/_SUCCESS")
 
@@ -360,9 +365,11 @@ object AnnIndex {
     * listing. The fallback is what makes the pointer safe on backends
     * without atomic replace-rename (HDFS delete+rename hole, object
     * stores — [[graft.io.Afs]]): mid-flip or stale pointers degrade to
-    * one extra listing, never to a missing or incomplete index.
+    * one extra listing, never to a missing or incomplete index. Reads
+    * from disk exactly as a foreign JVM would — also the race specs'
+    * hook (maintain/publish vs a live reader loop).
     */
-  private def currentVersion(root: String): Option[String] =
+  private[ops] def resolveVersion(root: String): Option[String] =
     try {
       val cur = s"$root/CURRENT"
       // The pointer read gets its OWN failure scope: a corrupt or
@@ -385,39 +392,24 @@ object AnnIndex {
     } catch { case _: java.io.IOException => None }
 
   /** Every version number present under `root` — complete dirs,
-    * in-flight dirs, and bare claims. Total over arbitrary root
-    * listings: an entry whose digit run exceeds Int range (junk no
-    * publish ever wrote) is ignored rather than thrown on — resolution
-    * and publication must degrade, not crash, on foreign debris.
+    * in-flight dirs, and bare claims ([[graft.io.Afs.claimedNumbers]]).
     */
-  private def versionsOf(root: String): Seq[Int] =
-    Afs.listNames(root).flatMap { n =>
-      val digits =
-        if (n.matches("v\\d+")) Some(n.drop(1))
-        else if (n.matches("v\\d+\\._CLAIM")) Some(n.drop(1).takeWhile(_.isDigit))
-        else None
-      digits.filter(_.length <= 9).map(_.toInt)
-    }.distinct
-
-  /** Consecutive lost claims after which a claim loop fails loudly —
-    * see the bounded loop in [[publishVersion]].
-    */
-  private[ops] val ClaimAttemptCap = 1000
+  private def versionsOf(root: String): Seq[Int] = Afs.claimedNumbers(root, "v")
 
   /** Write a fresh immutable version via `write(versionDir)`, mark it
     * complete, flip CURRENT to it, retire complete versions older than
     * the predecessor once past the retirement grace. Returns the
     * published version dir.
     *
-    * Version ALLOCATION is atomic: the number is claimed by
-    * create-exclusive of a `v{N}._CLAIM` marker (the portable exclusive
-    * primitive — [[graft.io.Afs.createExclusive]]), so two concurrent
-    * writers racing the same root can never build into the same version
-    * dir: the loser claims the next number, and the CURRENT flip stays
-    * last-writer-wins. RETIREMENT only ever touches versions that
-    * carry `_SUCCESS` (a claimed-but-unfinished build is invisible to
-    * it, however old the publish racing past it is); abandoned claims
-    * are garbage-collected separately behind [[ClaimGcMs]].
+    * Version ALLOCATION is atomic: the number is claimed through
+    * [[graft.io.Afs.claim]] (create-exclusive of a `v{N}._CLAIM`
+    * marker), so two concurrent writers racing the same root can never
+    * build into the same version dir: the loser claims the next number,
+    * and the CURRENT flip stays last-writer-wins. RETIREMENT only ever
+    * touches versions that carry `_SUCCESS` (a claimed-but-unfinished
+    * build is invisible to it, however old the publish racing past it
+    * is); abandoned claims are garbage-collected separately behind
+    * [[ClaimGcMs]].
     */
   private[ops] def publishVersion(root: String)(write: String => Unit): String = {
     Afs.mkdirs(root)
@@ -426,27 +418,13 @@ object AnnIndex {
     // _SUCCESS lands would make the new version its own "predecessor"
     // and retire the real one under in-flight readers).
     val before: Seq[Int] = versionsOf(root)
-    var next = (before :+ 0).max + 1
-    // Bounded claim loop (r12 ADVICE): createExclusive's non-local arm
-    // classifies connector "already exists" errors as a lost claim; a
-    // persistent unrelated error matching that sniff must fail loudly
-    // after a bounded number of consecutive losses, not spin forever
-    // incrementing version numbers. 1000 consecutive lost claims cannot
-    // happen under real contention (each loser re-claims a HIGHER number
-    // than any winner took), only under a broken filesystem.
-    var attempts = 0
-    while (!Afs.createExclusive(s"$root/${vname(next)}._CLAIM")) {
-      next += 1; attempts += 1
-      if (attempts >= ClaimAttemptCap) throw new java.io.IOException(
-        s"claim loop lost $attempts consecutive versions under $root — " +
-          "filesystem reports every claim path as already existing")
-    }
-    val vdir = s"$root/${vname(next)}"
+    val vdir = Afs.claim(root, "v", width = 6)
+    val name = nameOf(vdir)
     Afs.mkdirs(vdir)
     write(vdir)
     Afs.touch(s"$vdir/_SUCCESS")
-    val tmp = s"$root/.CURRENT.$next.tmp"
-    Afs.writeString(tmp, vname(next))
+    val tmp = s"$root/.CURRENT.$name.tmp"
+    Afs.writeString(tmp, name)
     Afs.renameOver(tmp, s"$root/CURRENT")
     val now = System.currentTimeMillis()
     // Retire below the true predecessor — the highest COMPLETE version
@@ -469,8 +447,8 @@ object AnnIndex {
     // GC abandoned claims: no _SUCCESS and neither the claim marker nor
     // the dir's top-level mtime younger than the claim-GC floor (=== the
     // max supported build duration — see ClaimGcMs). Never this
-    // publish's own.
-    before.filterNot(isComplete(root, _)).filterNot(_ == next).foreach { v =>
+    // publish's own: `before` predates the claim, which numbers above it.
+    before.filterNot(isComplete(root, _)).foreach { v =>
       val life = Seq(Afs.mtime(s"$root/${vname(v)}._CLAIM"),
         Afs.mtime(s"$root/${vname(v)}")).flatten
       if (life.nonEmpty && life.forall(t => now - t >= ClaimGcMs)) {
@@ -755,8 +733,6 @@ object AnnIndex {
       lsmAnti(tss)(prep(readArtifact(s, s"$p/$sub", crypto)).select(sel: _*), i, sel)
     }.reduce(_ unionAll _)
 
-
-
   /** Normalized probe frame with the per-ROW serve ordinal appended —
     * the distributed serve paths' input shape. The ordinal is
     * [[monotonically_increasing_id]]: nondeterministic, so downstream
@@ -816,7 +792,7 @@ object AnnIndex {
     * stays BELOW an unfiltered probe's: 2× the partitions, each
     * row-group-skipped to the matching ~10%.
     */
-  val FilteredNprobe: Int = math.min(K, Nprobe * 2)
+  private[ops] val FilteredNprobe: Int = math.min(K, Nprobe * 2)
 
   /** The full collected codebook as (m, code, ce, c2) rows in stored
     * order — its one cached read: the serve paths' map ([[readCodebook]])
@@ -955,12 +931,12 @@ object AnnIndex {
     * step of residual motion); a structurally drifted corpus (clusters
     * re-centered between the trained centroids) measures >0.5.
     */
-  val RetrainDriftThreshold = 0.25
+  private[ops] val RetrainDriftThreshold = 0.25
 
   /** The retrain decision and its evidence: per-cid (live count,
     * relative drift), the weighted mean, and the recommendation.
     */
-  final case class RetrainReport(
+  private[ops] final case class RetrainReport(
       perCid: Seq[(Int, Long, Double)],
       meanRelDrift: Double,
       recommend: Boolean)
@@ -980,7 +956,7 @@ object AnnIndex {
     * AnnRetrainSpec pins degraded-recall-then-recovery around this trigger, and BASELINE.md
     * §C12 prices rebuild vs degraded serving.
     */
-  def retrainCheck(s: SparkSession, indexDir: String, live: DataFrame): RetrainReport =
+  private[ops] def retrainCheck(s: SparkSession, indexDir: String, live: DataFrame): RetrainReport =
     retrainCheckAssigned(s, indexDir,
       assignCids(live.select(col("vec_id"), col("e")),
         readCentroids(s, indexDir)))
@@ -1027,7 +1003,7 @@ object AnnIndex {
   /** An [[IvfPq.maintain]] outcome: the published CURRENT dir, the drift
     * evidence the decision used, and whether a retrain actually ran.
     */
-  final case class MaintainResult(
+  private[ops] final case class MaintainResult(
       dir: String, report: RetrainReport, retrained: Boolean)
 
   // ---- continuous ingest core (Structured Streaming micro-batches) ----
@@ -1037,7 +1013,7 @@ object AnnIndex {
     * lifecycle test exercises SEVERAL checkpointed batches, not a
     * single degenerate one.
     */
-  val StreamFiles = 3
+  private[ops] val StreamFiles = 3
 
   /** The checkpointed ingest loop behind
     * [[IvfPq.streamIngestWithMaintain]] — extracted in r13 so the
@@ -1047,8 +1023,8 @@ object AnnIndex {
     * once (review r13).
     * `writeSegment(session, batch, artifactBase, segDir)` writes one
     * delta segment encoded against `artifactBase`'s
-    * trained tables; `maintainStep(session, servingBase, unfoldedSegs,
-    * maintRoot, alreadyFoldedNames)` folds when the threshold fires.
+    * trained tables; `maintainStep(session, state)` folds the
+    * [[servingStateOf]] view of `root` when the threshold fires.
     * `afterBatch(session, batchId)` runs LAST for each committed
     * non-empty batch, on the stream thread (so it can never race a
     * segment writer or a fold) — the hook mid-stream operations like
@@ -1058,7 +1034,7 @@ object AnnIndex {
   private[ops] def streamIngestCore(s: SparkSession, baseDir: String,
       src: DataFrame, root: String, nFiles: Int, autoMaintainEvery: Int,
       writeSegment: (SparkSession, DataFrame, String, String) => Unit,
-      maintainStep: (SparkSession, String, Seq[String], String, Seq[String]) => Unit,
+      maintainStep: (SparkSession, ServingState) => Unit,
       afterBatch: (SparkSession, Long) => Unit = (_, _) => (),
       srcDirOverride: Option[String] = None)
       : Seq[String] = {
@@ -1114,7 +1090,7 @@ object AnnIndex {
             // base is frozen and the once-read artifacts stand.
             val artifactBase =
               if (autoMaintainEvery > 0)
-                servingStateOf(baseDir, segRoot, s"$root/maint")._1
+                servingStateOf(baseDir, root).base
               else baseDir
             writeSegment(batch.sparkSession, b.toDF(), artifactBase, seg)
             Afs.touch(s"$seg/_COMPLETE")
@@ -1122,11 +1098,9 @@ object AnnIndex {
               // Fold threshold check AFTER the batch commits: the fold
               // runs on this same stream thread (AvailableNow is
               // serial), so it never races a segment writer.
-              val (curBase, unfolded, already) =
-                servingStateOf(baseDir, segRoot, s"$root/maint")
-              if (unfolded.size >= autoMaintainEvery)
-                maintainStep(batch.sparkSession, curBase, unfolded,
-                  s"$root/maint", already)
+              val st = servingStateOf(baseDir, root)
+              if (st.unfolded.size >= autoMaintainEvery)
+                maintainStep(batch.sparkSession, st)
             }
             afterBatch(batch.sparkSession, id)
           }
@@ -1135,53 +1109,72 @@ object AnnIndex {
       .option("checkpointLocation", s"$root/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start().awaitTermination()
-    completeSegments(segRoot)
+    completeDirs(segRoot, "b")
   }
 
-  /** Complete segment dirs under an ingest root, in NUMERIC batch order,
-    * not lexicographic ("b10" < "b2" as strings): segment order is LSM
+  /** The `_COMPLETE`-marked `<prefix><n>` dirs under `dir` — an ingest
+    * root's segments (`b<n>`) or tombstones (`t<n>`) — in NUMERIC order,
+    * not lexicographic ("b10" < "b2" as strings): that order is LSM
     * recency order, which tombstone boundaries depend on for any caller
     * composing these roots.
     */
-  private def completeSegments(segRoot: String): Seq[String] =
-    Afs.listStatus(segRoot)
+  private[ops] def completeDirs(dir: String, prefix: String): Seq[String] =
+    Afs.listStatus(dir)
       .filter(st => st.isDirectory && Afs.exists(s"${st.getPath}/_COMPLETE"))
-      .sortBy(_.getPath.getName.stripPrefix("b").toLong)
+      .sortBy(_.getPath.getName.stripPrefix(prefix).toLong)
       .map(_.getPath.toString).toIndexedSeq
 
-  /** The reader view of an auto-maintained ingest root: (serving base,
-    * not-yet-folded complete segments, folded segment names). The base
-    * is the CURRENT fold under `maintRoot` when one exists (its
-    * `_SEGMENTS` manifest — written before the fold's `_SUCCESS`, so
-    * atomic with the version — says which segments it already contains),
+  /** A fold's `_SEGMENTS` manifest: one absorbed segment name per line,
+    * each consumed tombstone as a `ts:<name>` line. Cumulative — every
+    * fold restates what the fold it replaces had absorbed.
+    */
+  private[ops] def writeManifest(vdir: String, segs: Seq[String],
+      tombstones: Iterable[String]): Unit =
+    Afs.writeString(s"$vdir/_SEGMENTS",
+      (segs ++ tombstones.map("ts:" + _)).mkString("\n"))
+
+  /** (segment names, tombstone names) a version's manifest records — the
+    * one decoder of the `ts:` encoding ([[writeManifest]]). Throws when
+    * the manifest is absent or unreadable.
+    */
+  private[ops] def readManifest(dir: String): (Seq[String], Set[String]) = {
+    val (ts, segs) = Afs.readString(s"$dir/_SEGMENTS").split("\n").toSeq
+      .filter(_.nonEmpty).partition(_.startsWith("ts:"))
+    (segs, ts.map(_.stripPrefix("ts:")).toSet)
+  }
+
+  /** The reader view of an ingest root ([[servingStateOf]]): the serving
+    * base, the complete segments it does not contain, and what the
+    * serving fold's manifest records it absorbed — segment names and
+    * consumed tombstone names (both empty for the frozen build base).
+    */
+  private[ops] final case class ServingState(base: String, unfolded: Seq[String],
+      foldedSegs: Seq[String], foldedTs: Set[String])
+
+  /** The reader view of an auto-maintained ingest root (segments under
+    * `root/segments`, folds under `root/maint`). The base is the
+    * CURRENT fold under `root/maint` when one exists (its `_SEGMENTS`
+    * manifest — written before the fold's `_SUCCESS`, so atomic with the
+    * version — says which segments and tombstones it already contains),
     * else the frozen build base. Consistent under any fold/ingest
     * interleaving: the fold is immutable once resolved, its manifest is
     * part of it, and segments only ever get ADDED to the listing.
     */
-  private[ops] def servingStateOf(baseDir: String, segRoot: String,
-      maintRoot: String): (String, Seq[String], Seq[String]) = {
-    val segs = completeSegments(segRoot)
-    currentVersion(maintRoot) match {
+  private[ops] def servingStateOf(baseDir: String, root: String): ServingState = {
+    val segs = completeDirs(s"$root/segments", "b")
+    resolveVersion(s"$root/maint") match {
       case Some(fold) =>
         // The manifest read FAILS LOUD: defaulting a transient IO error
         // to "fold contains nothing" would make the reader union the
         // fold with segments it already contains — silent duplicate
         // serving (review r13). The manifest is written before the
         // fold's _SUCCESS, so a resolvable fold always has one.
-        val already =
-          Afs.readString(s"$fold/_SEGMENTS").split("\n").toSeq.filter(_.nonEmpty)
-        val name = (p: String) => new org.apache.hadoop.fs.Path(p).getName
-        (fold, segs.filterNot(p => already.contains(name(p))), already)
-      case None => (baseDir, segs, Nil)
+        val (foldedSegs, foldedTs) = readManifest(fold)
+        ServingState(fold, segs.filterNot(p => foldedSegs.contains(nameOf(p))),
+          foldedSegs, foldedTs)
+      case None => ServingState(baseDir, segs, Nil, Set.empty)
     }
   }
-
-  /** CURRENT resolution for an EXPLICIT root, from disk exactly as a
-    * foreign JVM would — the race specs' hook (maintain/publish vs a
-    * live reader loop).
-    */
-  private[ops] def resolveVersion(root: String): Option[String] =
-    currentVersion(root)
 
   /** Evaluate several independent census counts as CONCURRENT jobs
     * (r16, guide §2.6 — actions are only sequential because the driver

@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
 object IvfPq {
 
   import AnnIndex.{K, Nprobe, LloydSteps, TopK, Mpq, Kpq, Sub, Pool,
-    FilteredNprobe, MaxProbes, IndexCrypto}
+    FilteredNprobe, MaxProbes, IndexCrypto, nameOf}
 
   /** The composed artifact's list columns, in canonical order. */
   private val ListCols: Seq[String] =
@@ -294,25 +294,20 @@ object IvfPq {
       .orderBy("probe_id", "rnk")
   }
 
-  /** Q134 serve path: any (id, vector) probe frame against this
-    * dataset's composed index.
+  /** Q134 serve path: the registered probe set against this dataset's
+    * composed index.
     */
-  def probe(s: SparkSession, d: String, probeDf: DataFrame): DataFrame =
-    probeSegments(s, Seq(build(s, d)), probeDf)
-
-  def probe(s: SparkSession, d: String): DataFrame =
-    probe(s, d, AnnIndex.defaultProbes(s, d))
+  private[ops] def probe(s: SparkSession, d: String): DataFrame =
+    probeSegments(s, Seq(build(s, d)), AnnIndex.defaultProbes(s, d))
 
   /** Metadata-filtered composed serve — the q130/q131 pre-filter shape:
     * the predicate evaluates inside the pruned codes scan, nprobe widens
     * per the IVF compensation rule.
     */
-  def probeFiltered(s: SparkSession, d: String, attrFilter: Column,
-      probeDf: DataFrame): DataFrame =
-    probeSegments(s, Seq(build(s, d)), probeDf, attrFilter = Some(attrFilter))
-
-  def probeFiltered(s: SparkSession, d: String, attrFilter: Column): DataFrame =
-    probeFiltered(s, d, attrFilter, AnnIndex.defaultProbes(s, d))
+  private[ops] def probeFiltered(s: SparkSession, d: String,
+      attrFilter: Column): DataFrame =
+    probeSegments(s, Seq(build(s, d)), AnnIndex.defaultProbes(s, d),
+      attrFilter = Some(attrFilter))
 
   // ---- distributed serve -------------------------------------------------
 
@@ -492,14 +487,6 @@ object IvfPq {
         round(col("cos"), 4).as("cosine"))
   }
 
-  /** Distributed composed serve against this dataset's index (optionally
-    * attribute-pre-filtered — FilteredNprobe widening applies, like
-    * every filtered serve).
-    */
-  def probeDistributed(s: SparkSession, d: String, probeDf: DataFrame,
-      attrFilter: Option[Column] = None): DataFrame =
-    probeDistributedSegments(s, Seq(build(s, d)), probeDf, attrFilter = attrFilter)
-
   // ---- lifecycle -------------------------------------------------------
   //
   // Every lifecycle entry point takes an optional [[IndexCrypto]] so the
@@ -534,17 +521,12 @@ object IvfPq {
     * collects; masks anti-joined out under the LSM recency-boundary
     * rule; ONE exchange on cid; untouched base lists carry over
     * file-level) over the single-table artifact, plus the unchanged
-    * trained-table copies (nothing retrains).
+    * trained-table copies (nothing retrains). `stamp` runs on the
+    * version before its `_SUCCESS`.
     */
   private[ops] def compactSegments(s: SparkSession, baseDir: String,
-      segDirs: Seq[String], tss: Seq[(DataFrame, Int)],
-      outRoot: String, crypto: Option[IndexCrypto] = None): String =
-    foldVersion(s, baseDir, segDirs, tss, outRoot, crypto, stamp = _ => ())
-
-  /** [[compactSegments]] with `stamp` run on the version before `_SUCCESS`. */
-  private def foldVersion(s: SparkSession, baseDir: String,
       segDirs: Seq[String], tss: Seq[(DataFrame, Int)], outRoot: String,
-      crypto: Option[IndexCrypto], stamp: String => Unit): String = {
+      crypto: Option[IndexCrypto] = None, stamp: String => Unit = _ => ()): String = {
     GraftFunctions.register(s)
     AnnIndex.publishVersion(outRoot) { vdir =>
       AnnIndex.foldPartitionedArtifact(s, baseDir, segDirs, tss,
@@ -556,21 +538,17 @@ object IvfPq {
   }
 
   /** The drift-triggered maintenance pass over a composed LSM state —
-    * three steps on the f4 artifact: fold and
+    * three steps on the composed artifact: fold and
     * publish; drift-check the fold's own stored assignments (no
     * re-assignment pass); retrain from the folded live set behind the
-    * same CURRENT pointer only when the monitor fires.
+    * same CURRENT pointer only when the monitor fires. `stamp` runs on
+    * every version it publishes.
     */
   private[ops] def maintain(s: SparkSession, baseDir: String,
-      segDirs: Seq[String], tss: Seq[(DataFrame, Int)],
-      outRoot: String, crypto: Option[IndexCrypto] = None): AnnIndex.MaintainResult =
-    maintainStamped(s, baseDir, segDirs, tss, outRoot, crypto, stamp = _ => ())
-
-  /** [[maintain]] with `stamp` run on every version it publishes. */
-  private def maintainStamped(s: SparkSession, baseDir: String,
       segDirs: Seq[String], tss: Seq[(DataFrame, Int)], outRoot: String,
-      crypto: Option[IndexCrypto], stamp: String => Unit): AnnIndex.MaintainResult = {
-    val folded = foldVersion(s, baseDir, segDirs, tss, outRoot, crypto, stamp)
+      crypto: Option[IndexCrypto] = None,
+      stamp: String => Unit = _ => ()): AnnIndex.MaintainResult = {
+    val folded = compactSegments(s, baseDir, segDirs, tss, outRoot, crypto, stamp)
     val lists = AnnIndex.readArtifact(s, s"$folded/ivfpq_lists", crypto)
     val rep = AnnIndex.retrainCheckAssigned(s, folded,
       lists.select(col("cid"), col("e")), crypto)
@@ -599,30 +577,30 @@ object IvfPq {
     * enqueue racing an interleaved fold) re-resolve victim cids against
     * the current centroids and exempt re-adds the interleaved fold
     * absorbed, so no newer upsert is ever physically dropped and no
-    * victim can ghost through an untouched-list carry-over. Consumed
-    * tombstones are recorded in the manifest as `ts:<name>` lines so
-    * the reader view stops masking them (the fold made the drop
-    * physical).
+    * victim can ghost through an untouched-list carry-over. The
+    * manifest ([[AnnIndex.writeManifest]]) restates what the base had
+    * absorbed (`foldedSegs`, `foldedTs`) and adds `segDirs` and the
+    * consumed tombstones, so the reader view stops masking them (the
+    * fold made the drop physical).
     */
   private[ops] def maintainWithManifest(s: SparkSession, baseDir: String,
-      segDirs: Seq[String], outRoot: String, alreadyFolded: Seq[String],
+      segDirs: Seq[String], outRoot: String, foldedSegs: Seq[String],
+      foldedTs: Set[String] = Set.empty,
       crypto: Option[IndexCrypto] = None,
       tsPending: Seq[PendingTombstone] = Nil,
       segRoot: String = ""): AnnIndex.MaintainResult = {
     GraftFunctions.register(s)
-    val name = (p: String) => new org.apache.hadoop.fs.Path(p).getName
-    val manifest = (alreadyFolded ++ segDirs.map(name) ++
-      tsPending.map("ts:" + _.name)).mkString("\n")
     val tss: Seq[(DataFrame, Int)] = tsPending.map(ts =>
       resolveTombstoneMask(s, baseDir, segDirs, segRoot, ts, crypto,
         needCids = true))
-    maintainStamped(s, baseDir, segDirs, tss, outRoot, crypto,
-      stamp = v => Afs.writeString(s"$v/_SEGMENTS", manifest))
+    maintain(s, baseDir, segDirs, tss, outRoot, crypto,
+      stamp = v => AnnIndex.writeManifest(v, foldedSegs ++ segDirs.map(nameOf),
+        foldedTs ++ tsPending.map(_.name)))
   }
 
   /** One composed-segment writer against `artifactBase`'s trained tables
     * (collected once per JVM by the immutable-artifact cache) — the
-    * shared `writeSegment` closure of every f4 ingest loop.
+    * shared `writeSegment` closure of every composed ingest loop.
     */
   private def segmentWriter(crypto: Option[IndexCrypto])
       : (SparkSession, DataFrame, String, String) => Unit =
@@ -649,8 +627,7 @@ object IvfPq {
       root: String, segName: String, batch: DataFrame,
       crypto: Option[IndexCrypto] = None): String = {
     GraftFunctions.register(s)
-    val (artifactBase, _, _) =
-      AnnIndex.servingStateOf(baseDir, s"$root/segments", s"$root/maint")
+    val artifactBase = AnnIndex.servingStateOf(baseDir, root).base
     val seg = s"$root/segments/$segName"
     Afs.delete(s"$seg/_COMPLETE")
     segmentWriter(crypto)(s, batch, artifactBase, seg)
@@ -661,7 +638,7 @@ object IvfPq {
   /** Continuous composed-segment ingest WITH the maintenance loop wired
     * in — q128's streaming discipline (checkpointed micro-batches,
     * replay-idempotent overwrites, `_COMPLETE` markers, no-data-batch
-    * suppression) on the f4 artifact, through the shared
+    * suppression) on the composed artifact, through the shared
     * [[AnnIndex.streamIngestCore]]: each micro-batch assigns AND encodes
     * against the CURRENT serving base's trained tables (re-resolved per
     * batch, so a fold's retrain can never mix centroid/codebook spaces)
@@ -689,11 +666,10 @@ object IvfPq {
       // mid-stream is masked by the serve path until the next
       // threshold-fired fold makes it physical — the same
       // write-then-fold LSM discipline as the segments themselves.
-      maintainStep = (ss, curBase, unfolded, maintRoot, already) => {
-        val foldedTs = already.filter(_.startsWith("ts:"))
-          .map(_.stripPrefix("ts:")).toSet
-        maintainWithManifest(ss, curBase, unfolded, maintRoot, already,
-          crypto, pendingTombstones(ss, root, foldedTs, crypto),
+      maintainStep = (ss, st) => {
+        maintainWithManifest(ss, st.base, st.unfolded, s"$root/maint",
+          st.foldedSegs, st.foldedTs, crypto,
+          pendingTombstones(ss, root, st.foldedTs, crypto),
           segRoot = s"$root/segments"): Unit
         // Every fold is also the GC point: consumed tombstone dirs and
         // absorbed segment dirs past grace are dead weight (r14 verdict
@@ -701,14 +677,11 @@ object IvfPq {
         gcIngestRoot(ss, root, baseDir, crypto)
       },
       afterBatch = afterBatch): Unit
-    val (b, unfolded, _) =
-      AnnIndex.servingStateOf(baseDir, s"$root/segments", s"$root/maint")
-    (b, unfolded)
+    val st = AnnIndex.servingStateOf(baseDir, root)
+    (st.base, st.unfolded)
   }
 
   // ---- streaming deletes (r13 verdict item 4) ----------------------------
-
-  private val tsSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Enqueue a tombstone segment against a live ingest root: victims
     * (vec_id, e, …) are recorded with their cid resolved against the
@@ -725,6 +698,14 @@ object IvfPq {
     * `_COMPLETE` lands last, so a reader never sees a partial
     * tombstone; with `crypto` the victims' embeddings are encrypted
     * under the `ivfpq_tombstones` policy like every other derived form.
+    *
+    * The `t<n>` name is claimed ([[graft.io.Afs.claim]]) above every
+    * name on disk AND every consumed name the serving fold's manifest
+    * records: the fold-point GC ([[gcIngestRoot]]) sweeps consumed dirs
+    * and their claims, so a writer numbering from the listing alone (a
+    * second JVM on the root, or a restarted one) would reuse a consumed
+    * name, and [[pendingTombstones]] would read the fresh delete as
+    * already folded — silently lost.
     *
     * The tombstone's coverage is recorded by IDENTITY, never by
     * position (r14 ADVICE): `_BASE` names the serving base and `_SEGS`
@@ -744,30 +725,19 @@ object IvfPq {
     * contracts guarantee (fail-loud) that nothing newer than the
     * delete is ever masked.
     */
-  def enqueueTombstones(s: SparkSession, baseDir: String, root: String,
+  private[ops] def enqueueTombstones(s: SparkSession, baseDir: String, root: String,
       victims: DataFrame, crypto: Option[IndexCrypto] = None): String = {
     GraftFunctions.register(s)
-    val (curBase, unfolded, _) =
-      AnnIndex.servingStateOf(baseDir, s"$root/segments", s"$root/maint")
-    val tsRoot = s"$root/tsq"
-    Afs.mkdirs(tsRoot)
-    var n = tsSeq.incrementAndGet()
-    var attempts = 0
-    while (!Afs.createExclusive(s"$tsRoot/t$n._CLAIM")) {
-      n = tsSeq.incrementAndGet(); attempts += 1
-      if (attempts >= AnnIndex.ClaimAttemptCap) throw new java.io.IOException(
-        s"tombstone claim loop lost $attempts consecutive claims under $tsRoot")
-    }
-    val dir = s"$tsRoot/t$n"
-    val cents = AnnIndex.readCentroids(s, curBase, crypto)
+    val st = AnnIndex.servingStateOf(baseDir, root)
+    val dir = Afs.claim(s"$root/tsq", "t", taken = st.foldedTs)
+    val cents = AnnIndex.readCentroids(s, st.base, crypto)
     AnnIndex.writeArtifact(
       AnnIndex.assignCids(victims.select(col("vec_id"), col("e")), cents)
         .select(col("vec_id"), col("cid"), col("e"))
         .coalesce(1).write,
       s"$dir/tombstones", "ivfpq_tombstones", crypto)
-    val name = (p: String) => new org.apache.hadoop.fs.Path(p).getName
-    Afs.writeString(s"$dir/_SEGS", unfolded.map(name).mkString("\n"))
-    Afs.writeString(s"$dir/_BASE", curBase)
+    Afs.writeString(s"$dir/_SEGS", st.unfolded.map(nameOf).mkString("\n"))
+    Afs.writeString(s"$dir/_BASE", st.base)
     Afs.touch(s"$dir/_COMPLETE")
     dir
   }
@@ -785,30 +755,23 @@ object IvfPq {
     */
   private[ops] def pendingTombstones(s: SparkSession, root: String,
       foldedTs: Set[String], crypto: Option[IndexCrypto])
-      : Seq[PendingTombstone] = {
-    val tsRoot = s"$root/tsq"
-    Afs.listStatus(tsRoot)
-      .filter(st => st.isDirectory && Afs.exists(s"${st.getPath}/_COMPLETE"))
-      .sortBy(_.getPath.getName.stripPrefix("t").toLong)
-      .map(_.getPath.toString)
-      .filterNot(p => foldedTs.contains(new org.apache.hadoop.fs.Path(p).getName))
+      : Seq[PendingTombstone] =
+    AnnIndex.completeDirs(s"$root/tsq", "t")
+      .filterNot(p => foldedTs.contains(nameOf(p)))
       .map { p =>
         PendingTombstone(
-          new org.apache.hadoop.fs.Path(p).getName,
+          nameOf(p),
           AnnIndex.readArtifact(s, s"$p/tombstones", crypto),
           Afs.readString(s"$p/_SEGS").split("\n").filter(_.nonEmpty).toSet,
           Afs.readString(s"$p/_BASE").trim)
       }
-  }
 
-  /** Segment names a fold manifest records (its `ts:` lines are
-    * tombstones, not segments); an absent manifest — the original build
-    * base — contains none.
+  /** Segment names a fold manifest records; an absent manifest — the
+    * original build base — contains none.
     */
   private def manifestSegs(dir: String): Set[String] =
     if (!Afs.exists(s"$dir/_SEGMENTS")) Set.empty[String]
-    else Afs.readString(s"$dir/_SEGMENTS").split("\n")
-      .filter(n => n.nonEmpty && !n.startsWith("ts:")).toSet
+    else AnnIndex.readManifest(dir)._1.toSet
 
   /** Translate a pending tombstone's enqueue-time coverage into an
     * exact (mask frame, recency boundary) against the CURRENT
@@ -859,11 +822,10 @@ object IvfPq {
   private[ops] def resolveTombstoneMask(s: SparkSession, baseDir: String,
       segDirs: Seq[String], segRoot: String, ts: PendingTombstone,
       crypto: Option[IndexCrypto], needCids: Boolean): (DataFrame, Int) = {
-    val name = (p: String) => new org.apache.hadoop.fs.Path(p).getName
-    val prefix = segDirs.takeWhile(p => ts.segNames.contains(name(p)))
-    require(segDirs.drop(prefix.size).forall(p => !ts.segNames.contains(name(p))),
+    val prefix = segDirs.takeWhile(p => ts.segNames.contains(nameOf(p)))
+    require(segDirs.drop(prefix.size).forall(p => !ts.segNames.contains(nameOf(p))),
       s"tombstone ${ts.name} covers a non-prefix of the current segment " +
-        s"order (${segDirs.map(name).mkString(",")} vs ${ts.segNames
+        s"order (${segDirs.map(nameOf).mkString(",")} vs ${ts.segNames
           .mkString(",")}) — the serial segment-landing invariant broke")
     val boundary = 1 + prefix.size
     val frame =
@@ -935,21 +897,17 @@ object IvfPq {
     */
   private[ops] def gcIngestRoot(s: SparkSession, root: String,
       baseDir: String, crypto: Option[IndexCrypto] = None): Unit = {
-    val (_, _, already) =
-      AnnIndex.servingStateOf(baseDir, s"$root/segments", s"$root/maint")
-    val foldedTs = already.filter(_.startsWith("ts:"))
-      .map(_.stripPrefix("ts:")).toSet
-    if (pendingTombstones(s, root, foldedTs, crypto).nonEmpty) return
-    val foldedSegs = already.filterNot(_.startsWith("ts:")).toSet
+    val st = AnnIndex.servingStateOf(baseDir, root)
+    if (pendingTombstones(s, root, st.foldedTs, crypto).nonEmpty) return
     val now = System.currentTimeMillis()
     def ripe(p: String): Boolean = Afs.exists(s"$p/_COMPLETE") &&
       Afs.mtime(s"$p/_COMPLETE").forall(t => now - t >= AnnIndex.RetireGraceMs)
     Afs.listStatus(s"$root/segments")
-      .filter(st => st.isDirectory && foldedSegs.contains(st.getPath.getName))
+      .filter(f => f.isDirectory && st.foldedSegs.contains(f.getPath.getName))
       .map(_.getPath.toString).filter(ripe)
       .foreach(Afs.delete)
     Afs.listStatus(s"$root/tsq")
-      .filter(st => st.isDirectory && foldedTs.contains(st.getPath.getName))
+      .filter(f => f.isDirectory && st.foldedTs.contains(f.getPath.getName))
       .map(_.getPath.toString).filter(ripe)
       .foreach { p => Afs.delete(p); Afs.delete(s"$p._CLAIM") }
   }
@@ -962,28 +920,25 @@ object IvfPq {
     * resolved, its manifest names both the segments and the tombstones
     * it consumed, and newer segments/tombstones only ever ADD.
     */
-  private[graft] def servingView(s: SparkSession, baseDir: String, root: String,
+  private[ops] def servingView(s: SparkSession, baseDir: String, root: String,
       crypto: Option[IndexCrypto] = None)
       : (String, Seq[String], Seq[(DataFrame, Int)]) = {
-    val (b, unfolded, already) =
-      AnnIndex.servingStateOf(baseDir, s"$root/segments", s"$root/maint")
-    val foldedTs = already.filter(_.startsWith("ts:"))
-      .map(_.stripPrefix("ts:")).toSet
+    val st = AnnIndex.servingStateOf(baseDir, root)
     // Identity-resolved masks (r14 ADVICE): a pending tombstone whose
     // base moved (fold raced the enqueue) must not transiently mask
     // segments that landed after it — the reader view applies the same
     // exact translation (and contract checks) the consuming fold will.
-    val pend = pendingTombstones(s, root, foldedTs, crypto)
-      .map(ts => resolveTombstoneMask(s, b, unfolded, s"$root/segments",
+    val pend = pendingTombstones(s, root, st.foldedTs, crypto)
+      .map(ts => resolveTombstoneMask(s, st.base, st.unfolded, s"$root/segments",
         ts, crypto, needCids = false))
-    (b, unfolded, pend)
+    (st.base, st.unfolded, pend)
   }
 
   /** Serve the live view of an ingest root — fold/base ∪ unfolded
     * segments, pending deletes masked: the read path a stream-ingested,
     * delete-accepting index answers probes from between folds.
     */
-  def probeServing(s: SparkSession, baseDir: String, root: String,
+  private[ops] def probeServing(s: SparkSession, baseDir: String, root: String,
       probeDf: DataFrame, crypto: Option[IndexCrypto] = None): DataFrame = {
     val (b, unfolded, tss) = servingView(s, baseDir, root, crypto)
     probeSegments(s, b +: unfolded, probeDf, tss, crypto = crypto)
@@ -1055,7 +1010,7 @@ object IvfPq {
       // re-encrypts them under the fold's fresh write conf — rotate
       // their roots separately if the interval matters.
       if (Afs.exists(s"$cur/_SEGMENTS"))
-        Afs.copyFile(s"$cur/_SEGMENTS", s"$vdir/_SEGMENTS")
+        Afs.copyTree(s"$cur/_SEGMENTS", s"$vdir/_SEGMENTS")
       // Verify ALL THREE artifacts before the flip, through FRESH
       // unwraps (the read-side KEK cache would otherwise satisfy this
       // from pre-rotation entries): every rewrite must decrypt and hold
@@ -1171,7 +1126,7 @@ object IvfPq {
     })
   }
 
-  /** f4 base index over the 90% slice — a one-time dataset-keyed
+  /** Composed base index over the 90% slice — a one-time dataset-keyed
     * fixture: the append/compact/stream lines price their OPERATION,
     * never a rebuild.
     */
@@ -1186,7 +1141,7 @@ object IvfPq {
     * segment against the frozen base — republished per call, so q113
     * prices the append every run.
     */
-  def appendDelta(s: SparkSession, d: String): (String, String) = {
+  private[ops] def appendDelta(s: SparkSession, d: String): (String, String) = {
     val baseDir = ensureAppendBase(s, d)
     val batch = AnnIndex.batchSlice(AnnIndex.corpus(s, d))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1210,7 +1165,7 @@ object IvfPq {
   /** Fold base + the (fresh) delta into one physical composed index —
     * q127's priced operation.
     */
-  def compact(s: SparkSession, d: String): String = {
+  private[ops] def compact(s: SparkSession, d: String): String = {
     val (baseDir, deltaDir) = appendDelta(s, d)
     compactSegments(s, baseDir, Seq(deltaDir), Nil,
       AnnIndex.shmDir(Tables.datasetTag(d) + "/ivfpq_append_compacted"))
@@ -1220,7 +1175,7 @@ object IvfPq {
     * base AND delta — [[AnnIndex.deleteSlice]]) and fold the drop
     * physical — q129's priced operation.
     */
-  def compactWithDeletes(s: SparkSession, d: String): String = {
+  private[ops] def compactWithDeletes(s: SparkSession, d: String): String = {
     val (baseDir, deltaDir) = appendDelta(s, d)
     val tsDir = AnnIndex.tombstonesFor(s, baseDir,
       AnnIndex.deleteSlice(AnnIndex.corpus(s, d)),
@@ -1246,7 +1201,7 @@ object IvfPq {
   }
 
   /** Stream the 10% slice into composed delta segments against the
-    * frozen f4 base (no auto-maintain — q128 prices the INGEST, the
+    * frozen composed base (no auto-maintain — q128 prices the INGEST, the
     * fold has its own line), through the shared ingest core.
     */
   private[ops] def streamIngestInto(s: SparkSession, d: String,
@@ -1266,7 +1221,7 @@ object IvfPq {
       AnnIndex.batchSlice(AnnIndex.corpus(s, d)), root,
       AnnIndex.StreamFiles, 0,
       writeSegment = segmentWriter(None),
-      maintainStep = (_, _, _, _, _) => (),
+      maintainStep = (_, _) => (),
       srcDirOverride = Some(srcFixture))
     (baseDir, segs)
   }
@@ -1345,7 +1300,7 @@ object IvfPq {
     * The census reads back with an INTERNAL token, the privilege every
     * index column needs; conservation-oracled like q133.
     */
-  val q110: Q = Q(
+  private[ops] val q110: Q = Q(
     "q110_ann_index_build",
     (s, d) => {
       val crypto = registryCrypto
@@ -1364,7 +1319,7 @@ object IvfPq {
     * none is there. Approximate → rows-only oracle check; IvfPqSpec
     * pins its rows equal to q134's and its recall floor.
     */
-  val q111: Q = Q("q111_ann_ivf_probe",
+  private[ops] val q111: Q = Q("q111_ann_ivf_probe",
     (s, d) => {
       val crypto = registryCrypto
       val root = encryptedRoot(d)
@@ -1380,7 +1335,7 @@ object IvfPq {
     * fixtures). Approximate → rows-only; IvfPqSpec pins multi-segment
     * serve equality and the per-segment cid pruning.
     */
-  val q112: Q = Q("q112_ann_pq_probe",
+  private[ops] val q112: Q = Q("q112_ann_pq_probe",
     (s, d) => {
       val (b, delta) = ensureAppendState(s, d)
       probeSegments(s, Seq(b, delta), AnnIndex.defaultProbes(s, d))
@@ -1392,7 +1347,7 @@ object IvfPq {
     * segment (no Lloyd, no training — [[appendSegment]]). Census
     * oracled on conservation: base + delta cover the corpus exactly.
     */
-  val q113: Q = Q(
+  private[ops] val q113: Q = Q(
     "q113_ann_index_append",
     (s, d) => {
       val (baseDir, deltaDir) = appendDelta(s, d)
@@ -1404,7 +1359,7 @@ object IvfPq {
     * merge through ONE exchange, untouched lists carry over file-level,
     * nothing retrains ([[compactSegments]]). Conservation-oracled.
     */
-  val q127: Q = Q(
+  private[ops] val q127: Q = Q(
     "q127_ann_index_compact",
     (s, d) => artifactCensus(s, compact(s, d)),
     Some(ConservationSql))
@@ -1415,19 +1370,11 @@ object IvfPq {
     * root per invocation, deleted after the census). Conservation-
     * oracled across base + all streamed segments.
     */
-  val q128: Q = Q(
+  private[ops] val q128: Q = Q(
     "q128_ann_stream_ingest",
     (s, d) => {
-      val base = AnnIndex.shmDir(Tables.datasetTag(d) + "/ivfpq_stream_runs")
-      Afs.mkdirs(base)
-      var n = streamRunSeq.incrementAndGet()
-      var attempts = 0
-      while (!Afs.createExclusive(s"$base/run-$n._CLAIM")) {
-        n = streamRunSeq.incrementAndGet(); attempts += 1
-        if (attempts >= AnnIndex.ClaimAttemptCap) throw new java.io.IOException(
-          s"stream-run claim loop lost $attempts consecutive claims under $base")
-      }
-      val root = s"$base/run-$n"
+      val root = Afs.claim(
+        AnnIndex.shmDir(Tables.datasetTag(d) + "/ivfpq_stream_runs"), "run-")
       try {
         val (baseDir, segs) = streamIngestInto(s, d, root)
         segmentCensus(s, baseDir, segs)
@@ -1435,14 +1382,12 @@ object IvfPq {
     },
     Some(ConservationSql))
 
-  private val streamRunSeq = new java.util.concurrent.atomic.AtomicLong()
-
   /** Q129 — tombstone deletes + delete-aware compaction on the composed
     * artifact ([[compactWithDeletes]]): a delete is a write (tombstone
     * records victim cids), the fold makes it physical with
     * delta-bounded work. EXACT oracle: every survivor, no victim.
     */
-  val q129: Q = Q(
+  private[ops] val q129: Q = Q(
     "q129_ann_index_delete",
     (s, d) => artifactCensus(s, compactWithDeletes(s, d)),
     Some(s"""SELECT 'ivf_centroids' AS artifact, CAST($K AS BIGINT) AS n_rows
@@ -1457,7 +1402,7 @@ object IvfPq {
     * rows-only; IvfPqSpec pins predicate purity, the full k surface,
     * the recall floor vs label-restricted exact truth, and the pushdown.
     */
-  val q130: Q = Q(
+  private[ops] val q130: Q = Q(
     "q130_ann_filtered_probe",
     (s, d) => probeFiltered(s, d, col("label") === 7),
     None)
@@ -1465,27 +1410,28 @@ object IvfPq {
   /** Q131 — the DISTRIBUTED filtered composed serve: a corpus-sized
     * probe frame served end-to-end as one lazy plan with the `label =
     * 7` pre-filter riding every segment's codes scan
-    * ([[probeDistributed]] with attrFilter — the serve-matrix cell the
-    * registry didn't price before). Approximate → rows-only; IvfPqSpec
-    * pins distributed ≡ collected on filtered frames.
+    * ([[probeDistributedSegments]] with attrFilter — the serve-matrix
+    * cell the registry didn't price before). Approximate → rows-only;
+    * IvfPqSpec pins distributed ≡ collected on filtered frames.
     */
-  val q131: Q = Q(
+  private[ops] val q131: Q = Q(
     "q131_ann_pq_filtered_probe",
     (s, d) => {
       val probes = AnnIndex.corpus(s, d)
         .select((col("vec_id") + lit(10000000L)).as("pid"), col("e").as("pe"))
-      probeDistributed(s, d, probes, Some(col("label") === 7))
+      probeDistributedSegments(s, Seq(build(s, d)), probes,
+        attrFilter = Some(col("label") === 7))
     },
     None)
 
   /** Q132 — the fully-distributed composed serve at reindex scale: 5
     * re-keyed corpus copies (larger than [[AnnIndex.MaxProbes]]) served
-    * through [[probeDistributed]] as one lazy plan, probes never
+    * through [[probeDistributedSegments]] as one lazy plan, probes never
     * materialized on the driver. Approximate → rows-only; IvfPqSpec
     * pins result equality with the collected path and the
     * no-LocalTableScan plan.
     */
-  val q132: Q = Q(
+  private[ops] val q132: Q = Q(
     "q132_ann_distributed_probe",
     (s, d) => {
       val reps = 5
@@ -1493,7 +1439,7 @@ object IvfPq {
         .crossJoin(broadcast(s.range(reps).toDF("r")))
         .select(((col("r") + 1) * lit(10000000L) + col("vec_id")).as("pid"),
           col("e").as("pe"))
-      probeDistributed(s, d, probes)
+      probeDistributedSegments(s, Seq(build(s, d)), probes)
     },
     None)
 
@@ -1502,7 +1448,7 @@ object IvfPq {
     * on conservation: every corpus vector appears exactly once in the
     * composed lists, trained tables keep their configured sizes.
     */
-  val q133: Q = Q(
+  private[ops] val q133: Q = Q(
     "q133_ann_ivfpq_build",
     (s, d) => artifactCensus(s, build(s, d, force = true)),
     Some(ConservationSql))
@@ -1513,7 +1459,7 @@ object IvfPq {
     * sf0.1), the cid partition pruning on BOTH scans, and that the ADC
     * scan's ReadSchema excludes the raw vectors.
     */
-  val q134: Q = Q("q134_ann_ivfpq_probe", (s, d) => probe(s, d), None)
+  private[ops] val q134: Q = Q("q134_ann_ivfpq_probe", (s, d) => probe(s, d), None)
 
   val queries: Seq[Q] = Seq(q110, q111, q112, q113, q127, q128, q129, q130,
     q131, q132, q133, q134)

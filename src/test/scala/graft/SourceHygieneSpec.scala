@@ -7,13 +7,13 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source hygiene: ONE local-session factory (`Graft.localSession`;
-  * `Verify` keeps its own builder because the oracle hashes were recorded
-  * under its confs), ONE Spark listener (`graft.obs.QueryMetrics`), ONE
-  * scratch-placement rule (`graft.io.Scratch`) and ONE crypto carrier in
-  * the ANN index (`AnnIndex.IndexCrypto`). A second builder, collector,
-  * private scratch root or raw crypto option map regrowing in a module
-  * fails here.
+/** Source hygiene: ONE local-session factory (`Graft.localSession`, whose
+  * closed set of shapes covers the bench, the oracle and the specs), ONE
+  * Spark listener (`graft.obs.QueryMetrics`), ONE scratch-placement rule
+  * (`graft.io.Scratch`), ONE crypto carrier in the ANN index
+  * (`AnnIndex.IndexCrypto`) and ONE claim loop (`graft.io.Afs.claim`). A
+  * second builder, collector, private scratch root, raw crypto option map
+  * or copied claim loop regrowing in a module fails here.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -42,9 +42,8 @@ class SourceHygieneSpec extends AnyFunSuite {
       strays.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n  "))
   }
 
-  test("SparkSession.builder() appears only in Graft.localSession and Verify") {
-    assertOnlyIn("""SparkSession\s*\.\s*builder\b""".r,
-      Set("graft/Graft.scala", "graft/Verify.scala"))
+  test("SparkSession.builder() appears only in Graft.localSession") {
+    assertOnlyIn("""SparkSession\s*\.\s*builder\b""".r, Set("graft/Graft.scala"))
   }
 
   test("the only SparkListener implementation is graft.obs.QueryMetrics") {
@@ -61,5 +60,9 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("under graft/ops the crypto conf maps are built only where IndexCrypto is defined") {
     assertOnlyIn("""\b(readConfMap|writeConfMap)\b""".r,
       Set("graft/ops/AnnIndex.scala"), under = "graft/ops/")
+  }
+
+  test("createExclusive is called only from the claim primitive's file") {
+    assertOnlyIn("""\bcreateExclusive\s*\(""".r, Set("graft/io/Afs.scala"))
   }
 }

@@ -14,15 +14,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Graft.localSession("4", Graft.SessionShape.Spec)
     // Register the custom-function surface up front: library helpers that
     // build `call_function(...)` columns (TextOps.fingerprint/langScore,
     // Dedup kernels) resolve at analysis time, and without this a
@@ -30,7 +22,6 @@ object SparkTestBase {
     // registered as a side effect. Deployment gets the same guarantee
     // from spark.sql.extensions=GraftSparkExtensions.
     graft.functions.GraftFunctions.register(s)
-    Graft.tune(s)
     s
   }
 }

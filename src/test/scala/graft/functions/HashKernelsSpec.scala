@@ -71,6 +71,28 @@ class HashKernelsSpec extends SparkTestBase {
     assert(crafted === 0L, "crafted edit pair violated l1 <= 2*dist")
   }
 
+  test("l1_diff fails loudly on unequal lengths, naming both") {
+    // Summing over the shorter input would silently drop the longer's
+    // tail. The kernel is what interpreted eval and generated code both
+    // call; the range query runs it through whole-stage codegen.
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val e = intercept[IllegalArgumentException](HashKernels.l1Diff(
+      new GenericArrayData(Array.fill[Byte](64)(1)),
+      new GenericArrayData(Array.fill[Byte](63)(1))))
+    assert(e.getMessage.contains("lengths 64 and 63"), e.getMessage)
+    val c = col("id").cast("tinyint")
+    val failed = intercept[Throwable](spark.range(4)
+      .select(GraftFunctions.l1Diff(array(c, c, c), array(c, c))).collect())
+    val msgs = Iterator.iterate(failed)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("lengths 3 and 2")), msgs.mkString(" | "))
+    // Equal lengths still sum.
+    val sums = spark.range(4)
+      .select(GraftFunctions.l1Diff(array(c, c), array(lit(0).cast("tinyint"), c)))
+      .collect().map(_.getLong(0)).toSeq
+    assert(sums == Seq(0L, 1L, 2L, 3L))
+  }
+
   test("q49 with the L1 prefilter == the same join without it") {
     // Result-identity pin for the r15 optimization: the prefilter is a
     // pure candidate prune, so removing it from the join condition must

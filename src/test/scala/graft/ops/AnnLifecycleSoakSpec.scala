@@ -205,10 +205,8 @@ class AnnLifecycleSoakSpec extends SparkTestBase {
       // fold ran after the enqueue) keep masking; consumed ones
       // (files>=2) must already be physically dropped from the fold.
       val fold = AnnIndex.resolveVersion(s"$ingestRoot/maint")
-      val foldedTs: Set[String] = fold.map(f =>
-        graft.io.Afs.readString(s"$f/_SEGMENTS").split("\n").toSeq
-          .filter(_.startsWith("ts:")).map(_.stripPrefix("ts:")).toSet)
-        .getOrElse(Set.empty)
+      val foldedTs: Set[String] =
+        fold.map(AnnIndex.readManifest(_)._2).getOrElse(Set.empty)
       val pend = IvfPq.pendingTombstones(spark, ingestRoot, foldedTs, None)
         .map { t =>
           // A pending tombstone here means no fold ran after its

@@ -314,7 +314,7 @@ class EncryptedAnnSpec extends SparkTestBase {
     // stream-ingest loop (this is the only root such an index serves
     // from, so rotating it must preserve the reader view).
     val folded = IvfPq.maintainWithManifest(spark, base, Seq(seg),
-      s"$root/maint", alreadyFolded = Nil, crypto).dir
+      s"$root/maint", foldedSegs = Nil, crypto = crypto).dir
     val manifest = graft.io.Afs.readString(s"$folded/_SEGMENTS")
     assert(manifest.nonEmpty)
     val rotated = IvfPq.rotateIndexKeys(spark, s"$root/maint", crypto.get, crypto)
@@ -324,8 +324,8 @@ class EncryptedAnnSpec extends SparkTestBase {
     // the folded segment from the union set.
     assert(graft.io.Afs.readString(s"$rotated/_SEGMENTS") == manifest,
       "rotation dropped or altered the _SEGMENTS manifest")
-    val (servedBase, unfolded, already) =
-      AnnIndex.servingStateOf(base, segRoot, s"$root/maint")
+    val st = AnnIndex.servingStateOf(base, root)
+    val (servedBase, unfolded, already) = (st.base, st.unfolded, st.foldedSegs)
     assert(servedBase == rotated)
     assert(unfolded.isEmpty, s"folded segment resurfaced as unfolded: $unfolded")
     assert(already.nonEmpty)

@@ -128,7 +128,7 @@ class IvfPqSpec extends SparkTestBase {
         col("e").as("pe"))
     val n = big.count()
     assert(n >= 10000L, "fixture must be a >=10k probe frame")
-    val dist = IvfPq.probeDistributed(spark, sfDir, big)
+    val dist = IvfPq.probeDistributedSegments(spark, Seq(IvfPq.build(spark, sfDir)), big)
     val plan = dist.queryExecution.executedPlan.toString
     assert(!plan.contains("LocalTableScan"),
       s"distributed composed serve materialized probes on the driver:\n$plan")

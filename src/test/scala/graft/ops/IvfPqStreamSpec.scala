@@ -33,7 +33,6 @@ class IvfPqStreamSpec extends SparkTestBase {
     val ingestIds = 1000L until 1024L
     val universe = (baseIds ++ ingestIds).toSet
     val baseDir = IvfPq.buildFrom(spark, frame(baseIds), s"$root/base")
-    val segRoot = s"$root/ingest/segments"
     val maintRoot = s"$root/ingest/maint"
 
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -43,7 +42,8 @@ class IvfPqStreamSpec extends SparkTestBase {
     val reader = new Thread(() => {
       while (!stop) {
         try {
-          val (b, unfolded, _) = AnnIndex.servingStateOf(baseDir, segRoot, maintRoot)
+          val st = AnnIndex.servingStateOf(baseDir, s"$root/ingest")
+          val (b, unfolded) = (st.base, st.unfolded)
           val probes = Seq((probeId + 1000000L, vec(probeId))).toDF("pid", "pe")
           val res = IvfPq.probeSegments(spark, b +: unfolded, probes).collect()
           reads.incrementAndGet(): Unit
@@ -217,7 +217,7 @@ class IvfPqStreamSpec extends SparkTestBase {
     // enqueue) and never saw the tombstone (tsPending = Nil) — the base
     // moves, the tombstone stays pending with a stale base.
     IvfPq.maintainWithManifest(spark, baseDir, Seq(b0), maintRoot,
-      alreadyFolded = Nil, segRoot = s"$ingest/segments"): Unit
+      foldedSegs = Nil, segRoot = s"$ingest/segments"): Unit
     // b1 lands AFTER the enqueue (and after the tombstone's _COMPLETE —
     // the pairing discipline) re-adding one victim with a NEW vector:
     // that copy is fresher than the delete and must survive it.
@@ -248,15 +248,12 @@ class IvfPqStreamSpec extends SparkTestBase {
     // The consuming fold: resolves the identity coverage against the
     // MOVED base — drops the victims' old copies physically, keeps the
     // re-add that now sits at position 1 of the new ordering.
-    val (_, segsNow, already) =
-      AnnIndex.servingStateOf(baseDir, s"$ingest/segments", maintRoot)
-    val pending = IvfPq.pendingTombstones(spark, ingest,
-      already.filter(_.startsWith("ts:")).map(_.stripPrefix("ts:")).toSet, None)
+    val now = AnnIndex.servingStateOf(baseDir, ingest)
+    val pending = IvfPq.pendingTombstones(spark, ingest, now.foldedTs, None)
     assert(pending.size == 1, "tombstone should still be pending pre-consume")
-    IvfPq.maintainWithManifest(spark, b, segsNow, maintRoot, already,
-      tsPending = pending, segRoot = s"$ingest/segments"): Unit
-    val (b2, _, _) =
-      AnnIndex.servingStateOf(baseDir, s"$ingest/segments", maintRoot)
+    IvfPq.maintainWithManifest(spark, b, now.unfolded, maintRoot, now.foldedSegs,
+      now.foldedTs, tsPending = pending, segRoot = s"$ingest/segments"): Unit
+    val b2 = AnnIndex.servingStateOf(baseDir, ingest).base
     val lists = spark.read.parquet(s"$b2/ivfpq_lists")
     val got = lists.select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(got.size == got.distinct.size, "consuming fold duplicated ids")
@@ -271,6 +268,57 @@ class IvfPqStreamSpec extends SparkTestBase {
     assert(e == newVec, "the consuming fold kept the OLD copy of the re-add")
     val (_, _, pendAfter) = IvfPq.servingView(spark, baseDir, ingest)
     assert(pendAfter.isEmpty, "tombstone still pending after consumption")
+  }
+
+  test("a second writer's delete on a GC'd root stays pending and masked until the next fold drops it") {
+    // The state a long-running ingest root reaches, and that a second
+    // (or restarted) JVM finds: the serving fold's cumulative manifest
+    // names consumed tombstones t1..tN, whose dirs and claims the
+    // fold-point GC already swept (tsq/ is empty). A writer that numbers
+    // tombstones from the listing alone, or from a per-JVM counter
+    // starting at 1, re-claims a consumed name, and the reader view then
+    // reads its fresh delete as already folded: the victim is served
+    // again and the next fold never drops it. N sits far above any
+    // number this JVM has claimed.
+    import spark.implicits._
+    val root = Scratch.fresh("ivfpq-ts-reuse")
+    val ingest = s"$root/ingest"
+    val baseIds = 0L until 64L
+    val baseDir = IvfPq.buildFrom(spark, frame(baseIds), s"$root/base")
+    val consumed = 500
+    val fold = AnnIndex.publishVersion(s"$ingest/maint") { v =>
+      Seq("ivf_centroids", "pq_codebook", "ivfpq_lists")
+        .foreach(a => graft.io.Afs.copyTree(s"$baseDir/$a", s"$v/$a"))
+      graft.io.Afs.writeString(s"$v/_SEGMENTS",
+        (1 to consumed).map(n => s"ts:t$n").mkString("\n"))
+    }
+    graft.io.Afs.mkdirs(s"$ingest/tsq")
+
+    val victim = 7L
+    val ts = IvfPq.enqueueTombstones(spark, baseDir, ingest, frame(Seq(victim)))
+    val (b, unfolded, pend) = IvfPq.servingView(spark, baseDir, ingest)
+    assert(b == fold && unfolded.isEmpty, s"unexpected view: $b, $unfolded")
+    assert(pend.size == 1,
+      s"the fresh delete $ts reads as already folded — its name was reused")
+    val probe = Seq((victim + 1000000L, vec(victim))).toDF("pid", "pe")
+    val res = IvfPq.probeServing(spark, baseDir, ingest, probe).collect()
+    assert(res.length == AnnIndex.TopK)
+    assert(!res.exists(_.getLong(1) == victim),
+      "deleted id served while its tombstone is pending")
+
+    // The next fold consumes the delete and makes the drop physical.
+    val ingestIds = 1000L until 1008L
+    val (finalBase, left) = IvfPq.streamIngestWithMaintain(spark, baseDir,
+      frame(ingestIds), ingest, nFiles = 1, every = 1)
+    assert(left.isEmpty, s"expected the segment folded, left: $left")
+    val (_, _, pendAfter) = IvfPq.servingView(spark, baseDir, ingest)
+    assert(pendAfter.isEmpty, "tombstone still pending after the fold")
+    val got = spark.read.parquet(s"$finalBase/ivfpq_lists")
+      .select("vec_id").collect().map(_.getLong(0)).toSeq
+    val expect = (baseIds.toSet - victim) ++ ingestIds
+    assert(got.size == got.distinct.size, "fold duplicated ids")
+    assert(got.toSet == expect,
+      s"lost=${(expect -- got.toSet).take(5)} ghosts=${(got.toSet -- expect).take(5)}")
   }
 
   test("fold-point GC keeps a long-running ingest root bounded: folded segments and consumed tombstones are swept past grace") {
