@@ -175,9 +175,14 @@ object Bench {
     * much shuffle-file debris in the group's tmpfs local dir. Every
     * historical in-group victim (q22a r7; q40/q41 r8; q79/q80/q81 r9)
     * crosses at least one arm at sf0.01; plain scan/join/agg queries
-    * cross neither.
+    * cross neither. The r10 counts (threshold 11) included one
+    * schema-inference job per table load. Schemas are now resolved once
+    * per JVM (`graft.io.Parquet`, warmed by the shape pass's table scan),
+    * so each count fell by the query's warm loads; 10 keeps 30 of the 31
+    * queries the old rule isolated. q20 (11 -> 8 jobs: three loads) now
+    * sits below the 9-job q14/q22c/q84/q115, so no threshold keeps it.
     */
-  private val SoloJobs = 11L
+  private val SoloJobs = 10L
   private val SoloShuffleBytes = 1L << 21 // 2 MiB through exchanges at sf0.01
 
   private type QFn = (SparkSession, String) => org.apache.spark.sql.DataFrame

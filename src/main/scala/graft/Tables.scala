@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   *
   * Each scale-factor directory holds one parquet file per table. At cluster
   * scale these would be directories of many files / partitions; the API is
-  * identical (`spark.read.parquet` over a path), so nothing here changes at
-  * 100 TB — only the physical layout under the path does.
+  * identical (`graft.io.Parquet.read` over a path), so nothing here
+  * changes at 100 TB — only the physical layout under the path does.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,8 +18,9 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     // Session conf (ICU case mappings, nanos-as-long, bucketed-scan
     // ordering) is applied once per session by Graft.tune — every entry
-    // point calls it, so loaders no longer mutate conf per call.
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    // point calls it, so loaders no longer mutate conf per call. The
+    // schema is resolved once per JVM (graft.io.Parquet).
+    io.Parquet.read(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

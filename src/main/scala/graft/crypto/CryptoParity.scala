@@ -1,7 +1,7 @@
 package graft.crypto
 
 import graft.{Q, Tables}
-import graft.io.{EncryptedParquet, Scratch}
+import graft.io.{EncryptedParquet, Parquet, Scratch}
 import graft.kms.TestKmsServer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -190,7 +190,7 @@ object CryptoParity {
       graft.Tables.events(s, d)
         .select("event_id", "user_id", "event_type", "value")
         .write.parquet(srcDir)
-      val schema = s.read.parquet(srcDir).schema
+      val schema = Parquet.schema(s, srcDir)
       val s2 = s.newSession()
       // Loan pattern: s2's conf is restored even if the stream fails — a
       // leaked binding would encrypt every later parquet write on that

@@ -219,6 +219,23 @@ object Afs {
     if (!f.exists(pp)) Seq.empty else f.listStatus(pp).toSeq
   }
 
+  /** Every file under `p`, recursively: `p` itself when it names a file,
+    * the files below each match when it is a glob; empty when absent.
+    */
+  def filesUnder(p: String): Seq[FileStatus] = {
+    val pp = new Path(p)
+    val f = fsOf(pp)
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) f.listStatus(st.getPath).toSeq.flatMap(walk) else Seq(st)
+    Option(f.globStatus(pp)).toSeq.flatten.flatMap(walk)
+  }
+
+  /** `p` qualified with its filesystem's scheme and authority. */
+  def qualify(p: String): String = {
+    val pp = new Path(p)
+    fsOf(pp).makeQualified(pp).toString
+  }
+
   def mtime(p: String): Option[Long] = {
     val pp = new Path(p)
     val f = fsOf(pp)

@@ -107,13 +107,14 @@ object EncryptedParquet {
     * query actually projects — select() before an action keeps privilege
     * checks per-column, like the reference's scanner(columns=...)
     * (read_encrypted_parquet.py:43). Insufficient privilege surfaces as a
-    * KeyAccessDeniedException-caused job failure at action time.
+    * KeyAccessDeniedException-caused job failure at action time. The
+    * schema is resolved through [[Parquet.read]], keyed on the token: a
+    * token that cannot unwrap an encrypted footer fails at this call,
+    * every time, whatever another token's read left cached.
     */
   def read(spark: SparkSession, path: String, kmsUrl: String,
       accessToken: Option[String]): DataFrame =
-    spark.read
-      .options(EncryptionPolicy.readConfMap(kmsUrl, accessToken))
-      .parquet(path)
+    Parquet.read(spark, path, EncryptionPolicy.readConfMap(kmsUrl, accessToken))
 
   /** Order-independent content fingerprint of a dataset: row count plus
     * the sum of per-row xxhash64 over EVERY column (sorted by name). The

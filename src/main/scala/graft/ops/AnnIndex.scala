@@ -3,7 +3,7 @@ package graft.ops
 import graft.Tables
 import graft.crypto.{EncryptionPolicy, PrivilegeLevel}
 import graft.functions.GraftFunctions
-import graft.io.{Afs, Scratch}
+import graft.io.{Afs, Parquet, Scratch}
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -575,7 +575,7 @@ object AnnIndex {
     */
   private[graft] def readArtifact(s: SparkSession, path: String,
       crypto: Option[IndexCrypto]): DataFrame =
-    s.read.options(crypto.fold(Map.empty[String, String])(_.readerOptions)).parquet(path)
+    Parquet.read(s, path, crypto.fold(Map.empty[String, String])(_.readerOptions))
 
   /** Write (overwrite) one index artifact, under a context encrypted by
     * its `artifact` policy. Version markers/pointers stay plaintext.
@@ -1051,7 +1051,7 @@ object AnnIndex {
       src.repartition(nFiles)
         .write.mode("overwrite").parquet(srcDir)
     }
-    val schema = s.read.parquet(srcDir).schema
+    val schema = Parquet.schema(s, srcDir)
     // Dedicated session clone: streaming state (listeners, SQL conf
     // snapshots) stays off the caller's session, the q24f rule.
     val s2 = s.newSession()

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{Q, Tables}
 import graft.functions.GraftFunctions
-import graft.io.{Afs, EncryptedParquet}
+import graft.io.{Afs, EncryptedParquet, Parquet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1181,7 +1181,7 @@ object IvfPq {
       AnnIndex.deleteSlice(AnnIndex.corpus(s, d)),
       AnnIndex.shmDir(Tables.datasetTag(d) + "/ivfpq_tombstones"))
     compactSegments(s, baseDir, Seq(deltaDir),
-      Seq(s.read.parquet(s"$tsDir/tombstones") -> Int.MaxValue),
+      Seq(Parquet.read(s, s"$tsDir/tombstones") -> Int.MaxValue),
       AnnIndex.shmDir(Tables.datasetTag(d) + "/ivfpq_delete_compacted"))
   }
 
@@ -1197,7 +1197,7 @@ object IvfPq {
       AnnIndex.deleteSlice(AnnIndex.corpus(s, d))
         .select(col("vec_id"), col("e")),
       AnnIndex.shmDir(Tables.datasetTag(d) + "/ivfpq_distlsm_ts"))
-    (baseDir, deltaDir, s.read.parquet(s"$tsDir/tombstones"))
+    (baseDir, deltaDir, Parquet.read(s, s"$tsDir/tombstones"))
   }
 
   /** Stream the 10% slice into composed delta segments against the
@@ -1252,7 +1252,7 @@ object IvfPq {
     */
   private def countAllOr0(s: SparkSession, paths: Seq[String]): Long = {
     val dfs = paths.filter(Afs.exists).flatMap { p =>
-      try Some(s.read.parquet(p).select(lit(1L).as("one")))
+      try Some(Parquet.read(s, p).select(lit(1L).as("one")))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     }
     if (dfs.isEmpty) 0L else dfs.reduce(_.unionAll(_)).count()

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Canon, Q, Tables}
-import graft.io.Scratch
+import graft.io.{Parquet, Scratch}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -161,7 +161,7 @@ object Layout {
     "q36_partition_pruning",
     (s, d) => {
       val dir = partitionedEvents(s, d)
-      s.read.parquet(dir)
+      Parquet.read(s, dir)
         .filter(col("event_date").between(lit("2024-01-05"), lit("2024-01-09")))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"), Canon.rsum(col("value")).as("total_value"))
@@ -265,7 +265,7 @@ object Layout {
     "q43_zorder_scan",
     (s, d) => {
       val (zDir, _) = zorderedLineitem(s, d)
-      zBox(s.read.parquet(zDir), zBoxBounds(s, d))
+      zBox(Parquet.read(s, zDir), zBoxBounds(s, d))
         .groupBy("l_suppkey")
         .agg(count(lit(1)).as("n_items"),
           Canon.rsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
@@ -318,7 +318,7 @@ object Layout {
     val totalBytes = parquetFiles(new java.io.File(inDir)).map(_.length).sum
     require(totalBytes > 0, s"no parquet data found under $inDir — refusing a blind rewrite")
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    s.read.parquet(inDir).repartition(nOut)
+    Parquet.read(s, inDir).repartition(nOut)
       .write.mode("overwrite").parquet(outDir)
     parquetFiles(new java.io.File(outDir)).size
   }

@@ -11,9 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * closed set of shapes covers the bench, the oracle and the specs), ONE
   * Spark listener (`graft.obs.QueryMetrics`), ONE scratch-placement rule
   * (`graft.io.Scratch`), ONE crypto carrier in the ANN index
-  * (`AnnIndex.IndexCrypto`) and ONE claim loop (`graft.io.Afs.claim`). A
-  * second builder, collector, private scratch root, raw crypto option map
-  * or copied claim loop regrowing in a module fails here.
+  * (`AnnIndex.IndexCrypto`), ONE claim loop (`graft.io.Afs.claim`) and
+  * ONE batch Parquet read (`graft.io.Parquet.read`). A second builder,
+  * collector, private scratch root, raw crypto option map, copied claim
+  * loop or schema-inferring read regrowing in a module fails here.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -60,6 +61,29 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("under graft/ops the crypto conf maps are built only where IndexCrypto is defined") {
     assertOnlyIn("""\b(readConfMap|writeConfMap)\b""".r,
       Set("graft/ops/AnnIndex.scala"), under = "graft/ops/")
+  }
+
+  /** Batch Parquet reads (`.read`, any option/schema calls, `.parquet(`),
+    * however the chain is split across lines, as (file, line).
+    */
+  private lazy val parquetReads: Seq[(String, Int)] = {
+    val read = """\.read\b\s*(?:\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*parquet\s*\(""".r
+    codeLines.groupBy(_._1).toSeq.flatMap { case (file, lines) =>
+      val text = lines.map(_._3).mkString("\n")
+      read.findAllMatchIn(text).map(m =>
+        file -> lines(text.substring(0, m.start).count(_ == '\n'))._2)
+    }
+  }
+
+  test("batch Parquet reads go through graft.io.Parquet, apart from the named sites") {
+    val allowed = Map(
+      "graft/io/Parquet.scala" -> "the entry point: its read and its one inference",
+      "graft/ops/Sources.scala" -> "q74's two-path mergeSchema read, which must infer")
+    assert(allowed.keySet.subsetOf(parquetReads.map(_._1).toSet),
+      s"the read pattern no longer matches ${allowed.keySet}")
+    val strays = parquetReads.filterNot(r => allowed.contains(r._1))
+    assert(strays.isEmpty, "batch Parquet read outside graft.io.Parquet:\n  " +
+      strays.map { case (f, n) => s"$f:$n" }.mkString("\n  "))
   }
 
   test("createExclusive is called only from the claim primitive's file") {
