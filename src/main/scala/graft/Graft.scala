@@ -1,7 +1,6 @@
 package graft
 
 import graft.crypto.EncryptionPolicy
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** User-facing facade: one import to get the whole engine.
@@ -107,13 +106,12 @@ object Graft {
     spark
   }
 
-  /** Register every corpus table as a temp view plus graft's custom
-    * functions (cosine_sim, dot_product, simhash64, minhash_signature,
-    * ngram_shingles, intersect_count). Idempotent.
+  /** Register every corpus table as a temp view. Idempotent. graft's
+    * custom functions need no call: the session got them when it was
+    * built (see [[graft.functions.GraftFunctions]]).
     */
   def init(spark: SparkSession, sfDir: String): Unit = {
     tune(spark)
-    GraftFunctions.register(spark)
     Tables.all.foreach { t =>
       val df = if (t == "events") Tables.events(spark, sfDir)
                else Tables.load(spark, sfDir, t)

@@ -29,13 +29,8 @@ object Verify {
         // Recursive stale-output sweep: a killed run can leave a nested
         // _temporary/ tree that a flat listFiles().delete() silently
         // skips, letting stale data coexist with the error sidecar.
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        val dir = new java.io.File(s"$outDir/$name")
-        rm(dir)
-        dir.mkdirs()
+        graft.io.Scratch.delete(s"$outDir/$name")
+        Files.createDirectories(Paths.get(s"$outDir/$name"))
         Files.writeString(Paths.get(s"$outDir/$name/_GRAFT_ERROR.txt"), msg)
       }
       // Queries that persist intermediates (q22c/q23e/q23f/q64/q65) have

@@ -1,19 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions.{call_function, lit}
 
-/** Registration for graft's custom Catalyst expressions.
+/** graft's custom Catalyst expressions: their names and builders, and
+  * the Column API over them.
   *
-  * Two paths:
-  *  - `GraftFunctions.register(spark)` — imperative, used by the query
-  *    library (idempotent; temp-function registry).
-  *  - `spark.sql.extensions=graft.functions.GraftSparkExtensions` — the
-  *    deployment path: every session (driver and executors' plans alike)
-  *    gets the functions injected at build time.
+  * Every session gets them when it is built: [[GraftSparkExtensions]] is
+  * a `SparkSessionExtensionsProvider` listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's ServiceLoader injects the full [[builders]] table into the
+  * engine's sessions, their `newSession()` clones and sessions built
+  * outside the engine alike, with no conf. Naming the same class in
+  * `spark.sql.extensions` is still accepted.
   */
 object GraftFunctions {
 
@@ -23,10 +24,8 @@ object GraftFunctions {
       s"$fn expects a literal integer argument, got $other")
   }
 
-  /** (name, expression class, builder) — single source of truth for both
-    * registration paths, so the extension cannot drift out of sync with
-    * the imperative registry (an advisor-flagged round-2 bug: the
-    * extension exposed only 3 of the 6 functions).
+  /** (name, expression class, builder): the one table the extension
+    * injects, and the names the Column API below calls.
     */
   private[functions] val builders
       : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
@@ -89,12 +88,6 @@ object GraftFunctions {
       exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         exprs(0), exprs(1))))
 
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-
   /** Column API: cosine similarity of two array<double> columns. */
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
@@ -156,10 +149,11 @@ object GraftFunctions {
   def l1Diff(a: Column, b: Column): Column = call_function("l1_diff", a, b)
 }
 
-/** Injects every graft function (the full `builders` surface) into
-  * sessions built with `spark.sql.extensions=graft.functions.GraftSparkExtensions`.
+/** Injects every graft function (the full `builders` surface) into every
+  * session as it is built. Spark finds it through the ServiceLoader (see
+  * [[GraftFunctions]]); session-level rules belong in `apply` too.
   */
-class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
+class GraftSparkExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit =
     GraftFunctions.builders.foreach { case (name, cls, builder) =>
       ext.injectFunction(

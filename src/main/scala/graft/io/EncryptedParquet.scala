@@ -38,20 +38,19 @@ object EncryptedParquet {
     */
   def write(df: DataFrame, path: String, policy: EncryptionPolicy,
       kmsUrl: String, mode: String = "errorifexists",
-      zstdLevel: Int = 19, pageV2: Boolean = true,
+      zstdLevel: Int = 19,
       extraOptions: Map[String, String] = Map.empty): Unit = {
     df.write.mode(mode)
-      .options(cryptoOptions(policy, kmsUrl, zstdLevel, pageV2))
+      .options(cryptoOptions(policy, kmsUrl, zstdLevel))
       .options(extraOptions)
       .parquet(path)
   }
 
   private def cryptoOptions(policy: EncryptionPolicy, kmsUrl: String,
-      zstdLevel: Int, pageV2: Boolean): Map[String, String] =
+      zstdLevel: Int): Map[String, String] =
     EncryptionPolicy.writeConfMap(policy, kmsUrl, accessToken = None) ++
       Map("parquet.compression.codec.zstd.level" -> zstdLevel.toString,
-        "compression" -> "zstd") ++
-      (if (pageV2) Map("parquet.writer.version" -> "v2") else Map.empty)
+        "compression" -> "zstd", "parquet.writer.version" -> "v2")
 
   /** PME-encrypted STREAMING parquet sink, composing exactly-once
     * (manifest-committed, checkpointed) file output with
@@ -82,12 +81,11 @@ object EncryptedParquet {
     */
   def withEncryptedStream[T](df: DataFrame, path: String, checkpointDir: String,
       policy: EncryptionPolicy, kmsUrl: String,
-      zstdLevel: Int = 19, pageV2: Boolean = true)
+      zstdLevel: Int = 19)
       (run: DataStreamWriter[Row] => T): T = {
     val conf = df.sparkSession.conf
-    val binding = EncryptionPolicy.writeConfMap(policy, kmsUrl, accessToken = None) ++
-      Map("parquet.compression.codec.zstd.level" -> zstdLevel.toString) ++
-      (if (pageV2) Map("parquet.writer.version" -> "v2") else Map.empty)
+    // The codec itself is the sink's own option below.
+    val binding = cryptoOptions(policy, kmsUrl, zstdLevel) - "compression"
     // getAll (explicitly-set entries only), not getOption (which falls
     // back to defaults): a key the session never set is unset again, not
     // left pinned to its default (the Dedup.withLoopConfs rule).
@@ -169,7 +167,7 @@ object EncryptedParquet {
     */
   def rotateByRewrite(spark: SparkSession, path: String,
       policy: EncryptionPolicy, kmsUrl: String, accessToken: Option[String],
-      zstdLevel: Int = 19, pageV2: Boolean = true): Unit = {
+      zstdLevel: Int = 19): Unit = {
     import org.apache.parquet.crypto.keytools.KeyToolkit
     val tmp = path + ".rotate-tmp"
     val old = path + ".rotate-old"
@@ -220,7 +218,7 @@ object EncryptedParquet {
     val before = verifiedLive.getOrElse(
       fingerprint(read(spark, path, kmsUrl, accessToken)))
     write(read(spark, path, kmsUrl, accessToken), tmp, policy, kmsUrl,
-      mode = "overwrite", zstdLevel = zstdLevel, pageV2 = pageV2)
+      mode = "overwrite", zstdLevel = zstdLevel)
     require(Afs.rename(path, old),
       s"rotation swap failed for $path — dataset untouched")
     if (!Afs.rename(tmp, path)) {

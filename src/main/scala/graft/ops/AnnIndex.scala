@@ -700,7 +700,6 @@ object AnnIndex {
   private[ops] def routeCollected(s: SparkSession, probes: Seq[(Long, Seq[Double])],
       cents: Seq[(Int, Seq[Double])], nprobe: Int): Seq[(Int, Long, Seq[Double], Int)] = {
     import s.implicits._
-    GraftFunctions.register(s)
     val batch = probes.zipWithIndex
       .map { case ((pid, pe), ord) => (pid, pe, ord.toLong) }
       .toDF("pid", "pe", "__pord")
@@ -969,7 +968,6 @@ object AnnIndex {
   private[ops] def retrainCheckAssigned(s: SparkSession, indexDir: String,
       preAssigned: DataFrame,
       crypto: Option[IndexCrypto] = None): RetrainReport = {
-    GraftFunctions.register(s)
     val cents = readCentroids(s, indexDir, crypto)
     val norms = cents.map { case (cid, ce) =>
       cid -> math.sqrt(ce.map(x => x * x).sum)
@@ -1038,7 +1036,6 @@ object AnnIndex {
       afterBatch: (SparkSession, Long) => Unit = (_, _) => (),
       srcDirOverride: Option[String] = None)
       : Seq[String] = {
-    GraftFunctions.register(s)
     // The n-file source staging is test-harness input prep, not part of
     // the priced ingest, so a caller whose source frame is stable across
     // runs may point several runs at one shared staged dir (r16 — the
@@ -1055,7 +1052,6 @@ object AnnIndex {
     // Dedicated session clone: streaming state (listeners, SQL conf
     // snapshots) stays off the caller's session, the q24f rule.
     val s2 = s.newSession()
-    GraftFunctions.register(s2)
     s2.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
@@ -1069,7 +1065,6 @@ object AnnIndex {
         // the segment incomplete, or a concurrent reader honoring the
         // only-complete-segments rule would scan it mid-overwrite.
         Afs.delete(s"$seg/_COMPLETE")
-        GraftFunctions.register(batch.sparkSession)
         val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           // A no-data micro-batch (the source can emit one around

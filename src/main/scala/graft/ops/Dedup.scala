@@ -65,7 +65,6 @@ object Dedup {
     * CAPPED table, the one every downstream op reads).
     */
   def shingleDocs(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.spread(
         Tables.documents(s, d).select(col("doc_id"), col("text")),
         col("doc_id"))
@@ -399,21 +398,9 @@ object Dedup {
     (s, d) => {
       val docs = cappedShingleDocs(s, d)
       // Same size-adaptive verification side as q22a (see
-      // VerifyBroadcastMaxBytes): broadcast the small materialized capped
-      // table so candidate pairs never shuffle with arrays attached;
-      // pinned shuffle-hash once the table outgrows the broadcast budget.
+      // VerifyBroadcastMaxBytes).
       val small = materializedBytes(docs) <= VerifyBroadcastMaxBytes
-      def side(df: DataFrame): DataFrame =
-        if (small) broadcast(df) else df.hint("shuffle_hash")
-      minhashCandidates(docs, numHashes = 32, bands = 8)
-        .join(side(docs.select(col("doc_id"), col("sh").as("sa"))),
-          col("da") === col("doc_id"))
-        .drop("doc_id")
-        .join(side(docs.select(col("doc_id"), col("sh").as("sb"))),
-          col("db") === col("doc_id"))
-        .withColumn("i", GraftFunctions.intersectCount(col("sa"), col("sb")))
-        .withColumn("jaccard", col("i") / (size(col("sa")) + size(col("sb")) - col("i")))
-        .filter(col("jaccard") >= 0.5)
+      jaccardVerify(minhashCandidates(docs, numHashes = 32, bands = 8), docs, 0.5, small)
         .select(col("da"), col("db"), round(col("jaccard"), 4).as("jaccard"))
         .orderBy("da", "db")
     },
@@ -432,7 +419,6 @@ object Dedup {
   val q22c: Q = Q(
     "q22c_simhash_pairs",
     (s, d) => {
-      GraftFunctions.register(s)
       val docs = Tables.spread(
           Tables.documents(s, d).select(col("doc_id"), col("text")),
           col("doc_id"))
@@ -883,7 +869,6 @@ object Dedup {
   val q59: Q = Q(
     "q59_contamination",
     (s, d) => {
-      GraftFunctions.register(s)
       val grams = Tables.spread(
           Tables.documents(s, d).select(col("doc_id"), col("text")),
           col("doc_id"))
@@ -951,7 +936,6 @@ object Dedup {
     * namespaces the temp views the scalar-subquery build reads.
     */
   def bloomDecontam(s: SparkSession, docs: DataFrame, tag: String): DataFrame = {
-    GraftFunctions.register(s)
     val keyed = Tables.spread(docs, col("doc_id"))
       .select(col("doc_id"), col("source"), xxhash64(normText(col("text"))).as("k"))
     keyed.filter(pmod(col("doc_id"), lit(10)) < 8)
@@ -1077,7 +1061,6 @@ object Dedup {
   /** The q94 body over any (doc_id, text, n_chars) frame. */
   def snmCandidates(docsDf: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(docsDf.sparkSession)
     val base = docsDf.select(col("doc_id"), col("n_chars"),
       substring(normText(col("text")), 1, 16).as("blk"),
       array_distinct(tokens(col("text"))).as("tok"))

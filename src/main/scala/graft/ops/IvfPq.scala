@@ -137,7 +137,6 @@ object IvfPq {
     * probes keep serving the prior version until the pointer flips.
     */
   def build(s: SparkSession, d: String, force: Boolean = false): String = {
-    GraftFunctions.register(s)
     val tag = Tables.datasetTag(d) + "/ivfpq"
     if (force) built.remove(tag): Unit
     built.computeIfAbsent(tag, tag => {
@@ -155,7 +154,6 @@ object IvfPq {
     */
   private[graft] def buildFrom(s: SparkSession, emb: DataFrame, root: String,
       crypto: Option[IndexCrypto] = None): String = {
-    GraftFunctions.register(s)
     AnnIndex.publishVersion(root)(writeComposed(s, emb, _, crypto))
   }
 
@@ -200,7 +198,6 @@ object IvfPq {
       crypto: Option[IndexCrypto] = None,
       nprobeOverride: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     // The override is a measurement hook (AnnRetrainSpec probes at
     // nprobe=1, where a routing-boundary split is sharpest); production
     // callers take the default pair.
@@ -372,7 +369,6 @@ object IvfPq {
       attrFilter: Option[Column] = None,
       crypto: Option[IndexCrypto] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     val nprobe = if (attrFilter.isDefined) FilteredNprobe else Nprobe
     val cents = AnnIndex.readCentroids(s, roots.head, crypto)
     val cb = AnnIndex.readCodebook(s, roots.head, crypto)
@@ -510,7 +506,6 @@ object IvfPq {
   private[ops] def appendSegment(s: SparkSession, baseDir: String,
       batch: DataFrame, root: String,
       crypto: Option[IndexCrypto] = None): String = {
-    GraftFunctions.register(s)
     AnnIndex.publishVersion(root)(segmentWriter(crypto)(s, batch, baseDir, _))
   }
 
@@ -527,7 +522,6 @@ object IvfPq {
   private[ops] def compactSegments(s: SparkSession, baseDir: String,
       segDirs: Seq[String], tss: Seq[(DataFrame, Int)], outRoot: String,
       crypto: Option[IndexCrypto] = None, stamp: String => Unit = _ => ()): String = {
-    GraftFunctions.register(s)
     AnnIndex.publishVersion(outRoot) { vdir =>
       AnnIndex.foldPartitionedArtifact(s, baseDir, segDirs, tss,
         "ivfpq_lists", ListCols, sortInPartitions = true, vdir, crypto): Unit
@@ -589,7 +583,6 @@ object IvfPq {
       crypto: Option[IndexCrypto] = None,
       tsPending: Seq[PendingTombstone] = Nil,
       segRoot: String = ""): AnnIndex.MaintainResult = {
-    GraftFunctions.register(s)
     val tss: Seq[(DataFrame, Int)] = tsPending.map(ts =>
       resolveTombstoneMask(s, baseDir, segDirs, segRoot, ts, crypto,
         needCids = true))
@@ -626,7 +619,6 @@ object IvfPq {
   private[ops] def landSegment(s: SparkSession, baseDir: String,
       root: String, segName: String, batch: DataFrame,
       crypto: Option[IndexCrypto] = None): String = {
-    GraftFunctions.register(s)
     val artifactBase = AnnIndex.servingStateOf(baseDir, root).base
     val seg = s"$root/segments/$segName"
     Afs.delete(s"$seg/_COMPLETE")
@@ -658,7 +650,6 @@ object IvfPq {
       src: DataFrame, root: String, nFiles: Int, every: Int,
       crypto: Option[IndexCrypto] = None,
       afterBatch: (SparkSession, Long) => Unit = (_, _) => ()): (String, Seq[String]) = {
-    GraftFunctions.register(s)
     AnnIndex.streamIngestCore(s, baseDir, src, root, nFiles, every,
       writeSegment = segmentWriter(crypto),
       // Every fold consumes ALL pending tombstones along with the
@@ -727,7 +718,6 @@ object IvfPq {
     */
   private[ops] def enqueueTombstones(s: SparkSession, baseDir: String, root: String,
       victims: DataFrame, crypto: Option[IndexCrypto] = None): String = {
-    GraftFunctions.register(s)
     val st = AnnIndex.servingStateOf(baseDir, root)
     val dir = Afs.claim(s"$root/tsq", "t", taken = st.foldedTs)
     val cents = AnnIndex.readCentroids(s, st.base, crypto)
@@ -976,7 +966,6 @@ object IvfPq {
   def rotateIndexKeys(s: SparkSession, root: String, crypto: IndexCrypto,
       source: Option[IndexCrypto]): String = {
     import org.apache.parquet.crypto.keytools.KeyToolkit
-    GraftFunctions.register(s)
     val cur = AnnIndex.resolveVersion(root).getOrElse(throw
       new IllegalArgumentException(s"no complete index version under $root to rotate"))
     // The rewrite PRESERVES the source's key-material mode (review r13:
@@ -1131,7 +1120,6 @@ object IvfPq {
     * never a rebuild.
     */
   private def ensureAppendBase(s: SparkSession, d: String): String = {
-    GraftFunctions.register(s)
     fixture(s, d, "ivfpq_append_base")(root =>
       AnnIndex.publishVersion(root)(
         writeComposed(s, AnnIndex.baseSlice(AnnIndex.corpus(s, d)), _)))
@@ -1206,7 +1194,6 @@ object IvfPq {
     */
   private[ops] def streamIngestInto(s: SparkSession, d: String,
       root: String): (String, Seq[String]) = {
-    GraftFunctions.register(s)
     val baseDir = ensureAppendBase(s, d)
     // The staged n-file source is a dataset-keyed one-time fixture
     // (r16): q128 prices the checkpointed INGEST of the 10% slice, not

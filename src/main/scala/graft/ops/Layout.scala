@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Canon, Q, Tables}
-import graft.io.{Parquet, Scratch}
+import graft.io.{Afs, Parquet, Scratch}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -285,6 +285,14 @@ object Layout {
             |GROUP BY l_suppkey
             |ORDER BY l_suppkey""".stripMargin))
 
+  /** Every `.parquet` file under `dir` on any Hadoop filesystem,
+    * recursively: partitioned datasets keep their data under `key=value/`
+    * subdirectories, so a top-level listing would size them at 0 bytes
+    * and silently collapse the rewrite to one file.
+    */
+  private def parquetFiles(dir: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    Afs.filesUnder(dir).filter(_.getPath.getName.endsWith(".parquet"))
+
   /** Small-file compaction — the operational fix for the 100 TB
     * pipeline's dominant metadata pathology: incremental/streaming
     * ingestion leaves thousands of KB-scale files per partition, and
@@ -302,25 +310,14 @@ object Layout {
     * bound. At cluster scale this is the nightly table-maintenance job
     * every lakehouse runs (OPTIMIZE / rewrite_data_files).
     */
-  /** Recursive parquet-file walk: partitioned datasets keep their data
-    * under `key=value/` subdirectories, so a top-level listing would size
-    * them at 0 bytes and silently collapse the rewrite to one file.
-    */
-  private def parquetFiles(dir: java.io.File): Seq[java.io.File] =
-    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap {
-      case d if d.isDirectory => parquetFiles(d)
-      case f if f.isFile && f.getName.endsWith(".parquet") => Seq(f)
-      case _ => Seq.empty
-    }
-
   def compact(s: SparkSession, inDir: String, outDir: String,
       targetBytes: Long = 128L << 20): Int = {
-    val totalBytes = parquetFiles(new java.io.File(inDir)).map(_.length).sum
+    val totalBytes = parquetFiles(inDir).map(_.getLen).sum
     require(totalBytes > 0, s"no parquet data found under $inDir — refusing a blind rewrite")
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     Parquet.read(s, inDir).repartition(nOut)
       .write.mode("overwrite").parquet(outDir)
-    parquetFiles(new java.io.File(outDir)).size
+    parquetFiles(outDir).size
   }
 
   /** Shard expression shared by the q77 census and the shard writer:

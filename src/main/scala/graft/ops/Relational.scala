@@ -698,7 +698,6 @@ object Relational {
   val q49: Q = Q(
     "q49_edit_distance",
     (s, d) => {
-      GraftFunctions.register(s)
       // Char-frequency prefilter (r15): a 64-bucket clamped lead-byte
       // histogram per ROW (computed once, ~64 bytes riding the brand
       // shuffle), then an L1 test per PAIR in the join condition. One

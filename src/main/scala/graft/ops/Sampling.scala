@@ -193,8 +193,7 @@ object Sampling {
     * comparison.
     */
   def qualityBanded(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val t = TextOps.toks(col("text"))
+    val t = Dedup.tokens(col("text"))
     Tables.spread(Tables.documents(s, d), col("doc_id"))
       .select(col("doc_id"), col("source"),
         when(graft.functions.GraftFunctions.countInSet(t, typedLit(TextOps.enStopwords))

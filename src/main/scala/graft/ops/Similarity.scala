@@ -68,7 +68,6 @@ object Similarity {
     "q23_cosine_topk",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      GraftFunctions.register(s)
       // repartition: the single-row-group file scans as ONE partition;
       // spreading the corpus keeps the probe-broadcast scan parallel.
       val emb = Tables.spread(Tables.embeddings(s, d)
@@ -107,7 +106,6 @@ object Similarity {
   val q23b: Q = Q(
     "q23b_embed_neardup",
     (s, d) => {
-      GraftFunctions.register(s)
       // repartition: the single-row-group parquet file scans as ONE
       // partition, which would stream the whole O(n²) nested-loop join
       // through a single thread.
@@ -160,7 +158,6 @@ object Similarity {
     * q23c_candidates.frac_of_brute tracks the spend each bench run).
     */
   def q23cCandidates(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val L = 22 // tables
     val k = 6  // bits per table
     val planes = hyperplanes(numPlanes = L * k, dim = 64)
@@ -292,7 +289,6 @@ object Similarity {
   val q23d: Q = Q(
     "q23d_neardup_lsh",
     (s, d) => {
-      GraftFunctions.register(s)
       val L = 8 // tables
       val k = 4 // sign bits per table
       val planes = hyperplanes(numPlanes = L * k, dim = 64, seed = 7L)
@@ -362,7 +358,6 @@ object Similarity {
     "q23e_cosine_ivf",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      GraftFunctions.register(s)
       // 16 lists x 6 probed = ~37% of the corpus scanned per probe —
       // measured at sf0.1 (BASELINE §C7): recall 0.54 with one Lloyd
       // step/nprobe=4; FINER lists were worse (k=32/nprobe=6, 19% scan:
@@ -424,7 +419,6 @@ object Similarity {
     "q23f_cosine_pq",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      GraftFunctions.register(s)
       val M = 8 // subvectors
       // K=64 codes per subspace: the original K=16 quantized the
       // near-random 64-dim corpus too coarsely for the PQ scores to rank
@@ -508,7 +502,6 @@ object Similarity {
   val q44: Q = Q(
     "q44_embedding_stats",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.spread(Tables.embeddings(s, d)
         .select(col("label"), col("vec_id"), dbl(col("embedding")).as("e")),
         col("vec_id"))
@@ -635,7 +628,6 @@ object Similarity {
     "q60_filtered_topk",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val corpus = Tables.spread(
         emb.filter(col("label") === 1)
@@ -781,7 +773,6 @@ object Similarity {
     "q73_hybrid_rrf",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      GraftFunctions.register(s)
       val k = 100
       val lex = TextOps.bm25(
           Tables.spread(Tables.documents(s, d), col("doc_id")), TextOps.bm25Terms)

@@ -13,16 +13,12 @@ import org.apache.spark.sql.functions._
 object TextOps {
   import Canon._
 
-  def toks(c: Column): Column = split(Dedup.normText(c), " ")
-
   /** documents spread across partitions before any tokenize-heavy
     * expression: the single-row-group file otherwise scans as ONE
     * partition and every regex/HOF below runs single-threaded.
     */
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // kernels used across TextOps
+  private def docs(s: SparkSession, d: String): DataFrame =
     Tables.spread(Tables.documents(s, d), col("doc_id"))
-  }
 
   /** Stopword list used for quality scoring and language-ID profiles. */
   val enStopwords: Seq[String] =
@@ -76,7 +72,7 @@ object TextOps {
     "q22d_text_stats",
     (s, d) => {
       docs(s, d)
-        .select(col("lang"), col("n_chars"), size(toks(col("text"))).as("n_toks"))
+        .select(col("lang"), col("n_chars"), size(Dedup.tokens(col("text"))).as("n_toks"))
         .groupBy("lang")
         .agg(
           count(lit(1)).as("n_docs"),
@@ -96,7 +92,7 @@ object TextOps {
   val q30: Q = Q(
     "q30_text_quality",
     (s, d) => {
-      val t = toks(col("text"))
+      val t = Dedup.tokens(col("text"))
       val nTok = size(t)
       val stopRatio = graft.functions.GraftFunctions
         .countInSet(t, typedLit(enStopwords)).cast("int") / nTok.cast("double")
@@ -160,7 +156,7 @@ object TextOps {
     "q32_langid",
     (s, d) => {
       docs(s, d)
-        .select(col("lang").as("labeled"), langId(toks(col("text"))).as("predicted"))
+        .select(col("lang").as("labeled"), langId(Dedup.tokens(col("text"))).as("predicted"))
         .groupBy("labeled", "predicted")
         .agg(count(lit(1)).as("n"))
         .orderBy("labeled", "predicted")
@@ -196,7 +192,7 @@ object TextOps {
     "q33_fingerprint",
     (s, d) => {
       docs(s, d)
-        .select(col("doc_id"), fingerprint(toks(col("text"))).as("fp"))
+        .select(col("doc_id"), fingerprint(Dedup.tokens(col("text"))).as("fp"))
         .groupBy("fp")
         .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_docs"))
         .select("keeper_id", "n_docs")
@@ -266,7 +262,7 @@ object TextOps {
     "q42_tfidf_topterms",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val tok = docs(s, d).select(col("doc_id"), explode(toks(col("text"))).as("term"))
+      val tok = docs(s, d).select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("term"))
       val dfTable = tok.distinct().groupBy("term").agg(count(lit(1)).as("df"))
       val n = Tables.documents(s, d).select(count(lit(1)).as("n"))
       val probe = tok.filter(col("doc_id") < 20)
@@ -331,7 +327,7 @@ object TextOps {
     * sum of per-term contributions. See q72 for the scale shape.
     */
   def bm25(docsDf: DataFrame, terms: Seq[String]): DataFrame = {
-    val base = docsDf.select(col("doc_id"), toks(col("text")).as("tk"))
+    val base = docsDf.select(col("doc_id"), Dedup.tokens(col("text")).as("tk"))
       .withColumn("dl", size(col("tk")))
     val gl = base.agg(
       count(lit(1)).as("n"),
@@ -499,12 +495,11 @@ object TextOps {
   val q45: Q = Q(
     "q45_repetition_filter",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // One codegen'd kernel pass per row ([total, repeated] counts) —
       // the transform/sequence/array_join HOF spelling of the same
       // measure ran on Catalyst's interpreted eval path at 86 s of task
       // CPU for 5k docs (13 s wall); the kernel does it in < 2 s.
-      val rep = graft.functions.GraftFunctions.ngramRepetition(toks(col("text")), 3)
+      val rep = graft.functions.GraftFunctions.ngramRepetition(Dedup.tokens(col("text")), 3)
       docs(s, d)
         .select(col("doc_id"), rep.as("rep"))
         .select(col("doc_id"),
@@ -545,7 +540,7 @@ object TextOps {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val top = docs(s, d)
-        .select(explode(toks(col("text"))).as("term"))
+        .select(explode(Dedup.tokens(col("text"))).as("term"))
         .groupBy("term").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("term").asc)
         .limit(20)
@@ -574,7 +569,7 @@ object TextOps {
       eps: Double = 1e-4, confidence: Double = 0.99, seed: Int = 42)
       : org.apache.spark.util.sketch.CountMinSketch = {
     val bytes = docs(s, d)
-      .select(explode(toks(col("text"))).as("term"))
+      .select(explode(Dedup.tokens(col("text"))).as("term"))
       .agg(count_min_sketch(col("term"), lit(eps), lit(confidence), lit(seed)))
       .head.getAs[Array[Byte]](0)
     org.apache.spark.util.sketch.CountMinSketch.readFrom(
@@ -596,7 +591,7 @@ object TextOps {
       val stride = 48
       val chunkLen = 64
       docs(s, d)
-        .select(col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("doc_id"), Dedup.tokens(col("text")).as("tk"))
         .filter(size(col("tk")) > 0)
         .select(col("doc_id"), col("tk"),
           posexplode(sequence(lit(0), size(col("tk")) - 1, lit(stride)))
@@ -646,7 +641,7 @@ object TextOps {
       // materialize-once tradeoff as Dedup.cappedShingleDocs). At 100 TB
       // this cache is ~24 B/doc, MEMORY_AND_DISK across the cluster.
       val t = docs(s, d)
-        .select(col("doc_id"), size(toks(col("text"))).cast("long").as("n_tokens"),
+        .select(col("doc_id"), size(Dedup.tokens(col("text"))).cast("long").as("n_tokens"),
           (col("doc_id") / rangeWidth).cast("long").as("rng"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val wIn = Window.partitionBy("rng").orderBy("doc_id")
@@ -694,7 +689,7 @@ object TextOps {
   val q66: Q = Q(
     "q66_bpe_merges",
     (s, d) => {
-      val tk = toks(col("text"))
+      val tk = Dedup.tokens(col("text"))
       docs(s, d)
         .select(tk.as("tk"))
         .filter(size(col("tk")) >= 2)
@@ -745,7 +740,7 @@ object TextOps {
     * text) against the bigram counts of its `refSource` slice.
     */
   def lmFamiliarity(docsDf: DataFrame, refSource: String = "src0"): DataFrame = {
-      val tk = toks(col("text"))
+      val tk = Dedup.tokens(col("text"))
       val bi = docsDf
         .select(col("doc_id"), col("source"), tk.as("tk"))
         .filter(size(col("tk")) >= 2)
@@ -871,7 +866,7 @@ object TextOps {
   /** The q81 body as a library entry over any (source, text) frame. */
   def sourceOverlap(docsDf: DataFrame): DataFrame = {
       val vocab = docsDf
-        .select(col("source"), explode(toks(col("text"))).as("term"))
+        .select(col("source"), explode(Dedup.tokens(col("text"))).as("term"))
         .distinct()
         .persist()
       val sizes = vocab.groupBy("source").agg(count(lit(1)).as("n"))
@@ -918,9 +913,7 @@ object TextOps {
     */
   /** The q98 body over any (text, lang, n_chars) frame. */
   def filterWaterfall(docsDf: DataFrame): DataFrame = {
-    // direct library callers may not have gone through docs()/extensions
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
-    val t = toks(col("text"))
+    val t = Dedup.tokens(col("text"))
     // cumulative flags COMPOSE (each stage = previous && its own
     // predicate) so a threshold lives in exactly one place
     val length  = col("n_chars") >= 100
@@ -1003,7 +996,7 @@ object TextOps {
   def pmiCooccur(docsDf: DataFrame, vocabSize: Int = 100, minPairs: Long = 5L,
       topK: Int = 50): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tok = docsDf.select(col("doc_id"), explode(toks(col("text"))).as("term"))
+    val tok = docsDf.select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("term"))
       .filter(col("term") =!= "").distinct()
     val dfT = tok.groupBy("term").agg(count(lit(1)).as("df"))
     val vocab = dfT.orderBy(col("df").desc, col("term").asc).limit(vocabSize)
@@ -1073,7 +1066,7 @@ object TextOps {
   /** The q116 body over any (text) frame. */
   def zipfFit(docsDf: DataFrame, topV: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf = docsDf.select(explode(toks(col("text"))).as("term"))
+    val tf = docsDf.select(explode(Dedup.tokens(col("text"))).as("term"))
       .filter(col("term") =!= "")
       .groupBy("term").agg(count(lit(1)).as("tf"))
     val top = tf.orderBy(col("tf").desc, col("term").asc).limit(topV)

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.crypto.{EncryptionPolicy, PrivilegeLevel}
-import graft.io.{EncryptedParquet, Scratch}
+import graft.io.{Afs, EncryptedParquet, Scratch}
 import graft.obs.QueryMetrics.{seconds, warmSeconds}
 import graft.kms.TestKmsServer
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -38,13 +38,8 @@ object CryptoMeasure {
     spark.stop()
   }
 
-  private def dirBytes(p: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-      else if (f.getName.endsWith(".parquet")) f.length()
-      else 0L
-    walk(new java.io.File(p))
-  }
+  private def dirBytes(p: String): Long =
+    Afs.filesUnder(p).filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
 
   /** Plaintext write at the exact layout the encrypted write uses. */
   private def writePlain(df: DataFrame, path: String, zstdLevel: Int): Unit =

@@ -20,7 +20,6 @@ class GraftFacadeSpec extends SparkTestBase {
   }
 
   test("every registered function is SQL-callable and injected by the extension") {
-    graft.functions.GraftFunctions.register(spark)
     // one smoke call per function through the SQL surface
     val sqls = Seq(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d))",

@@ -12,9 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark listener (`graft.obs.QueryMetrics`), ONE scratch-placement rule
   * (`graft.io.Scratch`), ONE crypto carrier in the ANN index
   * (`AnnIndex.IndexCrypto`), ONE claim loop (`graft.io.Afs.claim`) and
-  * ONE batch Parquet read (`graft.io.Parquet.read`). A second builder,
-  * collector, private scratch root, raw crypto option map, copied claim
-  * loop or schema-inferring read regrowing in a module fails here.
+  * ONE batch Parquet read (`graft.io.Parquet.read`) and ONE way graft's
+  * functions reach a session (the ServiceLoader-installed
+  * `GraftSparkExtensions`). A second builder, collector, private scratch
+  * root, raw crypto option map, copied claim loop, schema-inferring read
+  * or imperative function registration regrowing in a module fails here.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -88,5 +90,19 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   test("createExclusive is called only from the claim primitive's file") {
     assertOnlyIn("""\bcreateExclusive\s*\(""".r, Set("graft/io/Afs.scala"))
+  }
+
+  test("no file under src/ registers functions imperatively") {
+    // Every session gets graft's functions from GraftSparkExtensions when
+    // it is built; a temp-function registration would be a second path.
+    val self = Paths.get("src/test/scala/graft/SourceHygieneSpec.scala")
+    val pattern = """\bcreateOrReplaceTempFunction\b|\bGraftFunctions\s*\.\s*register\b""".r
+    val hits = Files.walk(Paths.get("src")).iterator.asScala.toSeq
+      .filter(p => Files.isRegularFile(p) && p != self)
+      .flatMap { p =>
+        new String(Files.readAllBytes(p), "ISO-8859-1").linesIterator.zipWithIndex
+          .collect { case (l, i) if pattern.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}" }
+      }
+    assert(hits.isEmpty, "imperative function registration under src/:\n  " + hits.mkString("\n  "))
   }
 }

@@ -13,15 +13,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = Graft.localSession("4", Graft.SessionShape.Spec)
-    // Register the custom-function surface up front: library helpers that
-    // build `call_function(...)` columns (TextOps.fingerprint/langScore,
-    // Dedup kernels) resolve at analysis time, and without this a
-    // selectively-run spec would depend on some earlier test having
-    // registered as a side effect. Deployment gets the same guarantee
-    // from spark.sql.extensions=GraftSparkExtensions.
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  // graft's custom functions need no set-up: every session gets them
+  // when it is built (see graft.functions.GraftFunctions).
+  lazy val session: SparkSession = Graft.localSession("4", Graft.SessionShape.Spec)
 }

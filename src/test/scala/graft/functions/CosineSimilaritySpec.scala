@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class CosineSimilaritySpec extends SparkTestBase {
 
   test("cosine_sim equals HOF formulation bit-for-bit on the corpus") {
-    GraftFunctions.register(spark)
     val emb = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
     val a = emb.as("a")
@@ -26,7 +25,6 @@ class CosineSimilaritySpec extends SparkTestBase {
   }
 
   test("edge cases: zero vector, nulls, identical vectors") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Seq(1.0, 2.0), Seq(1.0, 2.0)),   // identical -> 1.0
@@ -43,7 +41,6 @@ class CosineSimilaritySpec extends SparkTestBase {
   }
 
   test("expression participates in codegen (no fallback in plan)") {
-    GraftFunctions.register(spark)
     val emb = graft.Tables.embeddings(spark, sfDir)
       .select(transform(col("embedding"), _.cast("double")).as("e"))
     val plan = emb.select(GraftFunctions.cosineSim(col("e"), col("e")).as("c"))

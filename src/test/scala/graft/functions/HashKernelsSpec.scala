@@ -12,15 +12,13 @@ import org.apache.spark.sql.functions._
 class HashKernelsSpec extends SparkTestBase {
 
   private lazy val docs = {
-    GraftFunctions.register(spark)
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), Dedup.tokens(col("text")).as("tk"))
   }
 
   test("builder table exposes the full seventeen-function surface") {
-    // GraftSparkExtensions injects verbatim from this table, so pinning
-    // it here pins the deployment (spark.sql.extensions) surface too —
-    // the round-2 advisor caught the extension drifting to 3 of 6.
+    // GraftSparkExtensions injects verbatim from this table into every
+    // session, so pinning it here pins every session's SQL surface.
     // bloom_agg / bloom_might_contain joined in round 5 (q65's explicit
     // bloom-routed anti-join shape); adc_dot / pq_lut in round 13 (the
     // codegen'd ADC kernels behind every PQ serve path); char_hist /
@@ -183,10 +181,9 @@ class HashKernelsSpec extends SparkTestBase {
   }
 
   test("adc_dot and pq_lut return NULL on malformed inputs instead of reading out of bounds") {
-    // Both are SQL-registered, so inputs outside the artifact invariants
+    // Both are SQL-callable, so inputs outside the artifact invariants
     // can reach them; the element_at/HOF discipline is NULL, never a
     // read past the array (r13 review).
-    GraftFunctions.register(spark)
     val rows = spark.sql(
       """SELECT
         |  adc_dot(array(0.5D, 1.5D), array(0), 2)          AS ok,
@@ -399,7 +396,6 @@ class HashKernelsSpec extends SparkTestBase {
 
   test("kernels handle empty and short inputs") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, Seq[String]()),
       (2L, Seq("one")),

@@ -13,7 +13,7 @@ class HeavyHittersSpec extends SparkTestBase {
   test("CMS: totalCount equals the exact corpus token count") {
     val cms = TextOps.termFrequencySketch(spark, sfDir)
     val exact = graft.Tables.documents(spark, sfDir)
-      .select(explode(TextOps.toks(col("text"))).as("t"))
+      .select(explode(Dedup.tokens(col("text"))).as("t"))
       .count()
     assert(cms.totalCount() == exact,
       s"sketch saw ${cms.totalCount()} tokens, corpus has $exact")

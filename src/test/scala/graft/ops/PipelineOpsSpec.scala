@@ -108,7 +108,6 @@ class PipelineOpsSpec extends SparkTestBase {
       (3L, "the quick brown fox jumps over the lazy cat again and again"),
       (4L, "completely different text about spark query engines at scale")
     ).toDF("doc_id", "text")
-    graft.functions.GraftFunctions.register(spark)
     val fps = df.select(col("doc_id"),
         graft.functions.GraftFunctions.simhash64(Dedup.tokens(col("text"))).as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -175,7 +174,7 @@ class PipelineOpsSpec extends SparkTestBase {
       (4L, "der hund ist von den bergen und das haus mit einem garten"),
       (5L, "qqq www eee rrr ttt")
     ).toDF("doc_id", "text")
-    val got = df.select(col("doc_id"), TextOps.langId(TextOps.toks(col("text"))).as("l"))
+    val got = df.select(col("doc_id"), TextOps.langId(Dedup.tokens(col("text"))).as("l"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got(1L) == "en")
     assert(got(2L) == "es")
@@ -193,7 +192,7 @@ class PipelineOpsSpec extends SparkTestBase {
       (4L, "alpha beta gamma delta")
     ).toDF("doc_id", "text")
     val fp = df.select(col("doc_id"),
-        TextOps.fingerprint(TextOps.toks(col("text"))).as("fp"))
+        TextOps.fingerprint(Dedup.tokens(col("text"))).as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fp(1L) == fp(2L), "normalization-invariant")
     assert(fp(2L) != fp(3L), "order-sensitive")
@@ -209,7 +208,7 @@ class PipelineOpsSpec extends SparkTestBase {
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
       .foreach { sf =>
         val d = graft.Tables.documents(spark, sf).select(
-          TextOps.fingerprint(TextOps.toks(col("text"))).as("fp"),
+          TextOps.fingerprint(Dedup.tokens(col("text"))).as("fp"),
           Dedup.normText(col("text")).as("norm"))
         val r = d.agg(countDistinct(col("fp")).as("nfp"),
           countDistinct(col("norm")).as("nnorm")).collect()(0)
@@ -250,7 +249,6 @@ class PipelineOpsSpec extends SparkTestBase {
   test("q59: hash-gram contamination equals the string-gram formulation") {
     import graft.functions.GraftFunctions
     import graft.Tables
-    GraftFunctions.register(spark)
     // Independent ground truth: the same decontamination computed over
     // STRING 5-grams (no hashing) — pins the hash-gram path to the exact
     // semantic, including the distinctness of per-doc gram sets.
@@ -310,7 +308,7 @@ class PipelineOpsSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // Independent ground truth: driver-side cumulative sum in doc order.
     val toks = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), size(TextOps.toks(col("text"))).cast("long").as("n"))
+      .select(col("doc_id"), size(Dedup.tokens(col("text"))).cast("long").as("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     var cum = 0L
     val expected = toks.map { case (id, n) =>
