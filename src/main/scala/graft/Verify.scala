@@ -42,11 +42,14 @@ object Verify {
     // q34a's oracle references a sampled-key parquet fixture; the dump is
     // the harness's job (the Q fn stays a pure plan builder) and the
     // fixture lives in THIS run's outDir, next to oracle_sql.json, so it
-    // travels with the artifact the driver's DuckDB pass reads.
-    try ops.Sampling.dumpQ34aOracleFixture(spark, sfDir, outDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] q34a fixture dump failed: ${e.getMessage}")
-    }
+    // travels with the artifact the driver's DuckDB pass reads; its
+    // oracle entry is added only when the dump succeeded.
+    val q34aSql =
+      try ops.Sampling.dumpQ34aOracleFixture(spark, sfDir, outDir)
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] q34a fixture dump failed: ${e.getMessage}")
+        Map.empty[String, String]
+      }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -59,7 +62,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = (SparkEntry.oracleSql ++ q34aSql)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Machine-readable failure roll-up next to the per-query sidecars.

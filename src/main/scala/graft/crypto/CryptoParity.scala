@@ -177,10 +177,9 @@ object CryptoParity {
   /** Events replayed through a Structured Streaming job into the
     * PME-encrypted parquet sink (checkpointed, Trigger.AvailableNow), as
     * one fixture holding the source copy, the sink and the checkpoint;
-    * its marker lands after the stream terminates. The stream runs on a
-    * dedicated session clone because the file stream sink takes its
-    * write-job Hadoop conf from SESSION state (see
-    * EncryptedParquet.withEncryptedStream). Returns the sink dir.
+    * its marker lands after the stream terminates. The stream is built
+    * on `s` itself: EncryptedParquet.withEncryptedStream binds the policy
+    * on a scoped clone, so `s`'s conf never changes. Returns the sink dir.
     */
   private[graft] def encryptedStreamDir(s: SparkSession, d: String): String =
     Scratch.fixture("crypto", d, "events_stream") { base =>
@@ -191,12 +190,8 @@ object CryptoParity {
         .select("event_id", "user_id", "event_type", "value")
         .write.parquet(srcDir)
       val schema = Parquet.schema(s, srcDir)
-      val s2 = s.newSession()
-      // Loan pattern: s2's conf is restored even if the stream fails — a
-      // leaked binding would encrypt every later parquet write on that
-      // session (round-4 advisor finding).
       EncryptedParquet.withEncryptedStream(
-          s2.readStream.schema(schema).parquet(srcDir),
+          s.readStream.schema(schema).parquet(srcDir),
           sinkDir, ckptDir, eventsPolicy, TestKmsServer.shared.url,
           zstdLevel = 3) { w =>
         w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -83,23 +83,12 @@ object EncryptionPolicy {
     if (accessToken.isEmpty) conf.unset(KeyToolkit.KEY_ACCESS_TOKEN_PROPERTY_NAME)
   }
 
-  /** Every crypto-related property, for cleanup after an encrypted job so
-    * later plaintext writes on the same session aren't encrypted.
+  /** Drop parquet-mr's JVM-wide KMS-client and KEK caches for `tokens`
+    * only (`None` is a token-less caller, cached under parquet's
+    * `DEFAULT`). A key rotation flushes the tokens it writes and verifies
+    * with; every other token's warm reader cache stays warm.
     */
-  val allProperties: Seq[String] = Seq(
-    CryptoFactoryClassProperty,
-    KeyToolkit.KMS_CLIENT_CLASS_PROPERTY_NAME,
-    KeyToolkit.KMS_INSTANCE_URL_PROPERTY_NAME,
-    KeyToolkit.KMS_INSTANCE_ID_PROPERTY_NAME,
-    KeyToolkit.KEY_ACCESS_TOKEN_PROPERTY_NAME,
-    KeyToolkit.DATA_KEY_LENGTH_PROPERTY_NAME,
-    KeyToolkit.DOUBLE_WRAPPING_PROPERTY_NAME,
-    KeyToolkit.KEY_MATERIAL_INTERNAL_PROPERTY_NAME,
-    KeyToolkit.CACHE_LIFETIME_PROPERTY_NAME,
-    PDCF.COLUMN_KEYS_PROPERTY_NAME,
-    PDCF.FOOTER_KEY_PROPERTY_NAME,
-    PDCF.PLAINTEXT_FOOTER_PROPERTY_NAME,
-    PDCF.ENCRYPTION_ALGORITHM_PROPERTY_NAME)
-
-  def clear(conf: Configuration): Unit = allProperties.foreach(conf.unset)
+  def flushKeyCaches(tokens: Option[String]*): Unit =
+    tokens.map(_.getOrElse(KmsClient.KEY_ACCESS_TOKEN_DEFAULT)).distinct
+      .foreach(KeyToolkit.removeCacheEntriesForToken)
 }

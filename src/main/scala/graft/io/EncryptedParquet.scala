@@ -3,6 +3,7 @@ package graft.io
 import graft.crypto.EncryptionPolicy
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
+import org.apache.spark.sql.graft.Sessions
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Encrypted parquet write/read over Spark's native parquet source —
@@ -62,42 +63,22 @@ object EncryptedParquet {
     * per-relation options can't carry the crypto factory here. The
     * supported channel is the session conf overlay: `newHadoopConf()`
     * copies every session SQLConf entry verbatim into the Hadoop conf it
-    * hands each write job, so Hadoop-keyed properties set via
-    * `spark.conf.set` reach the sink per-session. This loan therefore
-    * binds the policy to `df`'s session while `run` configures, starts
-    * and awaits the stream: run it on a DEDICATED session
-    * (`spark.newSession()` shares the context but isolates the conf — a
-    * streaming job owns its session in production), and every file the
-    * sink commits is encrypted while batch relations on other sessions
-    * stay per-relation-scoped.
-    *
-    * The binding is undone afterwards even when `run` throws — while
-    * bound, EVERY parquet write on the session (batch included) is
-    * encrypted under `policy`, so a stream failure that skipped cleanup
-    * would silently encrypt unrelated jobs' output (round-4 advisor
-    * finding). Undone means restored, not erased: each bound key gets
-    * back the session's own value, or is unset again if the session had
-    * none, so a session's own zstd level or writer version survives.
+    * hands each write job. So the policy is bound on a scoped clone of
+    * `df`'s session ([[org.apache.spark.sql.graft.Sessions]]) that writes
+    * the stream `run` configures, starts and awaits: every committed file
+    * is encrypted, and `df`'s own session never sees the binding.
     */
   def withEncryptedStream[T](df: DataFrame, path: String, checkpointDir: String,
       policy: EncryptionPolicy, kmsUrl: String,
       zstdLevel: Int = 19)
       (run: DataStreamWriter[Row] => T): T = {
-    val conf = df.sparkSession.conf
     // The codec itself is the sink's own option below.
     val binding = cryptoOptions(policy, kmsUrl, zstdLevel) - "compression"
-    // getAll (explicitly-set entries only), not getOption (which falls
-    // back to defaults): a key the session never set is unset again, not
-    // left pinned to its default (the Dedup.withLoopConfs rule).
-    val before = conf.getAll
-    binding.foreach { case (k, v) => conf.set(k, v) }
-    try run(df.writeStream
+    run(Sessions.rebind(df, Sessions.scoped(df.sparkSession, binding)).writeStream
       .format("parquet")
       .option("compression", "zstd")
       .option("path", path)
       .option("checkpointLocation", checkpointDir))
-    finally binding.keys.foreach(k =>
-      before.get(k) match { case Some(v) => conf.set(k, v); case None => conf.unset(k) })
   }
 
   /** Read an encrypted dataset with the given privilege token. Column
@@ -152,9 +133,10 @@ object EncryptedParquet {
     * this is the rotation that exists, and it parallelizes as one
     * ordinary Spark read→write job.)
     *
-    * The KEK write cache is cleared first so the writer cannot reuse a
-    * cached pre-rotation KEK — every rotated file references only KEK
-    * ids minted by this call. The rewrite lands in a temp sibling and
+    * The token-less writer's KEK cache is cleared first so the writer
+    * cannot reuse a cached pre-rotation KEK — every rotated file
+    * references only KEK ids minted by this call; other tokens' reader
+    * caches stay warm. The rewrite lands in a temp sibling and
     * swaps in by rename through the Hadoop FileSystem API ([[Afs]]):
     * readers opening mid-swap see old or new files, never a partial mix
     * of both generations, on any backend with directory rename (local,
@@ -168,7 +150,6 @@ object EncryptedParquet {
   def rotateByRewrite(spark: SparkSession, path: String,
       policy: EncryptionPolicy, kmsUrl: String, accessToken: Option[String],
       zstdLevel: Int = 19): Unit = {
-    import org.apache.parquet.crypto.keytools.KeyToolkit
     val tmp = path + ".rotate-tmp"
     val old = path + ".rotate-old"
     // Crash recovery BEFORE any delete: a prior invocation that renamed
@@ -214,7 +195,7 @@ object EncryptedParquet {
       verifiedLive = Some(live)
     }
     Afs.delete(tmp); Afs.delete(old)
-    KeyToolkit.removeCacheEntriesForAllTokens()
+    EncryptionPolicy.flushKeyCaches(None)
     val before = verifiedLive.getOrElse(
       fingerprint(read(spark, path, kmsUrl, accessToken)))
     write(read(spark, path, kmsUrl, accessToken), tmp, policy, kmsUrl,
@@ -233,7 +214,7 @@ object EncryptedParquet {
     // Readers (including the verification below) must unwrap the FRESH
     // KEKs, not replay a warm pre-rotation cache entry keyed by the same
     // token.
-    KeyToolkit.removeCacheEntriesForAllTokens()
+    EncryptionPolicy.flushKeyCaches(accessToken)
     // Drop the pre-rotation copy only after the swapped-in dataset proves
     // complete and readable: its fingerprint decrypts every column of
     // every file under the fresh keys, so a truncated, key-broken or

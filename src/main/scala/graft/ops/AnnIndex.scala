@@ -1049,8 +1049,8 @@ object AnnIndex {
         .write.mode("overwrite").parquet(srcDir)
     }
     val schema = Parquet.schema(s, srcDir)
-    // Dedicated session clone: streaming state (listeners, SQL conf
-    // snapshots) stays off the caller's session, the q24f rule.
+    // A separate session keeps the stream's state (listeners, SQL conf
+    // snapshots) off the caller's session; it sets no conf of its own.
     val s2 = s.newSession()
     s2.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")

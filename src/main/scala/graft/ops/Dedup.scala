@@ -4,6 +4,7 @@ import graft.{Q, Tables}
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Sessions
 
 /** Deduplication operators over the documents table — the training-data-
   * pipeline surface: exact dedup, exact n-gram Jaccard, MinHash+LSH
@@ -494,48 +495,39 @@ object Dedup {
       loop: (DataFrame, org.apache.spark.storage.StorageLevel) => DataFrame): DataFrame = {
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val s = edges.sparkSession
-    // The edge list is orders of magnitude smaller than the corpus (only
-    // near-dup pairs), but each fixpoint round is a join+agg+count whose
-    // exchanges inherit the session's corpus-sized shuffle parallelism —
-    // mostly-empty tasks that make the rounds latency-bound. Run the
-    // loop's own shuffles narrower; the conf is restored before the
-    // caller's final aggregate plans. (At true edge scale one would size
-    // this to the edge volume — it is a per-stage tuning knob, not a
-    // semantic.)
     // Materialize the bidirectional edge list (and with it the caller's
     // whole upstream pipeline — for q38 the candidate/verification joins
-    // of jaccardPairs) BEFORE any conf change: Spark confs bind at
-    // action time, not plan-build time, so flipping them first would run
-    // the heaviest upstream plan without AQE on 8 shuffle partitions.
+    // of jaccardPairs) on the CALLER's session: Spark confs bind at
+    // action time, not plan-build time, so running it under the loop's
+    // confs would run the heaviest upstream plan without AQE on 8
+    // shuffle partitions.
     val bi = edges.select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(disk)
     bi.count(): Unit
-    // getAll (explicitly-set entries only), not get/getOption (which fall
-    // back to defaults): restoring an UNSET conf must unset it again —
-    // re-setting the default value leaves the key explicitly present,
-    // which is itself a session-state leak (ConfHygieneSpec).
-    val setBefore = s.conf.getAll
-    val prevParts = setBefore.get("spark.sql.shuffle.partitions")
-    val prevAqe = setBefore.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    // AQE off for the loop only: every fixpoint round is a join+agg over
-    // an edge list orders of magnitude smaller than the corpus, and AQE
-    // re-plans each of its exchanges as separate query-stage jobs —
-    // pure scheduling latency (~half the loop's wall at bench scale) for
-    // shuffles whose 8-partition shape is already fixed. The caller's
-    // plans (and everything outside the loop, including the upstream
-    // pipeline materialized above) keep AQE.
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    def restore(key: String, prev: Option[String]): Unit =
-      prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-    try loop(bi, disk)
-    finally {
-      restore("spark.sql.shuffle.partitions", prevParts)
-      restore("spark.sql.adaptive.enabled", prevAqe)
-    }
+    // The loop runs on a scoped clone that sees `bi`'s persist; the
+    // caller's conf never changes, so its concurrent queries keep theirs.
+    val loopSession = Sessions.scoped(s, Map(
+      // The edge list is orders of magnitude smaller than the corpus
+      // (only near-dup pairs), but each fixpoint round is a
+      // join+agg+count whose exchanges inherit the session's corpus-sized
+      // shuffle parallelism — mostly-empty tasks that make the rounds
+      // latency-bound. Run the loop's own shuffles narrower. (At true
+      // edge scale one would size this to the edge volume — it is a
+      // per-stage tuning knob, not a semantic.)
+      "spark.sql.shuffle.partitions" -> "8",
+      // AQE off for the loop only: every fixpoint round is a join+agg
+      // over an edge list orders of magnitude smaller than the corpus,
+      // and AQE re-plans each of its exchanges as separate query-stage
+      // jobs — pure scheduling latency (~half the loop's wall at bench
+      // scale) for shuffles whose 8-partition shape is already fixed.
+      // The caller's plans (and everything outside the loop, including
+      // the upstream pipeline materialized above) keep AQE.
+      "spark.sql.adaptive.enabled" -> "false"))
+    // The labels come back on the caller's session, planned under its conf.
+    Sessions.rebind(loop(Sessions.rebind(bi, loopSession), disk), s)
   }
 
   /** Alternating large-star / small-star contraction over an

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.crypto.EncryptionPolicy
 import graft.functions.GraftFunctions
 import graft.io.{Afs, EncryptedParquet, Parquet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -958,14 +959,13 @@ object IvfPq {
     * the crypto factory — the same entry point upgrades a plaintext
     * index to encrypted-at-rest in place.
     *
-    * The KEK write cache is cleared first, so the rotated files
-    * reference only KEK ids minted by this call (the
+    * The token-less writer's KEK cache is cleared first, so the rotated
+    * files reference only KEK ids minted by this call (the
     * [[graft.io.EncryptedParquet.rotateByRewrite]] discipline; the
     * EncryptedAnnSpec pins fresh KMS wrap traffic across a rotation).
     */
   def rotateIndexKeys(s: SparkSession, root: String, crypto: IndexCrypto,
       source: Option[IndexCrypto]): String = {
-    import org.apache.parquet.crypto.keytools.KeyToolkit
     val cur = AnnIndex.resolveVersion(root).getOrElse(throw
       new IllegalArgumentException(s"no complete index version under $root to rotate"))
     // The rewrite PRESERVES the source's key-material mode (review r13:
@@ -978,7 +978,7 @@ object IvfPq {
       Afs.listStatus(s"$cur/ivf_centroids")
         .exists(_.getPath.getName.startsWith("_KEY_MATERIAL_FOR_"))
     val out = Some(crypto.copy(externalMaterial = externalOut))
-    KeyToolkit.removeCacheEntriesForAllTokens()
+    EncryptionPolicy.flushKeyCaches(None)
     AnnIndex.publishVersion(root) { vdir =>
       Seq("ivf_centroids", "pq_codebook").foreach { a =>
         AnnIndex.writeArtifact(
@@ -1009,7 +1009,7 @@ object IvfPq {
       // bare count() is metadata-served and would flip CURRENT over a
       // column-key-broken rewrite (ADVICE r13), downing the index at
       // the first probe.
-      KeyToolkit.removeCacheEntriesForAllTokens()
+      EncryptionPolicy.flushKeyCaches(crypto.token)
       Seq("ivf_centroids", "pq_codebook", "ivfpq_lists").foreach { a =>
         val (nNew, hNew) = EncryptedParquet.fingerprint(
           AnnIndex.readArtifact(s, s"$vdir/$a", Some(crypto)))
@@ -1055,9 +1055,9 @@ object IvfPq {
     * along) plus the crypto reader props, and rotates its slice of
     * partition dirs independently — per-dir rotations touch disjoint
     * sidecar files and parquet-mr's KEK caches are concurrent, so the
-    * only coordination needed is the JVM-wide cache flush at the
-    * boundaries — executed in EVERY participating JVM: the driver
-    * flushes at both ends, and each task flushes its executor's caches
+    * only coordination needed is the flush of the rotating token's
+    * caches at the boundaries — executed in EVERY participating JVM: the
+    * driver flushes at both ends, and each task flushes its executor's caches
     * before rotating (r14 ADVICE — an executor reused across two
     * rotations would otherwise re-wrap with KEKs warm from the previous
     * one, TTL-bounded but violating fresh-KEK-per-rotation). Rotation
@@ -1072,9 +1072,10 @@ object IvfPq {
       new IllegalArgumentException(s"no complete index version under $root to rotate"))
     val conf = new org.apache.hadoop.conf.Configuration(
       s.sessionState.newHadoopConf())
-    graft.crypto.EncryptionPolicy.applyReadConf(conf, crypto.kmsUrl, crypto.token)
+    EncryptionPolicy.applyReadConf(conf, crypto.kmsUrl, crypto.token)
     conf.set(KeyToolkit.KEY_MATERIAL_INTERNAL_PROPERTY_NAME, "false")
-    KeyToolkit.removeCacheEntriesForAllTokens()
+    // rotateMasterKeys unwraps and wraps under the context's own token.
+    EncryptionPolicy.flushKeyCaches(crypto.token)
     val listDirs = Afs.listStatus(s"$cur/ivfpq_lists")
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cid="))
       .map(_.getPath.toString)
@@ -1089,15 +1090,14 @@ object IvfPq {
       // with them would hand two rotations the same KEK (r14 ADVICE —
       // the driver-side boundary flush below never reaches executor
       // JVMs; in local mode this is a harmless double flush).
-      org.apache.parquet.crypto.keytools.KeyToolkit
-        .removeCacheEntriesForAllTokens()
+      EncryptionPolicy.flushKeyCaches(crypto.token)
       val taskConf = org.apache.spark.graft.HadoopConfSer.unwrap(confSer)
       it.foreach(d => org.apache.parquet.crypto.keytools.KeyToolkit
         .rotateMasterKeys(d, taskConf))
     }
     // Readers from this JVM must unwrap the fresh KEKs, not replay a
     // warm pre-rotation cache entry.
-    KeyToolkit.removeCacheEntriesForAllTokens()
+    EncryptionPolicy.flushKeyCaches(crypto.token)
     cur
   }
 

@@ -30,30 +30,30 @@ object Sampling {
   def hashSampled(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(xxhash64(c), lit(100)) < 10
 
-  @volatile private var lastQ34aFixture: Option[String] = None
+  /** Where [[dumpQ34aOracleFixture]] puts the Verify run's sampled keys. */
+  private def q34aFixture(outDir: String): String = s"${outDir}_fixtures/q34a_keys"
 
-  private def q34aSql(fixture: String): String =
-    s"""SELECT o.o_orderstatus,
-       |  count(DISTINCT o.o_orderkey) AS n_orders,
-       |  count(DISTINCT o.o_custkey) AS n_customers,
-       |  count(*) AS n_lineitems,
-       |  round(CAST(sum(CAST(l.l_quantity AS DECIMAL(38,6))) AS DOUBLE), 4) AS sum_qty
-       |FROM read_parquet('$fixture/*.parquet') k
-       |JOIN orders o ON o.o_orderkey = k.o_orderkey
-       |JOIN lineitem l ON l.l_orderkey = k.o_orderkey
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** q34a's oracle SQL, assembled at dump time (Verify writes
-    * oracle_sql.json AFTER the queries ran): DuckDB has no xxhash64, so
-    * the membership set itself is shipped as a parquet fixture and the
-    * SQL verifies everything DOWNSTREAM of membership — the per-status
-    * aggregate AND the join-consistency property (joining unsampled
-    * lineitem against the key fixture must equal Spark's both-sides-
-    * sampled join, which holds iff same-hash sampling keeps referential
-    * integrity). Membership determinism itself is SamplingSpec's job.
+  /** q34a's oracle entry for the Verify run writing to `outDir`, once
+    * [[dumpQ34aOracleFixture]] has dumped its fixture there: DuckDB has
+    * no xxhash64, so the membership set itself is shipped as a parquet
+    * fixture and the SQL verifies everything DOWNSTREAM of membership —
+    * the per-status aggregate AND the join-consistency property (joining
+    * unsampled lineitem against the key fixture must equal Spark's
+    * both-sides-sampled join, which holds iff same-hash sampling keeps
+    * referential integrity). Membership determinism itself is
+    * SamplingSpec's job.
     */
-  def dynamicOracleSql: Map[String, String] =
-    lastQ34aFixture.map(p => "q34a_sample_hash" -> q34aSql(p)).toMap
+  def q34aOracleSql(outDir: String): Map[String, String] =
+    Map("q34a_sample_hash" ->
+      s"""SELECT o.o_orderstatus,
+         |  count(DISTINCT o.o_orderkey) AS n_orders,
+         |  count(DISTINCT o.o_custkey) AS n_customers,
+         |  count(*) AS n_lineitems,
+         |  round(CAST(sum(CAST(l.l_quantity AS DECIMAL(38,6))) AS DOUBLE), 4) AS sum_qty
+         |FROM read_parquet('${q34aFixture(outDir)}/*.parquet') k
+         |JOIN orders o ON o.o_orderkey = k.o_orderkey
+         |JOIN lineitem l ON l.l_orderkey = k.o_orderkey
+         |GROUP BY 1 ORDER BY 1""".stripMargin)
 
   /** Materialize q34a's sampled-key set for the DuckDB oracle — called by
     * the VERIFY harness (not by the query function: the Q contract is a
@@ -64,14 +64,13 @@ object Sampling {
     * — an sbt clean or a differently-rooted driver between the dump and
     * the DuckDB pass can no longer orphan the oracle's read path — while
     * staying invisible to harnesses that enumerate outDir subdirectories
-    * as query results.
+    * as query results. Returns the [[q34aOracleSql]] entry it serves.
     */
-  def dumpQ34aOracleFixture(s: SparkSession, d: String, outDir: String): Unit = {
-    val fixture = s"${outDir}_fixtures/q34a_keys"
+  def dumpQ34aOracleFixture(s: SparkSession, d: String, outDir: String): Map[String, String] = {
     Tables.orders(s, d).filter(hashSampled(col("o_orderkey")))
       .select("o_orderkey").coalesce(1)
-      .write.mode("overwrite").parquet(fixture)
-    lastQ34aFixture = Some(fixture)
+      .write.mode("overwrite").parquet(q34aFixture(outDir))
+    q34aOracleSql(outDir)
   }
 
   /** Deterministic 10% key-hash sample, now exercised across BOTH fact

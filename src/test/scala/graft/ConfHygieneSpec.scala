@@ -3,10 +3,11 @@ package graft
 /** Session-conf hygiene: given a `Graft.tune`d session, building ANY
   * registered query must leave session conf exactly as it found it —
   * queries that need special confs either get them from tune (bucketed
-  * scan ordering, nanos-as-long) or scope-and-restore internally
-  * (Dedup.connectedComponents' fixpoint loop). A query silently flipping
-  * a session flag poisons every later query in the same session (the
-  * round-3 q35 finding).
+  * scan ordering, nanos-as-long) or run that part on a scoped clone of
+  * the session (`org.apache.spark.sql.graft.Sessions`: the
+  * connected-components loop, the encrypted stream sink). A query
+  * silently flipping a session flag poisons every later query in the
+  * same session (as q35 once did).
   */
 class ConfHygieneSpec extends SparkTestBase {
 

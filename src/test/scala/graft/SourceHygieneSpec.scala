@@ -12,11 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark listener (`graft.obs.QueryMetrics`), ONE scratch-placement rule
   * (`graft.io.Scratch`), ONE crypto carrier in the ANN index
   * (`AnnIndex.IndexCrypto`), ONE claim loop (`graft.io.Afs.claim`) and
-  * ONE batch Parquet read (`graft.io.Parquet.read`) and ONE way graft's
+  * ONE batch Parquet read (`graft.io.Parquet.read`), ONE way graft's
   * functions reach a session (the ServiceLoader-installed
-  * `GraftSparkExtensions`). A second builder, collector, private scratch
-  * root, raw crypto option map, copied claim loop, schema-inferring read
-  * or imperative function registration regrowing in a module fails here.
+  * `GraftSparkExtensions`) and ONE way an operator runs under confs of
+  * its own (a scoped clone, `org.apache.spark.sql.graft.Sessions`). A
+  * second builder, collector, private scratch root, raw crypto option
+  * map, copied claim loop, schema-inferring read, imperative function
+  * registration or set-and-restore of a caller's session conf regrowing
+  * in a module fails here.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -90,6 +93,24 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   test("createExclusive is called only from the claim primitive's file") {
     assertOnlyIn("""\bcreateExclusive\s*\(""".r, Set("graft/io/Afs.scala"))
+  }
+
+  test("session confs are set only by Graft.tune and on a scoped clone") {
+    // `<session>.conf.set(` / `.unset(` on a SparkSession's RuntimeConfig.
+    val pattern = """\.conf\s*\.\s*(?:set|unset)\s*\(""".r
+    // It matches the set the connected-components loop once made on its
+    // caller's session...
+    assert(pattern.findFirstIn("""s.conf.set("spark.sql.shuffle.partitions", "8")""").isDefined)
+    // ...and not a Hadoop Configuration's set.
+    Seq("graft/crypto/EncryptionPolicy.scala" -> "conf.set(k, v)",
+        "graft/ops/IvfPq.scala" -> "conf.set(KeyToolkit.KEY_MATERIAL_INTERNAL_PROPERTY_NAME")
+      .foreach { case (file, set) =>
+        val line = codeLines.find(h => h._1 == file && h._3.contains(set))
+        assert(line.isDefined, s"no Hadoop conf set `$set` in $file")
+        assert(pattern.findFirstIn(line.get._3).isEmpty, s"$pattern matches ${line.get}")
+      }
+    assertOnlyIn(pattern,
+      Set("graft/Graft.scala", "org/apache/spark/sql/graft/Sessions.scala"))
   }
 
   test("no file under src/ registers functions imperatively") {

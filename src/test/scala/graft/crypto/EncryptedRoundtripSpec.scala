@@ -76,7 +76,12 @@ class EncryptedRoundtripSpec extends SparkTestBase with BeforeAndAfterAll {
     // No decryption factory configured at all — the plaintext-footer file
     // must still be listable and its plaintext column readable
     // (README.md:49-54, write_encrypted_parquet.py:85).
-    EncryptionPolicy.clear(spark.sparkContext.hadoopConfiguration)
+    // No crypto key is bound to the session's Hadoop conf (crypto travels
+    // as per-relation options), so this really is a crypto-less reader.
+    val hadoop = spark.sessionState.newHadoopConf()
+    val bound = EncryptionPolicy.writeConfMap(EncryptionPolicy.reference, "kms", Some("token"))
+      .keySet.filter(k => hadoop.get(k) != null)
+    assert(bound.isEmpty, s"crypto keys set on the session's Hadoop conf: $bound")
     val rows = spark.read.parquet(dir).select("id").orderBy("id").collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
   }

@@ -107,7 +107,12 @@ class EncryptionModesSpec extends SparkTestBase with BeforeAndAfterAll {
     // there, a reader with NO crypto config reads the plaintext id
     // column; here the same reader must fail at schema inference —
     // without the footer key there is nothing legible in the file.
-    EncryptionPolicy.clear(spark.sparkContext.hadoopConfiguration)
+    // No crypto key is bound to the session's Hadoop conf (crypto travels
+    // as per-relation options), so this really is a crypto-less reader.
+    val hadoop = spark.sessionState.newHadoopConf()
+    val bound = EncryptionPolicy.writeConfMap(EncryptionPolicy.reference, "kms", Some("token"))
+      .keySet.filter(k => hadoop.get(k) != null)
+    assert(bound.isEmpty, s"crypto keys set on the session's Hadoop conf: $bound")
     val e = intercept[Exception](spark.read.parquet(encFooterDir).schema)
     def chainMentions(t: Throwable): Boolean =
       Option(t).exists(x => Option(x.getMessage).exists(m =>

@@ -210,6 +210,37 @@ class KeyRotationSpec extends SparkTestBase {
     } finally kms.stop()
   }
 
+  /** A rotation flushes only the KEK caches of the tokens it writes and
+    * verifies with: a reader holding another token keeps its warm cache,
+    * and its next read makes no KMS call at all.
+    */
+  test("rotating one dataset leaves another token's warm reader cache warm") {
+    val kms = new TestKmsServer().start()
+    try {
+      val base = Files.createTempDirectory("graft-rotate-scope-").toString
+      val policy = EncryptionPolicy(
+        columnKeys = Map(
+          PrivilegeLevel.Confidential -> Seq("first_name", "last_name"),
+          PrivilegeLevel.Restricted   -> Seq("social_security_number")))
+      val df = Fixtures.people(spark)
+      EncryptedParquet.write(df, s"$base/a", policy, kms.url)
+      EncryptedParquet.write(df, s"$base/b", policy, kms.url)
+      def readA(): Set[Seq[Any]] =
+        EncryptedParquet.read(spark, s"$base/a", kms.url, Some("CONFIDENTIAL"))
+          .select("id", "first_name", "last_name").collect().map(_.toSeq).toSet
+      val want = readA() // warms CONFIDENTIAL's KEK cache
+      val (_, warm) = kms.counts
+      assert(readA() == want)
+      assert(kms.counts._2 == warm, "a warm reader unwrapped at the KMS (test premise)")
+      EncryptedParquet.rotateByRewrite(spark, s"$base/b", policy, kms.url, Some("RESTRICTED"))
+      val (_, rotated) = kms.counts
+      assert(rotated > warm, "the rotation's verification made no unwrap (test vacuous)")
+      assert(readA() == want)
+      assert(kms.counts._2 == rotated,
+        s"re-reading A after B's rotation made ${kms.counts._2 - rotated} KMS unwraps")
+    } finally kms.stop()
+  }
+
   /** The rotation swap through the Hadoop FileSystem seam with a
     * scheme-qualified URI — as an hdfs:// deployment would address the
     * dataset (r11 verdict item 2: the swap/sweep/restore protocol must

@@ -88,7 +88,7 @@ class SamplingSpec extends SparkTestBase {
       .collect().map(_.toSeq).toSet
     assert(res == expected)
     // Dump-time oracle SQL exists and points at this run's fixture.
-    val sql = Sampling.dynamicOracleSql
+    val sql = Sampling.q34aOracleSql(outDir)
     assert(sql.keySet == Set("q34a_sample_hash"))
     assert(sql("q34a_sample_hash").contains(s"${outDir}_fixtures/q34a_keys"))
   }

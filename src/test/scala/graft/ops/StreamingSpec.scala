@@ -154,28 +154,22 @@ class StreamingSpec extends SparkTestBase {
         .select(col("event_id"), col("user_id"), col("event_type"))
       val policy = EncryptionPolicy(columnKeys = Map(
         PrivilegeLevel.Confidential -> Seq("event_type")))
-      // Dedicated session for the stream: the file stream sink reads its
-      // write-job Hadoop conf from SESSION state (not datasource options),
-      // so the crypto binding lives on an isolated session clone — the
-      // shared test session's conf stays untouched.
-      val s2 = spark.newSession()
-      s2.conf.set("parquet.compression.codec.zstd.level", "7")
-      assert(!s2.conf.getAll.contains("parquet.writer.version"))
-      val stream = s2.readStream
+      // The stream is built on the shared session itself: the file
+      // stream sink reads its write-job Hadoop conf from SESSION state,
+      // and withEncryptedStream binds the policy on a scoped clone, so
+      // the caller's conf is the same before, during and after the run.
+      val before = spark.conf.getAll
+      val stream = spark.readStream
         .schema(Tables.events(spark, sfDir).schema)
         .parquet(eventsDir)
         .select(col("event_id"), col("user_id"), col("event_type"))
       EncryptedParquet.withEncryptedStream(stream, sinkDir, ckptDir,
           policy, kms.url, zstdLevel = 3) { w =>
-        assert(s2.conf.get("parquet.compression.codec.zstd.level") == "3")
+        assert(spark.conf.getAll == before, "the binding reached the caller's session")
         w.trigger(Trigger.AvailableNow()).start().awaitTermination()
+        assert(spark.conf.getAll == before, "the stream changed the caller's session")
       }
-      // The binding is restored, not erased: the session's own zstd level
-      // survives the stream, and keys it never set are unset again.
-      val after = s2.conf.getAll
-      assert(after.get("parquet.compression.codec.zstd.level") == Some("7"))
-      assert(!after.contains("parquet.writer.version"))
-      assert(EncryptionPolicy.allProperties.forall(k => !after.contains(k)))
+      assert(spark.conf.getAll == before, "the caller's session changed after the stream")
       // Privileged read returns exactly the batch content (exactly-once
       // through the checkpointed sink, decrypted through the KMS).
       val got = EncryptedParquet.read(spark, sinkDir, kms.url, Some("CONFIDENTIAL"))
