@@ -27,7 +27,7 @@ object CryptoParity {
     * plaintext key column — the reference's policy shape
     * (write_encrypted_parquet.py:75-79) on the oracle corpus.
     */
-  private val nationPolicy = EncryptionPolicy(columnKeys = Map(
+  private[graft] val nationPolicy = EncryptionPolicy(columnKeys = Map(
     PrivilegeLevel.Internal     -> Seq("n_regionkey"),
     PrivilegeLevel.Confidential -> Seq("n_name")))
 
@@ -80,7 +80,7 @@ object CryptoParity {
     * sensitive ones; keys/dates stay plaintext so layout-level pruning
     * and joins on keys need no privilege.
     */
-  private val lineitemPolicy = EncryptionPolicy(columnKeys = Map(
+  private[graft] val lineitemPolicy = EncryptionPolicy(columnKeys = Map(
     PrivilegeLevel.Internal     -> Seq("l_discount"),
     PrivilegeLevel.Confidential -> Seq("l_extendedprice")))
 

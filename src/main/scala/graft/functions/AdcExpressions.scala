@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * acc + element_at(lut, m*K + codes[m] + 1))`) is correct but
   * interpreted: higher-order functions sit outside whole-stage codegen
   * and allocate a lambda frame per element, and the ADC dot is THE
-  * per-candidate inner loop of every PQ serve (q112/q131/q134 and the
-  * distributed composed path) — millions of evaluations per probe batch.
+  * per-candidate inner loop of the composed serve (q111/q112/q130-q132/
+  * q134) — millions of evaluations per probe batch.
   * These expressions compile to tight fused loops, the
   * [[CosineSimilarity]] discipline applied to the quantized kernels.
   *
@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   */
 
 /** qdot = Σ_m lut[m*kpq + codes[m]] — the per-candidate ADC lookup sum.
-  * `lut` is the probe's flat M×K table ([[PqLutExpr]] or the driver
-  * loop), `codes` the candidate's array<int> PQ codes.
+  * `lut` is the probe's flat M×K table ([[PqLutExpr]]), `codes` the
+  * candidate's array<int> PQ codes.
   */
 case class AdcDotExpr(left: Expression, right: Expression, kpq: Int)
     extends BinaryExpression {
@@ -91,9 +91,9 @@ case class AdcDotExpr(left: Expression, right: Expression, kpq: Int)
 
 /** The probe's flat ADC lookup table as one fused kernel:
   * lut[m*kpq + c] = dot(pe[m*sub .. m*sub+sub), cbflat[(m*kpq+c)*sub ..))
-  * — the collected serve's O(M·K·sub) driver loop, computed row-parallel
-  * on executors for the distributed composed path (the codebook rides as
-  * a flat array<double> literal). NULL when the codebook is undersized
+  * — the composed serve's O(M·K·sub) table, computed row-parallel with
+  * j-ascending summation (the codebook rides as a flat array<double>
+  * literal). NULL when the codebook is undersized
   * for pe's dimensionality, when pe is not a whole number of subvectors,
   * or when either array has a null element.
   */

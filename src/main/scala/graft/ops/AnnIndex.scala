@@ -622,11 +622,13 @@ object AnnIndex {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Hard cap on an external probe batch: the serve paths materialize
-    * the probes driver-side (routing / ADC LUTs are O(probes·dim) and
-    * O(probes·M·K)), so the collect must be bounded BY CONSTRUCTION —
-    * a caller with more probes splits into batches (each batch is one
-    * routed, pruned scan; batches stream through the same index).
+  /** The serve's branch point on the probe count: a probe frame of at
+    * most this many rows is served by the bounded branch
+    * ([[IvfPq.probeBounded]] — collected, routed cids known on the
+    * driver, statically pruned list scans, broadcast probe side and
+    * pool); a larger one by the unbounded branch
+    * ([[IvfPq.probeUnbounded]] — never collected). Either way every row
+    * is served.
     */
   val MaxProbes = 1024
 
@@ -639,7 +641,7 @@ object AnnIndex {
 
   /** Normalize any (id, vector, …) frame to (pid: long, pe:
     * array<double>) — the single owner of the probe-frame contract,
-    * shared by the single-batch collect and the batched driver.
+    * shared by the collect and the ordinal-dealing unbounded input.
     */
   private def normalizeProbes(probes: DataFrame): DataFrame = {
     val cols = probes.columns
@@ -648,69 +650,34 @@ object AnnIndex {
     probes.select(col(cols(0)).cast("long").as("pid"), dbl(col(cols(1))).as("pe"))
   }
 
-  /** Collect an external (id, vector) probe frame driver-side: the
-    * first column must cast to long, the second to array<double> —
-    * any (id, embedding) frame serves, not just corpus slices (r9
-    * verdict item 2). Collects at most MaxProbes + 1 rows (the limit
-    * rides into the plan — an oversized probe frame can never flood
-    * the driver) and fails fast when the cap is exceeded.
+  /** Collect an external (id, vector) probe frame driver-side, sorted by
+    * id: the first column must cast to long, the second to
+    * array<double> — any (id, embedding) frame serves, not just corpus
+    * slices (r9 verdict item 2). Collects at most MaxProbes + 1 rows
+    * (the limit rides into the plan — an oversized probe frame can
+    * never flood the driver); more than MaxProbes rows back means the
+    * frame belongs to the unbounded serve branch.
     */
-  private[ops] def collectProbes(probes: DataFrame): Seq[(Long, Seq[Double])] = {
-    val rows = normalizeProbes(probes)
+  private[ops] def collectProbes(probes: DataFrame): Seq[(Long, Seq[Double])] =
+    normalizeProbes(probes)
       .limit(MaxProbes + 1)
       .collect().toIndexedSeq
-    require(rows.length <= MaxProbes,
-      s"probe batch exceeds MaxProbes=$MaxProbes — split into batches")
-    rows.map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
-  }
+      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
 
-  /** Probe→list routing, k-thresholded like assignment ([[assignCids]]):
-    * at ≤ [[LiteralAssignMaxK]] the (−cos, cid) top-nprobe runs
-    * driver-side — O(probes·k·dim) over inputs both bounded by
-    * construction, no Spark job, the cheapest path at the bench's K=16.
-    * Beyond it the batch routes through [[routeDistributed]]
-    * ([[routeCollected]]): the flop-heavy O(probes·k·dim) scan scales
-    * out with k — at §9's k=√n≈32k a driver-side route would be minutes
-    * of single-threaded cosine per batch — while the driver keeps only
-    * the routing RESULT, ≤ MaxProbes·nprobe (pid, cid) rows. Both paths
-    * use the same tie-break (highest cos, then smallest cid);
-    * [[AnnAssignSpec]] pins them identical. Entries lead with the
-    * probe's ORDINAL in the collected batch: downstream ranking
-    * partitions on it, so duplicate probe ids route AND rank per-row on
-    * every serve path, collected and distributed alike (r12 ADVICE — the
-    * collected windows used to key on probe_id and merge duplicates
-    * where the distributed path did not).
+  /** Driver-side probe→list routing over collected probe vectors: each
+    * row's nprobe (ordinal, cid) pairs by (−cos, cid) — highest cosine,
+    * ties to the smallest cid, the [[routeDistributed]] ranking. The
+    * bounded serve routes here with no Spark job; AnnAssignSpec pins it
+    * equal to [[routeDistributed]] at K=16 and k=1024 and on duplicate
+    * probe ids.
     */
-  private[ops] def routeProbes(s: SparkSession, probes: Seq[(Long, Seq[Double])],
-      cents: Seq[(Int, Seq[Double])], nprobe: Int): Seq[(Int, Long, Seq[Double], Int)] =
-    if (cents.size <= LiteralAssignMaxK) routeDriver(probes, cents, nprobe)
-    else routeCollected(s, probes, cents, nprobe)
-
-  private[ops] def routeDriver(probes: Seq[(Long, Seq[Double])],
-      cents: Seq[(Int, Seq[Double])], nprobe: Int): Seq[(Int, Long, Seq[Double], Int)] =
-    probes.zipWithIndex.flatMap { case ((pid, pe), ord) =>
+  private[ops] def routeDriver(probes: Seq[Seq[Double]],
+      cents: Seq[(Int, Seq[Double])], nprobe: Int): Seq[(Int, Int)] =
+    probes.zipWithIndex.flatMap { case (pe, ord) =>
       cents.map { case (cid, ce) => (-cosineScala(pe, ce), cid) }
         .sorted.take(nprobe)
-        .map { case (_, cid) => (ord, pid, pe, cid) }
+        .map { case (_, cid) => (ord, cid) }
     }
-
-  /** [[routeDistributed]] over a collected batch, keyed by the batch
-    * ordinal so duplicate pids route per-row as in [[routeDriver]].
-    */
-  private[ops] def routeCollected(s: SparkSession, probes: Seq[(Long, Seq[Double])],
-      cents: Seq[(Int, Seq[Double])], nprobe: Int): Seq[(Int, Long, Seq[Double], Int)] = {
-    import s.implicits._
-    val batch = probes.zipWithIndex
-      .map { case ((pid, pe), ord) => (pid, pe, ord.toLong) }
-      .toDF("pid", "pe", "__pord")
-    routeDistributed(s, batch, cents, nprobe)
-      .select(col("__pord"), col("cid"))
-      .collect().toIndexedSeq
-      .map(r => (r.getLong(0).toInt, r.getInt(1))).sorted
-      .map { case (ord, cid) =>
-        val (pid, pe) = probes(ord); (ord, pid, pe, cid)
-      }
-  }
 
   /** Union one artifact kind across segment roots (base first, oldest
     * to newest) under the LSM boundary rule: a tombstone masks exactly
@@ -733,7 +700,7 @@ object AnnIndex {
     }.reduce(_ unionAll _)
 
   /** Normalized probe frame with the per-ROW serve ordinal appended —
-    * the distributed serve paths' input shape. The ordinal is
+    * the unbounded serve branch's input shape. The ordinal is
     * [[monotonically_increasing_id]]: nondeterministic, so downstream
     * code must keep it in ONE linear pipeline (never recompute it on
     * two sides of a join) unless the frame is localCheckpoint'ed first.
@@ -742,10 +709,12 @@ object AnnIndex {
     normalizeProbes(probeDf)
       .withColumn("__pord", monotonically_increasing_id())
 
-  /** Distributed routing for the end-to-end-DataFrame serve path:
-    * `probes` (pid, pe, __pord — [[probesWithOrdinal]]'s shape) becomes
-    * one routed row per (probe row × probed list), k-thresholded like
-    * every other assignment site.
+  /** The unbounded serve branch's routing: `probes` (pid, pe, __pord —
+    * [[probesWithOrdinal]]'s shape) becomes one routed row per (probe
+    * row × probed list), k-thresholded like every other assignment
+    * site: at ≤ [[LiteralAssignMaxK]] one literal array expression,
+    * beyond it the broadcast routing table and a per-ordinal aggregate,
+    * so the O(probes·k·dim) scan scales out with k.
     */
   private[ops] def routeDistributed(s: SparkSession, probes: DataFrame,
       cents: Seq[(Int, Seq[Double])], nprobe: Int): DataFrame =
@@ -1049,10 +1018,9 @@ object AnnIndex {
         .write.mode("overwrite").parquet(srcDir)
     }
     val schema = Parquet.schema(s, srcDir)
-    // A separate session keeps the stream's state (listeners, SQL conf
-    // snapshots) off the caller's session; it sets no conf of its own.
-    val s2 = s.newSession()
-    s2.readStream.schema(schema)
+    // Built on the caller's session: the stream execution already runs
+    // the query on its own clone of it.
+    s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
       .writeStream

@@ -22,13 +22,17 @@ import org.apache.spark.sql.functions._
   * plus the two O(k)/O(M·K) trained tables (`ivf_centroids`,
   * `pq_codebook`).
   *
-  * The serve routes nprobe lists and ADC-scores only within them:
-  * candidate bytes = nprobe/k of the CODES (parquet column pruning keeps
-  * `e`'s pages off the scan — the pinned ReadSchema excludes it),
-  * candidate flops = M array lookups plus the per-(probe, list)
+  * ONE serve plan ([[probeSegments]]) routes nprobe lists and
+  * ADC-scores only within them: the scan reads CODES (parquet column
+  * pruning keeps `e`'s pages off it — the pinned ReadSchema excludes
+  * it), candidate flops = M array lookups plus the per-(probe, list)
   * centroid bias instead of a dim-length dot product. The exact-refine
   * stage then touches true vectors only for the [[AnnIndex.Pool]]-bounded
-  * pool, read from the SAME pruned partitions. The raw-vector copy stays
+  * pool, read from the SAME lists. The plan branches only on the probe
+  * count: up to [[AnnIndex.MaxProbes]] rows the routed cids are known on
+  * the driver, so both scans prune statically to nprobe/k of the lists
+  * and the probe side broadcasts; a larger frame is served as one lazy
+  * plan that never reaches the driver. The raw-vector copy stays
   * BY DESIGN — the refine pool must read the segments' own stored
   * vectors so upserted ids refine against their replacement embeddings,
   * never a stale corpus row (the r12 lifecycle-serve rule).
@@ -162,222 +166,112 @@ object IvfPq {
 
   /** Composed serve over segment roots (base first, oldest to newest)
     * with per-tombstone recency boundaries and an optional inline
-    * attribute pre-filter:
+    * attribute pre-filter — the ONE serve entry point. Every probe frame
+    * runs the same plan ([[servePlan]]):
     *
-    *   1. '''route''' — the collected probes rank the O(k·dim) routing
-    *      table ([[AnnIndex.routeProbes]]: driver-side at the bench's
-    *      K=16, distributed beyond [[AnnIndex.LiteralAssignMaxK]]),
-    *      yielding nprobe list ids per probe ROW;
-    *   2. '''ADC within the probed lists only''' — ONE statically
-    *      partition-pruned scan of the lists' CODE columns (`cid IN
-    *      (routed)` prunes directories; the ReadSchema excludes `e`, so
-    *      parquet column pruning keeps the raw-vector pages off the
-    *      scan — both pinned by IvfPqSpec), broadcast-joined to the
-    *      per-probe M×K lookup tables; a candidate's quantized cosine is
-    *      M array lookups plus the probe's bias against the list's
-    *      centroid (the residual encoding's reconstruction term).
-    *      Candidate bytes are nprobe/k of the codes.
+    *   1. '''route''' — the O(k·dim) routing table is ranked per probe
+    *      ROW (on the driver, [[AnnIndex.routeDriver]], for the bounded
+    *      branch; in the plan, [[AnnIndex.routeDistributed]], for the
+    *      unbounded one — same ranking and tie-break), yielding nprobe
+    *      list ids per row; rows are keyed by their serve ordinal
+    *      `__pord`, so duplicate probe ids route AND rank per-row (the
+    *      r12 ordinal rule);
+    *   2. '''ADC within the probed lists only''' — a scan of the lists'
+    *      CODE columns (the ReadSchema excludes `e`, so parquet column
+    *      pruning keeps the raw-vector pages off the scan — pinned by
+    *      IvfPqSpec) joined to the routed rows on cid; a candidate's
+    *      quantized cosine is M lookups into the probe's M×K table plus
+    *      the probe's bias against the list's centroid (the residual
+    *      encoding's reconstruction term);
     *   3. '''exact refine''' — the top-[[AnnIndex.Pool]] pool per probe
-    *      row (bounded: ≤ MaxProbes·Pool ids, explicitly broadcast) joins
-    *      back to the SAME pruned partitions' `(vec_id, e)` columns and
+    *      row joins back to the lists' `(vec_id, e)` columns and
     *      re-ranks by true cosine. Upserted ids therefore refine against
     *      the segment copy that produced their codes, never a stale
     *      corpus row.
     *
-    * Filtered probes widen nprobe
-    * ([[AnnIndex.FilteredNprobe]] — the predicate thins every probed
-    * list, so the candidate pool is compensated at the routing stage;
-    * within the routed lists ADC pre-filtering stays lossless).
-    * Duplicate probe ids serve per-row (the r12 ordinal rule).
-    * Under `crypto` every artifact read carries the token, so an
-    * under-privileged probe fails at action time instead of serving
-    * (EncryptedAnnSpec pins the denial and plaintext-index parity).
+    * The plan branches on one observed fact, read by one
+    * `limit(MaxProbes + 1)` collect: does the probe frame have at most
+    * [[AnnIndex.MaxProbes]] rows?
+    *
+    *   - '''bounded''' ([[probeBounded]]): the collected probes are
+    *     re-framed as a local relation; both list scans are statically
+    *     pruned to the routed cids (candidate bytes are nprobe/k of the
+    *     codes) and the probe side and the pool broadcast;
+    *   - '''unbounded''' ([[probeUnbounded]], also the direct entry point
+    *     for callers whose frame is known to be large): the probe frame
+    *     stays a DataFrame end-to-end (eagerly checkpointed, never
+    *     collected) and every list is scanned — a frame this large
+    *     touches every list anyway, and the scan still reads codes, not
+    *     raw vectors.
+    *
+    * Both branches return identical rows (IvfPqSpec pins plain,
+    * filtered, masked multi-segment, k=1024 and duplicate-pid frames).
+    * Filtered probes widen nprobe ([[AnnIndex.FilteredNprobe]] — the
+    * predicate thins every probed list, so the candidate pool is
+    * compensated at the routing stage; within the routed lists ADC
+    * pre-filtering stays lossless). Under `crypto` every artifact read
+    * carries the token, so an under-privileged probe fails at action
+    * time instead of serving (EncryptedAnnSpec pins the denial and
+    * plaintext-index parity).
     */
   private[graft] def probeSegments(s: SparkSession, roots: Seq[String],
       probeDf: DataFrame, tss: Seq[(DataFrame, Int)] = Nil,
       attrFilter: Option[Column] = None,
       crypto: Option[IndexCrypto] = None,
       nprobeOverride: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // The override is a measurement hook (AnnRetrainSpec probes at
-    // nprobe=1, where a routing-boundary split is sharpest); production
-    // callers take the default pair.
-    val nprobe = nprobeOverride.getOrElse(
-      if (attrFilter.isDefined) FilteredNprobe else Nprobe)
-    val cents = AnnIndex.readCentroids(s, roots.head, crypto)
-    val cb = AnnIndex.readCodebook(s, roots.head, crypto)
     val probes = AnnIndex.collectProbes(probeDf)
-    val routed = AnnIndex.routeProbes(s, probes, cents, nprobe)
-    val neededCids = routed.map(_._4).distinct.sorted
-    // Per probe ROW: the flat ADC LUT (lut[m*K + code] = dot(pe_m,
-    // centroid(m, code))) and the probe norm — O(M·K·sub) each,
-    // bounded by MaxProbes at the collect.
-    val luts: Map[Int, (Seq[Double], Double)] =
-      probes.zipWithIndex.map { case ((_, pe), ord) =>
-        val lut: Seq[Double] = for (m <- 0 until Mpq; code <- 0 until Kpq) yield {
-          val ce = cb((m, code)); val off = m * Sub
-          var acc = 0.0; var i = 0
-          while (i < Sub) { acc += pe(off + i) * ce(i); i += 1 }
-          acc
-        }
-        ord -> (lut, math.sqrt(pe.map(x => x * x).sum))
-      }.toMap
-    // Two SEPARATE broadcasts (review r13): the narrow routing pairs
-    // (one row per (ord, cid)) and the fat per-probe LUTs (one row per
-    // probe) — duplicating each probe's Mpq·Kpq-double LUT once per
-    // routed cid would make the broadcast nprobe-fold larger for
-    // nothing. The pair carries its `cbias` = dot(probe, centroid(cid)):
-    // the reconstruction is centroid +
-    // decoded residual, so the quantized dot decomposes as this bias
-    // plus the unchanged LUT sum (ascending-index loop, matching the
-    // distributed path's dot_product kernel bit-for-bit).
-    val centMap = cents.toMap
-    def biasOf(pe: Seq[Double], cid: Int): Double = {
-      val cv = centMap(cid)
-      var acc = 0.0; var i = 0
-      while (i < cv.length) { acc += pe(i) * cv(i); i += 1 }
-      acc
-    }
-    val routedPairs = {
-      import s.implicits._
-      routed.map { case (ord, pid, pe, cid) => (ord, pid, cid, biasOf(pe, cid)) }
-        .toDF("__ord", "probe_id", "cid", "cbias")
-    }
-    val lutDf = {
-      import s.implicits._
-      luts.toSeq.map { case (ord, (lut, pnorm)) => (ord, lut, pnorm) }
-        .toDF("__ord", "lut", "pnorm")
-    }
-    // Stage 2: codes-only scan of the probed lists. The cid filter is a
-    // LITERAL IN over partition values (static pruning); attrFilter
-    // rides the same scan (inline attribute, row-group skipping).
-    val codes = AnnIndex.maskedUnion(s, roots, "ivfpq_lists",
-      Seq(col("cid"), col("vec_id"), col("codes"), col("qnorm")), tss,
-      prep = df => df.filter(col("cid").isin(neededCids: _*))
-        .filter(attrFilter.getOrElse(lit(true))),
-      crypto = crypto)
-    val scored = codes.join(broadcast(routedPairs), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .join(broadcast(lutDf), Seq("__ord"))
-      .withColumn("qdot",
-        GraftFunctions.adcDot(col("lut"), col("codes"), Kpq) + col("cbias"))
-      .withColumn("qcos", col("qdot") / (col("pnorm") * col("qnorm")))
-    val wPool = Window.partitionBy("__ord").orderBy(col("qcos").desc, col("vec_id").asc)
-    val pool = scored
-      .withColumn("prank", row_number().over(wPool))
-      .filter(col("prank") <= Pool)
-      .select(col("__ord"), col("probe_id"), col("vec_id"))
-    // Stage 3: exact refine — true vectors from the SAME pruned
-    // partitions (second scan of the artifact, DIFFERENT columns: the
-    // codes pages stay off this one). The pool side is bounded by
-    // construction (≤ MaxProbes·Pool narrow rows), so it broadcasts
-    // explicitly: the probed lists' vector scan streams past the hash
-    // relation with no shuffle at any corpus size.
-    val vecs = AnnIndex.maskedUnion(s, roots, "ivfpq_lists",
-      Seq(col("vec_id"), col("e")), tss,
-      prep = df => df.filter(col("cid").isin(neededCids: _*)),
-      crypto = crypto)
-    val peDf = {
-      import s.implicits._
-      probes.zipWithIndex.map { case ((_, pe), ord) => (ord, pe) }.toDF("__ord", "pe")
-    }
-    val wT = Window.partitionBy("__ord").orderBy(col("cos").desc, col("vec_id").asc)
-    broadcast(pool).join(vecs, Seq("vec_id"))
-      .join(broadcast(peDf), Seq("__ord"))
-      .withColumn("cos", GraftFunctions.cosineSim(col("e"), col("pe")))
-      .withColumn("rnk", row_number().over(wT).cast("long"))
-      .filter(col("rnk") <= TopK)
-      .select(col("probe_id"), col("vec_id").as("nbr_id"), col("rnk"),
-        round(col("cos"), 4).as("cosine"))
-      .orderBy("probe_id", "rnk")
+    if (probes.length <= MaxProbes)
+      probeBounded(s, roots, probes, tss, attrFilter, crypto, nprobeOverride)
+    else probeUnbounded(s, roots, probeDf, tss, attrFilter, crypto, nprobeOverride)
   }
 
-  /** Q134 serve path: the registered probe set against this dataset's
-    * composed index.
+  /** The bounded branch: at most [[AnnIndex.MaxProbes]] collected probes
+    * ([[AnnIndex.collectProbes]]' shape), framed as a local relation
+    * with the batch ordinal as `__pord`. Output ordered by (probe_id,
+    * rnk).
     */
-  private[ops] def probe(s: SparkSession, d: String): DataFrame =
-    probeSegments(s, Seq(build(s, d)), AnnIndex.defaultProbes(s, d))
+  private[ops] def probeBounded(s: SparkSession, roots: Seq[String],
+      probes: Seq[(Long, Seq[Double])], tss: Seq[(DataFrame, Int)] = Nil,
+      attrFilter: Option[Column] = None,
+      crypto: Option[IndexCrypto] = None,
+      nprobeOverride: Option[Int] = None): DataFrame = {
+    val local = {
+      import s.implicits._
+      probes.zipWithIndex.map { case ((pid, pe), ord) => (pid, pe, ord.toLong) }
+        .toDF("pid", "pe", "__pord")
+    }
+    servePlan(s, roots, local, Some(probes), tss, attrFilter, crypto,
+      nprobeOverride).orderBy("probe_id", "rnk")
+  }
 
-  /** Metadata-filtered composed serve — the q130/q131 pre-filter shape:
-    * the predicate evaluates inside the pruned codes scan, nprobe widens
-    * per the IVF compensation rule.
-    */
-  private[ops] def probeFiltered(s: SparkSession, d: String,
-      attrFilter: Column): DataFrame =
-    probeSegments(s, Seq(build(s, d)), AnnIndex.defaultProbes(s, d),
-      attrFilter = Some(attrFilter))
-
-  // ---- distributed serve -------------------------------------------------
-
-  /** Wall seconds of the LAST distributed serve's eager probe
-    * checkpoint (the extra probe-sized job the r14 deadlock fix costs)
-    * — read by the bench diag right after a timed serve to attribute
-    * the serve wall. Measurement plumbing, not serving state.
+  /** Wall seconds of the LAST unbounded serve's eager probe checkpoint
+    * (the extra probe-sized job the r14 deadlock fix costs) — read by
+    * the bench diag right after a timed serve to attribute the serve
+    * wall. Measurement plumbing, not serving state.
     */
   @volatile private[graft] var lastCheckpointSec: Double = 0.0
 
-  /** FULLY-DISTRIBUTED composed serve — the reindex-scale probe path for
-    * the at-scale index format: the probe frame stays a DataFrame
-    * end-to-end (q132's discipline — no
-    * [[AnnIndex.collectProbes]], no MaxProbes cap, no per-batch driver
-    * round-trips).
-    *
-    * Stage shape vs the collected [[probeSegments]]:
-    *
-    *   - '''ordinal stability''' — the per-row serve ordinal appears on
-    *     BOTH sides of the refine join (the pool rows and the probe
-    *     vectors), so unlike [[AnnIndex.routeDistributed]]'s single
-    *     linear pipeline the probe frame is localCheckpoint'ed (eager)
-    *     first: the nondeterministic ordinal is dealt ONCE and every consumer
-    *     reads the same materialized values (the
-    *     [[AnnIndex.joinAssignCids]] caveat handled by construction, not
-    *     by caller discipline). Cost: one probe-sized materialization —
-    *     the input that motivates this path is large but
-    *     executor-storage-bounded (10⁷ probes ≈ 5 GB cluster-wide).
-    *   - '''routing''' — [[AnnIndex.routeDistributed]], the shared
-    *     k-thresholded plan (array expression over centroid literals at
-    *     demo k; broadcast routing table + per-ordinal aggregate past
-    *     [[AnnIndex.LiteralAssignMaxK]]).
-    *   - '''ADC''' — each routed row computes its flat M×K lookup table
-    *     as ONE array expression against the codebook literal (the
-    *     collected path's O(M·K·sub) driver loop, codegen'd; recomputed
-    *     nprobe× per probe — 4096 flops, noise next to the
-    *     per-candidate work it buys). Candidates are one CODES-column
-    *     scan of the lists joined to the routed probes on cid. There is
-    *     no STATIC cid pruning (the probed set is unknown at plan time; a
-    *     probe frame big enough to need this path touches every list
-    *     anyway), but the scan reads codes, not raw vectors — the full-scan bytes
-    *     stay 32×-compressed, which is what the composed lists buy at
-    *     this scale.
-    *     Scored rows project to (ordinal, ids, qcos) BEFORE the pool
-    *     window's exchange, so neither the LUT nor the probe vector ever
-    *     crosses a candidate-sized shuffle.
-    *   - '''refine''' — the per-ordinal top-[[AnnIndex.Pool]] pool joins
-    *     back to the checkpointed probe vectors on the ordinal and to
-    *     the lists' (vec_id, e) columns on vec_id. The pool is
-    *     probe-proportional (never MaxProbes-bounded here), so the joins
-    *     are left unhinted: AQE broadcasts the pool at small probe
-    *     counts and falls back to a shuffle join at reindex scale.
-    *
-    * Per-probe results are identical to [[probeSegments]] (same LUT
-    * arithmetic in the same summation order, same tie-breaks; pinned by
-    * IvfPqSpec on plain, filtered, masked-multi-segment and
-    * duplicate-pid frames, plus a no-LocalTableScan plan pin).
+  /** The unbounded branch, and the serve entry point for callers whose
+    * frame is known to be large (q131, q132, the bench's reindex-scale
+    * diag cells): any probe frame, served as one lazy plan with no
+    * driver collect and no probe-count cap (10⁷ probes ≈ 5 GB
+    * cluster-wide, executor-storage bounded). Those callers skip
+    * [[probeSegments]]' count: it would execute their probe frame once
+    * more (its exchange and broadcast jobs plus the incremental take
+    * jobs — 3 more jobs on q131 and 4 on q132 at sf0.01) only to pick
+    * this branch. The per-row ordinal appears on BOTH sides of the refine
+    * join (the pool rows and the probe vectors), so unlike
+    * [[AnnIndex.routeDistributed]]'s single linear pipeline the probe
+    * frame is localCheckpoint'ed (eager) first: the nondeterministic
+    * ordinal is dealt ONCE and every consumer reads the same
+    * materialized values (the [[AnnIndex.joinAssignCids]] caveat handled
+    * by construction, not by caller discipline).
     */
-  private[graft] def probeDistributedSegments(s: SparkSession,
-      roots: Seq[String], probeDf: DataFrame,
-      tss: Seq[(DataFrame, Int)] = Nil,
+  private[graft] def probeUnbounded(s: SparkSession, roots: Seq[String],
+      probeDf: DataFrame, tss: Seq[(DataFrame, Int)] = Nil,
       attrFilter: Option[Column] = None,
-      crypto: Option[IndexCrypto] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nprobe = if (attrFilter.isDefined) FilteredNprobe else Nprobe
-    val cents = AnnIndex.readCentroids(s, roots.head, crypto)
-    val cb = AnnIndex.readCodebook(s, roots.head, crypto)
-    // cbFlat[(m*Kpq + code)*Sub + j] = cb(m, code)(j) — one literal
-    // array (M·K·sub doubles, 32 KB) baked into the LUT expression.
-    val cbFlat: Array[Double] = Array.tabulate(Mpq * Kpq * Sub) { i =>
-      val entry = i / Sub; cb((entry / Kpq, entry % Kpq))(i % Sub)
-    }
+      crypto: Option[IndexCrypto] = None,
+      nprobeOverride: Option[Int] = None): DataFrame = {
     // EAGER localCheckpoint: the ordinal is dealt once, here, before the
     // serve plan is built, so both refine-join sides read the same
     // stored blocks. It MUST be eager (r14, found by the lifecycle soak
@@ -402,65 +296,130 @@ object IvfPq {
     val ckptT0 = System.nanoTime()
     val probes = AnnIndex.probesWithOrdinal(probeDf).localCheckpoint(true)
     lastCheckpointSec = (System.nanoTime() - ckptT0) / 1e9
-    val routed = AnnIndex.routeDistributed(s, probes, cents, nprobe)
-    // lut[m*Kpq + code] = dot(pe_m, cb(m, code)) — the collected path's
-    // driver loop as ONE codegen'd kernel ([[graft.functions.PqLutExpr]],
-    // same j-ascending summation order so qcos is bit-identical between
-    // the paths); pnorm likewise fused (dot of pe with itself). The LUT
-    // is deliberately materialized PER ROUTED ROW and shipped across the
-    // exchange: its O(M·K·sub) build amortizes over the ~list-sized
-    // candidate fanout (corpus/K per routed list), which keeps the
-    // per-candidate ADC at M lookups. An r16 experiment replaced it with
-    // a fused direct kernel (ship pe, compute Σ_m dot(pe_m, cb_codes_m)
-    // per candidate) to shrink this exchange 86%: measured 65 → 310
-    // cpu-s on q132 — per-candidate flops swamp exchange bytes at the
-    // real fanout, so the LUT form stays.
-    //
-    // The repartition on cid MATERIALIZES each routed row's LUT exactly
-    // once before the scoring join. Without it, whole-stage codegen
-    // defers streamed-side expression evaluation into the join's match
-    // loop, so a broadcast plan recomputes the O(M·K·sub) LUT PER
-    // CANDIDATE — measured 3× the whole serve's wall at sf0.01. At
-    // reindex scale the exchange is free: it is exactly the
-    // hashpartitioning a shuffle join on cid requires, so the join
-    // reuses it instead of adding its own.
+    servePlan(s, roots, probes, None, tss, attrFilter, crypto, nprobeOverride)
+  }
+
+  /** The one route → ADC → refine plan over a (pid, pe, __pord) probe
+    * frame. `collected` is the bounded branch's driver-side probes (in
+    * `__pord` order); `None` is the unbounded branch. The branch decides
+    * where routing runs, the cid pruning, the join hints and orders, and
+    * how the LUT reaches the candidates — nothing else.
+    */
+  private def servePlan(s: SparkSession, roots: Seq[String], probes: DataFrame,
+      collected: Option[Seq[(Long, Seq[Double])]], tss: Seq[(DataFrame, Int)],
+      attrFilter: Option[Column], crypto: Option[IndexCrypto],
+      nprobeOverride: Option[Int]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // The override is a measurement hook (AnnRetrainSpec probes at
+    // nprobe=1, where a routing-boundary split is sharpest); production
+    // callers take the default pair.
+    val nprobe = nprobeOverride.getOrElse(
+      if (attrFilter.isDefined) FilteredNprobe else Nprobe)
+    val cents = AnnIndex.readCentroids(s, roots.head, crypto)
+    val cb = AnnIndex.readCodebook(s, roots.head, crypto)
+    // Bounded: routing runs on the driver with no Spark job
+    // ([[AnnIndex.routeDriver]] — the ranking and tie-break of
+    // [[AnnIndex.routeDistributed]], pinned identical by AnnAssignSpec;
+    // O(MaxProbes·k·dim) flops at most). The routed rows are a local
+    // relation, so the bias and LUT projections over them fold into
+    // local relations at optimization and the physical plan carries no
+    // centroid or codebook literal; the routed cids filter both list
+    // scans as a LITERAL IN over partition values (static pruning). The
+    // probe-proportional sides are bounded by construction (≤ MaxProbes
+    // rows, ≤ MaxProbes·Pool pool ids), so they broadcast explicitly and
+    // the probed lists stream past the hash relations with no shuffle at
+    // any corpus size. Unbounded: routing is [[AnnIndex.routeDistributed]]
+    // in the plan, the probed set is unknown at plan time, and the pool
+    // is probe-proportional, so the joins stay unhinted — AQE broadcasts
+    // at small probe counts and falls back to a shuffle join at reindex
+    // scale.
+    val (routed, staticCids) = collected match {
+      case Some(ps) =>
+        import s.implicits._
+        val routes = AnnIndex.routeDriver(ps.map(_._2), cents, nprobe)
+        val rows = routes.map { case (ord, cid) =>
+          val (pid, pe) = ps(ord); (pid, pe, ord.toLong, cid)
+        }
+        (rows.toDF("pid", "pe", "__pord", "cid"), Some(routes.map(_._2).distinct.sorted))
+      case None => (AnnIndex.routeDistributed(s, probes, cents, nprobe), None)
+    }
+    def pruned(df: DataFrame): DataFrame =
+      staticCids.fold(df)(cids => df.filter(col("cid").isin(cids: _*)))
+    // cbFlat[(m*Kpq + code)*Sub + j] = cb(m, code)(j) — one literal
+    // array (M·K·sub doubles, 32 KB) baked into the LUT expression.
+    val cbFlat: Array[Double] = Array.tabulate(Mpq * Kpq * Sub) { i =>
+      val entry = i / Sub; cb((entry / Kpq, entry % Kpq))(i % Sub)
+    }
     // The per-(probe row, routed list) residual bias is
-    // dot(pe, centroid(cid)), computed with the same ascending-index
-    // kernel as the collected path's driver loop so qcos stays
-    // bit-identical between the paths. k-thresholded like every other
-    // centroid-table consumer: at demo k the table is a LITERAL MAP
-    // baked into the expression (no join, no LocalTableScan — the
-    // probes-stay-distributed plan pin); past [[AnnIndex
-    // .LiteralAssignMaxK]] it becomes the broadcast routing table every
-    // high-k assignment already ships once per job.
-    val routedBias =
+    // dot(pe, centroid(cid)): the reconstruction is centroid + decoded
+    // residual, so the quantized dot decomposes as this bias plus the
+    // LUT sum. k-thresholded like every other centroid-table consumer:
+    // at demo k the table is a LITERAL MAP baked into the expression (no
+    // join, no LocalTableScan — the unbounded plan pin); past
+    // [[AnnIndex.LiteralAssignMaxK]] it becomes the broadcast routing
+    // table every high-k assignment already ships once per job.
+    val (routedCents, cbias) =
       if (cents.size <= AnnIndex.LiteralAssignMaxK)
-        routed.withColumn("cbias", GraftFunctions.dotProduct(col("pe"),
+        (routed, GraftFunctions.dotProduct(col("pe"),
           element_at(typedLit(cents.toMap), col("cid"))))
       else {
         val centDf = { import s.implicits._; cents.toDF("cid", "cv") }
-        routed.join(broadcast(centDf), Seq("cid"))
-          .withColumn("cbias", GraftFunctions.dotProduct(col("pe"), col("cv")))
+        (routed.join(broadcast(centDf), Seq("cid")),
+          GraftFunctions.dotProduct(col("pe"), col("cv")))
       }
-    val probeSide = routedBias
-      .withColumn("lut",
-        GraftFunctions.pqLut(col("pe"), lit(cbFlat), Kpq, Sub))
-      .withColumn("pnorm",
-        sqrt(GraftFunctions.dotProduct(col("pe"), col("pe"))))
-      .select(col("__pord"), col("pid"), col("cid"), col("lut"), col("pnorm"),
-        col("cbias"))
-      .repartition(col("cid"))
+    // lut[m*Kpq + code] = dot(pe_m, cb(m, code)) as ONE codegen'd kernel
+    // ([[graft.functions.PqLutExpr]], j-ascending summation); pnorm is
+    // the dot of pe with itself.
+    val lutCols = Seq(
+      GraftFunctions.pqLut(col("pe"), lit(cbFlat), Kpq, Sub).as("lut"),
+      sqrt(GraftFunctions.dotProduct(col("pe"), col("pe"))).as("pnorm"))
+    // Codes-only scan of the lists; attrFilter rides the same scan
+    // (inline attribute, row-group skipping).
     val codes = AnnIndex.maskedUnion(s, roots, "ivfpq_lists",
       Seq(col("cid"), col("vec_id"), col("codes"), col("qnorm")), tss,
-      prep = df => df.filter(attrFilter.getOrElse(lit(true))),
+      prep = df => pruned(df).filter(attrFilter.getOrElse(lit(true))),
       crypto = crypto)
+    val candidates =
+      if (collected.isDefined)
+        // Two SEPARATE broadcasts (review r13): the narrow routing pairs
+        // (one row per (ordinal, cid)) and the fat per-probe LUTs (one
+        // row per probe) — duplicating each probe's Mpq·Kpq-double LUT
+        // once per routed cid would make the broadcast nprobe-fold
+        // larger for nothing.
+        codes
+          .join(broadcast(routedCents.select(col("__pord"), col("pid"), col("cid"),
+            cbias.as("cbias"))), Seq("cid"))
+          .join(broadcast(probes.select(col("__pord") +: lutCols: _*)), Seq("__pord"))
+      else
+        // The LUT is deliberately materialized PER ROUTED ROW and shipped
+        // across the exchange: its O(M·K·sub) build amortizes over the
+        // ~list-sized candidate fanout (corpus/K per routed list), which
+        // keeps the per-candidate ADC at M lookups. An r16 experiment
+        // replaced it with a fused direct kernel (ship pe, compute
+        // Σ_m dot(pe_m, cb_codes_m) per candidate) to shrink this
+        // exchange 86%: measured 65 → 310 cpu-s on q132 — per-candidate
+        // flops swamp exchange bytes at the real fanout, so the LUT form
+        // stays.
+        //
+        // The repartition on cid MATERIALIZES each routed row's LUT
+        // exactly once before the scoring join. Without it, whole-stage
+        // codegen defers streamed-side expression evaluation into the
+        // join's match loop, so a broadcast plan recomputes the
+        // O(M·K·sub) LUT PER CANDIDATE — measured 3× the whole serve's
+        // wall at sf0.01. At reindex scale the exchange is free: it is
+        // exactly the hashpartitioning a shuffle join on cid requires,
+        // so the join reuses it instead of adding its own.
+        codes.join(routedCents
+          .select(Seq(col("__pord"), col("pid"), col("cid")) ++ lutCols :+
+            cbias.as("cbias"): _*)
+          .repartition(col("cid")), Seq("cid"))
     // The scored projection drops `pid` AFTER the self-exclusion filter
     // (r16): per serve ordinal there is exactly one probe row, so `pid`
     // is functionally dependent on `__pord` and re-attaches in the
     // refine join below — carrying it through the candidate-sized pool
     // exchange and both its sorts was ~20% of that stage's bytes for a
     // column the window never reads.
-    val scored = codes.join(probeSide, Seq("cid"))
+    val scored = candidates
       .filter(col("vec_id") =!= col("pid"))
       .withColumn("qdot",
         GraftFunctions.adcDot(col("lut"), col("codes"), Kpq) + col("cbias"))
@@ -471,18 +430,44 @@ object IvfPq {
       .withColumn("prank", row_number().over(wPool))
       .filter(col("prank") <= Pool)
       .select(col("__pord"), col("vec_id"))
+    // Exact refine — true vectors from the same (pruned) partitions:
+    // a second scan of the artifact with DIFFERENT columns, so the
+    // codes pages stay off this one.
     val vecs = AnnIndex.maskedUnion(s, roots, "ivfpq_lists",
-      Seq(col("vec_id"), col("e")), tss, crypto = crypto)
+      Seq(col("vec_id"), col("e")), tss, prep = pruned, crypto = crypto)
+    val probeVecs = probes.select(col("__pord"), col("pid"), col("pe"))
+    // Bounded: the probed lists' vectors stream past the broadcast pool
+    // and probe vectors. Unbounded: the pool leaves its window already
+    // hash-partitioned on `__pord`, so joining the probe vectors first
+    // shuffles only the probe frame.
+    val refine =
+      if (collected.isDefined)
+        broadcast(pool).join(vecs, Seq("vec_id"))
+          .join(broadcast(probeVecs), Seq("__pord"))
+      else pool.join(probeVecs, Seq("__pord")).join(vecs, Seq("vec_id"))
     val wT = Window.partitionBy("__pord").orderBy(col("cos").desc, col("vec_id").asc)
-    pool
-      .join(probes.select(col("__pord"), col("pid"), col("pe")), Seq("__pord"))
-      .join(vecs, Seq("vec_id"))
+    refine
       .withColumn("cos", GraftFunctions.cosineSim(col("e"), col("pe")))
       .withColumn("rnk", row_number().over(wT).cast("long"))
       .filter(col("rnk") <= TopK)
       .select(col("pid").as("probe_id"), col("vec_id").as("nbr_id"), col("rnk"),
         round(col("cos"), 4).as("cosine"))
   }
+
+  /** Q134 serve path: the registered probe set against this dataset's
+    * composed index.
+    */
+  private[ops] def probe(s: SparkSession, d: String): DataFrame =
+    probeSegments(s, Seq(build(s, d)), AnnIndex.defaultProbes(s, d))
+
+  /** Metadata-filtered composed serve — the q130/q131 pre-filter shape:
+    * the predicate evaluates inside the codes scan, nprobe widens per
+    * the IVF compensation rule.
+    */
+  private[ops] def probeFiltered(s: SparkSession, d: String,
+      attrFilter: Column): DataFrame =
+    probeSegments(s, Seq(build(s, d)), AnnIndex.defaultProbes(s, d),
+      attrFilter = Some(attrFilter))
 
   // ---- lifecycle -------------------------------------------------------
   //
@@ -1298,9 +1283,10 @@ object IvfPq {
 
   /** Q111 — the composed serve over q110's encrypted index with an
     * INTERNAL token ([[probeSegments]] under the registry's context):
-    * q134's route→ADC→refine plan with every artifact read decrypting
-    * at the scan, so beside q134 the line prices what encryption adds
-    * to an ANN serve. CURRENT
+    * q134's plan — the one route→ADC→refine serve, here on its bounded
+    * branch (10 probes) — with every artifact read decrypting at the
+    * scan, so beside q134 the line prices what encryption adds to an
+    * ANN serve. CURRENT
     * resolves from disk on every call — q110 republishes, and retired
     * versions must never be served — and the index is built only when
     * none is there. Approximate → rows-only oracle check; IvfPqSpec
@@ -1319,8 +1305,10 @@ object IvfPq {
   /** Q112 — composed serve over the LIVE LSM state (base ∪ appended
     * delta segment): the maskedUnion read path a serving index answers
     * from between folds, priced at steady state (base and delta are
-    * fixtures). Approximate → rows-only; IvfPqSpec pins multi-segment
-    * serve equality and the per-segment cid pruning.
+    * fixtures) — the one serve plan ([[probeSegments]]) on its bounded
+    * branch, every segment's scans statically cid-pruned. Approximate →
+    * rows-only; IvfPqSpec pins multi-segment serve equality and the
+    * per-segment cid pruning.
     */
   private[ops] val q112: Q = Q("q112_ann_pq_probe",
     (s, d) => {
@@ -1385,7 +1373,8 @@ object IvfPq {
 
   /** Q130 — metadata-filtered composed serve: `label = 7` evaluates
     * INSIDE the pruned codes scan (pre-filtering; nprobe widens per the
-    * IVF compensation rule — [[probeFiltered]]). Approximate →
+    * IVF compensation rule — [[probeFiltered]]; the one serve plan on
+    * its bounded branch, 10 probes). Approximate →
     * rows-only; IvfPqSpec pins predicate purity, the full k surface,
     * the recall floor vs label-restricted exact truth, and the pushdown.
     */
@@ -1394,29 +1383,33 @@ object IvfPq {
     (s, d) => probeFiltered(s, d, col("label") === 7),
     None)
 
-  /** Q131 — the DISTRIBUTED filtered composed serve: a corpus-sized
-    * probe frame served end-to-end as one lazy plan with the `label =
-    * 7` pre-filter riding every segment's codes scan
-    * ([[probeDistributedSegments]] with attrFilter — the serve-matrix
-    * cell the registry didn't price before). Approximate → rows-only;
-    * IvfPqSpec pins distributed ≡ collected on filtered frames.
+  /** Q131 — the filtered composed serve over a corpus-sized probe
+    * frame, with the `label = 7` pre-filter riding every segment's
+    * codes scan: the serve plan's unbounded branch ([[probeUnbounded]]
+    * with attrFilter — never collected, the `hashpartitioning(cid)` LUT
+    * exchange, no LocalTableScan) at every scale factor, though its 500
+    * rows at sf0.01 would fit [[AnnIndex.MaxProbes]]: the probe count
+    * that would pick the bounded branch there costs more jobs than the
+    * branch saves. Approximate → rows-only; IvfPqSpec pins the two
+    * branches equal on filtered frames.
     */
   private[ops] val q131: Q = Q(
     "q131_ann_pq_filtered_probe",
     (s, d) => {
       val probes = AnnIndex.corpus(s, d)
         .select((col("vec_id") + lit(10000000L)).as("pid"), col("e").as("pe"))
-      probeDistributedSegments(s, Seq(build(s, d)), probes,
+      probeUnbounded(s, Seq(build(s, d)), probes,
         attrFilter = Some(col("label") === 7))
     },
     None)
 
-  /** Q132 — the fully-distributed composed serve at reindex scale: 5
-    * re-keyed corpus copies (larger than [[AnnIndex.MaxProbes]]) served
-    * through [[probeDistributedSegments]] as one lazy plan, probes never
-    * materialized on the driver. Approximate → rows-only; IvfPqSpec
-    * pins result equality with the collected path and the
-    * no-LocalTableScan plan.
+  /** Q132 — the composed serve at reindex scale: 5 re-keyed corpus
+    * copies (larger than [[AnnIndex.MaxProbes]] at every bench scale
+    * factor) served through the serve plan's unbounded branch
+    * ([[probeUnbounded]]) as one lazy plan, probes never materialized
+    * on the driver. Approximate →
+    * rows-only; IvfPqSpec pins result equality with the bounded branch
+    * and the no-LocalTableScan plan.
     */
   private[ops] val q132: Q = Q(
     "q132_ann_distributed_probe",
@@ -1426,7 +1419,7 @@ object IvfPq {
         .crossJoin(broadcast(s.range(reps).toDF("r")))
         .select(((col("r") + 1) * lit(10000000L) + col("vec_id")).as("pid"),
           col("e").as("pe"))
-      probeDistributedSegments(s, Seq(build(s, d)), probes)
+      probeUnbounded(s, Seq(build(s, d)), probes)
     },
     None)
 
@@ -1441,10 +1434,11 @@ object IvfPq {
     Some(ConservationSql))
 
   /** Q134 — composed serve: route nprobe lists, ADC within them only,
-    * exact refine on the pool (see [[probeSegments]]). Approximate →
-    * rows-only driver check; IvfPqSpec pins the recall floor (≥ 0.68 at
-    * sf0.1), the cid partition pruning on BOTH scans, and that the ADC
-    * scan's ReadSchema excludes the raw vectors.
+    * exact refine on the pool — the one serve plan ([[probeSegments]])
+    * on its bounded branch (10 probes). Approximate → rows-only driver
+    * check; IvfPqSpec pins the recall floor (≥ 0.80 at sf0.1), the
+    * static cid partition pruning on BOTH scans, and that the ADC scan's
+    * ReadSchema excludes the raw vectors.
     */
   private[ops] val q134: Q = Q("q134_ann_ivfpq_probe", (s, d) => probe(s, d), None)
 

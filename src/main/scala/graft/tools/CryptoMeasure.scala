@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.Tables
-import graft.crypto.{EncryptionPolicy, PrivilegeLevel}
+import graft.crypto.EncryptionPolicy
+import graft.crypto.CryptoParity.{lineitemPolicy, nationPolicy}
 import graft.io.{Afs, EncryptedParquet, Scratch}
 import graft.obs.QueryMetrics.{seconds, warmSeconds}
 import graft.kms.TestKmsServer
@@ -157,13 +158,6 @@ object CryptoMeasure {
   def run(spark: SparkSession, sfDir: String): String = {
     val kms = new TestKmsServer().start()
     try {
-      val nationPolicy = EncryptionPolicy(columnKeys = Map(
-        PrivilegeLevel.Internal     -> Seq("n_regionkey"),
-        PrivilegeLevel.Confidential -> Seq("n_name")))
-      val lineitemPolicy = EncryptionPolicy(columnKeys = Map(
-        PrivilegeLevel.Internal     -> Seq("l_discount"),
-        PrivilegeLevel.Confidential -> Seq("l_extendedprice")))
-
       // --- size ratios (same layout both sides) ---
       val nationRatio = sizeRatio(Tables.nation(spark, sfDir), nationPolicy,
         kms.url, zstdLevel = 19)

@@ -56,13 +56,13 @@ object ScaleDiag {
         col("e").as("pe"))
   }
 
-  /** The distributed LSM serve shape priced:
-    * [[graft.ops.IvfPq.probeDistributedSegments]] over the dataset's
+  /** The unbounded LSM serve shape priced:
+    * [[graft.ops.IvfPq.probeUnbounded]] over the dataset's
     * real multi-segment MASKED state (composed append base + fresh
     * delta + delete tombstones — the q113/q129 fixtures) with q132's
     * reindex-scale probe frame (5 re-keyed corpus copies, larger than
     * MaxProbes, never materialized on the driver). q132 prices the
-    * single-root distributed serve; this cell adds the segment-union +
+    * single-root unbounded serve; this cell adds the segment-union +
     * tombstone-mask dimension at the same probe scale. Warm run then
     * one timed steady-state run, the BASELINE §C cell for "every serve
     * shape priced". Guarded by Bench like the other diag lines.
@@ -72,7 +72,7 @@ object ScaleDiag {
     val (baseDir, deltaDir, ts) = IvfPq.distLsmFixture(spark, benchSfDir)
     val probes = reindexProbes(spark, benchSfDir, 5)
     val nProbes = probes.count()
-    val sec = QueryMetrics.warmSeconds(IvfPq.probeDistributedSegments(spark,
+    val sec = QueryMetrics.warmSeconds(IvfPq.probeUnbounded(spark,
         Seq(baseDir, deltaDir), probes, Seq(ts -> Int.MaxValue))
       .write.format("noop").mode("overwrite").save())
     val ckpt = IvfPq.lastCheckpointSec
@@ -82,10 +82,10 @@ object ScaleDiag {
       s""""format":"${graft.ops.AnnIndex.FormatLevel}","sf":"$sf"}"""
   }
 
-  /** The distributed composed serve priced on a single root:
-    * [[graft.ops.IvfPq.probeDistributedSegments]] — probes a DataFrame
-    * end-to-end against the composed index (codes-only candidate scan,
-    * expression-computed ADC LUTs, bounded exact refine) — with the
+  /** The unbounded composed serve priced on a single root:
+    * [[graft.ops.IvfPq.probeUnbounded]] — probes a DataFrame end-to-end
+    * against the composed index (codes-only candidate scan, expression-computed ADC LUTs,
+    * bounded exact refine) — with the
     * same reindex-scale probe frame as [[annDistLsm]], so the
     * single-root and masked multi-segment serves are directly
     * comparable in the artifact: the difference between the two lines
@@ -97,7 +97,7 @@ object ScaleDiag {
     val probes = reindexProbes(spark, benchSfDir, 5)
     val nProbes = probes.count()
     val sec = QueryMetrics.warmSeconds(
-      IvfPq.probeDistributedSegments(spark, Seq(dir), probes)
+      IvfPq.probeUnbounded(spark, Seq(dir), probes)
         .write.format("noop").mode("overwrite").save())
     // The eager probe-checkpoint's share of the serve wall (r14 verdict
     // item 3): q132's wall moved when the r14 deadlock fix made the

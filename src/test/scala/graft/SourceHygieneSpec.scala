@@ -15,11 +15,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * ONE batch Parquet read (`graft.io.Parquet.read`), ONE way graft's
   * functions reach a session (the ServiceLoader-installed
   * `GraftSparkExtensions`) and ONE way an operator runs under confs of
-  * its own (a scoped clone, `org.apache.spark.sql.graft.Sessions`). A
+  * its own (a scoped clone, `org.apache.spark.sql.graft.Sessions`), and
+  * ONE ANN serve plan (`IvfPq.probeSegments`, one ADC scoring site). A
   * second builder, collector, private scratch root, raw crypto option
   * map, copied claim loop, schema-inferring read, imperative function
-  * registration or set-and-restore of a caller's session conf regrowing
-  * in a module fails here.
+  * registration, set-and-restore of a caller's session conf, fresh
+  * `newSession()` or second serve pipeline regrowing in a module fails
+  * here.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -111,6 +113,37 @@ class SourceHygieneSpec extends AnyFunSuite {
       }
     assertOnlyIn(pattern,
       Set("graft/Graft.scala", "org/apache/spark/sql/graft/Sessions.scala"))
+  }
+
+  test("no session under src/main is built with newSession()") {
+    // A stream already runs on its own clone of the session it is built
+    // on, and every other operator runs on its caller's session or a
+    // scoped clone; each new session is one more executor-side artifact
+    // session.
+    val pattern = """\.newSession\s*\(""".r
+    // It matches the per-call session the stream ingest once built.
+    assert(pattern.findFirstIn("val s2 = s.newSession()").isDefined)
+    val hits = codeLines.filter(h => pattern.findFirstIn(h._3).isDefined)
+    assert(hits.isEmpty, "newSession() under src/main:\n  " +
+      hits.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n  "))
+  }
+
+  test("the ANN serve scores ADC at one site, and no second serve pipeline exists") {
+    // One route → ADC → refine plan serves every probe frame: a second
+    // adc_dot or pq_lut call would be a second scoring pipeline.
+    Seq("""\bGraftFunctions\s*\.\s*adcDot\s*\(""".r,
+        """\bGraftFunctions\s*\.\s*pqLut\s*\(""".r).foreach { pattern =>
+      val hits = codeLines.filter(h => pattern.findFirstIn(h._3).isDefined)
+      // Not vacuous: the one site still matches.
+      assert(hits.size == 1, s"$pattern called ${hits.size} times under src/main:\n  " +
+        hits.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n  "))
+    }
+    val self = Paths.get("src/test/scala/graft/SourceHygieneSpec.scala")
+    val gone = Files.walk(Paths.get("src")).iterator.asScala.toSeq
+      .filter(p => Files.isRegularFile(p) && p != self)
+      .filter(p => new String(Files.readAllBytes(p), "ISO-8859-1")
+        .contains("probeDistributedSegments"))
+    assert(gone.isEmpty, s"a second serve entry point is back: ${gone.mkString(", ")}")
   }
 
   test("no file under src/ registers functions imperatively") {

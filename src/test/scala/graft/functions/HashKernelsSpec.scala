@@ -147,7 +147,7 @@ class HashKernelsSpec extends SparkTestBase {
     rows.foreach { r =>
       val pe = r.getSeq[Double](0)
       val got = r.getSeq[Double](1)
-      // The IvfPq.probeSegments driver loop, verbatim shape.
+      // A plain j-ascending driver loop: the summation order the kernel must keep.
       val want = for (m <- 0 until pe.length / sub; code <- 0 until kpq) yield {
         val base = (m * kpq + code) * sub
         var acc = 0.0; var j = 0

@@ -59,7 +59,7 @@ class AnnAssignSpec extends SparkTestBase {
     // r11 ADVICE: the join path used to key its argmin on vec_id and
     // silently collapse duplicate ids above the k threshold, while the
     // literal path (a pure projection) preserved them. Both paths must
-    // behave identically on ANY input — per-row, like routeCollected.
+    // behave identically on ANY input — per-row, like routeDistributed.
     import spark.implicits._
     val dup = (0 until 12)
       .map(i => (7L, (0 until 8).map(j => math.cos(i * 13 + j * 3)), i % 5))
@@ -74,38 +74,66 @@ class AnnAssignSpec extends SparkTestBase {
     assert(lit == joined, "paths diverged on duplicate-vec_id input")
   }
 
+  /** [[AnnIndex.routeDistributed]] over a collected batch, keyed by the
+    * batch ordinal: (ordinal, pid, pe, cid) rows, sorted.
+    */
+  private def routeDistributed(probes: Seq[(Long, Seq[Double])],
+      cs: Seq[(Int, Seq[Double])], np: Int): Seq[(Int, Long, Seq[Double], Int)] =
+    routedPlan(probes, cs, np).select("__pord", "pid", "pe", "cid").collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1), r.getSeq[Double](2), r.getInt(3)))
+      .toSeq.sortBy(t => (t._1, t._4))
+
+  private def routedPlan(probes: Seq[(Long, Seq[Double])],
+      cs: Seq[(Int, Seq[Double])], np: Int): DataFrame = {
+    import spark.implicits._
+    val batch = probes.zipWithIndex
+      .map { case ((pid, pe), ord) => (pid, pe, ord.toLong) }
+      .toDF("pid", "pe", "__pord")
+    AnnIndex.routeDistributed(spark, batch, cs, np)
+  }
+
+  /** The driver reference ([[AnnIndex.routeDriver]]) as (ordinal, cid). */
+  private def routeDriver(probes: Seq[(Long, Seq[Double])],
+      cs: Seq[(Int, Seq[Double])], np: Int): Seq[(Int, Int)] =
+    AnnIndex.routeDriver(probes.map(_._2), cs, np).sorted
+
+  private def ordCids(r: Seq[(Int, Long, Seq[Double], Int)]): Seq[(Int, Int)] =
+    r.map(t => (t._1, t._4)).sorted
+
   test("driver and distributed probe routing agree at K=16 and at k=1024") {
     val probes: Seq[(Long, Seq[Double])] = (0 until 40)
       .map(i => (i.toLong, (0 until 8).map(j => math.cos(i * 13 + j * 3)): Seq[Double]))
     for (k <- Seq(16, 1024); np <- Seq(1, 6)) {
       val cs = cents(k, 8)
-      val drv = AnnIndex.routeDriver(probes, cs, np)
-      val jn = AnnIndex.routeCollected(spark, probes, cs, np)
+      val drv = routeDriver(probes, cs, np)
+      val jn = routeDistributed(probes, cs, np)
       assert(drv.size == probes.size * np && jn.size == probes.size * np,
         s"routing under-filled at k=$k nprobe=$np")
-      assert(routedPairs(drv) == routedPairs(jn),
-        s"driver and join routing diverged at k=$k nprobe=$np")
-      // Each path must also carry the probe's own embedding through,
-      // keyed to the right ordinal.
+      assert(drv == ordCids(jn),
+        s"driver and distributed routing diverged at k=$k nprobe=$np")
+      // The distributed router must also carry the probe's own
+      // embedding through, keyed to the right ordinal.
       assert(jn.forall { case (ord, pid, pe, _) =>
         probes(ord) == ((pid, pe)) })
     }
   }
 
-  test("routeProbes picks the driver path at K=16 and the join path at k=1024") {
+  test("routeDistributed uses a literal plan at K=16 and an aggregate at k=1024") {
     val probes: Seq[(Long, Seq[Double])] = (0 until 5)
       .map(i => (i.toLong, (0 until 8).map(j => math.cos(i * 13 + j * 3)): Seq[Double]))
     // The threshold itself: same dispatch rule as assignment, so §9's
-    // serve-routing posture holds at high k without a driver-side
-    // O(probes·k·dim) single-threaded scan.
-    assert(AnnIndex.routeProbes(spark, probes, cents(16, 8), 6)
-      == AnnIndex.routeDriver(probes, cents(16, 8), 6))
-    assert(routedPairs(AnnIndex.routeProbes(spark, probes, cents(1024, 8), 6))
-      == routedPairs(AnnIndex.routeCollected(spark, probes, cents(1024, 8), 6)))
+    // serve-routing posture holds at high k without a thousand-literal
+    // routing expression — and both sides of it match the reference.
+    val small = routedPlan(probes, cents(16, 8), 6).queryExecution.executedPlan.toString
+    assert(!small.contains("BroadcastNestedLoopJoin") && !small.contains("Aggregate"),
+      s"expected the literal routing expression at K=16:\n$small")
+    val big = routedPlan(probes, cents(1024, 8), 6).queryExecution.executedPlan.toString
+    assert(big.contains("BroadcastNestedLoopJoin") && big.contains("Aggregate"),
+      s"expected the broadcast-table aggregate routing at k=1024:\n$big")
+    for (k <- Seq(16, 1024))
+      assert(ordCids(routeDistributed(probes, cents(k, 8), 6))
+        == routeDriver(probes, cents(k, 8), 6), s"routing diverged at k=$k")
   }
-
-  private def routedPairs(r: Seq[(Int, Long, Seq[Double], Int)]): Set[(Int, Long, Int)] =
-    r.map(t => (t._1, t._2, t._4)).toSet
 
   test("join routing handles duplicate probe ids per-row, like the driver path") {
     // Six rows ALL sharing pid 7, each with a different vector: routing
@@ -114,12 +142,12 @@ class AnnAssignSpec extends SparkTestBase {
     val dups: Seq[(Long, Seq[Double])] = (0 until 6)
       .map(i => (7L, (0 until 8).map(j => math.cos(i * 13 + j * 3)): Seq[Double]))
     val cs = cents(300, 8)
-    val drv = AnnIndex.routeDriver(dups, cs, 6)
-    val jn = AnnIndex.routeCollected(spark, dups, cs, 6)
+    val drv = routeDriver(dups, cs, 6)
+    val jn = routeDistributed(dups, cs, 6)
     assert(jn.size == dups.size * 6, s"join routing emitted ${jn.size} rows")
-    def perOrdinal(r: Seq[(Int, Long, Seq[Double], Int)]): Map[Int, Set[Int]] =
-      r.groupBy(_._1).view.mapValues(_.map(_._4).toSet).toMap
-    assert(perOrdinal(drv) == perOrdinal(jn),
+    def perOrdinal(r: Seq[(Int, Int)]): Map[Int, Set[Int]] =
+      r.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    assert(perOrdinal(drv) == perOrdinal(ordCids(jn)),
       "duplicate-pid rows routed differently between the paths")
   }
 

@@ -235,7 +235,7 @@ class AnnLifecycleSoakSpec extends SparkTestBase {
     val roots = st.base +: st.segs
     val res = IvfPq.probeSegments(spark, roots, probes, tsFrames(st)).collect()
     assertServed(res, st, probeIds.size, s"$what f4")
-    val dist = IvfPq.probeDistributedSegments(spark, roots, probes,
+    val dist = IvfPq.probeUnbounded(spark, roots, probes,
       tsFrames(st)).collect()
     def key(rs: Array[org.apache.spark.sql.Row]) =
       rs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet

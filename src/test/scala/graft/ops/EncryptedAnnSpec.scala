@@ -63,15 +63,15 @@ class EncryptedAnnSpec extends SparkTestBase {
     val encHigh = rows(IvfPq.probeSegments(spark, Seq(encDir), probes,
       crypto = Some(ctx(Some("RESTRICTED")))))
     assert(encHigh == plain)
-    // The DISTRIBUTED composed serve composes with encryption too: the
+    // The serve's UNBOUNDED branch composes with encryption too: the
     // token-bearing reader conf threads through its scans (and denial
-    // gates it like the collected path).
-    val encDist = rows(IvfPq.probeDistributedSegments(spark, Seq(encDir),
+    // gates it like the bounded branch).
+    val encDist = rows(IvfPq.probeUnbounded(spark, Seq(encDir),
       probes, crypto = internal))
     assert(encDist == plain,
       "encrypted distributed serve diverged from the plaintext index")
     val eDist = intercept[Throwable] {
-      IvfPq.probeDistributedSegments(spark, Seq(encDir), probes,
+      IvfPq.probeUnbounded(spark, Seq(encDir), probes,
         crypto = Some(ctx(Some("PUBLIC")))).collect()
     }
     assert(causedByAccessDenied(eDist),

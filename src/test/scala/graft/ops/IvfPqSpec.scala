@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.SparkTestBase
 import graft.io.Scratch
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The composed IVF+PQ index (format f4, r12 verdict item 1): recall
@@ -100,27 +100,35 @@ class IvfPqSpec extends SparkTestBase {
       "a neighbor escaped the label predicate")
   }
 
-  // ---- distributed serve -------------------------------------------------
+  // ---- the serve's two branches ------------------------------------------
+  //
+  // probeSegments picks its branch by probe count; the parity pins call
+  // the branch builders directly so both branches see the same frame.
 
   private def rowSeq(df: DataFrame): Seq[(Long, Long, Long, Double)] =
     df.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq.sorted
 
+  private def bounded(roots: Seq[String], probes: DataFrame,
+      tss: Seq[(DataFrame, Int)] = Nil, attrFilter: Option[Column] = None): DataFrame =
+    IvfPq.probeBounded(spark, roots, AnnIndex.collectProbes(probes), tss, attrFilter)
+
   test("distributed composed serve ≡ collected, incl. duplicate probe ids; 10k frame full-surface with no driver collect") {
     IvfPq.build(spark, sfDir)
     val base = AnnIndex.corpus(spark, sfDir).select(col("vec_id"), col("e"))
-    // Parity frame (collected path caps at MaxProbes): every corpus
-    // vector once, plus 20 DUPLICATE-pid rows — each probe ROW must get
-    // its own full top-k on both paths (the r12 ordinal rule).
+    // Parity frame (within MaxProbes, so the bounded branch can take
+    // it): every corpus vector once, plus 20 DUPLICATE-pid rows — each
+    // probe ROW must get its own full top-k on both branches (the r12
+    // ordinal rule).
     val parityProbes = base.unionAll(base.filter(col("vec_id") < 20))
-    assert(rowSeq(IvfPq.probeDistributedSegments(spark,
+    assert(rowSeq(IvfPq.probeUnbounded(spark,
         Seq(IvfPq.build(spark, sfDir)), parityProbes))
-      == rowSeq(IvfPq.probeSegments(spark,
-        Seq(IvfPq.build(spark, sfDir)), parityProbes)),
+      == rowSeq(bounded(Seq(IvfPq.build(spark, sfDir)), parityProbes)),
       "distributed and collected composed serving disagree")
-    // Reindex-scale frame: beyond MaxProbes by construction, probes a
-    // DataFrame end-to-end (no LocalTableScan anywhere in the plan —
-    // the collected path's probes materialize as one).
+    // Reindex-scale frame: beyond MaxProbes by construction, so
+    // probeSegments serves it on the unbounded branch — a DataFrame
+    // end-to-end (no LocalTableScan anywhere in the plan — the bounded
+    // branch's probes materialize as one).
     val reps = 21
     val big = base
       .crossJoin(broadcast(spark.range(reps.toLong).toDF("r")))
@@ -128,7 +136,7 @@ class IvfPqSpec extends SparkTestBase {
         col("e").as("pe"))
     val n = big.count()
     assert(n >= 10000L, "fixture must be a >=10k probe frame")
-    val dist = IvfPq.probeDistributedSegments(spark, Seq(IvfPq.build(spark, sfDir)), big)
+    val dist = IvfPq.probeSegments(spark, Seq(IvfPq.build(spark, sfDir)), big)
     val plan = dist.queryExecution.executedPlan.toString
     assert(!plan.contains("LocalTableScan"),
       s"distributed composed serve materialized probes on the driver:\n$plan")
@@ -136,13 +144,34 @@ class IvfPqSpec extends SparkTestBase {
     // join: whole-stage codegen defers streamed-side expression
     // evaluation into a broadcast join's match loop, so without this
     // materialization the O(M·K·sub) LUT is recomputed per CANDIDATE
-    // row (measured 3× the serve's wall). The repartition(cid) in
-    // probeDistributedSegments is that barrier — pin it so a refactor
+    // row (measured 3× the serve's wall). The unbounded branch's
+    // repartition(cid) is that barrier — pin it so a refactor
     // can't silently drop it.
     assert("Exchange hashpartitioning\\(cid".r.findFirstIn(plan).isDefined,
       s"the LUT-materializing cid exchange vanished from the routed side:\n$plan")
     assert(dist.count() == n * AnnIndex.TopK,
       "distributed composed serve lost surface at 10k probes")
+  }
+
+  test("a probe frame past MaxProbes with duplicate pids is served in full through probeSegments") {
+    // The sf0.01 corpus three times over: 1,500 rows, every pid three
+    // times. Past MaxProbes, so the entry point takes the unbounded
+    // branch; every probe ROW still gets its own ranks 1..TopK.
+    val d = s"${new java.io.File(sfDir).getParent}/sf0.01"
+    val base = AnnIndex.corpus(spark, d).select(col("vec_id"), col("e"))
+    val probes = base.unionAll(base).unionAll(base)
+    val n = probes.count()
+    assert(n == 1500L && n > AnnIndex.MaxProbes, s"fixture has $n rows")
+    val served = IvfPq.probeSegments(spark, Seq(IvfPq.build(spark, d)), probes)
+      .select("probe_id", "rnk").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(served.length == n * AnnIndex.TopK,
+      s"${served.length} rows for $n probe rows")
+    val ranks = (1L to AnnIndex.TopK.toLong).flatMap(Seq.fill(3)(_))
+    val bad = served.groupBy(_._1).collect {
+      case (pid, rs) if rs.map(_._2).toSeq.sorted != ranks => pid
+    }
+    assert(bad.isEmpty, s"probe ids without ranks 1..TopK per row: ${bad.take(5)}")
   }
 
   test("distributed composed LSM serve ≡ collected: masks, boundaries and filters compose") {
@@ -156,9 +185,8 @@ class IvfPqSpec extends SparkTestBase {
     val ts = spark.read.parquet(s"$tsDir/tombstones")
     val probeDf = vecsDf(0L until 30L).select("vec_id", "e")
     for (f <- Seq(None, Some(col("label") === 3))) {
-      val collected = rowSeq(IvfPq.probeSegments(spark, Seq(base, seg),
-        probeDf, Seq(ts -> 1), attrFilter = f))
-      val dist = rowSeq(IvfPq.probeDistributedSegments(spark, Seq(base, seg),
+      val collected = rowSeq(bounded(Seq(base, seg), probeDf, Seq(ts -> 1), f))
+      val dist = rowSeq(IvfPq.probeUnbounded(spark, Seq(base, seg),
         probeDf, Seq(ts -> 1), attrFilter = f))
       assert(dist == collected,
         s"distributed composed LSM serve diverged from segment serve (filter=$f)")
@@ -226,7 +254,7 @@ class IvfPqSpec extends SparkTestBase {
   }
 
   test("distributed composed serve at k=1024 ≡ collected (aggregate routing + broadcast residual-bias branches)") {
-    // Past LiteralAssignMaxK both paths switch branch: routing joins
+    // Past LiteralAssignMaxK both branches switch: routing joins
     // the broadcast centroid table instead of baking a literal map, and
     // the per-(probe,cid) residual ADC bias comes through a broadcast
     // join instead of a literal element_at. This is the
@@ -262,8 +290,8 @@ class IvfPqSpec extends SparkTestBase {
     def rows(df: DataFrame): Set[(Long, Long, Long, Double)] =
       df.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val collected = rows(IvfPq.probeSegments(spark, Seq(root), probes))
-    val dist = rows(IvfPq.probeDistributedSegments(spark, Seq(root), probes))
+    val collected = rows(bounded(Seq(root), probes))
+    val dist = rows(IvfPq.probeUnbounded(spark, Seq(root), probes))
     assert(collected.size >= 30 * AnnIndex.TopK,
       s"fixture starved the surface (${collected.size} rows)")
     assert(dist == collected,

@@ -144,7 +144,7 @@ class ShuffleBudgetSpec extends SparkTestBase {
     // training shuffles toward the serve's ceiling.
     val dir = graft.ops.IvfPq.build(spark, "/root/testdata/sf0.01")
     val fn = (s: org.apache.spark.sql.SparkSession, d: String) =>
-      graft.ops.IvfPq.probeDistributedSegments(s, Seq(dir),
+      graft.ops.IvfPq.probeUnbounded(s, Seq(dir),
         ScaleDiag.reindexProbes(s, d, 5))
     val measured = ScaleDiag.shuffleBytes(spark, "/root/testdata/sf0.01",
       Seq("dist_ivfpq_serve" -> fn)).toMap
@@ -162,10 +162,10 @@ object ShuffleBudgetSpec {
     * codes stored inside the inverted lists, `ivfpq_lists`). The build
     * and lifecycle lines (q110 encrypted build, q113 append, q127
     * compact, q128 stream ingest, q129 delete-compact, q133 build) move
-    * the list table through their fold/partition exchanges; the
-    * collected serves (q111, q112, q130, q134) route on the driver and
-    * prune the list scan to the probed lists. The two
-    * distributed composed serves are the exception BY DESIGN: their
+    * the list table through their fold/partition exchanges; the serves
+    * on the bounded branch (q111, q112, q130, q134) route on the driver
+    * and prune the list scan to the probed lists. The unbounded branch
+    * (q131, q132) is the exception BY DESIGN: its
     * deliberate repartition(cid) materializes each routed probe's M×K
     * LUT exactly once (r13 — without it codegen recomputes the LUT per
     * candidate, measured 3× the serve wall), so their exchange is
