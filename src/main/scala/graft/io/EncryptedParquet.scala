@@ -90,6 +90,20 @@ object EncryptedParquet {
     * schema is resolved through [[Parquet.read]], keyed on the token: a
     * token that cannot unwrap an encrypted footer fails at this call,
     * every time, whatever another token's read left cached.
+    *
+    * Row groups a filter rules out by their statistics are skipped before
+    * any of their columns is decrypted — by Spark's own pushdown on date,
+    * UTC-timestamp and numeric columns, and by [[PruningParquetFormat]] on
+    * `TIMESTAMP_NTZ` columns. So a read whose filter matches some row
+    * group needs every projected column's key and is denied without it,
+    * while a read whose filter matches no row group returns zero rows and
+    * unwraps no column key: it reveals only what the statistics it was
+    * tested against hold, which for a plaintext filter column is
+    * plaintext already. Pruning itself asks for no key the scan would
+    * not: the filter column's statistics (decrypted under that column's
+    * key when it is encrypted — a key the scan needs to read the column
+    * anyway) and the first column's chunk offsets, used only when that
+    * metadata is plaintext.
     */
   def read(spark: SparkSession, path: String, kmsUrl: String,
       accessToken: Option[String]): DataFrame =

@@ -49,11 +49,14 @@ object Parquet {
   }
 
   /** `spark.read.options(options).parquet(path)` with its schema
-    * resolved through the per-JVM cache ([[schema]]).
+    * resolved through the per-JVM cache ([[schema]]), read through
+    * [[PruningParquetFormat]]: Spark's Parquet source, plus row-group
+    * pruning on `TIMESTAMP_NTZ` comparisons.
     */
   def read(spark: SparkSession, path: String,
       options: Map[String, String] = Map.empty): DataFrame =
-    spark.read.options(options).schema(schema(spark, path, options)).parquet(path)
+    spark.read.format(classOf[PruningParquetFormat].getName).options(options)
+      .schema(schema(spark, path, options)).load(path)
 
   /** The schema `spark.read.options(options).parquet(path)` infers,
     * inferred at most once per JVM for the same [[Key]]. Also what a

@@ -47,6 +47,7 @@ final class TestKmsServer(port: Int = 0, ssl: Option[SSLContext] = None) {
   }
   @volatile private var wrapCalls = 0
   @volatile private var unwrapCalls = 0
+  @volatile private var deniedCalls = 0
 
   server.createContext("/api/v1/", handle _)
   // Daemon worker pool: a running KMS must never block JVM exit (Bench and
@@ -74,6 +75,8 @@ final class TestKmsServer(port: Int = 0, ssl: Option[SSLContext] = None) {
   def url: String =
     s"${if (ssl.isDefined) "https" else "http"}://127.0.0.1:$boundPort"
   def counts: (Int, Int) = (wrapCalls, unwrapCalls)
+  /** Unwraps refused for insufficient privilege (HTTP 403). */
+  def denied: Int = deniedCalls
 
   private def handle(ex: HttpExchange): Unit =
     try {
@@ -111,8 +114,10 @@ final class TestKmsServer(port: Int = 0, ssl: Option[SSLContext] = None) {
             .flatMap(PrivilegeLevel.fromName)
           // Missing header => None (auto_error=False, kms_server.py:132);
           // an unknown token name is treated as no privilege.
-          if (!PrivilegeLevel.mayUnwrap(kekLevel, token))
+          if (!PrivilegeLevel.mayUnwrap(kekLevel, token)) {
+            deniedCalls += 1
             return respond(ex, 403, """{"detail":"insufficient privilege"}""")
+          }
           if (keyBytes.length < 24)
             return respond(ex, 422, """{"detail":"wrapped key too short"}""")
           unwrapCalls += 1

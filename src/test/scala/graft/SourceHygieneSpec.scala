@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark listener (`graft.obs.QueryMetrics`), ONE scratch-placement rule
   * (`graft.io.Scratch`), ONE crypto carrier in the ANN index
   * (`AnnIndex.IndexCrypto`), ONE claim loop (`graft.io.Afs.claim`) and
-  * ONE batch Parquet read (`graft.io.Parquet.read`), ONE way graft's
+  * ONE batch Parquet read (`graft.io.Parquet.read`, `.parquet(` or a
+  * Parquet `.format(...).load(`), ONE way graft's
   * functions reach a session (the ServiceLoader-installed
   * `GraftSparkExtensions`) and ONE way an operator runs under confs of
   * its own (a scoped clone, `org.apache.spark.sql.graft.Sessions`), and
@@ -70,16 +71,39 @@ class SourceHygieneSpec extends AnyFunSuite {
       Set("graft/ops/AnnIndex.scala"), under = "graft/ops/")
   }
 
-  /** Batch Parquet reads (`.read`, any option/schema calls, `.parquet(`),
-    * however the chain is split across lines, as (file, line).
+  /** A batch read chain: `.read`, any option/schema/format calls, then
+    * `.parquet(` or `.load(`, however the chain is split across lines.
     */
-  private lazy val parquetReads: Seq[(String, Int)] = {
-    val read = """\.read\b\s*(?:\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*parquet\s*\(""".r
+  private val readChain =
+    """\.read\b\s*(?:\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*(parquet|load)\s*\(""".r
+  /** A `.format("…")` naming a source other than Parquet. */
+  private val otherFormat = """\.\s*format\s*\(\s*"(?!(?i:parquet)")[^"]*"\s*\)""".r
+
+  /** Whether a matched read chain reads Parquet: `.parquet(`, or a
+    * `.load(` whose format is not a quoted non-Parquet source (a bare
+    * `.load` reads the default source, Parquet; a format given by class
+    * or value may be Parquet).
+    */
+  private def readsParquet(chain: scala.util.matching.Regex.Match): Boolean =
+    chain.group(1) == "parquet" || otherFormat.findFirstIn(chain.matched).isEmpty
+
+  /** Batch Parquet reads as (file, line). */
+  private lazy val parquetReads: Seq[(String, Int)] =
     codeLines.groupBy(_._1).toSeq.flatMap { case (file, lines) =>
       val text = lines.map(_._3).mkString("\n")
-      read.findAllMatchIn(text).map(m =>
+      readChain.findAllMatchIn(text).filter(readsParquet).map(m =>
         file -> lines(text.substring(0, m.start).count(_ == '\n'))._2)
     }
+
+  test("the batch-read pattern catches .parquet and Parquet .format(...).load reads") {
+    def parquet(code: String) = readChain.findFirstMatchIn(code).exists(readsParquet)
+    assert(parquet("spark.read.options(o).schema(s).parquet(p)"))
+    assert(parquet("s.read\n.format(classOf[PruningParquetFormat].getName).options(o)\n.load(p)"))
+    assert(parquet("""spark.read.format("parquet").load(p)"""))
+    assert(parquet("spark.read.format(fmt).load(p)"))
+    assert(parquet("spark.read.load(p)"))
+    assert(!parquet("""s.read.format("binaryFile").load(dir)"""))
+    assert(!parquet("""spark.read.format("csv").option("header", "true").load(p)"""))
   }
 
   test("batch Parquet reads go through graft.io.Parquet, apart from the named sites") {

@@ -1,14 +1,17 @@
 package graft.crypto
 
 import java.nio.file.Files
+import java.time.LocalDateTime
 
 import graft.{SparkTestBase, Tables}
-import graft.io.EncryptedParquet
+import graft.io.{Afs, EncryptedParquet}
 import graft.kms.TestKmsServer
-import org.apache.spark.sql.DataFrame
+import org.apache.parquet.crypto.KeyAccessDeniedException
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampNTZType
 
 /** The reference's central performance claim — predicate pushdown keeps
   * working on encrypted files (/root/reference/README.md:18-19,30-31:
@@ -24,6 +27,14 @@ import org.apache.spark.sql.functions._
   * untested reference claim.)
   */
 class EncryptedSkippingSpec extends SparkTestBase {
+
+  /** Every fixture of this spec lives under one root, removed at the end. */
+  private lazy val root = Files.createTempDirectory("graft-enc-skipping-")
+
+  override def afterAll(): Unit = {
+    Afs.delete(root.toString)
+    super.afterAll()
+  }
 
   /** Rows emitted by the parquet scan node after an action (rows that
     * survived row-group/page pruning, before Spark's own Filter).
@@ -42,10 +53,10 @@ class EncryptedSkippingSpec extends SparkTestBase {
   test("row-group skipping fires on an encrypted sort column at sufficient privilege") {
     val kms = new TestKmsServer().start()
     try {
-      val dir = Files.createTempDirectory("graft-enc-skip-").toString
-      // ship_d (the predicate/sort column, DATE-typed: Spark's parquet
-      // stats evaluation prunes on date/numeric columns; TIMESTAMP_NTZ
-      // predicates push but don't prune) is RESTRICTED-encrypted;
+      val dir = Files.createTempDirectory(root, "skip-").toString
+      // ship_d (the predicate/sort column, DATE-typed: Spark's own
+      // Parquet pushdown prunes it; the TIMESTAMP_NTZ case below prunes
+      // through graft.io.PruningParquetFormat) is RESTRICTED-encrypted;
       // l_quantity CONFIDENTIAL — stats for BOTH live in encrypted
       // column metadata, so any skipping observed below necessarily went
       // through PME decryption of the stats modules.
@@ -82,10 +93,96 @@ class EncryptedSkippingSpec extends SparkTestBase {
     } finally kms.stop()
   }
 
+  /** lineitem sorted on its TIMESTAMP_NTZ ship date, in 32 KB row groups,
+    * written under `policy`: (l_orderkey, ship, l_quantity).
+    */
+  private def ntzFixture(kms: TestKmsServer, policy: EncryptionPolicy): String = {
+    val dir = Files.createTempDirectory(root, "ntz-").toString
+    val li = Tables.lineitem(spark, sfDir)
+      .select(col("l_orderkey"), col("l_shipdate").as("ship"), col("l_quantity"))
+    assert(li.schema("ship").dataType == TimestampNTZType)
+    EncryptedParquet.write(li.orderBy("ship").coalesce(1), dir, policy, kms.url,
+      mode = "overwrite", extraOptions = Map("parquet.block.size" -> (32 * 1024).toString))
+    dir
+  }
+
+  private def ntz(d: String): Column = lit(LocalDateTime.parse(d + "T00:00:00"))
+  /** A one-month ship-date window inside the data. */
+  private val june95 = col("ship") >= ntz("1995-06-01") && col("ship") < ntz("1995-07-01")
+  /** A window past every row group. */
+  private val future = col("ship") >= ntz("2050-01-01")
+
+  private def deniedByKms(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[KeyAccessDeniedException])
+
+  test("row-group skipping fires on an encrypted TIMESTAMP_NTZ sort column") {
+    val kms = new TestKmsServer().start()
+    try {
+      // The same claim as the date case above, on the column as the corpus
+      // stores it: ship is RESTRICTED-encrypted, so its statistics are
+      // decrypted to prune.
+      val dir = ntzFixture(kms, EncryptionPolicy(columnKeys = Map(
+        PrivilegeLevel.Restricted -> Seq("ship"),
+        PrivilegeLevel.Confidential -> Seq("l_quantity"))))
+      val total = Tables.lineitem(spark, sfDir).count()
+      val pred = EncryptedParquet.read(spark, dir, kms.url, Some("RESTRICTED")).filter(june95)
+      val kept = pred.count()
+      assert(kept > 0 && kept * 20 < total, s"fixture degenerate: $kept of $total")
+      val scanned = scanOutputRows(pred)
+      assert(scanned < total / 2,
+        s"no row-group skipping on encrypted NTZ column: scan emitted $scanned of $total rows")
+      val expected = Tables.lineitem(spark, sfDir)
+        .filter(col("l_shipdate") >= ntz("1995-06-01") && col("l_shipdate") < ntz("1995-07-01"))
+        .agg(sum("l_quantity")).head().get(0)
+      assert(pred.agg(sum("l_quantity")).head().get(0) == expected)
+    } finally kms.stop()
+  }
+
+  test("NTZ pruning keeps the denial semantics: a window hitting data is denied, " +
+      "a window hitting no row group unwraps no column key") {
+    val kms = new TestKmsServer().start()
+    try {
+      // ship plaintext, l_quantity CONFIDENTIAL: an INTERNAL token may read
+      // the plaintext footer and statistics but not l_quantity.
+      val dir = ntzFixture(kms, EncryptionPolicy(columnKeys = Map(
+        PrivilegeLevel.Confidential -> Seq("l_quantity"))))
+      def internal = EncryptedParquet.read(spark, dir, kms.url, Some("INTERNAL"))
+      val e = intercept[Throwable] {
+        internal.filter(june95).select("l_quantity").collect()
+      }
+      assert(deniedByKms(e), s"expected a KMS denial, got: $e")
+      // Nothing in the window: no row group is read, so l_quantity's key is
+      // never asked for — only the plaintext ship statistics were consulted,
+      // as Spark's own pushdown does on a date or numeric column.
+      val deniedBefore = kms.denied
+      assert(internal.filter(future).select("l_quantity").collect().isEmpty)
+      assert(kms.denied == deniedBefore, "a column key was asked for")
+    } finally kms.stop()
+  }
+
+  test("a token that cannot unwrap an unprojected first column reads an NTZ window " +
+      "with no denied unwrap") {
+    val kms = new TestKmsServer().start()
+    try {
+      // l_orderkey, the first column, is RESTRICTED: its chunk offsets are
+      // encrypted metadata, so pruning takes no boundaries from them and
+      // reads the file unpruned rather than asking for its key.
+      val dir = ntzFixture(kms, EncryptionPolicy(columnKeys = Map(
+        PrivilegeLevel.Restricted -> Seq("l_orderkey"))))
+      val deniedBefore = kms.denied
+      val pred = EncryptedParquet.read(spark, dir, kms.url, Some("INTERNAL"))
+        .filter(june95).select("l_quantity")
+      assert(pred.collect().nonEmpty)
+      assert(kms.denied == deniedBefore, "an unprojected column's key was asked for")
+      assert(scanOutputRows(pred) == Tables.lineitem(spark, sfDir).count())
+    } finally kms.stop()
+  }
+
   test("insufficient privilege is a denial, not a silent full scan") {
     val kms = new TestKmsServer().start()
     try {
-      val dir = Files.createTempDirectory("graft-enc-deny-").toString
+      val dir = Files.createTempDirectory(root, "deny-").toString
       val policy = EncryptionPolicy(columnKeys = Map(
         PrivilegeLevel.Restricted -> Seq("ship_d")))
       val li = Tables.lineitem(spark, sfDir)
