@@ -18,8 +18,9 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     // Session conf (ICU case mappings, nanos-as-long, bucketed-scan
     // ordering) is applied once per session by Graft.tune — every entry
-    // point calls it, so loaders no longer mutate conf per call. The
-    // schema is resolved once per JVM (graft.io.Parquet).
+    // point calls it, so loaders no longer mutate conf per call. The load
+    // lists the path once, and its schema is inferred once per JVM from
+    // that listing (graft.io.PruningParquetFormat).
     io.Parquet.read(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

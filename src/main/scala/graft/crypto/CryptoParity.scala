@@ -189,7 +189,7 @@ object CryptoParity {
       graft.Tables.events(s, d)
         .select("event_id", "user_id", "event_type", "value")
         .write.parquet(srcDir)
-      val schema = Parquet.schema(s, srcDir)
+      val schema = Parquet.read(s, srcDir).schema
       EncryptedParquet.withEncryptedStream(
           s.readStream.schema(schema).parquet(srcDir),
           sinkDir, ckptDir, eventsPolicy, TestKmsServer.shared.url,

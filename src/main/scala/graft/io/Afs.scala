@@ -230,12 +230,6 @@ object Afs {
     Option(f.globStatus(pp)).toSeq.flatten.flatMap(walk)
   }
 
-  /** `p` qualified with its filesystem's scheme and authority. */
-  def qualify(p: String): String = {
-    val pp = new Path(p)
-    fsOf(pp).makeQualified(pp).toString
-  }
-
   def mtime(p: String): Option[Long] = {
     val pp = new Path(p)
     val f = fsOf(pp)

@@ -87,9 +87,10 @@ object EncryptedParquet {
     * checks per-column, like the reference's scanner(columns=...)
     * (read_encrypted_parquet.py:43). Insufficient privilege surfaces as a
     * KeyAccessDeniedException-caused job failure at action time. The
-    * schema is resolved through [[Parquet.read]], keyed on the token: a
-    * token that cannot unwrap an encrypted footer fails at this call,
-    * every time, whatever another token's read left cached.
+    * schema is resolved through [[Parquet.read]], whose format memoizes
+    * it keyed on the options and so on the token: a token that cannot
+    * unwrap an encrypted footer fails at this call, every time, whatever
+    * another token's read left cached.
     *
     * Row groups a filter rules out by their statistics are skipped before
     * any of their columns is decrypted — by Spark's own pushdown on date,

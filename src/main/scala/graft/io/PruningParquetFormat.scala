@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
@@ -20,10 +21,31 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{StructType, TimestampNTZType}
 import org.apache.spark.util.SerializableConfiguration
 
-/** Spark's Parquet source plus row-group pruning on `TIMESTAMP_NTZ`
-  * comparisons — the source [[Parquet.read]] reads through.
+/** Spark's Parquet source — the source [[Parquet.read]] reads through —
+  * with two jobs of its own: a memoized schema inference and row-group
+  * pruning on `TIMESTAMP_NTZ` comparisons.
   *
-  * Every date column of the corpus is a naive
+  * '''Schema memo.''' Spark infers a schema with a job over the footers
+  * before the caller's query is even built; on a sub-second query that
+  * job weighs as much as the query. Spark calls [[inferSchema]] with the
+  * listing its file index just made, and the schema inferred from it is
+  * kept per JVM, so a warm read lists its path once and runs no job. This
+  * is catalog metadata, not result caching: no row is cached, nothing
+  * outlives the JVM, and scan tasks still decrypt (so authorize) every
+  * projected column, so a denial still fails at action time. The key pins
+  * a read that would infer the same schema: a digest of the listed files
+  * (path, size, mtime), so a rewritten or touched file re-infers; the
+  * options Spark passes in, which for an encrypted read hold the KMS URL
+  * and the privilege token, so no token is served an entry another token
+  * filled (one that cannot unwrap an encrypted footer keeps failing at
+  * inference); and the inference-relevant conf (`inferenceConf`). Spark's
+  * listing skips `_`-prefixed files, so `_SUCCESS` and the
+  * `_KEY_MATERIAL_FOR_*` sidecars are outside the key: a sidecar-only
+  * rewrite (an in-place key rotation) never changes a schema, and a token
+  * the rotated material denies still fails in the scan. Only a successful
+  * inference is cached.
+  *
+  * '''Row-group pruning.''' Every date column of the corpus is a naive
   * `TIMESTAMP(isAdjustedToUTC=false)`, which Spark reads as
   * `TIMESTAMP_NTZ`, and Spark 4.1's `ParquetFilters` builds Parquet
   * predicates only for UTC-adjusted timestamps: a date window shows up in
@@ -53,6 +75,13 @@ import org.apache.spark.util.SerializableConfiguration
   */
 class PruningParquetFormat extends ParquetFileFormat {
 
+  override def inferSchema(
+      sparkSession: SparkSession,
+      options: Map[String, String],
+      files: Seq[FileStatus]): Option[StructType] =
+    PruningParquetFormat.memoized(sparkSession, options, files)(
+      super.inferSchema(sparkSession, options, files))
+
   override def buildReaderWithPartitionValues(
       sparkSession: SparkSession,
       dataSchema: StructType,
@@ -81,6 +110,67 @@ class PruningParquetFormat extends ParquetFileFormat {
 }
 
 object PruningParquetFormat {
+
+  /** Entries kept, least recently used evicted first. A schema is a few
+    * KB; the registry touches ~100 distinct (dataset, options) pairs.
+    */
+  private val MaxEntries = 256
+
+  private final case class Key(files: String, options: Map[String, String],
+      conf: Map[String, String])
+
+  private val cache = new java.util.LinkedHashMap[Key, StructType](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, StructType]): Boolean =
+      size > MaxEntries
+  }
+
+  /** The schema `infer` returns, inferred at most once per JVM for the
+    * same [[Key]].
+    */
+  private def memoized(spark: SparkSession, options: Map[String, String],
+      files: Seq[FileStatus])(infer: => Option[StructType]): Option[StructType] = {
+    val key = Key(digest(files), Map.from(options), inferenceConf(spark))
+    cache.synchronized(Option(cache.get(key))).orElse {
+      // Inferred outside the lock: a cold dataset must not hold up reads
+      // of warm ones. Two threads racing one cold key both infer it.
+      val s = infer
+      s.foreach(v => cache.synchronized(cache.put(key, v)))
+      s
+    }
+  }
+
+  /** Digest of (path, size, mtime) over `files`. */
+  private def digest(files: Seq[FileStatus]): String = {
+    val listing = files
+      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      .sorted.mkString("\n")
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+  }
+
+  private val ConfPrefixes = Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.", "parquet.")
+  private val ConfKeys = Set(
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.files.ignoreMissingFiles")
+
+  /** The conf that can change what inference returns: the session's
+    * Parquet, legacy-Parquet, case-sensitivity, partition-typing and
+    * corrupt/missing-file settings and Hadoop-keyed `parquet.*` entries
+    * (`EncryptedParquet.withEncryptedStream` binds some), plus the
+    * context Hadoop conf's `parquet.*` entries. Only explicitly set
+    * session entries appear; defaults are the same for every session.
+    */
+  private def inferenceConf(spark: SparkSession): Map[String, String] = {
+    val session = spark.conf.getAll.filter { case (k, _) =>
+      ConfKeys(k) || ConfPrefixes.exists(k.startsWith)
+    }
+    val hadoop = spark.sparkContext.hadoopConfiguration
+      .getPropsWithPrefix("parquet.").asScala.map { case (k, v) => s"hadoop:parquet.$k" -> v }
+    session ++ hadoop
+  }
 
   /** A row-group test: may a row group with these statistics hold a row
     * the filter keeps? `stats(column)` is the column's (min, max) in

@@ -1017,7 +1017,7 @@ object AnnIndex {
       src.repartition(nFiles)
         .write.mode("overwrite").parquet(srcDir)
     }
-    val schema = Parquet.schema(s, srcDir)
+    val schema = Parquet.read(s, srcDir).schema
     // Built on the caller's session: the stream execution already runs
     // the query on its own clone of it.
     s.readStream.schema(schema)

@@ -36,10 +36,6 @@ object TextOps {
     "de" -> Seq("der", "die", "das", "und", "ist", "von", "den", "mit", "ein", "zu"),
     "zh" -> Seq("的", "是", "在", "了", "和", "有", "我", "不", "这", "人"))
 
-  /** HOF spelling — spec ground truth for the codegen'd kernel path. */
-  def langScoreHof(tokenCol: Column, profile: Seq[String]): Column =
-    size(filter(tokenCol, t => t.isInCollection(profile))) / size(tokenCol)
-
   /** Fraction of tokens in the profile: `count_in_set` kernel (integer
     * count, bit-identical to the HOF filter/size formulation, which runs
     * on the interpreted eval path).

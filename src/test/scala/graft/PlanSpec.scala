@@ -752,13 +752,12 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("column pruning survives encryption (encrypted scan reads 1 column)") {
-    import java.nio.file.Files
     import graft.crypto.{CryptoParity, EncryptionPolicy, PrivilegeLevel}
     import graft.io.EncryptedParquet
     import graft.kms.TestKmsServer
     val kms = new TestKmsServer().start()
     try {
-      val dir = Files.createTempDirectory("graft-prune-").toString
+      val dir = tempDir("graft-prune-")
       val policy = EncryptionPolicy(columnKeys = Map(
         PrivilegeLevel.Confidential -> Seq("n_name")))
       EncryptedParquet.write(Tables.nation(spark, sfDir), dir, policy, kms.url,

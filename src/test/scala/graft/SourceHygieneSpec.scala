@@ -19,17 +19,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * its own (a scoped clone, `org.apache.spark.sql.graft.Sessions`), and
   * ONE ANN serve plan (`IvfPq.probeSegments`, one ADC scoring site). A
   * second builder, collector, private scratch root, raw crypto option
-  * map, copied claim loop, schema-inferring read, imperative function
+  * map, copied claim loop, second batch Parquet read or schema handed to
+  * one, spec temp dir left behind, imperative function
   * registration, set-and-restore of a caller's session conf, fresh
   * `newSession()` or second serve pipeline regrowing in a module fails
   * here.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
-  private val root = Paths.get("src/main/scala")
-
-  /** (file under src/main/scala, line number, line) for each code line. */
-  private lazy val codeLines: Seq[(String, Int, String)] = {
+  /** (file under `dir`, line number, line) for each code line. */
+  private def codeLinesIn(dir: String): Seq[(String, Int, String)] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"spec must run from the repo root (no $root)")
     Files.walk(root).iterator.asScala.toSeq.filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
@@ -40,9 +40,11 @@ class SourceHygieneSpec extends AnyFunSuite {
       }
   }
 
+  private lazy val codeLines = codeLinesIn("src/main/scala")
+
   private def assertOnlyIn(pattern: Regex, allowed: Set[String],
-      under: String = ""): Unit = {
-    val found = codeLines.filter(h =>
+      under: String = "", lines: Seq[(String, Int, String)] = codeLines): Unit = {
+    val found = lines.filter(h =>
       h._1.startsWith(under) && pattern.findFirstIn(h._3).isDefined)
     // Not vacuous: the pattern still matches its allowed homes.
     assert(allowed.subsetOf(found.map(_._1).toSet), s"$pattern no longer matches $allowed")
@@ -66,6 +68,11 @@ class SourceHygieneSpec extends AnyFunSuite {
     assertOnlyIn("""\bcreateTempDirectory\b""".r, Set("graft/io/Scratch.scala"))
   }
 
+  test("specs make temp dirs only with SparkTestBase.tempDir, which removes them") {
+    assertOnlyIn("""\bcreateTempDirectory\b""".r, Set("graft/SparkTestBase.scala"),
+      lines = codeLinesIn("src/test/scala").filterNot(_._1 == "graft/SourceHygieneSpec.scala"))
+  }
+
   test("under graft/ops the crypto conf maps are built only where IndexCrypto is defined") {
     assertOnlyIn("""\b(readConfMap|writeConfMap)\b""".r,
       Set("graft/ops/AnnIndex.scala"), under = "graft/ops/")
@@ -87,12 +94,12 @@ class SourceHygieneSpec extends AnyFunSuite {
   private def readsParquet(chain: scala.util.matching.Regex.Match): Boolean =
     chain.group(1) == "parquet" || otherFormat.findFirstIn(chain.matched).isEmpty
 
-  /** Batch Parquet reads as (file, line). */
-  private lazy val parquetReads: Seq[(String, Int)] =
+  /** Batch Parquet reads as (file, line, chain). */
+  private lazy val parquetReads: Seq[(String, Int, String)] =
     codeLines.groupBy(_._1).toSeq.flatMap { case (file, lines) =>
       val text = lines.map(_._3).mkString("\n")
       readChain.findAllMatchIn(text).filter(readsParquet).map(m =>
-        file -> lines(text.substring(0, m.start).count(_ == '\n'))._2)
+        (file, lines(text.substring(0, m.start).count(_ == '\n'))._2, m.matched))
     }
 
   test("the batch-read pattern catches .parquet and Parquet .format(...).load reads") {
@@ -108,13 +115,30 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   test("batch Parquet reads go through graft.io.Parquet, apart from the named sites") {
     val allowed = Map(
-      "graft/io/Parquet.scala" -> "the entry point: its read and its one inference",
+      "graft/io/Parquet.scala" -> "the entry point: its one format read",
       "graft/ops/Sources.scala" -> "q74's two-path mergeSchema read, which must infer")
     assert(allowed.keySet.subsetOf(parquetReads.map(_._1).toSet),
       s"the read pattern no longer matches ${allowed.keySet}")
     val strays = parquetReads.filterNot(r => allowed.contains(r._1))
     assert(strays.isEmpty, "batch Parquet read outside graft.io.Parquet:\n  " +
-      strays.map { case (f, n) => s"$f:$n" }.mkString("\n  "))
+      strays.map { case (f, n, _) => s"$f:$n" }.mkString("\n  "))
+  }
+
+  test("no batch Parquet read hands the reader a schema") {
+    // graft.io.PruningParquetFormat resolves every batch Parquet schema
+    // from the listing Spark makes; a schema handed over needs a listing
+    // of its own to be inferred.
+    val handsSchema = """\.\s*schema\s*\(""".r
+    def handOff(code: String) = readChain.findFirstMatchIn(code)
+      .exists(m => readsParquet(m) && handsSchema.findFirstIn(m.matched).isDefined)
+    // It matches the read graft.io.Parquet once made with an inferred schema...
+    assert(handOff("spark.read.format(classOf[PruningParquetFormat].getName).options(options)\n" +
+      ".schema(schema(spark, path, options)).load(path)"))
+    // ...and not the plain format read it makes now.
+    assert(!handOff("spark.read.format(classOf[PruningParquetFormat].getName).options(options).load(path)"))
+    val hits = parquetReads.filter(r => handsSchema.findFirstIn(r._3).isDefined)
+    assert(hits.isEmpty, "batch Parquet read handed a schema:\n  " +
+      hits.map { case (f, n, _) => s"$f:$n" }.mkString("\n  "))
   }
 
   test("createExclusive is called only from the claim primitive's file") {

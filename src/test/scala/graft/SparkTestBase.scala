@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.collection.mutable
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +14,21 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
+
+  private val tempDirs = mutable.Buffer[String]()
+
+  /** A new dir `<prefix><random>` in the system temp dir, removed with
+    * everything under it when the suite ends.
+    */
+  def tempDir(prefix: String): String = tempDirs.synchronized {
+    val dir = Files.createTempDirectory(prefix).toString
+    tempDirs += dir
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.synchronized(tempDirs.foreach(graft.io.Afs.delete))
+    finally super.afterAll()
 }
 
 object SparkTestBase {

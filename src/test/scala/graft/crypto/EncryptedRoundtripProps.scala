@@ -1,7 +1,5 @@
 package graft.crypto
 
-import java.nio.file.Files
-
 import graft.SparkTestBase
 import graft.io.EncryptedParquet
 import graft.kms.TestKmsServer
@@ -39,7 +37,7 @@ class EncryptedRoundtripProps extends SparkTestBase {
     for (trial <- 1 to 5) {
       val level = PrivilegeLevel.all(trial % PrivilegeLevel.all.size)
       val rows = (1L to 20L).map(k => sample(rowGen(k), trial * 1000L + k))
-      val dir = Files.createTempDirectory("graft-prop-").toString
+      val dir = tempDir("graft-prop-")
       val policy = EncryptionPolicy(columnKeys = Map(level -> Seq("a", "c")))
       val df = spark.createDataFrame(
         new java.util.ArrayList(
@@ -54,7 +52,7 @@ class EncryptedRoundtripProps extends SparkTestBase {
   }
 
   test("privilege law: column readable iff token >= its policy level") {
-    val dir = Files.createTempDirectory("graft-prop2-").toString
+    val dir = tempDir("graft-prop2-")
     val policy = EncryptionPolicy(columnKeys = Map(
       PrivilegeLevel.Internal -> Seq("a"),
       PrivilegeLevel.Restricted -> Seq("c")))

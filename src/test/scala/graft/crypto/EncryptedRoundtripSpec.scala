@@ -18,13 +18,16 @@ class EncryptedRoundtripSpec extends SparkTestBase with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     kms = new TestKmsServer().start()
-    dir = Files.createTempDirectory("graft-pme-").toString
+    dir = tempDir("graft-pme-")
     EncryptedParquet.write(
       Fixtures.people(spark), dir, EncryptionPolicy.reference, kms.url,
       mode = "overwrite")
   }
 
-  override def afterAll(): Unit = kms.stop()
+  override def afterAll(): Unit = {
+    kms.stop()
+    super.afterAll()
+  }
 
   test("q24e: engine dedup over encrypted documents == dedup over plaintext") {
     // The preserved-functionality thesis (README.md:17-19) on the query

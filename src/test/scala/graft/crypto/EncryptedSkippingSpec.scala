@@ -1,10 +1,9 @@
 package graft.crypto
 
-import java.nio.file.Files
 import java.time.LocalDateTime
 
 import graft.{SparkTestBase, Tables}
-import graft.io.{Afs, EncryptedParquet}
+import graft.io.EncryptedParquet
 import graft.kms.TestKmsServer
 import org.apache.parquet.crypto.KeyAccessDeniedException
 import org.apache.spark.sql.{Column, DataFrame}
@@ -28,14 +27,6 @@ import org.apache.spark.sql.types.TimestampNTZType
   */
 class EncryptedSkippingSpec extends SparkTestBase {
 
-  /** Every fixture of this spec lives under one root, removed at the end. */
-  private lazy val root = Files.createTempDirectory("graft-enc-skipping-")
-
-  override def afterAll(): Unit = {
-    Afs.delete(root.toString)
-    super.afterAll()
-  }
-
   /** Rows emitted by the parquet scan node after an action (rows that
     * survived row-group/page pruning, before Spark's own Filter).
     */
@@ -53,7 +44,7 @@ class EncryptedSkippingSpec extends SparkTestBase {
   test("row-group skipping fires on an encrypted sort column at sufficient privilege") {
     val kms = new TestKmsServer().start()
     try {
-      val dir = Files.createTempDirectory(root, "skip-").toString
+      val dir = tempDir("graft-enc-skip-")
       // ship_d (the predicate/sort column, DATE-typed: Spark's own
       // Parquet pushdown prunes it; the TIMESTAMP_NTZ case below prunes
       // through graft.io.PruningParquetFormat) is RESTRICTED-encrypted;
@@ -97,7 +88,7 @@ class EncryptedSkippingSpec extends SparkTestBase {
     * written under `policy`: (l_orderkey, ship, l_quantity).
     */
   private def ntzFixture(kms: TestKmsServer, policy: EncryptionPolicy): String = {
-    val dir = Files.createTempDirectory(root, "ntz-").toString
+    val dir = tempDir("graft-enc-ntz-")
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_shipdate").as("ship"), col("l_quantity"))
     assert(li.schema("ship").dataType == TimestampNTZType)
@@ -182,7 +173,7 @@ class EncryptedSkippingSpec extends SparkTestBase {
   test("insufficient privilege is a denial, not a silent full scan") {
     val kms = new TestKmsServer().start()
     try {
-      val dir = Files.createTempDirectory(root, "deny-").toString
+      val dir = tempDir("graft-enc-deny-")
       val policy = EncryptionPolicy(columnKeys = Map(
         PrivilegeLevel.Restricted -> Seq("ship_d")))
       val li = Tables.lineitem(spark, sfDir)

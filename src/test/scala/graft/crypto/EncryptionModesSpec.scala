@@ -1,7 +1,5 @@
 package graft.crypto
 
-import java.nio.file.Files
-
 import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
@@ -37,9 +35,9 @@ class EncryptionModesSpec extends SparkTestBase with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
     kms = new TestKmsServer().start()
-    encFooterDir = Files.createTempDirectory("graft-encfooter-").toString
-    ctrDir = Files.createTempDirectory("graft-ctr-").toString
-    gcmDir = Files.createTempDirectory("graft-gcm-").toString
+    encFooterDir = tempDir("graft-encfooter-")
+    ctrDir = tempDir("graft-ctr-")
+    gcmDir = tempDir("graft-gcm-")
     EncryptedParquet.write(Fixtures.people(spark), encFooterDir,
       EncryptionPolicy.reference.copy(plaintextFooter = false), kms.url,
       mode = "overwrite")

@@ -28,7 +28,7 @@ class KeyRotationSpec extends SparkTestBase {
   test("rotateMasterKeys rewrites external key material; reads stay green") {
     val kms = new TestKmsServer().start()
     try {
-      val dir = Files.createTempDirectory("graft-rotate-").toString
+      val dir = tempDir("graft-rotate-")
       val policy = EncryptionPolicy(
         columnKeys = Map(
           PrivilegeLevel.Internal     -> Seq("date_of_birth"),
@@ -82,7 +82,7 @@ class KeyRotationSpec extends SparkTestBase {
   test("rotation under concurrent warm-cache reads: no read fails, lattice holds") {
     val kms = new TestKmsServer().start()
     try {
-      val dir = Files.createTempDirectory("graft-rotate-live-").toString
+      val dir = tempDir("graft-rotate-live-")
       val policy = EncryptionPolicy(
         columnKeys = Map(
           PrivilegeLevel.Confidential -> Seq("first_name", "last_name"),
@@ -172,7 +172,7 @@ class KeyRotationSpec extends SparkTestBase {
   test("internal-material rotation by rewrite: fresh KEKs, no old id survives") {
     val kms = new TestKmsServer().start()
     try {
-      val dir = Files.createTempDirectory("graft-rotate-int-").toString + "/people"
+      val dir = tempDir("graft-rotate-int-") + "/people"
       val policy = EncryptionPolicy(
         columnKeys = Map(
           PrivilegeLevel.Confidential -> Seq("first_name", "last_name"),
@@ -217,7 +217,7 @@ class KeyRotationSpec extends SparkTestBase {
   test("rotating one dataset leaves another token's warm reader cache warm") {
     val kms = new TestKmsServer().start()
     try {
-      val base = Files.createTempDirectory("graft-rotate-scope-").toString
+      val base = tempDir("graft-rotate-scope-")
       val policy = EncryptionPolicy(
         columnKeys = Map(
           PrivilegeLevel.Confidential -> Seq("first_name", "last_name"),
@@ -249,7 +249,7 @@ class KeyRotationSpec extends SparkTestBase {
   test("rotation works on a scheme-qualified file:// dataset URI") {
     val kms = new TestKmsServer().start()
     try {
-      val localDir = Files.createTempDirectory("graft-rotate-uri-").toString
+      val localDir = tempDir("graft-rotate-uri-")
       val dir = "file:" + localDir + "/people"
       val policy = EncryptionPolicy(
         columnKeys = Map(
@@ -280,7 +280,7 @@ class KeyRotationSpec extends SparkTestBase {
   test("a rotate retry never destroys the only good copy after a failed verification") {
     val kms = new TestKmsServer().start()
     try {
-      val base = Files.createTempDirectory("graft-rotate-retry-").toString
+      val base = tempDir("graft-rotate-retry-")
       val dir = base + "/people"
       val old = dir + ".rotate-old"
       val policy = EncryptionPolicy(

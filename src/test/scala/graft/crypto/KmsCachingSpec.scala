@@ -1,7 +1,5 @@
 package graft.crypto
 
-import java.nio.file.Files
-
 import graft.SparkTestBase
 import graft.io.EncryptedParquet
 import graft.kms.TestKmsServer
@@ -16,7 +14,7 @@ class KmsCachingSpec extends SparkTestBase {
   test("KMS unwrap calls are bounded by privilege levels, amortized by cache") {
     val kms = new TestKmsServer().start()
     try {
-      val dir = Files.createTempDirectory("graft-cache-").toString
+      val dir = tempDir("graft-cache-")
       EncryptedParquet.write(
         Fixtures.people(spark), dir, EncryptionPolicy.reference, kms.url,
         mode = "overwrite")

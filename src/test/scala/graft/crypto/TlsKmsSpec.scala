@@ -20,7 +20,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class TlsKmsSpec extends SparkTestBase with BeforeAndAfterAll {
 
-  private val dir = Files.createTempDirectory("graft-tls-").toString
+  private val dir = tempDir("graft-tls-")
   private val ksPath = s"$dir/kms.p12"
   private val pemPath = s"$dir/kms-ca.pem"
   private val storePass = "grafttest"
@@ -79,7 +79,7 @@ class TlsKmsSpec extends SparkTestBase with BeforeAndAfterAll {
     val prev = Option(hconf.get(HttpKmsClient.SslCertFileProperty))
     hconf.set(HttpKmsClient.SslCertFileProperty, pemPath)
     try {
-      val out = Files.createTempDirectory("graft-tls-data-").toString
+      val out = tempDir("graft-tls-data-")
       val df = Fixtures.people(spark)
       EncryptedParquet.write(df, out, EncryptionPolicy.reference, kms.url,
         mode = "overwrite")

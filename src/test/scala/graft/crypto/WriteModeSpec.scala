@@ -1,7 +1,5 @@
 package graft.crypto
 
-import java.nio.file.Files
-
 import graft.SparkTestBase
 import graft.io.EncryptedParquet
 import graft.kms.TestKmsServer
@@ -18,7 +16,7 @@ class WriteModeSpec extends SparkTestBase {
   test("default write mode errors on existing data; explicit overwrite succeeds") {
     val kms = new TestKmsServer().start()
     try {
-      val dir = Files.createTempDirectory("graft-mode-").toString
+      val dir = tempDir("graft-mode-")
       val df = Fixtures.people(spark)
       // First write into the pre-existing (empty temp) dir must already
       // error — Spark's errorifexists refuses any existing path.

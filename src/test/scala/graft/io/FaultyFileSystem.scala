@@ -1,8 +1,10 @@
 package graft.io
 
 import java.net.URI
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FileUtil, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FileUtil, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -25,13 +27,20 @@ import org.apache.hadoop.util.Progressable
   * `fs.faulty.impl = graft.io.FaultyFileSystem` on the Hadoop conf.
   * Everything else (list, open, mkdirs, delete, markers) delegates to
   * [[RawLocalFileSystem]] — marker visibility IS atomic on object
-  * stores, which is exactly what the protocol relies on.
+  * stores, which is exactly what the protocol relies on. Each
+  * `listStatus` is counted per dir ([[FaultyFileSystem.listings]]), so a
+  * spec can pin how often a read lists its path.
   */
 class FaultyFileSystem extends RawLocalFileSystem {
 
   override def getScheme: String = "faulty"
 
   override def getUri: URI = URI.create("faulty:///")
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    FaultyFileSystem.listed.computeIfAbsent(f.toUri.getPath, _ => new AtomicLong).incrementAndGet()
+    super.listStatus(f)
+  }
 
   override def rename(src: Path, dst: Path): Boolean = {
     if (exists(dst)) delete(dst, true)
@@ -54,6 +63,11 @@ class FaultyFileSystem extends RawLocalFileSystem {
 }
 
 object FaultyFileSystem {
+  private val listed = new ConcurrentHashMap[String, AtomicLong]()
+
+  /** `listStatus` calls made so far on the local dir `dir`. */
+  def listings(dir: String): Long = Option(listed.get(dir)).map(_.get).getOrElse(0L)
+
   /** Hook observed INSIDE every rename's hole (destination deleted,
     * payload not yet copied). Re-entrance is suppressed: a hook that
     * itself triggers renames (or resolution listing) must not recurse.

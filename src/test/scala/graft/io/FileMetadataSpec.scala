@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
@@ -33,7 +31,7 @@ class FileMetadataSpec extends SparkTestBase with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
     kms = new TestKmsServer().start()
-    dir = Files.createTempDirectory("graft-meta-").toString
+    dir = tempDir("graft-meta-")
     EncryptedParquet.write(
       Fixtures.people(spark), dir, EncryptionPolicy.reference, kms.url,
       mode = "overwrite")
@@ -117,8 +115,8 @@ class FileMetadataSpec extends SparkTestBase with BeforeAndAfterAll {
       new java.io.File(d).listFiles().filter(_.getName.endsWith(".parquet"))
         .map(_.length()).sum
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val encDir = Files.createTempDirectory("graft-size-enc-").toString
-    val plainDir = Files.createTempDirectory("graft-size-plain-").toString
+    val encDir = tempDir("graft-size-enc-")
+    val plainDir = tempDir("graft-size-plain-")
     EncryptedParquet.write(docs, encDir,
       EncryptionPolicy(columnKeys = Map(PrivilegeLevel.Confidential -> Seq("text"))),
       kms.url, mode = "overwrite", zstdLevel = 3)

@@ -10,18 +10,18 @@ import graft.obs.QueryMetrics
 import org.apache.parquet.crypto.KeyAccessDeniedException
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
-/** The one batch Parquet read ([[Parquet.read]]): a warm read builds its
-  * frame with no Spark job, anything that can change the inferred schema
-  * (a file under the path, the session's Parquet conf, the reader's
-  * options and so its privilege token) gets its own inference, and no
-  * read that a bare inferring read refuses is let through — a denial
-  * still fails where it failed before.
+/** The one batch Parquet read ([[Parquet.read]]): every read lists its
+  * path once, a warm read builds its frame with no Spark job, anything
+  * that can change the inferred schema (a file under the path, the
+  * session's Parquet conf, the reader's options and so its privilege
+  * token) gets its own inference, and no read that a bare inferring read
+  * refuses is let through — a denial still fails where it failed before.
   */
 class ParquetSpec extends SparkTestBase {
 
   private var kms: TestKmsServer = _
   private var qm: QueryMetrics = _
-  private lazy val root = Files.createTempDirectory("graft-parquet-schema-").toString
+  private lazy val root = tempDir("graft-parquet-schema-")
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -32,7 +32,6 @@ class ParquetSpec extends SparkTestBase {
   override def afterAll(): Unit = {
     spark.sparkContext.removeSparkListener(qm)
     kms.stop()
-    Afs.delete(root)
     super.afterAll()
   }
 
@@ -101,6 +100,22 @@ class ParquetSpec extends SparkTestBase {
     assert(Parquet.read(asBinary, dir).schema("b").dataType == BinaryType)
     assert(Parquet.read(asString, dir).schema("b").dataType == StringType)
     assert(Parquet.read(asBinary, dir).schema("b").dataType == BinaryType)
+  }
+
+  test("a Parquet.read lists its dir once, cold with one job and warm with none") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
+    val dir = s"$root/listed"
+    spark.range(30).repartition(3).write.parquet(dir)
+    assert(new File(dir).listFiles().count(_.getName.endsWith(".parquet")) == 3)
+    // (listings of `dir`, Spark jobs) of one read through `faulty://`.
+    def read(): (Long, Long) = {
+      val before = FaultyFileSystem.listings(dir)
+      val ran = jobs(Parquet.read(spark, s"faulty://$dir"))
+      (FaultyFileSystem.listings(dir) - before, ran)
+    }
+    assert(read() == ((1L, 1L)), "a cold read's (listings, jobs)")
+    assert(read() == ((1L, 0L)), "a warm read's (listings, jobs)")
   }
 
   test("a token below an encrypted footer's level is refused after a RESTRICTED read warmed the cache") {

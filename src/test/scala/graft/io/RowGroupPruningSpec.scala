@@ -1,6 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
 import java.time.LocalDateTime
 
 import graft.SparkTestBase
@@ -33,7 +32,7 @@ class RowGroupPruningSpec extends SparkTestBase {
   private val ts = col("ts")
 
   private var kms: TestKmsServer = _
-  private lazy val root = Files.createTempDirectory("graft-rg-prune-").toString
+  private lazy val root = tempDir("graft-rg-prune-")
   private val rowGroups = Map("parquet.block.row.count.limit" -> PerGroup.toString)
 
   override def beforeAll(): Unit = {
@@ -43,7 +42,6 @@ class RowGroupPruningSpec extends SparkTestBase {
 
   override def afterAll(): Unit = {
     kms.stop()
-    Afs.delete(root)
     super.afterAll()
   }
 

@@ -164,7 +164,7 @@ class IvfPqStreamSpec extends SparkTestBase {
   test("q128 stream ingest: one composed segment per micro-batch; checkpointed re-run is a no-op") {
     // Replay idempotence lives in the shared streamIngestCore; this pin
     // moved from the f3 spec when the quarantine was deleted (r15).
-    val root = java.nio.file.Files.createTempDirectory("graft-ivfpqstream-spec-").toString
+    val root = tempDir("graft-ivfpqstream-spec-")
     val (baseDir, segs) = IvfPq.streamIngestInto(spark, sfDir, root)
     assert(segs.size === AnnIndex.StreamFiles,
       s"expected one delta segment per micro-batch (${AnnIndex.StreamFiles}), got ${segs.size}")

@@ -64,7 +64,9 @@ class SamplingSpec extends SparkTestBase {
     val res = Sampling.q34a.fn(spark, sfDir).collect().map(_.toSeq).toSet
     // The fixture dump is the VERIFY harness's job (the Q fn is a pure
     // plan builder — r7 advisor); replicate the harness call here.
-    val outDir = java.nio.file.Files.createTempDirectory("graft-q34a-").toString
+    // One level down: the fixture lands in the sibling `<outDir>_fixtures`,
+    // which must be removed with the temp dir too.
+    val outDir = s"${tempDir("graft-q34a-")}/out"
     Sampling.dumpQ34aOracleFixture(spark, sfDir, outDir)
     // Fixture content == the membership predicate's key set.
     val fixture = spark.read.parquet(s"${outDir}_fixtures/q34a_keys")

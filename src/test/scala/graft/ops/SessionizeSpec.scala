@@ -54,7 +54,7 @@ class SessionizeSpec extends SparkTestBase {
       (2L, at(1799999000L), 7L, "e", 1.0), // 29:59.999 after the first
       (3L, at(1799999000L + 1800000000L), 7L, "e", 1.0) // exactly +30:00
     ).toDF("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess-").toString
+    val dir = tempDir("graft-sess-")
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     // reuse the other tables' dir layout: q69 only reads events
     val out = StreamingOps.q69.fn(spark, dir).collect()

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import graft.{SparkTestBase, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -18,7 +16,7 @@ class StreamingSpec extends SparkTestBase {
     * stream source needs no nanos handling.
     */
   private lazy val eventsDir: String = {
-    val dir = Files.createTempDirectory("graft-stream-").toString
+    val dir = tempDir("graft-stream-")
     Tables.events(spark, sfDir).write.mode("overwrite").parquet(dir)
     dir
   }
@@ -108,9 +106,9 @@ class StreamingSpec extends SparkTestBase {
     // parquet sink + checkpoint resumes after a stop with no loss and no
     // duplicates. Run half the input, stop, add the rest, restart from
     // the same checkpoint, and compare the sink against the batch result.
-    val srcDir = Files.createTempDirectory("graft-ckpt-src-").toString
-    val sinkDir = Files.createTempDirectory("graft-ckpt-sink-").toString
-    val ckptDir = Files.createTempDirectory("graft-ckpt-state-").toString
+    val srcDir = tempDir("graft-ckpt-src-")
+    val sinkDir = tempDir("graft-ckpt-sink-")
+    val ckptDir = tempDir("graft-ckpt-state-")
     val ev = Tables.events(spark, sfDir)
     val half1 = ev.filter(pmod(col("event_id"), lit(2)) === 0)
     val half2 = ev.filter(pmod(col("event_id"), lit(2)) === 1)
@@ -147,7 +145,7 @@ class StreamingSpec extends SparkTestBase {
     import graft.kms.TestKmsServer
     val kms = new TestKmsServer().start()
     try {
-      val base = Files.createTempDirectory("graft-enc-stream-").toString
+      val base = tempDir("graft-enc-stream-")
       val sinkDir = s"$base/sink"
       val ckptDir = s"$base/ckpt"
       val ev = Tables.events(spark, sfDir)
@@ -189,7 +187,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("watermarked dedup drops exact duplicate events") {
-    val dupDir = Files.createTempDirectory("graft-stream-dup-").toString
+    val dupDir = tempDir("graft-stream-dup-")
     val ev = Tables.events(spark, sfDir)
     ev.union(ev.limit(50)).write.mode("overwrite").parquet(dupDir)
     val stream = spark.readStream.schema(ev.schema).parquet(dupDir)

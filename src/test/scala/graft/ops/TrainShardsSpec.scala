@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import graft.{SparkTestBase, Tables}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +29,7 @@ class TrainShardsSpec extends SparkTestBase {
   }
 
   test("writeTrainShards layout matches the q77 census and sorts within shards") {
-    val out = Files.createTempDirectory("graft-shards").toString
+    val out = tempDir("graft-shards")
     val docs = Tables.documents(spark, sfDir)
     Layout.writeTrainShards(docs, "doc_id", out, nShards = 64)
 

@@ -46,7 +46,7 @@ class ZorderSpec extends SparkTestBase {
 
   test("compact: many small files collapse to the target count, content-identical") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val base = tempDir("graft-compact")
     val inDir = s"$base/in"
     val outDir = s"$base/out"
     // Simulate streaming-ingest debris: 64 tiny files of one table.

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.{SparkTestBase, Tables}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
@@ -36,7 +34,7 @@ class RocksDbStateSpec extends SparkTestBase {
         .as[Event]
     }
 
-    val dir = Files.createTempDirectory("graft-rocksdb-src-").toString
+    val dir = tempDir("graft-rocksdb-src-")
     eventsDs(s).toDF().write.mode("overwrite").parquet(dir)
     val stream = s.readStream
       .schema(eventsDs(s).schema)
@@ -47,7 +45,7 @@ class RocksDbStateSpec extends SparkTestBase {
       .format("memory").queryName("t_rocks_closed")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-rocksdb-ckpt-").toString)
+        tempDir("graft-rocksdb-ckpt-"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -101,9 +99,9 @@ class RocksDbStateSpec extends SparkTestBase {
     import org.apache.spark.sql.SparkSession
     val origParts = "4"
     val rescaleParts = "7"
-    val srcDir = Files.createTempDirectory("graft-rocks-restart-src-").toString
-    val sinkDir = Files.createTempDirectory("graft-rocks-restart-sink-").toString
-    val ckptDir = Files.createTempDirectory("graft-rocks-restart-ckpt-").toString
+    val srcDir = tempDir("graft-rocks-restart-src-")
+    val sinkDir = tempDir("graft-rocks-restart-sink-")
+    val ckptDir = tempDir("graft-rocks-restart-ckpt-")
 
     def eventsDs(ss: SparkSession): Dataset[Event] = {
       import ss.implicits._

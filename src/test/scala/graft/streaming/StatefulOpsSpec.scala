@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkTestBase, Tables}
@@ -24,7 +23,7 @@ class StatefulOpsSpec extends SparkTestBase {
 
   test("streaming closed sessions == batch sessions (except open tails)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-state-").toString
+    val dir = tempDir("graft-state-")
     eventsDs().toDF().write.mode("overwrite").parquet(dir)
     val stream = spark.readStream
       .schema(eventsDs().schema)

@@ -60,7 +60,7 @@ class DiagJsonSpec extends SparkTestBase {
   test("ScaleDiag emits parseable JSON and survives a bad sibling sf dir") {
     // Isolated parent with one REAL sf (symlink) and one broken one: the
     // real entry must survive the broken sibling (per-entry guard).
-    val parent = Files.createTempDirectory("graft-scalediag-")
+    val parent = Paths.get(tempDir("graft-scalediag-"))
     val good = parent.resolve("sf0.001")
     Files.createSymbolicLink(good, Paths.get(sfDir))
     Files.createDirectory(parent.resolve("sf9")) // no documents.parquet
